@@ -10,8 +10,10 @@ Spark:
 
     answers = run_query(spark, sf_dir, questions)   # one DataFrame
 
-- **vector path**: deterministic hashing embedder → broadcast cosine
-  top-k (ref stages 4-6);
+- **vector path**: the question batch is embedded on the driver with
+  the index's own kernel (``_hash_embed_batch``, bit-identical to
+  ``embed_df``) and broadcast as a LocalRelation (``local_rows``)
+  against the stored index → cosine top-k (ref stages 4-6);
 - **keyword path**: broadcast cross-score → window top-k (ref
   :134-157) — selected per call like the reference's exception
   fallback, but as a first-class strategy flag rather than a
@@ -19,7 +21,8 @@ Spark:
 - **answer assembly**: top chunk summary template + doc stats agg
   (ref :100-127, 176-186).
 
-Everything is lazy DataFrames end-to-end: the two strategies are the
+Everything is lazy DataFrames end-to-end (the driver-side question
+embedding starts no Spark job): the two strategies are the
 same plan shape with a different scoring expression, and the result
 schema is the one authoritative answer schema (the reference's
 declared response model drifts from what it actually returns —
@@ -34,10 +37,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .registry import register
-from .sources.tables import cluster_by_dirs, load, spread
+from .sources.tables import cluster_by_dirs, load, local_rows, spread
 from .sources.tmputil import dir_tag, session_key, tmp_path
-from .functions.embed import dot, embed_df, embed_pandas
-from .operators.questions import GOLDEN_QUESTIONS, SNIPPET_LEN, TOP_K
+from .functions.embed import _hash_embed_batch, dot, embed_df, embed_pandas
+from .operators.questions import GOLDEN_QUESTIONS, SNIPPET_LEN, TOP_K, questions_df
 
 _VECTOR_INDEX_READY: set[tuple] = set()
 
@@ -893,7 +896,8 @@ def _build_ivf_layout(
     from .operators.clustering import kmeans_fit_assign
 
     assigned, cents = kmeans_fit_assign(spark, vx, cells, keep=keep)
-    spark.createDataFrame(
+    local_rows(
+        spark,
         [(int(cid), [float(v) for v in cv], float(cc)) for cid, cv, cc in cents],
         "cid LONG, cv ARRAY<DOUBLE>, cc DOUBLE",
     ).write.mode("overwrite").parquet(cents_path)
@@ -1269,16 +1273,24 @@ def run_query(
         questions = GOLDEN_QUESTIONS
     if method not in ("vector", "keyword"):
         raise ValueError(f"unknown method {method!r}")
-    qdf = spark.createDataFrame(questions, "question_id INT, question_text STRING")
 
     if method == "vector":
-        # Probe the STORED index: embed only the question batch (10
-        # rows), broadcast it against the materialized vector table —
-        # never re-embed the corpus inside a query (round-2 verdict:
-        # the embed-per-query form cost 15 s vs <1 s warm here, and at
-        # 100 TB it is a full corpus pass per question batch).
+        # Probe the STORED index: embed only the question batch, on the
+        # driver with the kernel the index was built with
+        # (_hash_embed_batch, bit-identical to embed_df), and broadcast
+        # it as a LocalRelation against the materialized vector table.
+        # The batch is a few rows, so planning an embed stage per
+        # request costs more than the embedding; re-embedding the
+        # corpus per query would be a full corpus pass per batch.
         idx = spark.read.parquet(ensure_vector_index(spark, sf_dir))
-        qv = F.broadcast(embed_df(qdf, "question_text", out_col="qv"))
+        vecs = _hash_embed_batch([t for _, t in questions])
+        qv = F.broadcast(
+            local_rows(
+                spark,
+                [(qid, t, v) for (qid, t), v in zip(questions, vecs)],
+                "question_id INT, question_text STRING, qv ARRAY<DOUBLE>",
+            )
+        )
         scored = idx.crossJoin(qv).select(
             "question_id",
             "question_text",
@@ -1295,6 +1307,7 @@ def run_query(
             F.substring("text", 1, SNIPPET_LEN).alias("snippet"),
             F.lower(F.col("text")).alias("__text_lc"),
         )
+        qdf = local_rows(spark, questions, "question_id INT, question_text STRING")
         qb = F.broadcast(
             qdf.select(
                 "question_id",
@@ -1474,7 +1487,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full text for the keyword half is a doc_id equi-join against the
     # documents scan — shuffle-on-key work, not embedding compute, and
     # co-partitionable (bucketed) at scale.
-    qdf = questions_df_cached(spark)
+    qdf = questions_df(spark)
     idx = spark.read.parquet(ensure_vector_index(spark, sf_dir)).select("doc_id", "dv")
     docs = spread(load(spark, sf_dir, "documents")).select(
         "doc_id", F.lower(F.col("text")).alias("__text_lc")
@@ -1517,12 +1530,6 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= TOP_K)
         .drop("rn")
     )
-
-
-def questions_df_cached(spark: SparkSession):
-    from .operators.questions import questions_df
-
-    return questions_df(spark)
 
 
 @register("q_api_run_vector", oracle=_api_oracle("vector"))

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.tables import load, spread
+from ..sources.tables import load, local_rows, spread
 from .hashing import P, MULT, token_hashes, token_hashes_sql  # noqa: F401
 from .embed import (  # noqa: F401  (re-exported public surface)
     DIM,
@@ -768,7 +768,8 @@ def triplet_ann_pool(
         # Degenerate anchor slice → no probe keys: isin() with zero
         # args raises a confusing analysis error; the correct pool is
         # simply empty (r11 ADVICE).
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [],
             "anchor_id LONG, anchor_label INT, cand_id LONG, "
             "cand_label INT, cos_sim DOUBLE",
@@ -783,7 +784,8 @@ def triplet_ann_pool(
     # pruning: the join below re-checks cells row-wise).
     db = db.filter(F.col("cell").isin(*probe_cells))
     qb = F.broadcast(
-        spark.createDataFrame(
+        local_rows(
+            spark,
             anchor_rows,
             "anchor_id LONG, anchor_label INT, qv ARRAY<DOUBLE>, qcell LONG",
         )

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.tables import load
+from ..sources.tables import load, local_rows
 
 
 @register(
@@ -475,7 +475,8 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same way, this is the explicit form for when neither
     applies)."""
     li = load(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity")
-    dim = spark.createDataFrame(
+    dim = local_rows(
+        spark,
         [("A", "returned"), ("N", "in_flight"), ("R", "refused")],
         "flag STRING, label STRING",
     )

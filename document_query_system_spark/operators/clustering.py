@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..functions.embed import DIM, dot
 from ..registry import register
-from ..sources.tables import load
+from ..sources.tables import load, local_rows
 
 K_CLUSTERS = 8
 _SEM_TAU = 0.35  # within-cluster cosine prune threshold (corpus-calibrated:
@@ -59,6 +59,9 @@ def _vx(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("xx", dot(F.col("x"), F.col("x")))
 
 
+CENTS_DDL = "__cents ARRAY<STRUCT<cid: BIGINT, cv: ARRAY<DOUBLE>, cc: DOUBLE>>"
+
+
 def _cents_df(spark: SparkSession, rows) -> DataFrame:
     """Bounded collected centroids (K rows of DIM doubles) as a
     ONE-ROW DataFrame holding an array<struct> column. Until round 6
@@ -70,28 +73,10 @@ def _cents_df(spark: SparkSession, rows) -> DataFrame:
     one-row cross join the generated code references one column and
     stays small; the plan is otherwise identical (no shuffle — a
     1-row BroadcastNestedLoopJoin)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(
-                "__cents",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("cid", T.LongType()),
-                            T.StructField("cv", T.ArrayType(T.DoubleType())),
-                            T.StructField("cc", T.DoubleType()),
-                        ]
-                    )
-                ),
-            )
-        ]
-    )
     data = [
         ([(int(cid), [float(v) for v in cv], float(cc)) for cid, cv, cc in rows],)
     ]
-    return spark.createDataFrame(data, schema)
+    return local_rows(spark, data, CENTS_DDL)
 
 
 def _assign(

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import tokens, tokens_sql
 from ..registry import register
-from ..sources.tables import load, spread
+from ..sources.tables import load, local_rows, spread
 
 # ------------------------------------------------- segment-level exact dedup
 #
@@ -302,7 +302,7 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dfq = spark.read.parquet(_os.path.join(base, "terms"))
 
     # ---- probe (per-question): broadcast-size sides only.
-    qt = spark.createDataFrame(pairs, "question_id INT, term STRING")
+    qt = local_rows(spark, pairs, "question_id INT, term STRING")
     qw = F.broadcast(
         F.broadcast(qt)
         .join(dfq, "term")
@@ -746,7 +746,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = head.withColumn("rnk", F.row_number().over(w))
     total = F.broadcast(tf.agg(F.sum("c").alias("total_tokens")))
     cuts = F.broadcast(
-        spark.createDataFrame([(n,) for n in _VOCAB_CUTS], "cut INT")
+        local_rows(spark, [(n,) for n in _VOCAB_CUTS], "cut INT")
     )
     return (
         ranked.join(cuts, F.col("rnk") <= F.col("cut"))

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.tables import load
+from ..sources.tables import load, local_rows
 
 
 @register(
@@ -166,7 +166,8 @@ def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     without shuffling at any scale."""
     ev = load(spark, sf_dir, "events")
     tiers = F.broadcast(
-        spark.createDataFrame(
+        local_rows(
+            spark,
             [("low", 0.0, 50.0), ("mid", 50.0, 150.0), ("high", 150.0, 1e18)],
             "tier STRING, lo DOUBLE, hi DOUBLE",
         )

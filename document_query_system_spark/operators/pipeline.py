@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import tokens, tokens_sql
 from ..registry import register
-from ..sources.tables import cluster_by_dirs, load, spread
+from ..sources.tables import cluster_by_dirs, load, local_rows, spread
 from ..functions.hashing import (
     shingle_hashes as _shingle_hashes,
     shingle_hashes_sql as _shingle_hashes_sql,
@@ -459,7 +459,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = sorted(
         {(qid, w) for qid, q in GOLDEN_QUESTIONS for w in q.lower().split()}
     )
-    qt = spark.createDataFrame(pairs, "question_id INT, term STRING")
+    qt = local_rows(spark, pairs, "question_id INT, term STRING")
     terms = sorted({t for _, t in pairs})
     tfq = spark.read.parquet(os.path.join(base, "postings")).filter(
         F.col("term").isin(terms)
@@ -2272,7 +2272,8 @@ def mmr_ann_pool_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 qb_rows.append((qid, q_v, t, b0 ^ flip))
                 probe_keys[t].add(b0 ^ flip)
     qb = F.broadcast(
-        spark.createDataFrame(
+        local_rows(
+            spark,
             qb_rows,
             "question_id LONG, q_v ARRAY<DOUBLE>, qtbl INT, qbucket INT",
         )
@@ -2442,9 +2443,7 @@ def mmr_ivf_pool_pairs(
         # isin() with zero args raises a confusing analysis error, and
         # an unfiltered scan would be a full-index read masquerading
         # as a probe — return the empty pool directly (r11 ADVICE).
-        return spark.createDataFrame(
-            [], "question_id LONG, doc_id LONG, rel DOUBLE"
-        )
+        return local_rows(spark, [], "question_id LONG, doc_id LONG, rel DOUBLE")
     db = spark.read.parquet(layout).select(
         "doc_id", F.col("dv").alias("v"), "cell"
     )
@@ -2452,9 +2451,7 @@ def mmr_ivf_pool_pairs(
     # re-checks the cells row-wise, so this is pure pruning.
     db = db.filter(F.col("cell").isin(*probe_cells))
     qb = F.broadcast(
-        spark.createDataFrame(
-            qb_rows, "question_id LONG, q_v ARRAY<DOUBLE>, qcell LONG"
-        )
+        local_rows(spark, qb_rows, "question_id LONG, q_v ARRAY<DOUBLE>, qcell LONG")
     )
     hits = db.join(qb, F.col("cell") == F.col("qcell")).select(
         "question_id",
@@ -3535,13 +3532,14 @@ def q_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             for h, c in sorted(tris.items()):
                 qtri_rows.append((qid, t, h, c, norm))
     qtri = F.broadcast(
-        spark.createDataFrame(
+        local_rows(
+            spark,
             qtri_rows,
             "question_id LONG, qt STRING, tri LONG, qcnt LONG, qnorm DOUBLE",
         )
     )
     nqt = F.broadcast(
-        spark.createDataFrame(nqt_rows, "question_id LONG, n_qtok LONG")
+        local_rows(spark, nqt_rows, "question_id LONG, n_qtok LONG")
     )
     # Document-side postings, pool docs only: the broadcast doc-key
     # semi-join bounds the text read to ≤|questions|·pool documents.
@@ -3740,7 +3738,8 @@ def q_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("question_id", "doc_id")
         .collect()
     )
-    fb = spark.createDataFrame(
+    fb = local_rows(
+        spark,
         sorted((r.question_id, r.doc_id) for r in fb_rows),
         "question_id INT, doc_id BIGINT",
     )
@@ -3749,7 +3748,7 @@ def q_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = sorted(
         {(qid, w) for qid, q in GOLDEN_QUESTIONS for w in q.lower().split()}
     )
-    qt = spark.createDataFrame(pairs, "question_id INT, term STRING")
+    qt = local_rows(spark, pairs, "question_id INT, term STRING")
     wtd = (
         spark.read.parquet(ensure_tfidf_by_doc(spark, sf_dir))
         .filter(F.col("doc_id").isin(fb_docs))
@@ -3779,9 +3778,7 @@ def q_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     qt2_rows = [(qid, t, 2) for qid, t in pairs] + [
         (r.question_id, r.term, 1) for r in exp_rows
     ]
-    qt2 = spark.createDataFrame(
-        sorted(qt2_rows), "question_id INT, term STRING, wgt INT"
-    )
+    qt2 = local_rows(spark, sorted(qt2_rows), "question_id INT, term STRING, wgt INT")
     terms2 = sorted({t for _, t, _ in qt2_rows})
     base = ensure_bm25_index(spark, sf_dir)
     stats = F.broadcast(spark.read.parquet(os.path.join(base, "stats")))

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.tables import local_rows
+
 GOLDEN_QUESTIONS: list[tuple[int, str]] = [
     (1, "how does spark merge sort runs for a big table"),
     (2, "which query uses a hash join on the customer table"),
@@ -36,9 +38,7 @@ SNIPPET_LEN = 500  # fallback-answer content truncation (ref: src/main.py:147)
 
 
 def questions_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        GOLDEN_QUESTIONS, "question_id INT, question_text STRING"
-    )
+    return local_rows(spark, GOLDEN_QUESTIONS, "question_id INT, question_text STRING")
 
 
 def question_values_sql() -> str:

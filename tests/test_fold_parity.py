@@ -170,3 +170,30 @@ def test_token_cache_trim_is_bounded_and_keeps_young_half():
         E._TOKEN_CACHE_MAX = old_max
         E._TOKEN_BUCKETS.clear()
         E._TOKEN_BUCKETS.update(old_cache)
+
+
+def test_hash_embed_batch_matches_spark_embed_df(spark):
+    """run_query(method="vector") embeds its question batch on the
+    driver with _hash_embed_batch while the stored index and the
+    oracle-checked queries use embed_df's Spark fold — the two must
+    agree BIT for bit, on the golden questions and on the adversarial
+    strings above (empty text, whitespace runs, repeated tokens,
+    non-ASCII, token soup)."""
+    from document_query_system_spark.functions.embed import (
+        _hash_embed_batch,
+        embed_df,
+    )
+    from document_query_system_spark.operators.questions import GOLDEN_QUESTIONS
+
+    rng = random.Random(11)
+    vocab = ["alpha", "bê:ta", "γάμμα", "日本語", "x", "-", "word" * 30]
+    texts = [t for _, t in GOLDEN_QUESTIONS]
+    texts += ["", " ", "   ", "a", "a a a a a a a a", "日本語 日本語 ñ"]
+    texts += [
+        " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 200)))
+        for _ in range(100)
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i INT, text STRING")
+    got = {r.i: r.v for r in embed_df(df, "text", out_col="v").collect()}
+    for i, want in enumerate(_hash_embed_batch(texts)):
+        assert list(got[i]) == want, texts[i][:80]

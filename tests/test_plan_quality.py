@@ -46,6 +46,51 @@ def test_cross_score_broadcasts_questions_not_documents(spark):
     assert rep.n_broadcasts == 1
 
 
+def _broadcast_local_scans(rep) -> list[str]:
+    """Output lists of the LocalTableScans that feed a BroadcastExchange
+    directly in the plan tree."""
+    import re
+
+    tree = rep.raw.split("\n\n")[0].splitlines()
+    outs = []
+    for ln, nxt in zip(tree, tree[1:]):
+        m = re.search(r"LocalTableScan \((\d+)\)", nxt)
+        if "BroadcastExchange (" in ln and m:
+            detail = re.search(
+                rf"\n\({m.group(1)}\) LocalTableScan\nOutput \[\d+\]: \[([^\]]*)\]",
+                rep.raw,
+            )
+            outs.append(detail.group(1))
+    return outs
+
+
+@pytest.mark.parametrize(
+    "build",
+    ["run_query_vector", "run_query_keyword", "published_ivf_topk", "q_cross_score"],
+)
+def test_question_side_is_a_local_relation(spark, build):
+    """Driver-side question rows enter the serving plans as an
+    Arrow-built LocalRelation (sources.tables.local_rows): the
+    broadcast build side is a LocalTableScan carrying question_id, and
+    no Python-RDD scan (createDataFrame over a Python list →
+    applySchemaToPythonRDD) is left — that scan put a Python-worker
+    stage first on the critical path of every request."""
+    from document_query_system_spark import api
+    from document_query_system_spark.operators.pipeline import published_ivf_topk
+
+    df = {
+        "run_query_vector": lambda: api.run_query(spark, SF_DIR, method="vector"),
+        "run_query_keyword": lambda: api.run_query(spark, SF_DIR, method="keyword"),
+        "published_ivf_topk": lambda: published_ivf_topk(spark, SF_DIR),
+        "q_cross_score": lambda: all_specs()["q_cross_score"].fn(spark, SF_DIR),
+    }[build]()
+    rep = plan_report(df)
+    assert "applySchemaToPythonRDD" not in rep.raw, rep.raw
+    assert "Scan ExistingRDD" not in rep.raw, rep.raw
+    outs = _broadcast_local_scans(rep)
+    assert any("question_id#" in o for o in outs), rep.raw
+
+
 def test_topk_sort_limit_avoids_full_sort(spark):
     rep = _plan(spark, "q_sort_limit")
     assert "TakeOrderedAndProject" in rep.raw

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from document_query_system_spark.session import cluster_conf
 
 
@@ -29,8 +31,10 @@ def test_cluster_conf_static_invariants():
 
 
 def test_local_factory_does_not_use_cluster_sizing(spark):
-    # local[32] must run 32 shuffle partitions, not 16k.
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    # local[N] must run N shuffle partitions, not 16k: get_spark sizes
+    # both from SPARK_GRAFT_CPUS (default 32).
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(cpus)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
