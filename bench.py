@@ -26,6 +26,46 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+#: Queries named on the stdout summary line, slowest first. 25 gives a
+#: round-over-round compare of the same stdout line enough queries in
+#: common; the full map lives in the sidecar.
+SUMMARY_SLOWEST = 25
+
+
+def summary_line(
+    total: float,
+    cold_total: float | None,
+    timings: dict[str, float],
+    sf,
+    cpus: int,
+    baseline: dict,
+    sidecar: str,
+) -> str:
+    """The one JSON line bench.py prints last. A caller keeps only a
+    bounded tail of stdout and parses the LAST JSON line, so the line
+    stays bounded (≲2 KB): summary numbers, the slowest
+    SUMMARY_SLOWEST queries and the small B-lane baseline block. The
+    full per-query map and golden_attrib live in the sidecar
+    (full_timings_file)."""
+    ok = {n: t for n, t in timings.items() if t >= 0}
+    slowest = dict(sorted(ok.items(), key=lambda p: -p[1])[:SUMMARY_SLOWEST])
+    return json.dumps(
+        {
+            "metric": "queries_suite_wall_sec",
+            "value": total,
+            "value_cold": cold_total,  # first-run total (JIT included)
+            "unit": "sec",
+            "queries": slowest,
+            "sf": sf,
+            "n_queries": len(timings),
+            "n_failed": sum(1 for t in timings.values() if t < 0),
+            "cpus": cpus,
+            "baseline": baseline,
+            "full_timings_file": sidecar,
+        }
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -450,31 +490,15 @@ def main() -> None:
     except OSError as exc:  # pragma: no cover
         print(f"BENCH-ERROR sidecar: {exc}", file=sys.stderr)
 
-    ok = {n: t for n, t in timings.items() if t >= 0}
-    slowest = dict(sorted(ok.items(), key=lambda p: -p[1])[:5])
-    # The driver records only a bounded tail of stdout and parses the
-    # LAST JSON line for round-over-round comparison; the r14 and r15
-    # artifacts both truncated MID-LINE because golden_attrib had grown
-    # the line past the captured window (r15 verdict #4: prev_bench_ok
-    # false two rounds running). Keep the stdout line bounded — summary
-    # numbers + slowest-5 + the small B-lane baseline block only; the
-    # full per-query map AND golden_attrib live in the sidecar
-    # (full_timings_file), where they always did.
     print(
-        json.dumps(
-            {
-                "metric": "queries_suite_wall_sec",
-                "value": total,
-                "value_cold": cold_total,  # first-run total (JIT included)
-                "unit": "sec",
-                "queries": slowest,  # slowest 5 only; full map in BENCH_FULL.json
-                "sf": sf_val,
-                "n_queries": len(timings),
-                "n_failed": sum(1 for t in timings.values() if t < 0),
-                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-                "baseline": baseline,
-                "full_timings_file": sidecar,
-            }
+        summary_line(
+            total,
+            cold_total,
+            timings,
+            sf_val,
+            int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+            baseline,
+            sidecar,
         )
     )
     spark.stop()

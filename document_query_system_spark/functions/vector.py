@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources.tables import load, local_rows, spread
+from ..sources.tmputil import read_artifact
 from .hashing import P, MULT, token_hashes, token_hashes_sql  # noqa: F401
 from .embed import (  # noqa: F401  (re-exported public surface)
     DIM,
@@ -720,7 +721,7 @@ def _triplet_probe_literals(
         if key in _EMB_IVF_PROBE_CACHE:
             return _EMB_IVF_PROBE_CACHE[key]
     _, cents_path = ensure_embeddings_index_ivf(spark, sf_dir)
-    cents = spark.read.parquet(cents_path)
+    cents = read_artifact(spark, cents_path)
     anch = anchors if anchors is not None else _triplet_anchors(spark, sf_dir)
     d2 = F.round(
         F.col("qq") - 2 * dot(F.col("qv"), F.col("cv")) + F.col("cc"), 6
@@ -774,7 +775,7 @@ def triplet_ann_pool(
             "anchor_id LONG, anchor_label INT, cand_id LONG, "
             "cand_label INT, cos_sim DOUBLE",
         )
-    db = spark.read.parquet(layout).select(
+    db = read_artifact(spark, layout).select(
         F.col("vec_id").alias("cand_id"),
         F.col("label").alias("cand_label"),
         F.col("v").alias("cv"),
@@ -868,7 +869,7 @@ def triplet_join_pool(
     else:
         layout, cents_path = ensure_embeddings_index_ivf(spark, sf_dir)
         nprobe = _TRIPLET_NPROBE
-    cents = spark.read.parquet(cents_path)
+    cents = read_artifact(spark, cents_path)
     anch = anchors if anchors is not None else _triplet_anchors(spark, sf_dir)
     d2 = F.round(
         F.col("qq") - 2 * dot(F.col("qv"), F.col("cv")) + F.col("cc"), 6
@@ -883,7 +884,7 @@ def triplet_join_pool(
             "anchor_id", "anchor_label", "qv", F.col("cid").alias("qcell")
         )
     )
-    db = spark.read.parquet(layout).select(
+    db = read_artifact(spark, layout).select(
         F.col("vec_id").alias("cand_id"),
         F.col("label").alias("cand_label"),
         F.col("v").alias("cv"),

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import tokens, tokens_sql
 from ..registry import register
 from ..sources.tables import load, local_rows, spread
+from ..sources.tmputil import read_artifact
 
 # ------------------------------------------------- segment-level exact dedup
 #
@@ -296,10 +297,10 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         {(qid, t) for qid, q in GOLDEN_QUESTIONS for t in q.lower().split()}
     )
     terms = sorted({t for _, t in pairs})
-    wn = spark.read.parquet(_os.path.join(base, "weighted")).filter(
+    wn = read_artifact(spark, _os.path.join(base, "weighted")).filter(
         F.col("term").isin(terms)
     )
-    dfq = spark.read.parquet(_os.path.join(base, "terms"))
+    dfq = read_artifact(spark, _os.path.join(base, "terms"))
 
     # ---- probe (per-question): broadcast-size sides only.
     qt = local_rows(spark, pairs, "question_id INT, term STRING")

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..sources.tmputil import read_artifact
 
 _TRI_TOPK = 20
 _TRI_PRIORITY = "1-URGENT"  # graph = parts co-ordered in urgent orders
@@ -89,7 +90,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oe feeds all three wedge roles, tri feeds three corner
     # branches; without them Catalyst re-derives the build per
     # consumer (same discipline as graph.py's PageRank rounds).
-    edges = spark.read.parquet(ensure_coorder_edges(spark, sf_dir))
+    edges = read_artifact(spark, ensure_coorder_edges(spark, sf_dir))
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -198,7 +199,7 @@ def q_communities_lp(spark: SparkSession, sf_dir: str) -> DataFrame:
     — TakeOrderedAndProject, not a single-partition global window."""
     from ..api import ensure_coorder_edges
 
-    edges = spark.read.parquet(ensure_coorder_edges(spark, sf_dir))
+    edges = read_artifact(spark, ensure_coorder_edges(spark, sf_dir))
     bi = (
         edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
@@ -330,9 +331,9 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration."""
     from ..api import ensure_coorder_edges
 
-    edges = spark.read.parquet(
-        ensure_coorder_edges(spark, sf_dir)
-    ).localCheckpoint(eager=True)
+    edges = read_artifact(spark, ensure_coorder_edges(spark, sf_dir)).localCheckpoint(
+        eager=True
+    )
     surv = (
         edges.select(F.col("u").alias("node"))
         .union(edges.select("v"))

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import tokens, tokens_sql
 from ..registry import register
 from ..sources.tables import cluster_by_dirs, load, local_rows, spread
+from ..sources.tmputil import read_artifact, write_artifact
 from ..functions.hashing import (
     shingle_hashes as _shingle_hashes,
     shingle_hashes_sql as _shingle_hashes_sql,
@@ -455,13 +456,13 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .questions import GOLDEN_QUESTIONS
 
     base = ensure_bm25_index(spark, sf_dir)
-    stats = F.broadcast(spark.read.parquet(os.path.join(base, "stats")))
+    stats = F.broadcast(read_artifact(spark, os.path.join(base, "stats")))
     pairs = sorted(
         {(qid, w) for qid, q in GOLDEN_QUESTIONS for w in q.lower().split()}
     )
     qt = local_rows(spark, pairs, "question_id INT, term STRING")
     terms = sorted({t for _, t in pairs})
-    tfq = spark.read.parquet(os.path.join(base, "postings")).filter(
+    tfq = read_artifact(spark, os.path.join(base, "postings")).filter(
         F.col("term").isin(terms)
     )
     dfq = F.broadcast(tfq.groupBy("term").agg(F.count("*").alias("df")))
@@ -566,7 +567,7 @@ def q_incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         {w for _, q in GOLDEN_QUESTIONS for w in q.lower().split()}
     )
     base = (
-        spark.read.parquet(os.path.join(base_path, "postings"))
+        read_artifact(spark, os.path.join(base_path, "postings"))
         .filter(F.col("term").isin(terms))
         .filter(F.col("doc_id") % _INC_BM25_MOD != 0)
         .select("term", "doc_id", "tf")
@@ -635,7 +636,7 @@ def q_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import N_TABLES, _bucket_expr
 
     base = (
-        spark.read.parquet(ensure_vector_index_lsh(spark, sf_dir))
+        read_artifact(spark, ensure_vector_index_lsh(spark, sf_dir))
         .filter(F.col("doc_id") % _INC_LSH_MOD != 0)
         .select("doc_id", "dv", "tbl", "bucket")
     )
@@ -714,13 +715,13 @@ def _ivf_base_and_delta(
     else:
         layout, cents_path = ensure_vector_index_ivf(spark, sf_dir)
     base = (
-        spark.read.parquet(layout)
+        read_artifact(spark, layout)
         .filter(F.col("doc_id") % _INC_LSH_MOD != 0)
         .select("doc_id", "dv", F.col("cell").cast("long").alias("cell"))
     )
     cents = [
         (int(r.cid), [float(v) for v in r.cv], float(r.cc))
-        for r in spark.read.parquet(cents_path).collect()
+        for r in read_artifact(spark, cents_path).collect()
     ]
     batch = spread(
         load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -800,7 +801,7 @@ def ivf_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     layout, _cents, cells = ensure_vector_index_ivf_scaled(spark, sf_dir)
     pc = (
-        spark.read.parquet(layout)
+        read_artifact(spark, layout)
         .groupBy("cell")
         .agg(F.count("*").alias("n"))
     )
@@ -864,12 +865,16 @@ def append_ivf_delta(
     # into every cell dir — file-count explosion at scale), with the
     # explicit cells count so the write parallelizes (cluster_by_dirs:
     # the keyless form AQE-coalesced to ONE write task).
-    cluster_by_dirs(base, cells, "cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path)
-    cluster_by_dirs(delta, cells, "cell").write.mode("append").partitionBy(
-        "cell"
-    ).parquet(path)
+    write_artifact(
+        cluster_by_dirs(base, cells, "cell")
+        .write.mode("overwrite")
+        .partitionBy("cell"),
+        path,
+    )
+    write_artifact(
+        cluster_by_dirs(delta, cells, "cell").write.mode("append").partitionBy("cell"),
+        path,
+    )
     return path
 
 
@@ -958,7 +963,7 @@ def psi_report(
     over the centroid domain for any two cell-assigned frames, one
     (cells, n_base, n_batch, psi) row out."""
     cent = (
-        spark.read.parquet(cents_path)
+        read_artifact(spark, cents_path)
         .select(F.col("cid").alias("cell"))
         .localCheckpoint(eager=False)
     )
@@ -1007,59 +1012,64 @@ def delete_from_ivf(
 ) -> list[int]:
     """Targeted delete from a cell-partitioned IVF layout — the last
     CRUD verb of the index lifecycle (the reference delegates it to
-    Pinecone's delete endpoint; here the engine owns it): find the
-    cells that actually CONTAIN the victim ids (one semi-join over the
-    layout, projecting the partition column + id only), then rewrite
-    ONLY those cells with the victims anti-joined out (dynamic
+    Pinecone's delete endpoint; here the engine owns it): one per-cell
+    aggregate over the layout (the partition column + id only, victims
+    broadcast-marked) counts each cell's victim hits and survivors, so
+    a single collect returns both the cells to rewrite (hits > 0) and
+    the cells the delete empties (hits > 0, no survivors). ONLY the hit
+    cells are then rewritten with the victims anti-joined out (dynamic
     partition overwrite — the compact_ivf_cells machinery). Returns
-    the rewritten cell ids.
+    the rewritten cell ids, ascending.
 
     Scale: the locate pass reads (doc_id, cell) — two pruned columns —
-    and the affected-cell list collected to the driver is bounded by
+    and the per-cell rows collected to the driver are bounded by
     min(|ids|, cells): each victim lives in exactly one cell
     (layout integrity pin), so a 1k-id delete touches ≤1k of the 70k
     cells at 5B vectors and the rewrite reads/writes only those cells'
     ~√N-row directories. A cell that becomes EMPTY cannot be rewritten
     by a dynamic overwrite (no rows → no partition in the output, so
     its stale files would survive and the delete would be SILENTLY
-    INCOMPLETE) — emptied cells are detected from the survivor set
-    (bounded: ≤|affected| cell ids) and their directories dropped
-    explicitly, the local form of the segment-drop manifest update an
-    object-store table runs. Pinned in tests/test_layout.py: deleting
-    the appended batch restores the base snapshot's checksums exactly,
-    untouched cells' files unrewritten, and a whole-cell delete leaves
-    no stale directory."""
+    INCOMPLETE) — its directory is dropped explicitly, the local form
+    of the segment-drop manifest update an object-store table runs.
+    Pinned in tests/test_layout.py: deleting the appended batch
+    restores the base snapshot's checksums exactly, untouched cells'
+    files unrewritten, and a whole-cell delete leaves no stale
+    directory."""
     victims = ids.select(F.col(ids.columns[0]).alias("doc_id"))
-    layout = spark.read.parquet(layout_path)
-    affected = [
-        r.cell
-        for r in layout.join(F.broadcast(victims), "doc_id", "semi")
-        .select("cell")
-        .distinct()
+    layout = read_artifact(spark, layout_path)
+    # rows - hits is the cell's survivor count, also when an id is listed
+    # twice (its layout row then joins twice and counts as two hits).
+    per_cell = (
+        layout.select("doc_id", "cell")
+        .join(
+            F.broadcast(victims.withColumn("__hit", F.lit(True))), "doc_id", "left"
+        )
+        .groupBy("cell")
+        .agg(F.count("__hit").alias("hits"), F.count("*").alias("rows"))
+        .filter(F.col("hits") > 0)
         .collect()
-    ]
+    )
+    affected = sorted(r.cell for r in per_cell)
     if not affected:
         return affected
+    emptied = {r.cell for r in per_cell if r.rows == r.hits}
     survivors = (
         layout.filter(F.col("cell").isin(affected))
         .join(F.broadcast(victims), "doc_id", "anti")
         .localCheckpoint(eager=True)
     )
-    surviving_cells = {
-        r.cell for r in survivors.select("cell").distinct().collect()
-    }
     mode_key = "spark.sql.sources.partitionOverwriteMode"
     old = spark.conf.get(mode_key, "static")
     spark.conf.set(mode_key, "dynamic")
     try:
-        (
+        write_artifact(
             # One write task per rewritten cell (cluster_by_dirs; the
             # keyless count let AQE coalesce this tiny shuffle to ONE
             # task writing every affected dir sequentially).
             cluster_by_dirs(survivors, len(affected), "cell")
             .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(layout_path)
+            .partitionBy("cell"),
+            layout_path,
         )
     finally:
         spark.conf.set(mode_key, old)
@@ -1068,7 +1078,7 @@ def delete_from_ivf(
     # or their stale files keep serving the deleted vectors.
     import shutil
 
-    for cell in set(affected) - surviving_cells:
+    for cell in emptied:
         d = os.path.join(layout_path, f"cell={cell}")
         if os.path.isdir(d):
             shutil.rmtree(d)
@@ -1113,7 +1123,7 @@ def compact_ivf_cells(
     if not flagged:
         return flagged
     rows = (
-        spark.read.parquet(layout_path)
+        read_artifact(spark, layout_path)
         .filter(F.col("cell").isin(flagged))
         .localCheckpoint(eager=True)
     )
@@ -1121,13 +1131,13 @@ def compact_ivf_cells(
     old = spark.conf.get(mode_key, "static")
     spark.conf.set(mode_key, "dynamic")
     try:
-        (
+        write_artifact(
             # One write task per flagged cell (cluster_by_dirs; see
             # delete_from_ivf — same single-task AQE-coalesce trap).
             cluster_by_dirs(rows, len(flagged), "cell")
             .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(layout_path)
+            .partitionBy("cell"),
+            layout_path,
         )
     finally:
         spark.conf.set(mode_key, old)
@@ -1171,7 +1181,7 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents = [
         (int(r.cid), [float(v) for v in r.cv], float(r.cc))
-        for r in spark.read.parquet(cents_path).collect()
+        for r in read_artifact(spark, cents_path).collect()
     ]
     run = _uuid.uuid4().hex[:8]
     # One-time landing-dir build: the incoming batch slice as FOUR
@@ -1190,21 +1200,21 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = load(spark, sf_dir, "documents").select("doc_id", "text").filter(
         F.col("doc_id") % _INC_LSH_MOD == 0
     )
-    batch.repartition(4).write.mode("overwrite").parquet(landing)
+    write_artifact(batch.repartition(4).write.mode("overwrite"), landing)
     # Yesterday's snapshot: the stored layout minus the batch, written
     # once (same leg as append_ivf_delta's).
     applied = tmp_path(f"stream_ivf_applied_{run}")
-    (
+    write_artifact(
         cluster_by_dirs(  # one write task per cell, not one for all
-            spark.read.parquet(layout)
+            read_artifact(spark, layout)
             .filter(F.col("doc_id") % _INC_LSH_MOD != 0)
             .select("doc_id", "dv", F.col("cell").cast("long").alias("cell")),
             _cells,
             "cell",
         )
         .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(applied)
+        .partitionBy("cell"),
+        applied,
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1217,11 +1227,11 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("x").alias("dv"),
             F.col("cid").cast("long").alias("cell"),
         )
-        (
+        write_artifact(
             cluster_by_dirs(delta, _cells, "cell")
             .write.mode("append")
-            .partitionBy("cell")
-            .parquet(applied)
+            .partitionBy("cell"),
+            applied,
         )
 
     src = (
@@ -1238,7 +1248,7 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _drain(q)
     return (
-        spark.read.parquet(applied)
+        read_artifact(spark, applied)
         .groupBy("cell")
         .agg(
             F.count("*").cast("long").alias("n_docs"),
@@ -1407,7 +1417,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("question_id", "doc_id", F.col("rk").alias("kw_rk"))
     )
     dv = (
-        spark.read.parquet(ensure_vector_index(spark, sf_dir))
+        read_artifact(spark, ensure_vector_index(spark, sf_dir))
         .select("doc_id", F.col("dv").alias("doc_v"))
     )
     qv = F.broadcast(
@@ -1545,7 +1555,7 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("question_id", "doc_id", "rk")
     )
     dv = (
-        spark.read.parquet(ensure_vector_index(spark, sf_dir))
+        read_artifact(spark, ensure_vector_index(spark, sf_dir))
         .select("doc_id", F.col("dv").alias("doc_v"))
     )
     qv = F.broadcast(
@@ -1952,7 +1962,7 @@ def _stored_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.embed import dot, embed_df
     from .questions import questions_df
 
-    dv = spark.read.parquet(ensure_vector_index(spark, sf_dir)).select(
+    dv = read_artifact(spark, ensure_vector_index(spark, sf_dir)).select(
         "doc_id", F.col("dv").alias("v")
     )
     qv = F.broadcast(
@@ -2216,7 +2226,7 @@ def mmr_ann_pool_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..api import ensure_vector_index
 
     top = mmr_ann_pool_pairs(spark, sf_dir)
-    dv = spark.read.parquet(ensure_vector_index(spark, sf_dir)).select(
+    dv = read_artifact(spark, ensure_vector_index(spark, sf_dir)).select(
         "doc_id", F.col("dv").alias("v")
     )
     return dv.join(F.broadcast(top), "doc_id").select(
@@ -2253,7 +2263,7 @@ def mmr_ann_pool_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .questions import GOLDEN_QUESTIONS
     from .similarity import N_PLANES, N_TABLES, PLANES, _PROBE_FLIPS
 
-    db = spark.read.parquet(ensure_vector_index_lsh(spark, sf_dir)).select(
+    db = read_artifact(spark, ensure_vector_index_lsh(spark, sf_dir)).select(
         "doc_id", F.col("dv").alias("v"), "tbl", "bucket"
     )
     qb_rows = []
@@ -2375,7 +2385,7 @@ def _ivf_probe_literals(
             _, cents_path, _ = ensure_vector_index_ivf_scaled(spark, sf_dir)
         else:
             _, cents_path = ensure_vector_index_ivf(spark, sf_dir)
-    cents = spark.read.parquet(cents_path)
+    cents = read_artifact(spark, cents_path)
     qx = embed_df(questions_df(spark), "question_text", out_col="q_v").select(
         "question_id", "q_v", dot(F.col("q_v"), F.col("q_v")).alias("qq")
     )
@@ -2444,7 +2454,7 @@ def mmr_ivf_pool_pairs(
         # an unfiltered scan would be a full-index read masquerading
         # as a probe — return the empty pool directly (r11 ADVICE).
         return local_rows(spark, [], "question_id LONG, doc_id LONG, rel DOUBLE")
-    db = spark.read.parquet(layout).select(
+    db = read_artifact(spark, layout).select(
         "doc_id", F.col("dv").alias("v"), "cell"
     )
     # Literal cell filter → static PartitionFilters; the join below
@@ -2484,7 +2494,7 @@ def mmr_ivf_pool_candidates(
     from ..api import ensure_vector_index
 
     top = mmr_ivf_pool_pairs(spark, sf_dir, scaled=scaled, nprobe=nprobe)
-    dv = spark.read.parquet(ensure_vector_index(spark, sf_dir)).select(
+    dv = read_artifact(spark, ensure_vector_index(spark, sf_dir)).select(
         "doc_id", F.col("dv").alias("v")
     )
     return dv.join(F.broadcast(top), "doc_id").select(
@@ -3138,8 +3148,8 @@ def published_topk_cached(
     doctored-layout flip, miss + original rows after rollback.
 
     At 100 TB this is the per-gateway answer cache every serving tier
-    runs; the bounded maintenance tick (one count) is the cost of
-    knowing the version is still current. FIFO eviction at
+    runs; the maintenance tick (a driver-side footer read, no Spark
+    job) is the cost of knowing the version is still current. FIFO eviction at
     _PUBLISHED_RESULT_CACHE_MAX entries — insertion order, not
     recency (a hit does not refresh a key's position)."""
     from ..api import current_index_version, maintain_ivf_index
@@ -3305,7 +3315,7 @@ def q_ivf_lifecycle_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files) that the delete didn't already rewrite back to 1.
     compact_ivf_cells(spark, path, max_files_per_cell=1)
     return (
-        spark.read.parquet(path)
+        read_artifact(spark, path)
         .groupBy("cell")
         .agg(
             F.count("*").cast("long").alias("n_docs"),
@@ -3750,7 +3760,7 @@ def q_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qt = local_rows(spark, pairs, "question_id INT, term STRING")
     wtd = (
-        spark.read.parquet(ensure_tfidf_by_doc(spark, sf_dir))
+        read_artifact(spark, ensure_tfidf_by_doc(spark, sf_dir))
         .filter(F.col("doc_id").isin(fb_docs))
         .select("doc_id", "term", "w")
     )
@@ -3781,8 +3791,8 @@ def q_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     qt2 = local_rows(spark, sorted(qt2_rows), "question_id INT, term STRING, wgt INT")
     terms2 = sorted({t for _, t, _ in qt2_rows})
     base = ensure_bm25_index(spark, sf_dir)
-    stats = F.broadcast(spark.read.parquet(os.path.join(base, "stats")))
-    tfq = spark.read.parquet(os.path.join(base, "postings")).filter(
+    stats = F.broadcast(read_artifact(spark, os.path.join(base, "stats")))
+    tfq = read_artifact(spark, os.path.join(base, "postings")).filter(
         F.col("term").isin(terms2)
     )
     dfq = F.broadcast(tfq.groupBy("term").agg(F.count("*").alias("df")))

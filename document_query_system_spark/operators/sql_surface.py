@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..sources.tables import load
+from ..sources.tmputil import read_artifact
 
 _BFS_MAX_DEPTH = 3
 # Same derived graph as the triangle family — imported, not
@@ -88,9 +89,9 @@ def q_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlined (the oracle has no stored index)."""
     from ..api import ensure_coorder_edges
 
-    spark.read.parquet(
-        ensure_coorder_edges(spark, sf_dir)
-    ).createOrReplaceTempView("edges")
+    read_artifact(spark, ensure_coorder_edges(spark, sf_dir)).createOrReplaceTempView(
+        "edges"
+    )
     return spark.sql(f"WITH RECURSIVE{_BFS_BODY}")
 
 

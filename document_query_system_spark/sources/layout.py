@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from .tables import load
-from .tmputil import ensure_materialized
+from .tmputil import ensure_materialized, read_artifact, write_artifact
 
 # ------------------------------------------------------------- compaction
 
@@ -40,7 +40,7 @@ _COMPACT_TARGET_BYTES = 256 * 1024
 def _ensure_fragmented_docs(spark: SparkSession, sf_dir: str) -> str:
     def build(path: str) -> None:
         docs = load(spark, sf_dir, "documents")
-        docs.repartition(_FRAG_FILES).write.mode("overwrite").parquet(path)
+        write_artifact(docs.repartition(_FRAG_FILES).write.mode("overwrite"), path)
 
     return ensure_materialized(spark, "fragmented", sf_dir, "documents", build)
 
@@ -58,7 +58,7 @@ def compact_parquet(
     rewrites and the LAST thing they need is a re-shuffle of the
     whole table — with a repartition fallback for the rare
     under-partitioned scan (see the inline comment)."""
-    df = spark.read.parquet(in_path)
+    df = read_artifact(spark, in_path)
     files = [f.removeprefix("file:") for f in df.inputFiles()]
     total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, math.ceil(total / target_bytes))
@@ -72,8 +72,8 @@ def compact_parquet(
         out = df.coalesce(n_out)
     else:
         out = df.repartition(n_out)
-    out.write.mode("overwrite").parquet(out_path)
-    n_after = len(spark.read.parquet(out_path).inputFiles())
+    write_artifact(out.write.mode("overwrite"), out_path)
+    n_after = len(read_artifact(spark, out_path).inputFiles())
     return len(files), n_after
 
 
@@ -106,7 +106,7 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is asserted against the written files in tests/test_layout.py."""
     path = ensure_compacted_docs(spark, sf_dir)
     return (
-        spark.read.parquet(path)
+        read_artifact(spark, path)
         .groupBy("source")
         .agg(
             F.count("*").cast("long").alias("n_docs"),
@@ -156,13 +156,13 @@ def ensure_zordered_lineitem(spark: SparkSession, sf_dir: str) -> str:
             F.lit(2**_Z_BITS - 1),
             (F.col("l_suppkey") * (2**_Z_BITS) / (smax + 1)).cast("int"),
         )
-        (
+        write_artifact(
             li.withColumn("z", _morton(bp, bs))
             .repartitionByRange(_Z_FILES, "z")
             .sortWithinPartitions("z")
             .drop("z")
-            .write.mode("overwrite")
-            .parquet(path)
+            .write.mode("overwrite"),
+            path,
         )
 
     return ensure_materialized(spark, "zorder", sf_dir, "lineitem", build)
@@ -193,7 +193,7 @@ def q_zorder_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension and destroys it for the other) —
     tests/test_layout.py measures the per-file ranges."""
     path = ensure_zordered_lineitem(spark, sf_dir)
-    z = spark.read.parquet(path)
+    z = read_artifact(spark, path)
     a = (
         z.filter(F.col("l_partkey").between(100, 199))
         .agg(

@@ -135,7 +135,7 @@ def _ensure_evolved_customer(spark: SparkSession, sf_dir: str) -> str:
     with the original columns; v2 adds a derived ``tier`` column —
     the additive schema change every long-lived landing zone
     accumulates. Materialized once per (session, sf_dir)."""
-    from .tmputil import ensure_materialized
+    from .tmputil import ensure_materialized, write_artifact
 
     def build(path: str) -> None:
         cust = load(spark, sf_dir, "customer").select(
@@ -145,8 +145,8 @@ def _ensure_evolved_customer(spark: SparkSession, sf_dir: str) -> str:
         v2 = cust.filter(F.col("c_custkey") % 2 == 1).withColumn(
             "tier", F.when(F.col("c_acctbal") >= 0, "standard").otherwise("debt")
         )
-        v1.write.mode("overwrite").parquet(f"{path}/gen=1")
-        v2.write.mode("overwrite").parquet(f"{path}/gen=2")
+        write_artifact(v1.write.mode("overwrite"), f"{path}/gen=1")
+        write_artifact(v2.write.mode("overwrite"), f"{path}/gen=2")
 
     return ensure_materialized(spark, "evolved", sf_dir, "customer", build)
 

@@ -99,7 +99,7 @@ def q_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from .tmputil import dir_tag, session_key, tmp_path
+from .tmputil import dir_tag, read_artifact, session_key, tmp_path, write_artifact
 
 _BUCKETS = 8
 _BUCKET_DB_READY: set[tuple] = set()
@@ -208,11 +208,11 @@ def _ensure_partitioned_docs(spark: SparkSession, sf_dir: str) -> str:
     path = tmp_path("partitioned", tag, "documents")
     key = session_key(spark, sf_dir)
     if key not in _PARTITIONED_READY:
-        (
+        write_artifact(
             load(spark, sf_dir, "documents")
             .write.mode("overwrite")
-            .partitionBy("lang")
-            .parquet(path)
+            .partitionBy("lang"),
+            path,
         )
         _PARTITIONED_READY.add(key)
     return path
@@ -235,7 +235,7 @@ def q_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_quality.py). At 100 TB this is the difference
     between listing/reading 1/Nth of the table and all of it."""
     path = _ensure_partitioned_docs(spark, sf_dir)
-    d = spark.read.parquet(path).filter(F.col("lang") == "de")
+    d = read_artifact(spark, path).filter(F.col("lang") == "de")
     return d.groupBy("source").agg(
         F.count("*").alias("n"),
         F.sum("n_chars").alias("chars"),
@@ -263,7 +263,7 @@ def upsert_parquet(
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(jpath):
-        unioned = spark.read.parquet(path).unionByName(updates)
+        unioned = read_artifact(spark, path).unionByName(updates)
     else:
         unioned = updates
     # order_col may be a list: secondary keys make the winner
@@ -277,7 +277,7 @@ def upsert_parquet(
     )
     # Materialize before overwrite (reading and overwriting the same
     # path in one job would race); localCheckpoint keeps it in memory.
-    deduped.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+    write_artifact(deduped.localCheckpoint(eager=True).write.mode("overwrite"), path)
 
 
 @register(

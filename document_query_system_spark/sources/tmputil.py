@@ -14,6 +14,16 @@ Memoization of "already materialized" state keys on the session's
 ``applicationId`` (stable and unique per SparkSession) rather than
 ``id(spark)``, which CPython may reuse after a stopped session is
 garbage-collected.
+
+The artifacts' schemas and row counts are facts the engine already
+holds, so serving reads them without a Spark job:
+
+- ``read_artifact`` infers a path's schema once (``spark.read.parquet``
+  runs a footer-reading job per call) and reads with the recorded
+  schema afterwards; ``write_artifact`` drops the record of the path
+  it writes, so a rewrite with a new schema is re-inferred;
+- ``parquet_rows`` sums the row counts in the Parquet footers on the
+  driver instead of running ``count()``.
 """
 
 from __future__ import annotations
@@ -22,7 +32,10 @@ import atexit
 import os
 import shutil
 import tempfile
+import threading
 import uuid
+
+from pyspark.sql.types import StructType
 
 PROC_TAG = uuid.uuid4().hex[:8]
 ROOT = os.path.join(tempfile.gettempdir(), f"dqs_{PROC_TAG}")
@@ -93,6 +106,89 @@ def ensure_materialized(spark, kind: str, sf_dir: str, leaf: str, build) -> str:
         build(path)
         _MATERIALIZED.add(key)
     return path
+
+
+#: Recorded schema per artifact path (read_artifact / write_artifact).
+_SCHEMAS: dict[str, StructType] = {}
+_SCHEMAS_LOCK = threading.Lock()
+#: Bumped by every forget: an inference that overlapped a write is not
+#: recorded, since it may have seen the files the write replaced.
+_FORGETS = 0
+
+
+def _artifact_key(path: str) -> str:
+    return path.rstrip("/")
+
+
+def read_artifact(spark, path: str):
+    """``spark.read.parquet(path)`` for a dataset the engine wrote: the
+    first read of a path infers its schema and records it; later reads
+    pass the recorded schema, which skips the inference job. Files are
+    still listed per read, so files appended since are seen. A path
+    never recorded reads by inference, so paths written by callers
+    (manifest-resolved or hand-built layouts) work unchanged."""
+    key = _artifact_key(path)
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(key)
+        forgets = _FORGETS
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        if forgets == _FORGETS:
+            _SCHEMAS[key] = df.schema
+    return df
+
+
+def forget_artifact(path: str) -> None:
+    """Drop the recorded schema of ``path``, of every path under it and
+    of every path above it: a write anywhere in a dataset's tree can
+    change what a read of any enclosing path sees."""
+    global _FORGETS
+    key = _artifact_key(path)
+    with _SCHEMAS_LOCK:
+        _FORGETS += 1
+        for k in [
+            k
+            for k in _SCHEMAS
+            if k == key or k.startswith(key + "/") or key.startswith(k + "/")
+        ]:
+            del _SCHEMAS[k]
+
+
+def write_artifact(writer, path: str) -> None:
+    """``writer.parquet(path)`` for every package write, so the next
+    ``read_artifact`` of the path re-infers a schema the write may have
+    changed. The record is dropped even when the write fails part-way."""
+    try:
+        writer.parquet(path)
+    finally:
+        forget_artifact(path)
+
+
+def _listed(name: str) -> bool:
+    """Spark's file-listing rule: names starting with '_' (other than
+    partition directories) or '.' are not data."""
+    return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of the local Parquet dataset at ``path`` (flat or
+    partitioned) from its file footers, read on the driver: the number
+    ``spark.read.parquet(path).count()`` returns, without a Spark job."""
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(path):
+        raise FileNotFoundError(path)
+    n = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if _listed(d)]
+        n += sum(
+            pq.read_metadata(os.path.join(root, f)).num_rows
+            for f in files
+            if _listed(f)
+        )
+    return n
 
 
 @atexit.register

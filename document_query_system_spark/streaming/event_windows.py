@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 
 from ..registry import register
 from ..sources.tables import events_ts_unit, load
+from ..sources.tmputil import read_artifact, write_artifact
 
 
 def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
@@ -455,7 +456,7 @@ def q_stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         _drain(q)
-    return spark.read.parquet(path).select(
+    return read_artifact(spark, path).select(
         "user_id", "event_type", "event_id", "value"
     )
 
@@ -776,7 +777,7 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial = batch_df.groupBy("row_i", "cell").agg(
             F.count("*").alias("total")
         )
-        partial.write.mode("append").parquet(path)
+        write_artifact(partial.write.mode("append"), path)
 
     with _scoped_shuffle_partitions(spark, _STREAM_SHUFFLE_PARTITIONS):
         q = (
@@ -787,7 +788,7 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _drain(q)
     return (
-        spark.read.parquet(path)
+        read_artifact(spark, path)
         .groupBy("row_i", "cell")
         .agg(F.sum("total").cast("long").alias("total"))
     )

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -37,3 +38,18 @@ def duck():
         )
     yield con
     con.close()
+
+
+def count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started), counted through a job
+    group once the listener bus has drained (the status store is fed
+    asynchronously)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

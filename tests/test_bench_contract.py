@@ -95,3 +95,34 @@ def test_bench_emits_one_json_line():
         if "Warning:" in l or "warnings.warn" in l
     ]
     assert warn_lines == [], warn_lines
+
+
+def test_summary_line_is_one_bounded_json_object():
+    """The stdout summary names the slowest 25 queries and stays one JSON
+    object of at most 2 KB with every registered query timed, the 25
+    slowest carrying the longest names in the registry, and a failure
+    among them."""
+    sys.path.insert(0, REPO)
+    import bench
+    from document_query_system_spark.registry import all_specs
+
+    names = sorted(all_specs(), key=len, reverse=True)
+    timings = {n: round(999.999 - i / 1000, 3) for i, n in enumerate(names)}
+    timings[names[-1]] = -1.0
+    baseline = {
+        "b1_index_docs_per_sec": 16947.1,
+        "b1_batch_docs": 100000,
+        "b1_wall_sec": 5.901,
+        "b2_vector_sec_per_query": 0.1635,
+        "b3_keyword_sec_per_query": 0.0917,
+    }
+    line = bench.summary_line(
+        12345.678, 23456.789, timings, 0.1, 32, baseline,
+        os.path.join(REPO, "BENCH_FULL.json"),
+    )
+    assert "\n" not in line
+    assert len(line.encode()) <= 2048, len(line.encode())
+    d = json.loads(line)
+    assert list(d["queries"]) == names[: bench.SUMMARY_SLOWEST]
+    assert bench.SUMMARY_SLOWEST == 25
+    assert d["n_queries"] == len(names) and d["n_failed"] == 1
