@@ -50,51 +50,28 @@ from .sources.tmputil import (
     forget_artifact,
     parquet_rows,
     read_artifact,
-    session_key,
     tmp_path,
     write_artifact,
 )
 from .functions.embed import _hash_embed_batch, dot, embed_df, embed_pandas
 from .operators.questions import GOLDEN_QUESTIONS, SNIPPET_LEN, TOP_K, questions_df
 
-_VECTOR_INDEX_READY: set[tuple] = set()
-
-#: Every artifact path a live builder memo hands out this process —
-#: each ensure_* builder registers its returned paths here on every
-#: call (r15 review: gc_index_versions used to RE-DERIVE these by
-#: duplicating the builders' tmp_path leaf names inline, so renaming
-#: a leaf would silently break gc's live protection for that
-#: builder). gc consults this one set; deleting a member would turn a
-#: later memo hit into a dangling read.
-_LIVE_ARTIFACT_PATHS: set[str] = set()
-
 
 def ensure_vector_index(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the document vector index ONCE per (session,
-    sf_dir) and return its Parquet path: (doc_id, snippet, dv) with
-    the deterministic embedder's vectors and the reference's
-    truncated-content metadata (ref: vectorizer.py:60-72 — index
-    payload carries content truncated to a snippet).
+    """The stored document vector index, built once per (session,
+    sf_dir): the Parquet path of (doc_id, snippet, dv) with the
+    deterministic embedder's vectors and the answer snippet (ref:
+    vectorizer.py:60-72, the index payload carries truncated content).
 
-    This is the engine form of the reference's build-then-query index
-    lifecycle (Pinecone upsert, ref: pinecone_manager.py:61-103): a
-    query must probe the STORED index, not re-embed the corpus per
-    question batch — at 100 TB re-embedding 5 B document vectors per
-    query is the difference between a seconds-scale probe and a
-    full-corpus pass. Kept fresh incrementally by the anti-join
-    delta pattern (q_incremental_index, sources/sinks.py) + the
-    last-writer-wins upsert (upsert_parquet).
+    Queries probe this stored index instead of re-embedding the corpus
+    per question batch, the engine form of the reference's
+    build-then-query lifecycle (ref: pinecone_manager.py:61-103). The
+    build embeds through the Arrow path (``embed_pandas``, bit-identical
+    to the SQL fold); the snippet is cut before the embed so the full
+    text never rides the Arrow return leg."""
 
-    The build embeds via the Arrow path (functions/embed.embed_pandas
-    — bit-identical to the SQL fold, measured 19× faster at the B1
-    workload and stable under suite-long JVM profiles; see its
-    docstring). Probes never notice: they scan the stored Parquet."""
-    tag = dir_tag(sf_dir)
-    path = tmp_path("vector_index", tag)
-    key = session_key(spark, sf_dir)
-    if key not in _VECTOR_INDEX_READY:
-        # Snippet is computed BEFORE the embed so the full text never
-        # rides the Arrow return leg (embed_pandas keep-pruning).
+    def build() -> str:
+        path = tmp_path("vector_index", dir_tag(sf_dir))
         docs = spread(
             load(spark, sf_dir, "documents").select(
                 "doc_id",
@@ -106,36 +83,25 @@ def ensure_vector_index(spark: SparkSession, sf_dir: str) -> str:
             docs, "text", out_col="dv", keep=["doc_id", "snippet"]
         )
         write_artifact(idx.write.mode("overwrite"), path)
-        _VECTOR_INDEX_READY.add(key)
-    _LIVE_ARTIFACT_PATHS.add(path)
-    return path
+        return path
 
-
-_VECTOR_LSH_READY: set[tuple] = set()
+    return ensure_materialized(spark, "vector_index", sf_dir, build)
 
 
 def ensure_vector_index_lsh(spark: SparkSession, sf_dir: str) -> str:
-    """Sign-LSH-bucketed projection of the stored vector index: one
-    row per (doc, hash table) with that table's 4-bit bucket id,
-    written ``partitionBy(tbl, bucket)`` — 48 directories at the
-    default 3-table × 4-plane config (operators/similarity.PLANES),
-    so a probe's bucket equi-join touches only the probed directories
-    instead of the full index. The document-corpus form of the
-    q_ann_lsh tier's stored layout; built ONCE per (session, sf_dir)
-    from the plain stored index — a projection, never a re-embed.
-
-    At 100 TB this is how an ANN candidate pool is served: the probe
-    side is |questions|·N_TABLES bucket keys (broadcast), the read is
-    N_TABLES bucket partitions per question (~N/2^planes vectors
-    each), and everything downstream (exact re-rank, MMR) works on
-    that bounded candidate set. Index size is N_TABLES× the plain
-    index — the standard LSH storage/recall trade."""
+    """Sign-LSH-bucketed projection of the stored vector index, built
+    once per (session, sf_dir): one row per (doc, hash table) with that
+    table's 4-bit bucket id, written ``partitionBy(tbl, bucket)`` (48
+    directories at the default 3-table x 4-plane config,
+    operators/similarity.PLANES). A probe's bucket equi-join then reads
+    only the probed directories, N_TABLES bucket partitions of about
+    N/2^planes vectors per question, instead of the full index. It is a
+    projection of the stored index, never a re-embed; the price is an
+    index N_TABLES times the plain one."""
     from .operators.similarity import N_PLANES, N_TABLES, _bucket_expr
 
-    tag = dir_tag(sf_dir)
-    path = tmp_path("vector_index_lsh", tag)
-    key = session_key(spark, sf_dir)
-    if key not in _VECTOR_LSH_READY:
+    def build() -> str:
+        path = tmp_path("vector_index_lsh", dir_tag(sf_dir))
         idx = read_artifact(spark, ensure_vector_index(spark, sf_dir))
         buckets = F.array(
             *[_bucket_expr(F.col("dv"), t) for t in range(N_TABLES)]
@@ -143,10 +109,9 @@ def ensure_vector_index_lsh(spark: SparkSession, sf_dir: str) -> str:
         write_artifact(
             # Cluster rows by their target directory before the
             # partitioned write: without this every task writes a
-            # sliver into every (tbl, bucket) dir — cores×48 tiny
-            # files whose per-file open cost dominates later probes.
-            # Explicit tables×2^planes count so the write
-            # parallelizes (cluster_by_dirs).
+            # sliver into every (tbl, bucket) dir. The explicit
+            # tables x 2^planes count lets the write parallelize
+            # (cluster_by_dirs).
             cluster_by_dirs(
                 idx.select(
                     "doc_id",
@@ -161,12 +126,10 @@ def ensure_vector_index_lsh(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("tbl", "bucket"),
             path,
         )
-        _VECTOR_LSH_READY.add(key)
-    _LIVE_ARTIFACT_PATHS.add(path)
-    return path
+        return path
 
+    return ensure_materialized(spark, "vector_index_lsh", sf_dir, build)
 
-_VECTOR_IVF_READY: set[tuple] = set()
 
 #: IVF geometry for the documents corpus. 16 cells at the demo scale
 #: keeps cells big enough that a 20-candidate pool survives nprobe=5
@@ -228,7 +191,7 @@ def ivf_retrain_due(trained_cells: int, n_vectors_now: int) -> bool:
     trained geometry by ≥ IVF_RETRAIN_FACTOR in either direction.
     A maintenance job runs ``ivf_retrain_due(cells, parquet_rows(index))``
     per batch — a driver-side footer read, no Spark job — and on True
-    rebuilds via ensure_vector_index_ivf_scaled under the new cells tag (the
+    rebuilds via ensure_ivf(scaled=True) under the new cells tag (the
     two geometries coexist; serving flips when the rewrite commits,
     the same blue/green swap the reference delegates to Pinecone's
     index create/connect lifecycle, ref:
@@ -462,9 +425,9 @@ def gc_index_versions(
       nothing else) — out-of-root paths are reported, not removed,
       and their log entries RETAINED so a later run can still see
       them;
-    - paths a live builder memo still hands out are skipped (a
-      session that re-asks ensure_vector_index_ivf_scaled must not
-      get a dangling path back), reported as skipped_live, their
+    - paths the session memo recorded (``tmputil.live_paths``) are
+      skipped, because a later builder call hands them out again
+      without rebuilding; they are reported as skipped_live and their
       log entries retained.
 
     Returns {kept_versions, pruned_versions, removed_paths,
@@ -478,7 +441,7 @@ def gc_index_versions(
     nothing."""
     import shutil
 
-    from .sources.tmputil import ROOT
+    from .sources.tmputil import ROOT, live_paths
 
     log = list_index_versions(spark, sf_dir, profile=profile)
     cur = current_index_version(spark, sf_dir, profile=profile)
@@ -507,20 +470,11 @@ def gc_index_versions(
             "unreadable_foreign": sorted(unreadable),
         }
     protected |= foreign
-    # Live builder memos hand these paths to later ensure_* calls in
-    # this session — deleting them would turn a memo hit into a
-    # dangling read. Tracked separately so the skip is REPORTED.
-    # Every ensure_* builder (flag-set AND dict-memo) registers its
-    # returned paths in _LIVE_ARTIFACT_PATHS (r14 ADVICE: a test can
-    # publish ensure_vector_index_ivf's triple into a manifest; once
-    # that entry ages past keep_last, gc must not rmtree a path the
-    # session memo still returns; r15 review: the registry replaces
-    # gc re-deriving the builders' tmp_path leaf names inline).
-    live: set[str] = set(_LIVE_ARTIFACT_PATHS)
-    for triple in _VECTOR_IVF_SCALED_READY.values():
-        live.update(triple[:2])
-    for triple in _EMB_IVF_SCALED_READY.values():
-        live.update(triple[:2])
+    # Every path the session memo recorded is handed out again by a
+    # later builder call without a rebuild, so deleting one would turn
+    # that call into a dangling read. Tracked separately so the skip is
+    # reported.
+    live = live_paths()
     root = ROOT.rstrip(os.sep) + os.sep
     removed: list[str] = []
     skipped: list[str] = []
@@ -784,8 +738,8 @@ def maintain_ivf_index(
             "psi_gated": bool(gated),
             "psi_due": bool(psi_due),
         }
-    # A fired psi_due deliberately does NOT drop the scaled-builder
-    # memo (r14 ADVICE adjudication): popping it makes the rebuild
+    # A fired psi_due deliberately does NOT drop the scaled layout's
+    # memo entry: popping it makes the rebuild
     # overwrite the layout path IN PLACE mid-session, and every reader
     # holding Spark's cached file listing for that path then fails
     # FILE_NOT_EXIST — the exact mutating-a-served-path hazard
@@ -807,7 +761,7 @@ def maintain_ivf_index(
             **extra,
         }
     else:
-        layout, cents, cells = ensure_vector_index_ivf_scaled(spark, sf_dir)
+        layout, cents, cells = ensure_ivf(spark, sf_dir, "documents", True)
         if cur is not None and (
             cur["layout"],
             cur["centroids"],
@@ -845,274 +799,121 @@ def maintain_ivf_index(
     return out
 
 
-_VECTOR_IVF_SCALED_READY: dict[tuple, tuple[str, str, int]] = {}
+def ensure_ivf(
+    spark: SparkSession, sf_dir: str, table: str, scaled: bool
+) -> tuple[str, str, int]:
+    """The k-means-trained IVF layout of one vector table, built once per
+    (session, sf_dir, table, geometry). Returns (layout_path,
+    centroids_path, cells).
+
+    The build trains ``cells`` coarse centroids with the engine's
+    deterministic Lloyd pass (operators/clustering.kmeans_fit_assign),
+    stores them as a K-row Parquet next to the layout (every probe ranks
+    them to pick its cells), and rewrites the vectors
+    ``partitionBy(cell)``, one directory per Voronoi cell, so a probe's
+    literal cell filter becomes a static partition prune.
+
+    - ``table="documents"`` trains on the stored document index
+      (``ensure_vector_index``): layout (doc_id, dv, cell) at
+      ``vector_index_ivf``.
+    - ``table="embeddings"`` trains on the embeddings table: layout
+      (vec_id, v, label, cell) at ``emb_index_ivf``. The label rides
+      through the assignment map because the mining queries split
+      candidates by label inside the pool.
+    - ``scaled=False`` is the fixed IVF_CELLS geometry that the
+      registered fixed-geometry queries pin their results to.
+      ``scaled=True`` is ``ivf_cells_for(N)``, N read from the source's
+      Parquet footers (no Spark job), under a ``_c{cells}`` path so the
+      two geometries coexist in one session.
+
+    The centroids path is the layout path with a ``_cents`` suffix."""
+
+    def build() -> tuple[str, str, int]:
+        from .functions.embed import dot as vdot
+        from .operators.clustering import kmeans_fit_assign
+
+        if table == "documents":
+            source = ensure_vector_index(spark, sf_dir)
+            vx = read_artifact(spark, source).select(
+                F.col("doc_id").alias("vec_id"), F.col("dv").alias("x")
+            )
+            keep: tuple[str, ...] = ()
+            out_cols = [F.col("vec_id").alias("doc_id"), F.col("x").alias("dv")]
+            leaf = "vector_index_ivf"
+        elif table == "embeddings":
+            source = os.path.join(sf_dir, "embeddings.parquet")
+            vx = load(spark, sf_dir, "embeddings").select(
+                "vec_id",
+                "label",
+                F.col("embedding").cast("array<double>").alias("x"),
+            )
+            keep = ("label",)
+            out_cols = ["vec_id", F.col("x").alias("v"), "label"]
+            leaf = "emb_index_ivf"
+        else:
+            raise ValueError(f"no IVF layout for table {table!r}")
+        cells = ivf_cells_for(parquet_rows(source)) if scaled else IVF_CELLS
+        leaf = f"{leaf}_c{cells}" if scaled else leaf
+        tag = dir_tag(sf_dir)
+        path, cents_path = tmp_path(leaf, tag), tmp_path(f"{leaf}_cents", tag)
+        assigned, cents = kmeans_fit_assign(
+            spark,
+            vx.withColumn("xx", vdot(F.col("x"), F.col("x"))),
+            cells,
+            keep=keep,
+        )
+        write_artifact(
+            local_rows(
+                spark,
+                [(int(c), [float(v) for v in cv], float(cc)) for c, cv, cc in cents],
+                "cid LONG, cv ARRAY<DOUBLE>, cc DOUBLE",
+            ).write.mode("overwrite"),
+            cents_path,
+        )
+        write_artifact(
+            # Cluster rows by their target cell directory before the
+            # partitioned write, with the explicit cells count so the
+            # write parallelizes (cluster_by_dirs); otherwise every task
+            # writes a sliver into every cell directory.
+            cluster_by_dirs(
+                assigned.select(*out_cols, F.col("cid").alias("cell")),
+                cells,
+                "cell",
+            )
+            .write.mode("overwrite")
+            .partitionBy("cell"),
+            path,
+        )
+        return path, cents_path, cells
+
+    return ensure_materialized(spark, "ivf", sf_dir, build, table, scaled)
 
 
 def ensure_vector_index_ivf_scaled(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, str, int]:
-    """ensure_vector_index_ivf at the CORPUS-ADAPTIVE cell count
-    (ivf_cells_for(N) instead of the fixed IVF_CELLS floor): takes N
-    from the stored index's Parquet footers (parquet_rows, memoized
-    with the layout), trains ivf_cells_for(N) centroids with the same
-    deterministic Lloyd pass, and rewrites partitionBy(cell) under a
-    cells-tagged path so the two geometries coexist in one session.
-    Returns (layout_path, centroids_path, cells). This is the layout
-    q_ivf_recall_scaled reports recall for — the r11 verdict's "make
-    IVF_CELLS a function of corpus size" demonstration, kept separate
-    from the 16-cell layout so every r11-vintage IVF query's results
-    stay byte-identical."""
-    from .functions.embed import dot as vdot
-
-    key = session_key(spark, sf_dir)
-    if key in _VECTOR_IVF_SCALED_READY:
-        _LIVE_ARTIFACT_PATHS.update(_VECTOR_IVF_SCALED_READY[key][:2])
-        return _VECTOR_IVF_SCALED_READY[key]
-    index = ensure_vector_index(spark, sf_dir)
-    idx = read_artifact(spark, index)
-    cells = ivf_cells_for(parquet_rows(index))
-    tag = dir_tag(sf_dir)
-    path = tmp_path(f"vector_index_ivf_c{cells}", tag)
-    cents_path = tmp_path(f"vector_index_ivf_c{cells}_cents", tag)
-    vx = idx.select(
-        F.col("doc_id").alias("vec_id"), F.col("dv").alias("x")
-    ).withColumn("xx", vdot(F.col("x"), F.col("x")))
-    _build_ivf_layout(
-        spark,
-        vx,
-        keep=(),
-        out_cols=[
-            F.col("vec_id").alias("doc_id"),
-            F.col("x").alias("dv"),
-            F.col("cid").alias("cell"),
-        ],
-        path=path,
-        cents_path=cents_path,
-        cells=cells,
-    )
-    _VECTOR_IVF_SCALED_READY[key] = (path, cents_path, cells)
-    _LIVE_ARTIFACT_PATHS.update((path, cents_path))
-    return path, cents_path, cells
-
-
-def _build_ivf_layout(
-    spark: SparkSession,
-    vx: DataFrame,
-    keep: tuple[str, ...],
-    out_cols: list,
-    path: str,
-    cents_path: str,
-    cells: int = IVF_CELLS,
-) -> None:
-    """Shared IVF build core (r11 review: the documents and embeddings
-    builders are the same train→store-centroids→partitioned-write
-    sequence): train ``cells`` centroids (default the IVF_CELLS floor;
-    the scaled builder passes ivf_cells_for(N)) with the deterministic
-    Lloyd pass over ``vx(vec_id, x, xx, *keep)``, store them as a
-    K-row parquet at cents_path, and rewrite the vectors
-    partitionBy(cell) at path. ``out_cols`` maps the assignment's
-    columns to the layout's schema (the cell column must be aliased
-    from cid)."""
-    from .operators.clustering import kmeans_fit_assign
-
-    assigned, cents = kmeans_fit_assign(spark, vx, cells, keep=keep)
-    write_artifact(
-        local_rows(
-            spark,
-            [(int(cid), [float(v) for v in cv], float(cc)) for cid, cv, cc in cents],
-            "cid LONG, cv ARRAY<DOUBLE>, cc DOUBLE",
-        ).write.mode("overwrite"),
-        cents_path,
-    )
-    write_artifact(
-        # Cluster rows by their target directory before the
-        # partitioned write (the LSH-layout lesson: without this
-        # every task writes a sliver into every cell dir), with the
-        # explicit cells count so the write parallelizes
-        # (cluster_by_dirs: the keyless form AQE-coalesced the tiny
-        # pre-write shuffle to ONE task at bench scale).
-        cluster_by_dirs(assigned.select(*out_cols), cells, "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell"),
-        path,
-    )
-
-
-def ensure_vector_index_ivf(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """k-means-trained IVF layout of the stored document vector index
-    (r10 verdict #2): the engine's own deterministic Lloyd trainer
-    (operators/clustering.kmeans_fit_assign — the same 2-round seeded
-    pass q_cluster_kmeans runs on the embeddings table) learns
-    IVF_CELLS coarse centroids from the document hash-embeds, and the
-    index is rewritten ``partitionBy(cell)`` — one directory per
-    Voronoi cell. Returns (layout_path, centroids_path); the
-    centroids are stored next to the layout because every probe ranks
-    them to pick its nprobe cells (K rows — the bounded "index
-    metadata" a real IVF serving node keeps in memory).
-
-    vs the sign-LSH layout (ensure_vector_index_lsh): LSH needs no
-    training and replicates the index N_TABLES×; IVF stores each
-    vector ONCE and adapts its partitions to the corpus's actual
-    density at the cost of a training pass. Same serving shape either
-    way: literal probe keys → static partition pruning → bounded
-    candidate pool (q_mmr_ivf_pool). Trained ONCE per (session,
-    sf_dir); a production deployment retrains on drift and rewrites —
-    the delta path is the q_incremental_lsh pattern with cell in
-    place of (tbl, bucket)."""
-    from .functions.embed import dot as vdot
-
-    tag = dir_tag(sf_dir)
-    path = tmp_path("vector_index_ivf", tag)
-    cents_path = tmp_path("vector_index_ivf_cents", tag)
-    key = session_key(spark, sf_dir)
-    if key not in _VECTOR_IVF_READY:
-        idx = read_artifact(spark, ensure_vector_index(spark, sf_dir))
-        vx = idx.select(
-            F.col("doc_id").alias("vec_id"), F.col("dv").alias("x")
-        ).withColumn("xx", vdot(F.col("x"), F.col("x")))
-        _build_ivf_layout(
-            spark,
-            vx,
-            keep=(),
-            out_cols=[
-                F.col("vec_id").alias("doc_id"),
-                F.col("x").alias("dv"),
-                F.col("cid").alias("cell"),
-            ],
-            path=path,
-            cents_path=cents_path,
-        )
-        _VECTOR_IVF_READY.add(key)
-    _LIVE_ARTIFACT_PATHS.update((path, cents_path))
-    return path, cents_path
-
-
-_EMB_IVF_READY: set[tuple] = set()
-
-
-def ensure_embeddings_index_ivf(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """IVF layout for the EMBEDDINGS table (vec_id, label, v),
-    trained with the same deterministic Lloyd pass as the documents
-    layout (ensure_vector_index_ivf) at the same IVF_CELLS geometry —
-    the stored serving layout the mining queries
-    (q_training_triplets_ann) pool from, replacing their full-table
-    scoring scan with a cell-pruned read. Labels ride the layout rows
-    because the consumers split candidates into positives/negatives
-    by label INSIDE the pool. Returns (layout_path, centroids_path);
-    built once per (session, sf_dir)."""
-    from .functions.embed import dot as vdot
-
-    tag = dir_tag(sf_dir)
-    path = tmp_path("emb_index_ivf", tag)
-    cents_path = tmp_path("emb_index_ivf_cents", tag)
-    key = session_key(spark, sf_dir)
-    if key not in _EMB_IVF_READY:
-        vx = load(spark, sf_dir, "embeddings").select(
-            "vec_id",
-            "label",
-            F.col("embedding").cast("array<double>").alias("x"),
-        ).withColumn("xx", vdot(F.col("x"), F.col("x")))
-        # label rides THROUGH the assignment map (keep=) — joining it
-        # back on vec_id afterwards would shuffle every vector twice
-        # at build time for a column the scan already had (r11 review).
-        _build_ivf_layout(
-            spark,
-            vx,
-            keep=("label",),
-            out_cols=[
-                "vec_id",
-                F.col("x").alias("v"),
-                "label",
-                F.col("cid").alias("cell"),
-            ],
-            path=path,
-            cents_path=cents_path,
-        )
-        _EMB_IVF_READY.add(key)
-    _LIVE_ARTIFACT_PATHS.update((path, cents_path))
-    return path, cents_path
-
-
-_EMB_IVF_SCALED_READY: dict[tuple, tuple[str, str, int]] = {}
-
-
-def ensure_embeddings_index_ivf_scaled(
-    spark: SparkSession, sf_dir: str
-) -> tuple[str, str, int]:
-    """ensure_embeddings_index_ivf at the CORPUS-ADAPTIVE cell count
-    (r12 verdict #4: the mining layout still trained a fixed
-    IVF_CELLS=16 after ivf_cells_for reached the documents serving
-    layout — the same probe-fraction argument applies to
-    between-epochs mining at 100×): counts the embeddings table once
-    (bounded metadata job, memoized with the layout), trains
-    ivf_cells_for(N) centroids with the same deterministic Lloyd
-    pass, and writes partitionBy(cell) under a cells-tagged path so
-    the two mining geometries coexist in one session (exactly the
-    ensure_vector_index_ivf_scaled pattern for documents). Labels
-    ride the layout rows as in the fixed-geometry builder. Returns
-    (layout_path, centroids_path, cells). The fixed-16 layout stays
-    the geometry of the r11-vintage q_training_triplets_ann so its
-    results remain byte-identical; q_training_triplets_join serves
-    from this one (functions/vector.py)."""
-    from .functions.embed import dot as vdot
-
-    key = session_key(spark, sf_dir)
-    if key in _EMB_IVF_SCALED_READY:
-        _LIVE_ARTIFACT_PATHS.update(_EMB_IVF_SCALED_READY[key][:2])
-        return _EMB_IVF_SCALED_READY[key]
-    vx = load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.col("embedding").cast("array<double>").alias("x"),
-    ).withColumn("xx", vdot(F.col("x"), F.col("x")))
-    cells = ivf_cells_for(vx.count())
-    tag = dir_tag(sf_dir)
-    path = tmp_path(f"emb_index_ivf_c{cells}", tag)
-    cents_path = tmp_path(f"emb_index_ivf_c{cells}_cents", tag)
-    _build_ivf_layout(
-        spark,
-        vx,
-        keep=("label",),
-        out_cols=[
-            "vec_id",
-            F.col("x").alias("v"),
-            "label",
-            F.col("cid").alias("cell"),
-        ],
-        path=path,
-        cents_path=cents_path,
-        cells=cells,
-    )
-    _EMB_IVF_SCALED_READY[key] = (path, cents_path, cells)
-    _LIVE_ARTIFACT_PATHS.update((path, cents_path))
-    return path, cents_path, cells
-
-
-_BM25_INDEX_READY: set[tuple] = set()
+    """``ensure_ivf(spark, sf_dir, "documents", scaled=True)``."""
+    return ensure_ivf(spark, sf_dir, "documents", True)
 
 
 def ensure_bm25_index(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the BM25 posting index ONCE per (session, sf_dir)
-    and return its base path: ``postings/`` = (term, doc_id, dl, tf)
-    clustered and sorted by term, ``stats/`` = one row (n_docs,
-    avgdl). The keyword twin of ensure_vector_index: the reference's
-    build-then-query lifecycle applies to the keyword leg too — a
-    retrieval query probes the stored postings (the term predicate
-    pushes into the Parquet scan, and term-sorted row groups make the
-    min/max skip selective), never re-running scan→tokenize→explode
-    per question batch, which at 100 TB is a full corpus pass per
-    call. Kept fresh the same way the vector index is: anti-join
-    delta + last-writer-wins upsert."""
-    tag = dir_tag(sf_dir)
-    base = tmp_path("bm25_index", tag)
-    key = session_key(spark, sf_dir)
-    if key not in _BM25_INDEX_READY:
+    """The stored BM25 posting index, built once per (session, sf_dir);
+    returns its base path. ``postings/`` holds (term, doc_id, dl, tf)
+    clustered and sorted by term, ``stats/`` one row (n_docs, avgdl).
+    The keyword twin of ensure_vector_index: a retrieval query probes
+    the stored postings (the term predicate pushes into the Parquet
+    scan, and term-sorted row groups make the min/max skip selective)
+    instead of re-running scan, tokenize and explode per question
+    batch."""
+
+    def build() -> str:
         from .functions.hashing import tokens
 
+        base = tmp_path("bm25_index", dir_tag(sf_dir))
         docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
-        # Checkpointed: the postings write AND the stats write both
-        # consume tok — without this the build pays the full corpus
-        # tokenize twice (the ensure_tfidf_index discipline).
+        # Checkpointed: the postings write and the stats write both
+        # consume tok, so without it the build tokenizes the corpus
+        # twice.
         tok = docs.select(
             "doc_id", tokens(F.lower(F.col("text"))).alias("tk")
         ).localCheckpoint(eager=False)
@@ -1135,35 +936,28 @@ def ensure_bm25_index(spark: SparkSession, sf_dir: str) -> str:
             ).write.mode("overwrite"),
             os.path.join(base, "stats"),
         )
-        _BM25_INDEX_READY.add(key)
-    return base
+        return base
 
-
-_TFIDF_INDEX_READY: set[tuple] = set()
+    return ensure_materialized(spark, "bm25_index", sf_dir, build)
 
 
 def ensure_tfidf_index(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the TF-IDF weighted index ONCE per (session,
-    sf_dir): ``weighted/`` = (term, doc_id, w, dnorm) clustered and
-    sorted by term (w = tf·idf rounded to 6; dnorm = the doc's vector
-    norm riding as a column, NOT pre-divided, so probe rounding stays
-    bit-identical to the oracle), ``terms/`` = (term, df, n_docs) for
-    probe-side idf weights. A DOC-KEYED twin for lookups that start
-    from document ids lives in its own lazily-built memo
-    (ensure_tfidf_by_doc below). Same lifecycle contract as
-    ensure_vector_index / ensure_bm25_index: queries probe the stored
-    index with their term (or doc) predicate pushed into the Parquet
-    scan.
+    """The stored TF-IDF index, built once per (session, sf_dir);
+    returns its base path. ``weighted/`` holds (term, doc_id, w, dnorm)
+    clustered and sorted by term, with w = tf·idf rounded to 6 and dnorm
+    the document's vector norm carried as a column rather than divided
+    in, so probe-side rounding stays bit-identical to the oracle.
+    ``terms/`` holds (term, df, n_docs) for probe-side idf weights.
+    Queries probe the stored index with their term predicate pushed
+    into the Parquet scan; the doc-keyed copy is ensure_tfidf_by_doc.
 
-    Determinism note: per-doc norms sum integer MICRO-units (a float
-    sum of round-6 terms is partition-order-dependent — the
-    q_rfm_segments half-cent class)."""
-    tag = dir_tag(sf_dir)
-    base = tmp_path("tfidf_index", tag)
-    key = session_key(spark, sf_dir)
-    if key not in _TFIDF_INDEX_READY:
+    Per-document norms sum integer micro-units, because a float sum of
+    round-6 terms depends on partition order."""
+
+    def build() -> str:
         from .functions.hashing import tokens
 
+        base = tmp_path("tfidf_index", dir_tag(sf_dir))
         docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
         tok = docs.select("doc_id", tokens(F.lower(F.col("text"))).alias("tk"))
         stats = F.broadcast(tok.agg(F.count("*").alias("n_docs")))
@@ -1201,26 +995,21 @@ def ensure_tfidf_index(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite"),
             os.path.join(base, "weighted"),
         )
-        _TFIDF_INDEX_READY.add(key)
-    return base
+        return base
 
-
-_TFIDF_BYDOC_READY: set[tuple] = set()
+    return ensure_materialized(spark, "tfidf_index", sf_dir, build)
 
 
 def ensure_tfidf_by_doc(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the DOC-KEYED twin of the TF-IDF index ONCE per
-    (session, sf_dir) and return its path: the same weighted rows
-    re-clustered and sorted by doc_id, read back from the
-    term-clustered copy (cheaper than recomputing the join). Its own
-    memo, separate from ensure_tfidf_index: only doc-keyed readers
-    (PRF feedback-term mining) trigger it, so term-keyed consumers
-    (q_tfidf_topk, the driver gate) never pay a second full-index
-    rewrite for an artifact they don't read (r9 review)."""
-    base = ensure_tfidf_index(spark, sf_dir)
-    path = os.path.join(base, "by_doc")
-    key = session_key(spark, sf_dir)
-    if key not in _TFIDF_BYDOC_READY:
+    """The doc-keyed copy of the TF-IDF index, built once per (session,
+    sf_dir); returns its path. The same weighted rows, re-clustered and
+    sorted by doc_id, read back from the term-clustered copy. It is a
+    separate build because only doc-keyed readers (PRF feedback-term
+    mining) need it, so term-keyed queries never pay the rewrite."""
+
+    def build() -> str:
+        base = ensure_tfidf_index(spark, sf_dir)
+        path = os.path.join(base, "by_doc")
         write_artifact(
             read_artifact(spark, os.path.join(base, "weighted"))
             .repartition(F.col("doc_id"))
@@ -1228,29 +1017,22 @@ def ensure_tfidf_by_doc(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite"),
             path,
         )
-        _TFIDF_BYDOC_READY.add(key)
-    return path
+        return path
 
-
-_COORDER_EDGES_READY: set[tuple] = set()
+    return ensure_materialized(spark, "tfidf_by_doc", sf_dir, build)
 
 
 def ensure_coorder_edges(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the co-order part graph ONCE per (session, sf_dir):
-    DISTINCT (u, v) edges with u < v connecting parts co-ordered in
-    the same urgent order — the shared substrate of the whole graph
-    family (triangles, label propagation, k-core, recursive BFS),
-    each of which previously re-derived the identical
-    lineitem⨯orders self-join + distinct per call (~2 s each at
-    sf0.1). A link graph IS a materialized artifact in web pipelines
-    (the crawl's link table); deriving it per query is the same
-    anti-pattern as re-embedding the corpus per retrieval call."""
+    """The co-order part graph, built once per (session, sf_dir);
+    returns its path. Distinct (u, v) edges with u < v connect parts
+    ordered together in the same urgent order. It is the shared input of
+    the graph queries (triangles, label propagation, k-core, recursive
+    BFS), which would otherwise each repeat the lineitem x orders
+    self-join and distinct."""
     from .operators.graph_metrics import _TRI_PRIORITY
 
-    tag = dir_tag(sf_dir)
-    path = tmp_path("coorder_edges", tag)
-    key = session_key(spark, sf_dir)
-    if key not in _COORDER_EDGES_READY:
+    def build() -> str:
+        path = tmp_path("coorder_edges", dir_tag(sf_dir))
         li = (
             load(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_partkey")
@@ -1274,21 +1056,22 @@ def ensure_coorder_edges(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite"),
             path,
         )
-        _COORDER_EDGES_READY.add(key)
-    return path
+        return path
+
+    return ensure_materialized(spark, "coorder_edges", sf_dir, build)
 
 
 def ensure_keyword_table(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the keyword leg's serving table ONCE per (session,
-    sf_dir) and return its Parquet path: (doc_id, snippet, text_lc)
-    with the answer snippet and the lower-cased document text. The
-    keyword twin of ensure_vector_index: a request probes the stored
-    rows instead of re-spreading and lower-casing the corpus per
-    question batch. Written through spread(), like the vector index,
-    so the table lands as several files and the probe scan runs in
-    parallel without a per-request round-robin shuffle."""
+    """The keyword leg's serving table, built once per (session,
+    sf_dir); returns its Parquet path of (doc_id, snippet, text_lc) with
+    the answer snippet and the lower-cased document text. A request
+    probes the stored rows instead of re-spreading and lower-casing the
+    corpus per question batch. Written through spread(), like the
+    vector index, so the table lands as several files and the probe scan
+    runs in parallel without a per-request round-robin shuffle."""
 
-    def build(path: str) -> None:
+    def build() -> str:
+        path = tmp_path("keyword_table", dir_tag(sf_dir), "documents")
         write_artifact(
             spread(load(spark, sf_dir, "documents"))
             .select(
@@ -1299,8 +1082,9 @@ def ensure_keyword_table(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite"),
             path,
         )
+        return path
 
-    return ensure_materialized(spark, "keyword_table", sf_dir, "documents", build)
+    return ensure_materialized(spark, "keyword_table", sf_dir, build)
 
 
 def run_query(

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources.tables import load, local_rows, spread
-from ..sources.tmputil import read_artifact
+from ..sources.tmputil import ensure_materialized, read_artifact
 from .hashing import P, MULT, token_hashes, token_hashes_sql  # noqa: F401
 from .embed import (  # noqa: F401  (re-exported public surface)
     DIM,
@@ -669,8 +669,6 @@ _TRIPLET_NPROBE = 8
 # point of scaling cells.
 _TRIPLET_NPROBE_SCALED = 26
 
-_EMB_IVF_PROBE_CACHE: dict[tuple, tuple] = {}
-
 #: Above this anchor count the literal fold-in is the wrong shape —
 #: _triplet_probe_literals collects |anchors|·nprobe rows INCLUDING
 #: the DIM-double anchor vectors, so a millions-of-anchors
@@ -704,45 +702,41 @@ def _triplet_probe_literals(
 ) -> tuple[list, list]:
     """(anchor_rows, probe_cells) for the embeddings IVF probe: each
     anchor's _TRIPLET_NPROBE nearest trained cells folded to plan-time
-    literals — the _ivf_probe_literals pattern (bounded engine
-    mini-job over |anchors|×IVF_CELLS rows with the exact oracle
-    arithmetic: round(d2, 6) ranking, cid tiebreak), memoized per
-    (session, sf_dir) for the default fixture slice (a custom
-    ``anchors`` DataFrame is the caller's to bound — triplet_pool_auto
-    only routes here below _TRIPLET_FOLD_MAX_ANCHORS). Anchor
-    vectors/labels ride the rows so the pool probe needs no second
-    source read."""
-    from ..api import ensure_embeddings_index_ivf
-    from ..sources.tmputil import session_key
+    literals, the _ivf_probe_literals pattern (a bounded engine mini-job
+    over |anchors| x IVF_CELLS rows with the oracle's arithmetic:
+    round(d2, 6) ranking, cid tiebreak). Anchor vectors and labels ride
+    the rows so the pool probe needs no second source read. The default
+    fixture slice is recorded in the session memo per sf_dir; a custom
+    ``anchors`` DataFrame folds per call and is the caller's to bound
+    (triplet_pool_auto only routes here below
+    _TRIPLET_FOLD_MAX_ANCHORS)."""
+    from ..api import ensure_ivf
 
-    key = None
-    if anchors is None:
-        key = session_key(spark, "emb_ivf_probe", sf_dir)
-        if key in _EMB_IVF_PROBE_CACHE:
-            return _EMB_IVF_PROBE_CACHE[key]
-    _, cents_path = ensure_embeddings_index_ivf(spark, sf_dir)
-    cents = read_artifact(spark, cents_path)
-    anch = anchors if anchors is not None else _triplet_anchors(spark, sf_dir)
-    d2 = F.round(
-        F.col("qq") - 2 * dot(F.col("qv"), F.col("cv")) + F.col("cc"), 6
-    )
-    w = Window.partitionBy("anchor_id").orderBy("d2", "cid")
-    rows = (
-        anch.crossJoin(F.broadcast(cents))
-        .select("anchor_id", "anchor_label", "qv", "cid", d2.alias("d2"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TRIPLET_NPROBE)
-        .select("anchor_id", "anchor_label", "qv", "cid")
-        .collect()
-    )
-    anchor_rows = [
-        (int(r.anchor_id), int(r.anchor_label), [float(x) for x in r.qv], int(r.cid))
-        for r in rows
-    ]
-    out = (anchor_rows, sorted({c for *_, c in anchor_rows}))
-    if key is not None:
-        _EMB_IVF_PROBE_CACHE[key] = out
-    return out
+    def build() -> tuple[list, list]:
+        _, cents_path, _ = ensure_ivf(spark, sf_dir, "embeddings", False)
+        cents = read_artifact(spark, cents_path)
+        anch = anchors if anchors is not None else _triplet_anchors(spark, sf_dir)
+        d2 = F.round(
+            F.col("qq") - 2 * dot(F.col("qv"), F.col("cv")) + F.col("cc"), 6
+        )
+        w = Window.partitionBy("anchor_id").orderBy("d2", "cid")
+        rows = (
+            anch.crossJoin(F.broadcast(cents))
+            .select("anchor_id", "anchor_label", "qv", "cid", d2.alias("d2"))
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= _TRIPLET_NPROBE)
+            .select("anchor_id", "anchor_label", "qv", "cid")
+            .collect()
+        )
+        anchor_rows = [
+            (int(r.anchor_id), int(r.anchor_label), [float(x) for x in r.qv], int(r.cid))
+            for r in rows
+        ]
+        return anchor_rows, sorted({c for *_, c in anchor_rows})
+
+    if anchors is not None:
+        return build()
+    return ensure_materialized(spark, "emb_ivf_probe", sf_dir, build)
 
 
 def triplet_ann_pool(
@@ -759,9 +753,9 @@ def triplet_ann_pool(
     fixture's slice (memoized fold); a custom (anchor_id,
     anchor_label, qv, qq) DataFrame folds per call — use
     triplet_pool_auto so oversized sets route to the join path."""
-    from ..api import ensure_embeddings_index_ivf
+    from ..api import ensure_ivf
 
-    layout, _ = ensure_embeddings_index_ivf(spark, sf_dir)
+    layout, _, _ = ensure_ivf(spark, sf_dir, "embeddings", False)
     anchor_rows, probe_cells = _triplet_probe_literals(
         spark, sf_dir, anchors=anchors
     )
@@ -851,24 +845,15 @@ def triplet_join_pool(
     ``anchors`` defaults to the mining fixture's slice; a production
     caller passes any (anchor_id, anchor_label, qv, qq) DataFrame.
     ``scaled=True`` mines from the CORPUS-ADAPTIVE layout
-    (ensure_embeddings_index_ivf_scaled — cells = ivf_cells_for(N),
+    (ensure_ivf("embeddings", scaled=True) — cells = ivf_cells_for(N),
     r12 verdict #4) at the ratio-preserved deeper mining depth
     _TRIPLET_NPROBE_SCALED; the plan shape (broadcast-centroid cell
     choice, cell equi-join, DPP on the layout's cell directories) is
     identical — only the trained geometry differs."""
-    from ..api import (
-        ensure_embeddings_index_ivf,
-        ensure_embeddings_index_ivf_scaled,
-    )
+    from ..api import ensure_ivf
 
-    if scaled:
-        layout, cents_path, _ = ensure_embeddings_index_ivf_scaled(
-            spark, sf_dir
-        )
-        nprobe = _TRIPLET_NPROBE_SCALED
-    else:
-        layout, cents_path = ensure_embeddings_index_ivf(spark, sf_dir)
-        nprobe = _TRIPLET_NPROBE
+    layout, cents_path, _ = ensure_ivf(spark, sf_dir, "embeddings", scaled)
+    nprobe = _TRIPLET_NPROBE_SCALED if scaled else _TRIPLET_NPROBE
     cents = read_artifact(spark, cents_path)
     anch = anchors if anchors is not None else _triplet_anchors(spark, sf_dir)
     d2 = F.round(
@@ -915,40 +900,28 @@ def triplet_join_pool(
     )
 
 
-_TRIPLET_ANCHOR_COUNT_CACHE: dict[tuple, int] = {}
-
-
 def triplet_pool_auto(
     spark: SparkSession, sf_dir: str, anchors: DataFrame | None = None
 ) -> DataFrame:
     """Size-switched mining pool: the literal-fold path (static
     PartitionFilters) up to _TRIPLET_FOLD_MAX_ANCHORS anchors, the
-    distributed cell equi-join past it — byte-identical either way
-    (tests/test_probe_guards.py), so q_training_triplets_ann routes
-    through HERE and one oracle covers whichever path the size picks
-    (r12 ADVICE: previously the registered query called
-    triplet_ann_pool directly, leaving the switch dead code).
-    ``anchors`` is any (anchor_id, anchor_label, qv, qq) DataFrame;
-    default is the mining fixture's slice, whose count is memoized
-    per (session, sf_dir) alongside the probe memo so repeated calls
-    don't pay the count job (r12 ADVICE). The count is one bounded
-    aggregate — trivial next to the mining pass it routes."""
-    from ..sources.tmputil import session_key
-
+    distributed cell equi-join past it. Both paths give byte-identical
+    pools (tests/test_probe_guards.py), so q_training_triplets_ann
+    routes through here and one oracle covers whichever path the size
+    picks. ``anchors`` is any (anchor_id, anchor_label, qv, qq)
+    DataFrame; the default fixture slice's count is recorded in the
+    session memo, so repeated calls start no count job."""
     if anchors is None:
-        key = session_key(spark, "triplet_anchor_count", sf_dir)
-        n = _TRIPLET_ANCHOR_COUNT_CACHE.get(key)
-        if n is None:
-            n = _triplet_anchors(spark, sf_dir).count()
-            _TRIPLET_ANCHOR_COUNT_CACHE[key] = n
+        n = ensure_materialized(
+            spark,
+            "triplet_anchor_count",
+            sf_dir,
+            lambda: _triplet_anchors(spark, sf_dir).count(),
+        )
     else:
-        # r13 ADVICE: a caller-supplied anchors plan was computed twice
-        # (once for the routing count, again inside the chosen pool
-        # builder) — a non-deterministic source could route on a size
-        # inconsistent with the rows actually mined, and deterministic
-        # ones paid the plan twice. Truncate lineage so the count
-        # materializes the blocks once and the mining pass re-reads
-        # them: routing and mining see ONE materialization.
+        # Truncate lineage so the routing count materializes the blocks
+        # once and the mining pass re-reads them: routing and mining see
+        # one materialization, even from a non-deterministic source.
         anchors = anchors.localCheckpoint(eager=False)
         n = anchors.count()
     if n <= _TRIPLET_FOLD_MAX_ANCHORS:
@@ -1074,7 +1047,7 @@ def q_training_triplets_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict #4 — ivf_cells_for now reaches the embeddings layout too):
     the same hardest-positive + top-{negs} hard-negative export,
     pooled by the cell EQUI-JOIN against
-    ensure_embeddings_index_ivf_scaled's partitionBy(cell) layout
+    ensure_ivf("embeddings", scaled=True)'s partitionBy(cell) layout
     (cells = ivf_cells_for(N)) at the ratio-preserved mining depth
     _TRIPLET_NPROBE_SCALED = 26 (mining stays 1.6× deeper than the
     calibrated serving nprobe, see the constant's comment).

@@ -119,8 +119,7 @@ def kmeans_fit_assign(
     final assignment DataFrame (vec_id, x, xx, d2, cid) AND the
     trained centroid rows [(cid, cv, cc), ...] — the coarse-quantizer
     training shared by q_cluster_kmeans (embeddings table, k=8) and
-    the documents-corpus IVF serving layout
-    (api.ensure_vector_index_ivf, r10 verdict #2). Both collects are
+    the IVF layouts (api.ensure_ivf). Both collects are
     bounded (k rows of DIM doubles); every float that influences
     downstream comparisons is rounded to 6 inside the plan (seeded
     values are raw inputs; updated centroids are round(avg, 6)), the

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import tokens, tokens_sql
 from ..registry import register
 from ..sources.tables import cluster_by_dirs, load, local_rows, spread
-from ..sources.tmputil import read_artifact, write_artifact
+from ..sources.tmputil import ensure_materialized, read_artifact, write_artifact
 from ..functions.hashing import (
     shingle_hashes as _shingle_hashes,
     shingle_hashes_sql as _shingle_hashes_sql,
@@ -671,7 +671,7 @@ def _inc_ivf_oracle(scaled: bool = False) -> str:
     corpus (the stored layout's own training set), assign every doc,
     aggregate per cell — what the engine's base∪delta must equal.
     ``scaled=True`` trains greatest(16, ceil(sqrt(N))) cells — the
-    corpus-adaptive geometry of ensure_vector_index_ivf_scaled — so
+    corpus-adaptive geometry of ensure_ivf(scaled=True) — so
     the PROMOTED serving layout's delta path is rebuild-checked at
     its own cell count (r13 verdict #3), not just the fixed floor."""
     from ..api import IVF_CELLS
@@ -704,16 +704,11 @@ def _ivf_base_and_delta(
     the layout's STORED centroids as ``delta`` — the K-row centroid
     metadata rides the same broadcast one-row frame the trainer uses,
     so delta assignment is bit-identical to build assignment."""
-    from ..api import ensure_vector_index_ivf, ensure_vector_index_ivf_scaled
+    from ..api import ensure_ivf
     from ..functions.embed import dot, embed_pandas
     from .clustering import _assign, _cents_df
 
-    if scaled:
-        layout, cents_path, _cells = ensure_vector_index_ivf_scaled(
-            spark, sf_dir
-        )
-    else:
-        layout, cents_path = ensure_vector_index_ivf(spark, sf_dir)
+    layout, cents_path, _cells = ensure_ivf(spark, sf_dir, "documents", scaled)
     base = (
         read_artifact(spark, layout)
         .filter(F.col("doc_id") % _INC_LSH_MOD != 0)
@@ -797,9 +792,9 @@ def ivf_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts the reference reads off Pinecone (ref:
     src/services/vector_engine/pinecone_manager.py:19-59), here
     computed from the engine's own stored layout."""
-    from ..api import IVF_NPROBE_SCALED, ensure_vector_index_ivf_scaled
+    from ..api import IVF_NPROBE_SCALED, ensure_ivf
 
-    layout, _cents, cells = ensure_vector_index_ivf_scaled(spark, sf_dir)
+    layout, _cents, cells = ensure_ivf(spark, sf_dir, "documents", True)
     pc = (
         read_artifact(spark, layout)
         .groupBy("cell")
@@ -844,20 +839,13 @@ def append_ivf_delta(
     mutating that mid-session would silently change every downstream
     probe's stored input (the same isolation rule dir_tag enforces
     across corpora)."""
-    from ..api import (
-        IVF_CELLS,
-        ensure_vector_index_ivf_scaled,
-    )
+    from ..api import ensure_ivf
     from ..sources.tmputil import dir_tag, tmp_path
 
     base, delta = _ivf_base_and_delta(spark, sf_dir, scaled)
-    # Directory count for the write clustering (memoized ensure call —
-    # the layout is already built by _ivf_base_and_delta above).
-    cells = (
-        ensure_vector_index_ivf_scaled(spark, sf_dir)[2]
-        if scaled
-        else IVF_CELLS
-    )
+    # Directory count for the write clustering (a memo hit: the layout
+    # is already built by _ivf_base_and_delta above).
+    cells = ensure_ivf(spark, sf_dir, "documents", scaled)[2]
     suffix = "_scaled" if scaled else ""
     path = tmp_path(f"vector_index_ivf_applied{suffix}", dir_tag(sf_dir))
     # Cluster rows by target directory before each partitioned write
@@ -944,11 +932,9 @@ def ivf_cell_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~5.4). A production monitor gates the alarm on batch size (or
     accumulates batches until n_batch ≥ 10·cells) — at 5B vectors /
     70k cells that is a 700k-vector window, minutes of ingest."""
-    from ..api import ensure_vector_index_ivf_scaled
+    from ..api import ensure_ivf
 
-    _layout, cents_path, _cells = ensure_vector_index_ivf_scaled(
-        spark, sf_dir
-    )
+    _layout, cents_path, _cells = ensure_ivf(spark, sf_dir, "documents", True)
     base, delta = _ivf_base_and_delta(spark, sf_dir, scaled=True)
     return psi_report(spark, cents_path, base, delta)
 
@@ -1170,15 +1156,13 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_layout.py."""
     import uuid as _uuid
 
-    from ..api import ensure_vector_index_ivf_scaled
+    from ..api import ensure_ivf
     from ..functions.embed import dot, embed_pandas
     from ..sources.tmputil import tmp_path
     from ..streaming.event_windows import _drain, _scoped_shuffle_partitions
     from .clustering import _assign, _cents_df
 
-    layout, cents_path, _cells = ensure_vector_index_ivf_scaled(
-        spark, sf_dir
-    )
+    layout, cents_path, _cells = ensure_ivf(spark, sf_dir, "documents", True)
     cents = [
         (int(r.cid), [float(v) for v in r.cv], float(r.cc))
         for r in read_artifact(spark, cents_path).collect()
@@ -1287,7 +1271,7 @@ def incremental_ivf(
 
     ``scaled=True`` (r13 verdict #3) runs the same delta path against
     the PROMOTED serving layout — the corpus-adaptive geometry of
-    ensure_vector_index_ivf_scaled that q_mmr_ivf_serving probes — so
+    ensure_ivf(scaled=True) that q_mmr_ivf_serving probes — so
     the production default's append path is exercised, not only the
     fixed-16 floor. Same broadcast-assign, same checksums; only the
     stored centroids (and so the cell space) differ.
@@ -2185,7 +2169,7 @@ def q_mmr_ann_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier: no learned state, the index is rebuildable from planes
     alone, at the cost of N_TABLES stored copies. Its trained
     counterpart is q_mmr_ivf_pool (r11 — the documents corpus now
-    HAS a k-means coarse quantizer via api.ensure_vector_index_ivf),
+    HAS a k-means coarse quantizer via api.ensure_ivf),
     which stores one copy and adapts cells to corpus density; both
     probes share the same literal-fold → static-partition-pruning →
     bounded-pool plan shape, and q_mmr_pool_recall reports their
@@ -2330,9 +2314,6 @@ def mmr_ann_pool_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------- IVF-served MMR (trained quantizer)
 
-_IVF_PROBE_CACHE: dict[tuple, tuple] = {}
-
-
 def _ivf_probe_literals(
     spark: SparkSession,
     sf_dir: str,
@@ -2341,73 +2322,58 @@ def _ivf_probe_literals(
     cents_path: str | None = None,
 ) -> tuple[list, list]:
     """(qb_rows, probe_cells) for the IVF probe: each golden question's
-    IVF_NPROBE nearest trained cells, folded to PLAN-TIME literals so
-    the layout scan gets static PartitionFilters (the
-    mmr_ann_pool_pairs pattern). Unlike the LSH fold — whose plane
-    signs replicate in pure Python — the cell ranking depends on
-    TRAINED centroid doubles, so the fold runs as a bounded Spark
-    mini-job over |q|×cells rows using the exact engine
-    expressions the oracle mirrors (embed_df question vectors,
-    round(d2, 6) ranking, cid tiebreak): no third arithmetic
-    implementation to keep in parity. Collect is ≤ |q|·nprobe rows of
-    DIM doubles; memoized per (session, sf_dir, geometry) like the
-    index builds. ``scaled=True`` probes the corpus-adaptive
-    ivf_cells_for(N) layout instead of the fixed-16 one — the ranking
-    arithmetic is identical, only the centroid file differs."""
-    from ..api import (
-        IVF_NPROBE,
-        ensure_vector_index_ivf,
-        ensure_vector_index_ivf_scaled,
-    )
+    ``nprobe`` nearest trained cells (default IVF_NPROBE), folded to
+    plan-time literals so the layout scan gets static PartitionFilters
+    (the mmr_ann_pool_pairs pattern). The cell ranking depends on
+    trained centroid doubles, so the fold runs as a bounded Spark
+    mini-job over |q| x cells rows with the exact engine expressions
+    the oracle mirrors (embed_df question vectors, round(d2, 6)
+    ranking, cid tiebreak), rather than a third implementation of the
+    arithmetic. The collect is at most |q|·nprobe rows of DIM doubles,
+    recorded in the session memo per (sf_dir, geometry, depth,
+    centroids). ``scaled=True`` probes the ivf_cells_for(N) layout; an
+    explicit ``cents_path`` probes a manifest-resolved version
+    (published_ivf_topk) instead of the session's layout."""
+    from ..api import IVF_NPROBE, ensure_ivf
     from ..functions.embed import dot, embed_df
-    from ..sources.tmputil import session_key
     from .questions import questions_df
 
-    # ``nprobe`` overrides the IVF_NPROBE serving default (the
-    # tools/ivf curve sweeps, and since r13 the calibrated serving
-    # row q_mmr_ivf_serving at IVF_NPROBE_SCALED); the cache key
-    # carries the depth to keep per-depth pools separate.
     np_eff = IVF_NPROBE if nprobe is None else int(nprobe)
-    key = session_key(
+
+    def build() -> tuple[list, list]:
+        cents = read_artifact(
+            spark,
+            cents_path or ensure_ivf(spark, sf_dir, "documents", scaled)[1],
+        )
+        qx = embed_df(questions_df(spark), "question_text", out_col="q_v").select(
+            "question_id", "q_v", dot(F.col("q_v"), F.col("q_v")).alias("qq")
+        )
+        d2 = F.round(
+            F.col("qq") - 2 * dot(F.col("q_v"), F.col("cv")) + F.col("cc"), 6
+        )
+        w = Window.partitionBy("question_id").orderBy("d2", "cid")
+        rows = (
+            qx.crossJoin(F.broadcast(cents))
+            .select("question_id", "q_v", "cid", d2.alias("d2"))
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= np_eff)
+            .select("question_id", "q_v", "cid")
+            .collect()
+        )
+        qb_rows = [
+            (int(r.question_id), [float(x) for x in r.q_v], int(r.cid))
+            for r in rows
+        ]
+        return qb_rows, sorted({c for _, _, c in qb_rows})
+
+    return ensure_materialized(
         spark,
         "ivf_probe_scaled" if scaled else "ivf_probe",
         sf_dir,
+        build,
         str(np_eff),
         cents_path or "",
     )
-    if key in _IVF_PROBE_CACHE:
-        return _IVF_PROBE_CACHE[key]
-    if cents_path is None:
-        # Default: resolve the centroids from the session's builders.
-        # An explicit cents_path serves a MANIFEST-resolved version
-        # (published_ivf_topk) — same fold, caller-owned pointer.
-        if scaled:
-            _, cents_path, _ = ensure_vector_index_ivf_scaled(spark, sf_dir)
-        else:
-            _, cents_path = ensure_vector_index_ivf(spark, sf_dir)
-    cents = read_artifact(spark, cents_path)
-    qx = embed_df(questions_df(spark), "question_text", out_col="q_v").select(
-        "question_id", "q_v", dot(F.col("q_v"), F.col("q_v")).alias("qq")
-    )
-    d2 = F.round(
-        F.col("qq") - 2 * dot(F.col("q_v"), F.col("cv")) + F.col("cc"), 6
-    )
-    w = Window.partitionBy("question_id").orderBy("d2", "cid")
-    rows = (
-        qx.crossJoin(F.broadcast(cents))
-        .select("question_id", "q_v", "cid", d2.alias("d2"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= np_eff)
-        .select("question_id", "q_v", "cid")
-        .collect()
-    )
-    qb_rows = [
-        (int(r.question_id), [float(x) for x in r.q_v], int(r.cid))
-        for r in rows
-    ]
-    out = (qb_rows, sorted({c for _, _, c in qb_rows}))
-    _IVF_PROBE_CACHE[key] = out
-    return out
 
 
 def mmr_ivf_pool_pairs(
@@ -2432,15 +2398,13 @@ def mmr_ivf_pool_pairs(
     builders entirely: the probe runs against exactly that stored
     version — how published_ivf_topk serves whatever triple the
     blue/green manifest currently points at."""
-    from ..api import ensure_vector_index_ivf, ensure_vector_index_ivf_scaled
+    from ..api import ensure_ivf
     from ..functions.embed import dot
 
     if paths is not None:
         layout, probe_cents = paths
-    elif scaled:
-        layout, probe_cents, _ = ensure_vector_index_ivf_scaled(spark, sf_dir)
     else:
-        layout, probe_cents = ensure_vector_index_ivf(spark, sf_dir)
+        layout, probe_cents, _ = ensure_ivf(spark, sf_dir, "documents", scaled)
     qb_rows, probe_cells = _ivf_probe_literals(
         spark,
         sf_dir,
@@ -2519,7 +2483,7 @@ def _ivf_leg_ctes(scaled: bool = False, nprobe: int | None = None) -> str:
     q_cluster_kmeans arithmetic), per-question nprobe cell choice
     (qprobe), and the bounded scored pool (ivf_hits). ``scaled=True``
     trains greatest(16, ceil(sqrt(N))) cells — the corpus-adaptive
-    geometry of ensure_vector_index_ivf_scaled — instead of the fixed
+    geometry of ensure_ivf(scaled=True) — instead of the fixed
     IVF_CELLS floor; ``nprobe`` overrides the IVF_NPROBE serving
     default (the calibrated-serving oracle passes IVF_NPROBE_SCALED)."""
     from ..api import IVF_CELLS, IVF_NPROBE
@@ -2582,7 +2546,7 @@ def q_mmr_ivf_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe lifecycle of pinecone_manager.py:61-103, with the quantizer
     trained from the corpus itself.
 
-    Plan: ensure_vector_index_ivf trains IVF_CELLS centroids with the
+    Plan: ensure_ivf trains IVF_CELLS centroids with the
     q_cluster_kmeans arithmetic and rewrites the stored index
     partitionBy(cell); the probe folds each question's IVF_NPROBE
     nearest cells into plan-time literals via a bounded engine
@@ -2862,9 +2826,9 @@ def q_ivf_recall_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs serving's 5, functions/vector.py) — which grows reads linearly
     while the cells rule keeps the per-probe read
     ~sqrt(N)-bounded."""
-    from ..api import IVF_NPROBE, ensure_vector_index_ivf_scaled
+    from ..api import IVF_NPROBE, ensure_ivf
 
-    _, _, cells = ensure_vector_index_ivf_scaled(spark, sf_dir)
+    _, _, cells = ensure_ivf(spark, sf_dir, "documents", True)
     # Materialize each pool once (lazy checkpoint): both pools feed
     # two consumers (their count + the overlap join) — the
     # q_mmr_pool_recall fix (r15 opt pass), same rationale and the
@@ -2964,9 +2928,9 @@ def q_mmr_ivf_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     selections from ~2/3 the bytes, with the gap widening in the
     scaled layout's favor as N grows (the fixed geometry's fraction
     is pinned at 31% forever; this one's falls as nprobe/√N)."""
-    from ..api import IVF_NPROBE_SCALED, ensure_vector_index_ivf_scaled
+    from ..api import IVF_NPROBE_SCALED, ensure_ivf
 
-    _, _, cells = ensure_vector_index_ivf_scaled(spark, sf_dir)
+    _, _, cells = ensure_ivf(spark, sf_dir, "documents", True)
     cand = mmr_ivf_pool_candidates(
         spark, sf_dir, scaled=True, nprobe=IVF_NPROBE_SCALED
     ).localCheckpoint(eager=False)  # all k rounds re-read the pool

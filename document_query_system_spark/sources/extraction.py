@@ -136,20 +136,15 @@ def q_extract_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BINARY_DIR_READY: set[tuple] = set()
-
-
 def _ensure_landing_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize a small landing directory of real files (one per
-    doc for the first 50 docs) so the binaryFile source has something
-    to scan — the on-disk twin of the reference's document_cache
-    (ref: ingestion_service.py:322-329)."""
-    from .tmputil import dir_tag, session_key, tmp_path
+    """A small landing directory of real files (one per doc for the
+    first 50 docs), written once per (session, sf_dir), so the
+    binaryFile source has something to scan: the on-disk twin of the
+    reference's document_cache (ref: ingestion_service.py:322-329)."""
+    from .tmputil import dir_tag, ensure_materialized, tmp_path
 
-    tag = dir_tag(sf_dir)
-    path = tmp_path("landing", tag)
-    key = session_key(spark, sf_dir)
-    if key not in _BINARY_DIR_READY:
+    def build() -> str:
+        path = tmp_path("landing", dir_tag(sf_dir))
         os.makedirs(path, exist_ok=True)
         rows = (
             landing_table(spark, sf_dir)
@@ -160,8 +155,9 @@ def _ensure_landing_dir(spark: SparkSession, sf_dir: str) -> str:
         for r in rows:
             with open(os.path.join(path, r.file_name), "wb") as f:
                 f.write(bytes(r.payload))
-        _BINARY_DIR_READY.add(key)
-    return path
+        return path
+
+    return ensure_materialized(spark, "landing", sf_dir, build)
 
 
 @register(

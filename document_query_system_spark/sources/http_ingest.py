@@ -109,7 +109,24 @@ def fetch_to_landing(
     return manifest
 
 
-_HTTP_LANDING_READY: set[tuple] = set()
+def _ensure_http_landing(spark: SparkSession, sf_dir: str) -> str:
+    """The landing directory fetch_to_landing fills from file:// URLs
+    of the binaryFile landing files, fetched once per (session,
+    sf_dir); returns its path."""
+    from .extraction import _ensure_landing_dir
+    from .tmputil import dir_tag, ensure_materialized, tmp_path
+
+    def build() -> str:
+        src = _ensure_landing_dir(spark, sf_dir)
+        dst = tmp_path("http_landing", dir_tag(sf_dir))
+        urls = [
+            (name, f"file://{os.path.join(src, name)}")
+            for name in sorted(os.listdir(src))
+        ]
+        fetch_to_landing(urls, dst)
+        return dst
+
+    return ensure_materialized(spark, "http_landing", sf_dir, build)
 
 
 @register(
@@ -137,21 +154,7 @@ def q_http_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked by the same oracle as q_binaryfile_scan — the
     retry/backoff path itself is unit-tested against a live local
     HTTP server in tests/test_http_ingest.py."""
-    from .extraction import _ensure_landing_dir
-    from .tmputil import dir_tag, session_key, tmp_path
-
-    src = _ensure_landing_dir(spark, sf_dir)
-    tag = dir_tag(sf_dir)
-    dst = tmp_path("http_landing", tag)
-    key = session_key(spark, sf_dir)
-    if key not in _HTTP_LANDING_READY:
-        urls = [
-            (name, f"file://{os.path.join(src, name)}")
-            for name in sorted(os.listdir(src))
-        ]
-        fetch_to_landing(urls, dst)
-        _HTTP_LANDING_READY.add(key)
-    bf = spark.read.format("binaryFile").load(dst)
+    bf = spark.read.format("binaryFile").load(_ensure_http_landing(spark, sf_dir))
     return bf.select(
         F.element_at(F.split(F.col("path"), "/"), -1).alias("file_name"),
         F.length("content").cast("long").alias("n_bytes"),

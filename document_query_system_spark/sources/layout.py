@@ -24,7 +24,13 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from .tables import load
-from .tmputil import ensure_materialized, read_artifact, write_artifact
+from .tmputil import (
+    dir_tag,
+    ensure_materialized,
+    read_artifact,
+    tmp_path,
+    write_artifact,
+)
 
 # ------------------------------------------------------------- compaction
 
@@ -38,11 +44,16 @@ _COMPACT_TARGET_BYTES = 256 * 1024
 
 
 def _ensure_fragmented_docs(spark: SparkSession, sf_dir: str) -> str:
-    def build(path: str) -> None:
+    """documents rewritten as _FRAG_FILES small files, once per
+    (session, sf_dir); returns the path."""
+
+    def build() -> str:
+        path = tmp_path("fragmented", dir_tag(sf_dir), "documents")
         docs = load(spark, sf_dir, "documents")
         write_artifact(docs.repartition(_FRAG_FILES).write.mode("overwrite"), path)
+        return path
 
-    return ensure_materialized(spark, "fragmented", sf_dir, "documents", build)
+    return ensure_materialized(spark, "fragmented", sf_dir, build)
 
 
 def compact_parquet(
@@ -79,12 +90,14 @@ def compact_parquet(
 
 def ensure_compacted_docs(spark: SparkSession, sf_dir: str) -> str:
     """Fragmented copy → compacted copy, once per (session, sf_dir)."""
-    frag = _ensure_fragmented_docs(spark, sf_dir)
 
-    def build(path: str) -> None:
+    def build() -> str:
+        path = tmp_path("compacted", dir_tag(sf_dir), "documents")
+        frag = _ensure_fragmented_docs(spark, sf_dir)
         compact_parquet(spark, frag, path, _COMPACT_TARGET_BYTES)
+        return path
 
-    return ensure_materialized(spark, "compacted", sf_dir, "documents", build)
+    return ensure_materialized(spark, "compacted", sf_dir, build)
 
 
 @register(
@@ -142,7 +155,9 @@ def ensure_zordered_lineitem(spark: SparkSession, sf_dir: str) -> str:
     interleave, repartitionByRange + sortWithinPartitions on the key,
     write. This is the generic recipe Delta/Iceberg OPTIMIZE ZORDER
     implements; here it is plain Spark + plain parquet."""
-    def build(path: str) -> None:
+
+    def build() -> str:
+        path = tmp_path("zorder", dir_tag(sf_dir), "lineitem")
         li = load(spark, sf_dir, "lineitem")
         # bounded collect: two scalars for value→bucket scaling
         pmax, smax = li.agg(
@@ -164,8 +179,9 @@ def ensure_zordered_lineitem(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite"),
             path,
         )
+        return path
 
-    return ensure_materialized(spark, "zorder", sf_dir, "lineitem", build)
+    return ensure_materialized(spark, "zorder", sf_dir, build)
 
 
 @register(

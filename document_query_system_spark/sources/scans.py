@@ -36,8 +36,6 @@ def q_scan_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FORMAT_DIRS: set[tuple[int, str, str]] = set()
-
 _NATION_AGG_ORACLE = """
 SELECT n_regionkey, CAST(count(*) AS BIGINT) AS n,
        CAST(min(n_nationkey) AS BIGINT) AS min_key
@@ -45,25 +43,31 @@ FROM nation GROUP BY n_regionkey
 """
 
 
-def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
-    """Write nation in ``fmt`` once per (session, sf_dir), read it back
-    with an explicit schema (never inferred — schema-on-read is pinned
-    by the engine, SURVEY §1.3), and aggregate. The oracle runs on the
-    original parquet, so the check covers the full write→read
-    round-trip of the format."""
-    from .tmputil import dir_tag, session_key, tmp_path
+def _ensure_format_dir(spark: SparkSession, sf_dir: str, fmt: str) -> str:
+    """nation written in ``fmt`` once per (session, sf_dir, fmt);
+    returns the path."""
+    from .tmputil import dir_tag, ensure_materialized, tmp_path
 
-    tag = dir_tag(sf_dir)
-    path = tmp_path("formats", tag, fmt)
-    key = session_key(spark, sf_dir, fmt)
-    if key not in _FORMAT_DIRS:
+    def build() -> str:
+        path = tmp_path("formats", dir_tag(sf_dir), fmt)
         w = load(spark, sf_dir, "nation").write.mode("overwrite").format(fmt)
         if fmt == "csv":
             w = w.option("header", "true")
         elif fmt == "xml":
             w = w.option("rowTag", "nation")
         w.save(path)
-        _FORMAT_DIRS.add(key)
+        return path
+
+    return ensure_materialized(spark, "formats", sf_dir, build, fmt)
+
+
+def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
+    """Read nation's ``fmt`` copy (_ensure_format_dir) back with an
+    explicit schema (never inferred — schema-on-read is pinned by the
+    engine, SURVEY §1.3), and aggregate. The oracle runs on the
+    original parquet, so the check covers the full write→read
+    round-trip of the format."""
+    path = _ensure_format_dir(spark, sf_dir, fmt)
     schema = "n_nationkey INT, n_name STRING, n_regionkey INT, n_comment STRING"
     r = spark.read.format(fmt)
     if fmt == "csv":
@@ -135,9 +139,10 @@ def _ensure_evolved_customer(spark: SparkSession, sf_dir: str) -> str:
     with the original columns; v2 adds a derived ``tier`` column —
     the additive schema change every long-lived landing zone
     accumulates. Materialized once per (session, sf_dir)."""
-    from .tmputil import ensure_materialized, write_artifact
+    from .tmputil import dir_tag, ensure_materialized, tmp_path, write_artifact
 
-    def build(path: str) -> None:
+    def build() -> str:
+        path = tmp_path("evolved", dir_tag(sf_dir), "customer")
         cust = load(spark, sf_dir, "customer").select(
             "c_custkey", "c_nationkey", "c_acctbal"
         )
@@ -147,8 +152,9 @@ def _ensure_evolved_customer(spark: SparkSession, sf_dir: str) -> str:
         )
         write_artifact(v1.write.mode("overwrite"), f"{path}/gen=1")
         write_artifact(v2.write.mode("overwrite"), f"{path}/gen=2")
+        return path
 
-    return ensure_materialized(spark, "evolved", sf_dir, "customer", build)
+    return ensure_materialized(spark, "evolved", sf_dir, build)
 
 
 @register(
@@ -191,6 +197,27 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ensure_malformed_csv(spark: SparkSession, sf_dir: str) -> str:
+    """nation as one CSV file whose every 5th key is non-numeric,
+    written once per (session, sf_dir); returns the path."""
+    from .tmputil import dir_tag, ensure_materialized, tmp_path
+
+    def build() -> str:
+        path = tmp_path("malformed_csv", dir_tag(sf_dir), "nation")
+        raw = load(spark, sf_dir, "nation").select(
+            F.when(F.col("n_nationkey") % 5 == 0, F.lit("not-a-number"))
+            .otherwise(F.col("n_nationkey").cast("string"))
+            .alias("key_field"),
+            "n_name",
+        )
+        raw.coalesce(1).write.mode("overwrite").option("header", "true").csv(
+            path
+        )
+        return path
+
+    return ensure_materialized(spark, "malformed_csv", sf_dir, build)
+
+
 @register(
     "q_csv_malformed",
     oracle="""
@@ -223,20 +250,7 @@ def q_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     requires."""
     from pyspark.sql import types as T
 
-    from .tmputil import ensure_materialized
-
-    def build(path: str) -> None:
-        raw = load(spark, sf_dir, "nation").select(
-            F.when(F.col("n_nationkey") % 5 == 0, F.lit("not-a-number"))
-            .otherwise(F.col("n_nationkey").cast("string"))
-            .alias("key_field"),
-            "n_name",
-        )
-        raw.coalesce(1).write.mode("overwrite").option("header", "true").csv(
-            path
-        )
-
-    path = ensure_materialized(spark, "malformed_csv", sf_dir, "nation", build)
+    path = _ensure_malformed_csv(spark, sf_dir)
     schema = T.StructType(
         [
             T.StructField("key_field", T.LongType()),

@@ -99,36 +99,41 @@ def q_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from .tmputil import dir_tag, read_artifact, session_key, tmp_path, write_artifact
+from .tmputil import (
+    dir_tag,
+    ensure_materialized,
+    read_artifact,
+    tmp_path,
+    write_artifact,
+)
 
 _BUCKETS = 8
-_BUCKET_DB_READY: set[tuple] = set()
 
 
 def _ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> None:
     """Write orders/customer as bucketed tables (8 buckets on the join
-    key) into an explicit /tmp warehouse path — once per (session,
-    sf_dir). Bucketing pre-shuffles the data ON DISK: every future
-    join/agg on the bucket key reads co-located partitions and skips
-    its exchange entirely, the canonical trade for tables joined far
-    more often than written."""
-    key = session_key(spark, sf_dir)
-    if key in _BUCKET_DB_READY:
-        return
-    base = tmp_path("bucketed")
-    tag = dir_tag(sf_dir)
-    for name, bucket_col in (("orders", "o_custkey"), ("customer", "c_custkey")):
-        tbl = f"b_{name}_{tag.replace('.', '_')}"
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        (
-            load(spark, sf_dir, name)
-            .write.bucketBy(_BUCKETS, bucket_col)
-            .sortBy(bucket_col)
-            .option("path", os.path.join(base, tag, name))
-            .mode("overwrite")
-            .saveAsTable(tbl)
-        )
-    _BUCKET_DB_READY.add(key)
+    key) under the artifact root, once per (session, sf_dir).
+    Bucketing pre-shuffles the data on disk: every later join or
+    aggregate on the bucket key reads co-located partitions and skips
+    its exchange, the trade for tables joined far more often than
+    written."""
+
+    def build() -> None:
+        base = tmp_path("bucketed")
+        tag = dir_tag(sf_dir)
+        for name, bucket_col in (("orders", "o_custkey"), ("customer", "c_custkey")):
+            tbl = f"b_{name}_{tag.replace('.', '_')}"
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            (
+                load(spark, sf_dir, name)
+                .write.bucketBy(_BUCKETS, bucket_col)
+                .sortBy(bucket_col)
+                .option("path", os.path.join(base, tag, name))
+                .mode("overwrite")
+                .saveAsTable(tbl)
+            )
+
+    ensure_materialized(spark, "bucketed", sf_dir, build)
 
 
 @register(
@@ -196,26 +201,23 @@ def q_retention_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PARTITIONED_READY: set[tuple] = set()
-
-
 def _ensure_partitioned_docs(spark: SparkSession, sf_dir: str) -> str:
     """Write documents partitioned by lang (hive layout lang=xx/) once
     per (session, sf_dir); returns the path. Partition columns are the
     coarse file-skipping axis at scale: a lang-filtered query lists
     only that partition's directory."""
-    tag = dir_tag(sf_dir)
-    path = tmp_path("partitioned", tag, "documents")
-    key = session_key(spark, sf_dir)
-    if key not in _PARTITIONED_READY:
+
+    def build() -> str:
+        path = tmp_path("partitioned", dir_tag(sf_dir), "documents")
         write_artifact(
             load(spark, sf_dir, "documents")
             .write.mode("overwrite")
             .partitionBy("lang"),
             path,
         )
-        _PARTITIONED_READY.add(key)
-    return path
+        return path
+
+    return ensure_materialized(spark, "partitioned", sf_dir, build)
 
 
 @register(

@@ -10,10 +10,13 @@ ONE per-process directory:
 - the single root makes cleanup one recursive delete, registered with
   atexit so repeated suite runs don't accrete /tmp garbage.
 
-Memoization of "already materialized" state keys on the session's
-``applicationId`` (stable and unique per SparkSession) rather than
-``id(spark)``, which CPython may reuse after a stopped session is
-garbage-collected.
+Every derived artifact is built once per session through
+``ensure_materialized``, the one session memo. Its keys start with the
+session's ``applicationId`` (stable and unique per SparkSession) rather
+than ``id(spark)``, which CPython may reuse after a stopped session is
+garbage-collected. The paths among its recorded results
+(``live_paths``) are the live set that index retention must not
+delete.
 
 The artifacts' schemas and row counts are facts the engine already
 holds, so serving reads them without a Spark job:
@@ -49,7 +52,7 @@ def tmp_path(*parts: str) -> str:
 def dir_tag(sf_dir: str) -> str:
     """Path-unique artifact tag for a corpus directory. Derived from
     the FULL sf_dir, not its basename: memoization keys on the full
-    path (session_key(spark, sf_dir)), so the artifact path must too —
+    path (ensure_materialized's key), so the artifact path must too —
     with a basename tag, two corpora sharing a basename in one session
     silently overwrite each other's stored artifact while both memos
     claim it is built, and the second reader gets the wrong corpus's
@@ -84,28 +87,43 @@ def dir_tag(sf_dir: str) -> str:
     return f"{base}_{hashlib.sha1(norm.encode()).hexdigest()[:16]}"
 
 
-def session_key(spark, *extra: str) -> tuple:
+def session_key(spark, *extra) -> tuple:
     """Memoization key stable for the lifetime of a SparkSession."""
     return (spark.sparkContext.applicationId, *extra)
 
 
-_MATERIALIZED: set[tuple] = set()
+#: The session memo: one recorded build result per session_key(spark,
+#: kind, sf_dir, *extra).
+_MATERIALIZED: dict[tuple, object] = {}
 
 
-def ensure_materialized(spark, kind: str, sf_dir: str, leaf: str, build) -> str:
-    """Materialize a derived dataset once per (session, kind, sf_dir):
-    ``build(path)`` writes it under this process's temp root; repeat
-    calls return the path without rebuilding. The shared form of the
-    write-once guard every side-effect query (bucketed tables,
-    fragmented/compacted/z-ordered copies, evolved generations)
-    otherwise re-implements."""
-    tag = dir_tag(sf_dir)
-    path = tmp_path(kind, tag, leaf)
-    key = session_key(spark, kind, sf_dir)
+def ensure_materialized(spark, kind: str, sf_dir: str, build, *extra):
+    """Run ``build()`` once per ``session_key(spark, kind, sf_dir,
+    *extra)`` and return its recorded result on every call. This is the
+    engine's one record of derived artifacts already built in a session:
+    stored indexes and layouts (a path, or a ``(layout, centroids,
+    cells)`` triple), side-effect tables (``None``) and plan-time probe
+    literals. A build that raises records nothing, so the next call
+    builds again. Builders write under a ``tmp_path`` carrying
+    ``dir_tag(sf_dir)``, so artifacts of two corpora never share a
+    path."""
+    key = session_key(spark, kind, sf_dir, *extra)
     if key not in _MATERIALIZED:
-        build(path)
-        _MATERIALIZED.add(key)
-    return path
+        _MATERIALIZED[key] = build()
+    return _MATERIALIZED[key]
+
+
+def live_paths() -> set[str]:
+    """Every path a recorded build returned: each string result and
+    each string member of a tuple result. A later call hands these
+    paths out again without rebuilding, so retention must not delete
+    them."""
+    out: set[str] = set()
+    for res in list(_MATERIALIZED.values()):
+        for x in res if isinstance(res, tuple) else (res,):
+            if isinstance(x, str):
+                out.add(x)
+    return out
 
 
 #: Recorded schema per artifact path (read_artifact / write_artifact).
@@ -173,11 +191,14 @@ def _listed(name: str) -> bool:
 
 
 def parquet_rows(path: str) -> int:
-    """Row count of the local Parquet dataset at ``path`` (flat or
-    partitioned) from its file footers, read on the driver: the number
-    ``spark.read.parquet(path).count()`` returns, without a Spark job."""
+    """Row count of the local Parquet file or dataset (flat or
+    partitioned) at ``path`` from its file footers, read on the driver:
+    the number ``spark.read.parquet(path).count()`` returns, without a
+    Spark job."""
     import pyarrow.parquet as pq
 
+    if os.path.isfile(path):
+        return pq.read_metadata(path).num_rows
     if not os.path.isdir(path):
         raise FileNotFoundError(path)
     n = 0

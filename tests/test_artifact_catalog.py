@@ -7,7 +7,8 @@ nullability and types, including the ``int`` type inferred for the
 ``cell`` partition column, and the same rows. A package write drops the
 record, so a rewrite with a new schema is read with the new schema. A
 path never recorded reads by inference. ``parquet_rows`` must equal
-``count()`` on flat and partitioned datasets."""
+``count()`` on a single Parquet file and on flat and partitioned
+datasets."""
 
 from __future__ import annotations
 
@@ -130,9 +131,13 @@ def test_unrecorded_path_reads_by_inference(spark):
     assert df.count() == 20
 
 
-@pytest.mark.parametrize("name", ["flat_index", "scaled_layout", "applied_layout"])
+@pytest.mark.parametrize(
+    "name", ["flat_index", "scaled_layout", "applied_layout", "embeddings_file"]
+)
 def test_parquet_rows_equals_count(spark, name):
-    if name == "applied_layout":
+    if name == "embeddings_file":
+        path = f"{SF_DIR}/embeddings.parquet"
+    elif name == "applied_layout":
         from document_query_system_spark.operators.pipeline import append_ivf_delta
 
         path = append_ivf_delta(spark, SF_DIR, scaled=True)

@@ -9,6 +9,7 @@ other)."""
 from __future__ import annotations
 
 import pyarrow.parquet as pq
+import pytest
 
 from conftest import SF_DIR
 
@@ -85,8 +86,7 @@ def test_ivf_layouts_partition_each_vector_exactly_once(spark):
     from document_query_system_spark.api import (
         IVF_CELLS,
         IVF_NPROBE,
-        ensure_embeddings_index_ivf,
-        ensure_vector_index_ivf,
+        ensure_ivf,
     )
     from document_query_system_spark.functions.vector import (
         _triplet_probe_literals,
@@ -99,11 +99,11 @@ def test_ivf_layouts_partition_each_vector_exactly_once(spark):
         _TRIPLET_NPROBE,
     )
 
-    for ensure, probe, base_tbl, id_col, nprobe in (
-        (ensure_vector_index_ivf, _ivf_probe_literals, "documents", "doc_id", IVF_NPROBE),
-        (ensure_embeddings_index_ivf, _triplet_probe_literals, "embeddings", "vec_id", _TRIPLET_NPROBE),
+    for probe, base_tbl, id_col, nprobe in (
+        (_ivf_probe_literals, "documents", "doc_id", IVF_NPROBE),
+        (_triplet_probe_literals, "embeddings", "vec_id", _TRIPLET_NPROBE),
     ):
-        layout, cents_path = ensure(spark, SF_DIR)
+        layout, cents_path, _ = ensure_ivf(spark, SF_DIR, base_tbl, False)
         cents = {r.cid for r in spark.read.parquet(cents_path).collect()}
         assert 0 < len(cents) <= IVF_CELLS
         rows = spark.read.parquet(layout).select(id_col, "cell").collect()
@@ -504,7 +504,7 @@ def test_index_version_publish_resolve_rollback(spark):
 
     from document_query_system_spark.api import (
         current_index_version,
-        ensure_vector_index_ivf,
+        ensure_ivf,
         ivf_cells_for,
         maintain_ivf_index,
         publish_index_version,
@@ -533,7 +533,7 @@ def test_index_version_publish_resolve_rollback(spark):
         "n_vectors": out1["n_vectors"],
     }
     # Manual flip to a different (here: the fixed-floor) layout.
-    alt_layout, alt_cents = ensure_vector_index_ivf(spark, SF_DIR)
+    alt_layout, alt_cents, _ = ensure_ivf(spark, SF_DIR, "documents", False)
     v2 = publish_index_version(spark, SF_DIR, alt_layout, alt_cents, 16)
     cur2 = current_index_version(spark, SF_DIR)
     assert v2 == out2["version"] + 1
@@ -835,9 +835,9 @@ def test_maintain_tick_psi_branch_and_retention(spark):
     assert out4b["version"] == out1["version"]
     # A publish that actually MOVES the triple (the fixed-floor
     # layout) gives retention something to prune from the tick.
-    from document_query_system_spark.api import ensure_vector_index_ivf
+    from document_query_system_spark.api import ensure_ivf
 
-    alt_layout, alt_cents = ensure_vector_index_ivf(spark, SF_DIR)
+    alt_layout, alt_cents, _ = ensure_ivf(spark, SF_DIR, "documents", False)
     from document_query_system_spark.api import publish_index_version
 
     v2 = publish_index_version(
@@ -1020,41 +1020,43 @@ def test_published_topk_time_travel_reads_pinned_version(spark):
         published_ivf_topk(spark, SF_DIR, profile=prof, version=99)
 
 
+def _gc_fixture_dirs(prefix, *names):
+    import os
+
+    from document_query_system_spark.sources.tmputil import tmp_path
+
+    out = []
+    for n in names:
+        p = tmp_path(prefix, n)
+        os.makedirs(p, exist_ok=True)
+        with open(os.path.join(p, "part-0"), "w") as f:
+            f.write("x")
+        out.append(p)
+    return out
+
+
 def test_gc_protects_flag_memo_paths(spark):
-    """The r14-ADVICE live-memo rail extension: flag-SET builder memos
-    (ensure_vector_index_ivf's _VECTOR_IVF_READY etc.) guard
-    deterministic paths just like the scaled dict memos — once such a
-    triple is published into a manifest and ages past keep_last,
-    retention must skip it (reported as skipped_live), not rmtree a
-    path the session memo still returns."""
+    """A fixed-geometry IVF triple recorded in the session memo guards
+    its paths like the scaled one: once the triple is published into a
+    manifest and ages past keep_last, retention skips it (reported as
+    skipped_live) instead of deleting a path a later ensure_ivf call
+    hands out again."""
     import os
 
     from document_query_system_spark.api import (
-        ensure_vector_index_ivf,
+        ensure_ivf,
         gc_index_versions,
         publish_index_version,
     )
-    from document_query_system_spark.sources.tmputil import tmp_path
 
     prof = "t_gc_flagmemo"
-    flag_layout, flag_cents = ensure_vector_index_ivf(spark, SF_DIR)
-
-    def mkdirs(*names):
-        out = []
-        for n in names:
-            p = tmp_path("t_gc_flag_fix", n)
-            os.makedirs(p, exist_ok=True)
-            with open(os.path.join(p, "part-0"), "w") as f:
-                f.write("x")
-            out.append(p)
-        return out
-
-    l2, c2, l3, c3 = mkdirs("l2", "c2", "l3", "c3")
+    flag_layout, flag_cents, _ = ensure_ivf(spark, SF_DIR, "documents", False)
+    l2, c2, l3, c3 = _gc_fixture_dirs("t_gc_flag_fix", "l2", "c2", "l3", "c3")
     publish_index_version(spark, SF_DIR, flag_layout, flag_cents, 16, profile=prof)
     publish_index_version(spark, SF_DIR, l2, c2, 16, profile=prof)
     publish_index_version(spark, SF_DIR, l3, c3, 16, profile=prof)
     rep = gc_index_versions(spark, SF_DIR, keep_last=1, profile=prof)
-    # v1 (the flag-memo triple) is retained: both paths live-skipped,
+    # v1 (the memo triple) is retained: both paths live-skipped,
     # directories intact, log entry kept. v2 is genuinely pruned.
     assert flag_layout in rep["skipped_live"]
     assert flag_cents in rep["skipped_live"]
@@ -1062,10 +1064,81 @@ def test_gc_protects_flag_memo_paths(spark):
     assert flag_layout not in rep["removed_paths"]
     assert rep["pruned_versions"] == [2]
     assert not os.path.exists(l2)
-    # A later ensure_* memo hit still resolves to a readable layout.
-    again_layout, _ = ensure_vector_index_ivf(spark, SF_DIR)
+    # A later memo hit still resolves to a readable layout.
+    again_layout, _, _ = ensure_ivf(spark, SF_DIR, "documents", False)
     assert again_layout == flag_layout
     assert spark.read.parquet(again_layout).count() > 0
+
+
+def _path_builders():
+    """Every builder whose memo result is a path or carries paths, as
+    name -> fn(spark, sf_dir) returning the paths it hands out."""
+    from document_query_system_spark import api
+    from document_query_system_spark.sources import (
+        extraction,
+        http_ingest,
+        layout,
+        scans,
+        sinks,
+    )
+
+    def one(fn):
+        return lambda spark, d: [fn(spark, d)]
+
+    def ivf(table, scaled):
+        return lambda spark, d: list(api.ensure_ivf(spark, d, table, scaled)[:2])
+
+    out = {
+        "vector_index": one(api.ensure_vector_index),
+        "vector_index_lsh": one(api.ensure_vector_index_lsh),
+        "ivf_documents_scaled": ivf("documents", True),
+        "ivf_embeddings": ivf("embeddings", False),
+        "ivf_embeddings_scaled": ivf("embeddings", True),
+        "bm25_index": one(api.ensure_bm25_index),
+        "tfidf_index": one(api.ensure_tfidf_index),
+        "tfidf_by_doc": one(api.ensure_tfidf_by_doc),
+        "coorder_edges": one(api.ensure_coorder_edges),
+        "keyword_table": one(api.ensure_keyword_table),
+        "fragmented": one(layout._ensure_fragmented_docs),
+        "compacted": one(layout.ensure_compacted_docs),
+        "zorder": one(layout.ensure_zordered_lineitem),
+        "evolved": one(scans._ensure_evolved_customer),
+        "malformed_csv": one(scans._ensure_malformed_csv),
+        "landing": one(extraction._ensure_landing_dir),
+        "http_landing": one(http_ingest._ensure_http_landing),
+        "partitioned": one(sinks._ensure_partitioned_docs),
+    }
+    for fmt in ("csv", "json", "orc", "xml"):
+        out[f"format_{fmt}"] = (
+            lambda spark, d, fmt=fmt: [scans._ensure_format_dir(spark, d, fmt)]
+        )
+    return out
+
+
+@pytest.mark.parametrize("name", sorted(_path_builders()))
+def test_gc_protects_builder_memo_paths(spark, name):
+    """Every path a memoized builder returned is live: published, then
+    aged past keep_last, it is reported as skipped_live and kept on
+    disk, because the memo hands the same path out again."""
+    import os
+
+    from document_query_system_spark.api import (
+        gc_index_versions,
+        publish_index_version,
+    )
+
+    prof = f"t_gc_memo_{name}"
+    paths = _path_builders()[name](spark, SF_DIR)
+    for p in paths:
+        publish_index_version(spark, SF_DIR, p, p, 16, profile=prof)
+    (l_last,) = _gc_fixture_dirs(f"t_gc_memo_fix_{name}", "last")
+    publish_index_version(spark, SF_DIR, l_last, l_last, 16, profile=prof)
+    rep = gc_index_versions(spark, SF_DIR, keep_last=1, profile=prof)
+    for p in paths:
+        assert p in rep["skipped_live"], (p, rep)
+        assert p not in rep["removed_paths"]
+        assert os.path.isdir(p)
+    assert _path_builders()[name](spark, SF_DIR) == paths
 
 
 def test_publish_concurrent_writers_mint_distinct_versions(spark):

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from conftest import SF_DIR
 
+from document_query_system_spark.sources import tmputil
 from document_query_system_spark.sources.tmputil import session_key
 
 
@@ -32,11 +33,11 @@ def test_ivf_pool_empty_probe_returns_empty_pool(spark):
 
     from document_query_system_spark.api import IVF_NPROBE
 
-    # Key layout mirrors _ivf_probe_literals: (tag, geometry, sf_dir,
-    # nprobe, cents_path-override) — "" = builder-resolved centroids
-    # (r14: the manifest-resolved serving path carries its own path).
+    # The session-memo key _ivf_probe_literals records under: (kind,
+    # sf_dir, nprobe, cents_path override), "" meaning the session
+    # layout's centroids.
     key = session_key(spark, "ivf_probe", SF_DIR, str(IVF_NPROBE), "")
-    restore = _patched(P._IVF_PROBE_CACHE, key, ([], []))
+    restore = _patched(tmputil._MATERIALIZED, key, ([], []))
     try:
         df = P.mmr_ivf_pool_pairs(spark, SF_DIR)
         assert [f.name for f in df.schema.fields] == [
@@ -53,7 +54,7 @@ def test_triplet_pool_empty_probe_returns_empty_pool(spark):
     from document_query_system_spark.functions import vector as V
 
     key = session_key(spark, "emb_ivf_probe", SF_DIR)
-    restore = _patched(V._EMB_IVF_PROBE_CACHE, key, ([], []))
+    restore = _patched(tmputil._MATERIALIZED, key, ([], []))
     try:
         df = V.triplet_ann_pool(spark, SF_DIR)
         assert [f.name for f in df.schema.fields] == [
