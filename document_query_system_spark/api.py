@@ -10,16 +10,16 @@ Spark:
 
     answers = run_query(spark, sf_dir, questions)   # one DataFrame
 
-- **vector path**: the question batch is embedded on the driver with
-  the index's own kernel (``_hash_embed_batch``, bit-identical to
-  ``embed_df``) and broadcast as a LocalRelation (``local_rows``)
-  against the stored index → cosine top-k (ref stages 4-6);
+- **vector path**: the question batch, embedded on the driver with the
+  index's own kernel (``question_vectors``), probes the stored index
+  (``operators.retrieval.exact_probe``) → cosine top-k (ref stages
+  4-6);
 - **keyword path**: the stored keyword table (``ensure_keyword_table``:
   doc_id, snippet and the lower-cased text, written once per session)
-  cross-scored against the broadcast questions → window top-k (ref
-  :134-157) — selected per call like the reference's exception
-  fallback, but as a first-class strategy flag rather than a
-  try/except;
+  cross-scored against the broadcast questions with the shared
+  ``keyword_score`` → window top-k (ref :134-157) — selected per call
+  like the reference's exception fallback, but as a first-class
+  strategy flag rather than a try/except;
 - **answer assembly**: top chunk summary template + doc stats agg
   (ref :100-127, 176-186).
 
@@ -53,8 +53,21 @@ from .sources.tmputil import (
     tmp_path,
     write_artifact,
 )
-from .functions.embed import _hash_embed_batch, dot, embed_df, embed_pandas
-from .operators.questions import GOLDEN_QUESTIONS, SNIPPET_LEN, TOP_K, questions_df
+from .functions.embed import embed_pandas
+from .operators.questions import (
+    GOLDEN_QUESTIONS,
+    SNIPPET_LEN,
+    TOP_K,
+    question_vectors,
+    questions_df,
+)
+from .operators.retrieval import (
+    exact_probe,
+    keyword_score,
+    question_words,
+    top_n,
+    vector_score,
+)
 
 
 def ensure_vector_index(spark: SparkSession, sf_dir: str) -> str:
@@ -1112,62 +1125,32 @@ def run_query(
         raise ValueError(f"unknown method {method!r}")
 
     if method == "vector":
-        # Probe the STORED index: embed only the question batch, on the
-        # driver with the kernel the index was built with
-        # (_hash_embed_batch, bit-identical to embed_df), and broadcast
-        # it as a LocalRelation against the materialized vector table.
-        # The batch is a few rows, so planning an embed stage per
-        # request costs more than the embedding; re-embedding the
-        # corpus per query would be a full corpus pass per batch.
-        idx = read_artifact(spark, ensure_vector_index(spark, sf_dir))
-        vecs = _hash_embed_batch([t for _, t in questions])
-        qv = F.broadcast(
-            local_rows(
-                spark,
-                [(qid, t, v) for (qid, t), v in zip(questions, vecs)],
-                "question_id INT, question_text STRING, qv ARRAY<DOUBLE>",
-            )
-        )
-        scored = idx.crossJoin(qv).select(
-            "question_id",
-            "question_text",
-            "doc_id",
-            F.round(dot(F.col("qv"), F.col("dv")), 6).alias("score"),
-            "snippet",
+        scored = exact_probe(spark, sf_dir, questions).select(
+            "question_id", "question_text", "doc_id", "score", "snippet"
         )
     else:
-        # Probe the STORED keyword table: lower(text) and the snippet
-        # were computed once per document when it was written, so a
-        # request neither re-spreads nor re-lowers the corpus. The
-        # question-word split runs once on the broadcast side — not per
-        # (question, doc, word).
+        # The stored keyword table carries lower(text) and the snippet,
+        # computed once per document when it was written; the question
+        # words are split once, on the broadcast side.
         docs = read_artifact(spark, ensure_keyword_table(spark, sf_dir))
-        qdf = local_rows(spark, questions, "question_id INT, question_text STRING")
         qb = F.broadcast(
-            qdf.select(
+            questions_df(spark, questions).select(
                 "question_id",
                 "question_text",
-                F.split(F.lower(F.col("question_text")), " ").alias("__qwords"),
+                question_words(F.col("question_text")).alias("__qwords"),
             )
-        )
-        matches = F.size(
-            F.filter(F.col("__qwords"), lambda w: F.col("text_lc").contains(w))
         )
         scored = docs.crossJoin(qb).select(
             "question_id",
             "question_text",
             "doc_id",
-            F.round(matches.cast("double") / F.size(F.col("__qwords")), 6).alias(
+            F.round(keyword_score(F.col("__qwords"), F.col("text_lc")), 6).alias(
                 "score"
             ),
             "snippet",
         )
 
-    w = Window.partitionBy("question_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    topk = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-    )
+    topk = top_n(scored, top_k, "score", rank="rank")
     return topk.select(
         "question_id",
         "question_text",
@@ -1307,45 +1290,33 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking; fusion is a full outer join on (question, doc) so a doc
     ranked by only one retriever still scores. Both retrievers and the
     fusion are the engine's own operators end-to-end."""
-    # One pass: BOTH retriever scores are per-(question, doc) column
-    # expressions, so a single broadcast cross join produces them
-    # together; both rank windows share the question_id partitioning
-    # (one exchange, two sorts), and because the two ranks land on the
-    # same row, the full outer join of the two top-50 lists reduces to
-    # conditional terms — the whole fusion runs in 3 shuffles instead
-    # of the naive two-pipeline 7.
-    #
-    # The vector half probes the STORED index (ensure_vector_index) —
-    # a retrieval query must never re-embed the corpus per question
-    # batch (at 100 TB that's a full compute pass per call; the r2/r4
-    # verdicts both flagged the embed-per-query form). Recovering the
-    # full text for the keyword half is a doc_id equi-join against the
-    # documents scan — shuffle-on-key work, not embedding compute, and
-    # co-partitionable (bucketed) at scale.
-    qdf = questions_df(spark)
+    # One pass: both retriever scores are per-(question, doc) column
+    # expressions, so one broadcast cross join produces them together;
+    # both rank windows share the question_id partitioning (one
+    # exchange, two sorts), and because the two ranks land on the same
+    # row, the full outer join of the two top-50 lists reduces to
+    # conditional terms. Both halves read stored tables: the vector
+    # index and the keyword table's lower-cased text, joined on doc_id.
     idx = read_artifact(spark, ensure_vector_index(spark, sf_dir)).select(
         "doc_id", "dv"
     )
-    docs = spread(load(spark, sf_dir, "documents")).select(
-        "doc_id", F.lower(F.col("text")).alias("__text_lc")
+    kw = read_artifact(spark, ensure_keyword_table(spark, sf_dir)).select(
+        "doc_id", "text_lc"
     )
-    corpus = idx.join(docs, "doc_id")
     qq = F.broadcast(
-        embed_df(qdf, "question_text", out_col="qv").select(
+        question_vectors(spark).select(
             "question_id",
-            "question_text",
             "qv",
-            F.split(F.lower(F.col("question_text")), " ").alias("__qwords"),
+            question_words(F.col("question_text")).alias("__qwords"),
         )
     )
-    matches = F.size(
-        F.filter(F.col("__qwords"), lambda w: F.col("__text_lc").contains(w))
-    )
-    scored = corpus.crossJoin(qq).select(
+    scored = idx.join(kw, "doc_id").crossJoin(qq).select(
         "question_id",
         "doc_id",
-        F.round(dot(F.col("qv"), F.col("dv")), 6).alias("vscore"),
-        F.round(matches.cast("double") / F.size(F.col("__qwords")), 6).alias("kscore"),
+        vector_score(F.col("qv"), F.col("dv")).alias("vscore"),
+        F.round(keyword_score(F.col("__qwords"), F.col("text_lc")), 6).alias(
+            "kscore"
+        ),
     )
     w = Window.partitionBy("question_id")
     vr = F.row_number().over(w.orderBy(F.desc("vscore"), F.asc("doc_id")))
@@ -1361,12 +1332,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused = ranked.filter(
         (F.col("vr") <= _RRF_DEPTH) | (F.col("kr") <= _RRF_DEPTH)
     ).select("question_id", "doc_id", rrf.alias("rrf"))
-    w_f = Window.partitionBy("question_id").orderBy(F.desc("rrf"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rn", F.row_number().over(w_f))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-    )
+    return top_n(fused, TOP_K, "rrf")
 
 
 @register("q_api_run_vector", oracle=_api_oracle("vector"))

@@ -15,7 +15,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.tables import load, local_rows, spread
+from ..operators.questions import question_vectors
+from ..operators.retrieval import (
+    ivf_cell_choice,
+    ivf_cell_scan,
+    ivf_probe_fold,
+    top_n,
+    vector_score,
+)
+from ..sources.tables import load, spread
 from ..sources.tmputil import ensure_materialized, read_artifact
 from .hashing import P, MULT, token_hashes, token_hashes_sql  # noqa: F401
 from .embed import (  # noqa: F401  (re-exported public surface)
@@ -352,35 +360,23 @@ def q_golden_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings are unit vectors, so cosine = dot — one fold per pair.
     BASELINE.md B2 analog, end-to-end oracle-checked.
 
-    The corpus leg embeds via the Arrow path (embed_pandas — see its
-    docstring for the r10 measurement: 19× over the SQL fold at the
-    B1 workload, and immune to the in-suite JVM-interpreter slowdown
-    that put the r9 driver run at 16 s in-suite vs 1.9 s pre-suite on
-    this exact query). The 10-row question batch stays on the SQL
-    fold: it is literal data Catalyst folds at plan time, and a
-    10-row mapInPandas would pay a Python round-trip for nothing.
-    Both paths are bit-identical (shared oracle of q_embed_hash /
+    The corpus embed is the measured work here, so this query embeds
+    the documents itself instead of probing the stored index. It runs
+    the Arrow path (embed_pandas: 19× over the SQL fold at the B1
+    workload, see its docstring). The 10-row question batch is
+    embedded on the driver (``question_vectors``): a 10-row
+    mapInPandas would pay a Python round trip for nothing. All paths
+    are bit-identical (shared oracle of q_embed_hash /
     q_embed_pandas)."""
-    from ..operators.questions import questions_df
-
     docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
     dv = embed_pandas(docs, "text", out_col="doc_v", keep=["doc_id"])
-    qv = F.broadcast(
-        embed_df(
-            questions_df(spark), "question_text", out_col="q_v"
-        ).select("question_id", "q_v")
-    )
+    qv = F.broadcast(question_vectors(spark).select("question_id", "qv"))
     scored = dv.crossJoin(qv).select(
         "question_id",
         "doc_id",
-        F.round(dot(F.col("q_v"), F.col("doc_v")), 6).alias("cos_sim"),
+        vector_score(F.col("qv"), F.col("doc_v")).alias("cos_sim"),
     )
-    w = Window.partitionBy("question_id").orderBy(F.desc("cos_sim"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _GOLDEN_SEARCH_TOP_K)
-        .drop("rn")
-    )
+    return top_n(scored, _GOLDEN_SEARCH_TOP_K, "cos_sim")
 
 
 # ------------------------------------------------- Matryoshka truncation
@@ -670,10 +666,10 @@ _TRIPLET_NPROBE = 8
 _TRIPLET_NPROBE_SCALED = 26
 
 #: Above this anchor count the literal fold-in is the wrong shape —
-#: _triplet_probe_literals collects |anchors|·nprobe rows INCLUDING
-#: the DIM-double anchor vectors, so a millions-of-anchors
-#: between-epochs mining pass would funnel the whole anchor set
-#: through the driver (r11 verdict #4). triplet_pool_auto switches to
+#: the fold collects |anchors|·nprobe rows INCLUDING the DIM-double
+#: anchor vectors, so a millions-of-anchors between-epochs mining pass
+#: would funnel the whole anchor set through the driver.
+#: triplet_pool_auto switches to
 #: the distributed cell equi-join (triplet_join_pool) past it; the
 #: value is sized so serving-shaped anchor sets (|questions|-scale)
 #: keep the static-PartitionFilter fold.
@@ -697,117 +693,69 @@ def _triplet_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _triplet_probe_literals(
-    spark: SparkSession, sf_dir: str, anchors: DataFrame | None = None
-) -> tuple[list, list]:
-    """(anchor_rows, probe_cells) for the embeddings IVF probe: each
-    anchor's _TRIPLET_NPROBE nearest trained cells folded to plan-time
-    literals, the _ivf_probe_literals pattern (a bounded engine mini-job
-    over |anchors| x IVF_CELLS rows with the oracle's arithmetic:
-    round(d2, 6) ranking, cid tiebreak). Anchor vectors and labels ride
-    the rows so the pool probe needs no second source read. The default
-    fixture slice is recorded in the session memo per sf_dir; a custom
-    ``anchors`` DataFrame folds per call and is the caller's to bound
-    (triplet_pool_auto only routes here below
-    _TRIPLET_FOLD_MAX_ANCHORS)."""
-    from ..api import ensure_ivf
+def _triplet_pool(hits: DataFrame) -> DataFrame:
+    """Per anchor, the top-{pool} most similar candidates of any label,
+    self excluded: (anchor_id, anchor_label, cand_id, cand_label,
+    cos_sim) from a probe of the embeddings layout, scored by the full
+    cosine as the mining oracle does. Both mining paths end here, so
+    the fold and the join rank alike."""
+    scored = hits.filter(F.col("anchor_id") != F.col("cand_id")).select(
+        "anchor_id",
+        "anchor_label",
+        "cand_id",
+        "cand_label",
+        F.round(
+            dot(F.col("qv"), F.col("cv"))
+            / (l2_norm(F.col("qv")) * l2_norm(F.col("cv"))),
+            6,
+        ).alias("cos_sim"),
+    )
+    return top_n(scored, _TRIPLET_POOL, "cos_sim", by="anchor_id", tiebreak="cand_id")
 
-    def build() -> tuple[list, list]:
-        _, cents_path, _ = ensure_ivf(spark, sf_dir, "embeddings", False)
-        cents = read_artifact(spark, cents_path)
-        anch = anchors if anchors is not None else _triplet_anchors(spark, sf_dir)
-        d2 = F.round(
-            F.col("qq") - 2 * dot(F.col("qv"), F.col("cv")) + F.col("cc"), 6
-        )
-        w = Window.partitionBy("anchor_id").orderBy("d2", "cid")
-        rows = (
-            anch.crossJoin(F.broadcast(cents))
-            .select("anchor_id", "anchor_label", "qv", "cid", d2.alias("d2"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= _TRIPLET_NPROBE)
-            .select("anchor_id", "anchor_label", "qv", "cid")
-            .collect()
-        )
-        anchor_rows = [
-            (int(r.anchor_id), int(r.anchor_label), [float(x) for x in r.qv], int(r.cid))
-            for r in rows
-        ]
-        return anchor_rows, sorted({c for *_, c in anchor_rows})
 
-    if anchors is not None:
-        return build()
-    return ensure_materialized(spark, "emb_ivf_probe", sf_dir, build)
+def _layout_candidates() -> list:
+    """The embeddings layout's columns as both mining paths score them."""
+    return [
+        F.col("vec_id").alias("cand_id"),
+        F.col("label").alias("cand_label"),
+        F.col("v").alias("cv"),
+    ]
 
 
 def triplet_ann_pool(
     spark: SparkSession, sf_dir: str, anchors: DataFrame | None = None
 ) -> DataFrame:
-    """The ANN candidate pool for triplet mining — per anchor, the
-    top-{pool} most-similar vectors (any label, self excluded) from
-    the cell-pruned stored embeddings IVF layout: (anchor_id,
-    anchor_label, cand_id, cand_label, cos_sim). Exposed pre-window
-    consumers aside so the plan test can pin the structural claim:
-    the only scan is the layout with STATIC PartitionFilters on the
-    probed cells; no full embeddings-table scoring pass exists
-    anywhere in the plan. ``anchors`` defaults to the mining
-    fixture's slice (memoized fold); a custom (anchor_id,
-    anchor_label, qv, qq) DataFrame folds per call — use
-    triplet_pool_auto so oversized sets route to the join path."""
+    """The ANN candidate pool for triplet mining from the cell-pruned
+    stored embeddings IVF layout: each anchor's _TRIPLET_NPROBE nearest
+    cells folded to literals (``ivf_probe_fold``, anchor vectors and
+    labels riding the rows so no second source read is needed), only
+    those cells read (``ivf_cell_scan``, static PartitionFilters), then
+    ``_triplet_pool``. No full embeddings-table scoring pass exists
+    anywhere in the plan (plan-pinned). ``anchors`` defaults to the
+    mining fixture's slice, whose fold is memoized; a custom (anchor_id,
+    anchor_label, qv, qq) DataFrame folds per call and is the caller's
+    to bound — use triplet_pool_auto, which routes oversized sets to
+    the join path."""
     from ..api import ensure_ivf
 
-    layout, _, _ = ensure_ivf(spark, sf_dir, "embeddings", False)
-    anchor_rows, probe_cells = _triplet_probe_literals(
-        spark, sf_dir, anchors=anchors
+    layout, cents, _ = ensure_ivf(spark, sf_dir, "embeddings", False)
+    probe = ivf_probe_fold(
+        spark,
+        sf_dir,
+        "embeddings",
+        cents,
+        _TRIPLET_NPROBE,
+        lambda: anchors if anchors is not None else _triplet_anchors(spark, sf_dir),
+        memo=anchors is None,
     )
-    if not probe_cells:
-        # Degenerate anchor slice → no probe keys: isin() with zero
-        # args raises a confusing analysis error; the correct pool is
-        # simply empty (r11 ADVICE).
-        return local_rows(
-            spark,
-            [],
-            "anchor_id LONG, anchor_label INT, cand_id LONG, "
-            "cand_label INT, cos_sim DOUBLE",
-        )
-    db = read_artifact(spark, layout).select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("label").alias("cand_label"),
-        F.col("v").alias("cv"),
-        "cell",
+    hits = ivf_cell_scan(
+        spark,
+        layout,
+        _layout_candidates(),
+        probe,
+        "anchor_id LONG, anchor_label INT, qv ARRAY<DOUBLE>, qcell LONG",
     )
-    # Literal probe-cell filter → static PartitionFilters (pure
-    # pruning: the join below re-checks cells row-wise).
-    db = db.filter(F.col("cell").isin(*probe_cells))
-    qb = F.broadcast(
-        local_rows(
-            spark,
-            anchor_rows,
-            "anchor_id LONG, anchor_label INT, qv ARRAY<DOUBLE>, qcell LONG",
-        )
-    )
-    scored = (
-        db.join(qb, F.col("cell") == F.col("qcell"))
-        .filter(F.col("anchor_id") != F.col("cand_id"))
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "cand_id",
-            "cand_label",
-            F.round(
-                dot(F.col("qv"), F.col("cv"))
-                / (l2_norm(F.col("qv")) * l2_norm(F.col("cv"))),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("cos_sim"), F.asc("cand_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TRIPLET_POOL)
-        .drop("rk")
-    )
+    return _triplet_pool(hits)
 
 
 def triplet_join_pool(
@@ -816,88 +764,38 @@ def triplet_join_pool(
     anchors: DataFrame | None = None,
     scaled: bool = False,
 ) -> DataFrame:
-    """triplet_ann_pool's DISTRIBUTED twin for large anchor sets (r11
-    verdict #4): the per-anchor nprobe cell choice stays IN-PLAN as a
-    broadcast-centroid cross join + rank window (the
-    kmeans_fit_assign shape — K centroid rows broadcast, anchors
-    never collected), and the pool probe is a cell EQUI-JOIN against
-    the stored layout instead of a driver-folded literal filter.
-    Identical output to the literal path by construction — same d2
-    arithmetic, round(·, 6) ranking, cid tiebreak, cos_sim
-    expressions, and top-{pool} window (pinned byte-identical in
-    tests/test_probe_guards.py) — so q_training_triplets_ann's oracle
-    covers both paths.
+    """triplet_ann_pool's distributed twin for large anchor sets: the
+    per-anchor cell choice (``ivf_cell_choice``, K centroid rows
+    broadcast) stays in the plan and joins the stored layout on the
+    cell, so anchors are never collected to the driver. The cell
+    choice, the candidate columns and ``_triplet_pool`` are the ones
+    the literal fold uses, so the two paths give the same pool
+    (pinned byte-identical in tests/test_probe_guards.py) and
+    q_training_triplets_ann's oracle covers both.
 
-    The trade, and why BOTH paths exist: the literal fold buys STATIC
-    PartitionFilters (directory-level pruning known at plan time) at
-    the cost of a driver collect carrying |anchors|·nprobe DIM-double
-    rows — right for serving-sized |q|; this join path never
-    materializes anchors on the driver, so it scales to
-    millions-of-anchors between-epochs mining passes — Catalyst picks
-    the cell join strategy (broadcast below the threshold, shuffled
-    hash/sort-merge above, where the layout's partitionBy(cell)
-    directories make the scan side already clustered), and static
-    pruning is replaced by DYNAMIC partition pruning: the layout
-    scan's PartitionFilters carry a dynamicpruning subquery on cell
-    (plan-pinned in test_plan_quality.py), so only probed cell
-    directories are read here too — decided at runtime instead of
-    plan time.
-    ``anchors`` defaults to the mining fixture's slice; a production
-    caller passes any (anchor_id, anchor_label, qv, qq) DataFrame.
-    ``scaled=True`` mines from the CORPUS-ADAPTIVE layout
-    (ensure_ivf("embeddings", scaled=True) — cells = ivf_cells_for(N),
-    r12 verdict #4) at the ratio-preserved deeper mining depth
-    _TRIPLET_NPROBE_SCALED; the plan shape (broadcast-centroid cell
-    choice, cell equi-join, DPP on the layout's cell directories) is
-    identical — only the trained geometry differs."""
+    The trade, and why both paths exist: the literal fold buys static
+    PartitionFilters at the cost of a driver collect of
+    |anchors|·nprobe DIM-double rows, right for serving-sized sets.
+    Here Catalyst picks the cell join strategy and static pruning is
+    replaced by dynamic partition pruning on the layout's cell
+    directories (plan-pinned), decided at runtime instead of plan
+    time. ``anchors`` defaults to the mining fixture's slice; a caller
+    passes any (anchor_id, anchor_label, qv, qq) DataFrame.
+    ``scaled=True`` mines from the corpus-adaptive layout
+    (ensure_ivf("embeddings", scaled=True), cells = ivf_cells_for(N))
+    at the deeper _TRIPLET_NPROBE_SCALED; the plan shape is the
+    same."""
     from ..api import ensure_ivf
 
-    layout, cents_path, _ = ensure_ivf(spark, sf_dir, "embeddings", scaled)
-    nprobe = _TRIPLET_NPROBE_SCALED if scaled else _TRIPLET_NPROBE
-    cents = read_artifact(spark, cents_path)
+    layout, cents, _ = ensure_ivf(spark, sf_dir, "embeddings", scaled)
     anch = anchors if anchors is not None else _triplet_anchors(spark, sf_dir)
-    d2 = F.round(
-        F.col("qq") - 2 * dot(F.col("qv"), F.col("cv")) + F.col("cc"), 6
+    aprobe = ivf_cell_choice(
+        anch,
+        read_artifact(spark, cents),
+        _TRIPLET_NPROBE_SCALED if scaled else _TRIPLET_NPROBE,
     )
-    pw = Window.partitionBy("anchor_id").orderBy("d2", "cid")
-    aprobe = (
-        anch.crossJoin(F.broadcast(cents))
-        .select("anchor_id", "anchor_label", "qv", "cid", d2.alias("d2"))
-        .withColumn("rn", F.row_number().over(pw))
-        .filter(F.col("rn") <= nprobe)
-        .select(
-            "anchor_id", "anchor_label", "qv", F.col("cid").alias("qcell")
-        )
-    )
-    db = read_artifact(spark, layout).select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("label").alias("cand_label"),
-        F.col("v").alias("cv"),
-        "cell",
-    )
-    scored = (
-        db.join(aprobe, F.col("cell") == F.col("qcell"))
-        .filter(F.col("anchor_id") != F.col("cand_id"))
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "cand_id",
-            "cand_label",
-            F.round(
-                dot(F.col("qv"), F.col("cv"))
-                / (l2_norm(F.col("qv")) * l2_norm(F.col("cv"))),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("cos_sim"), F.asc("cand_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TRIPLET_POOL)
-        .drop("rk")
-    )
+    db = read_artifact(spark, layout).select(*_layout_candidates(), "cell")
+    return _triplet_pool(db.join(aprobe, F.col("cell") == F.col("qcell")))
 
 
 def triplet_pool_auto(

@@ -26,12 +26,22 @@ from pyspark.sql import functions as F
 from ..functions.hashing import tokens, tokens_sql
 from ..registry import register
 from ..sources.tables import cluster_by_dirs, load, local_rows, spread
-from ..sources.tmputil import ensure_materialized, read_artifact, write_artifact
+from ..sources.tmputil import read_artifact, write_artifact
 from ..functions.hashing import (
     shingle_hashes as _shingle_hashes,
     shingle_hashes_sql as _shingle_hashes_sql,
     token_hashes,
     token_hashes_sql,
+)
+from .questions import question_vector_rows
+from .retrieval import (
+    exact_probe,
+    golden_probe_queries,
+    ivf_cell_scan,
+    ivf_probe_fold,
+    pool_vectors,
+    top_n,
+    vector_score,
 )
 
 # ------------------------------------------------------------- PII redaction
@@ -1376,53 +1386,25 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     pool). score = Σ_legs 1/(60 + rank) over each leg's top-20,
     rounded to 6 before the final ranking; doc_id breaks score ties.
 
-    Plan: the two legs are the proven q_bm25_topk / q_hybrid_rrf
-    shapes (posting-table aggregation with broadcast question terms;
-    broadcast question vectors probing the STORED vector index from
-    ensure_vector_index — a retrieval query must never re-embed the
-    corpus per question batch; at 100 TB that is a full compute pass
-    per call, the r2/r4/r7 verdict finding). Each leg's per-question
-    top-20 is a window over its (question)-partitioned score table,
+    Plan: the keyword leg is q_bm25_topk's posting-table aggregation
+    with broadcast question terms; the vector leg is the shared exact
+    probe of the stored index (``retrieval.exact_probe``), so the
+    corpus is never re-embedded per question batch. Each leg's
+    per-question top-20 (``top_n``) is a window over its
+    (question)-partitioned score table,
     and the fusion is a full-outer join of two ≤|questions|·20-row
     sides — trivially small forever, whatever the corpus size. Rank
     arithmetic is integer; the only float, 1/(60+rank), takes one of
     40 fixed values."""
-    from ..api import ensure_vector_index
-    from ..functions.embed import dot, embed_df
-    from .questions import questions_df
-
-    kw_w = Window.partitionBy("question_id").orderBy(
-        F.desc("bm25"), F.asc("doc_id")
+    kw = top_n(_bm25_scored(spark, sf_dir), _RRF_POOL, "bm25", rank="kw_rk").select(
+        "question_id", "doc_id", "kw_rk"
     )
-    kw = (
-        _bm25_scored(spark, sf_dir)
-        .withColumn("rk", F.row_number().over(kw_w))
-        .filter(F.col("rk") <= _RRF_POOL)
-        .select("question_id", "doc_id", F.col("rk").alias("kw_rk"))
-    )
-    dv = (
-        read_artifact(spark, ensure_vector_index(spark, sf_dir))
-        .select("doc_id", F.col("dv").alias("doc_v"))
-    )
-    qv = F.broadcast(
-        embed_df(questions_df(spark), "question_text", out_col="q_v").select(
-            "question_id", "q_v"
-        )
-    )
-    vec_w = Window.partitionBy("question_id").orderBy(
-        F.desc("cos_sim"), F.asc("doc_id")
-    )
-    vec = (
-        dv.crossJoin(qv)
-        .select(
-            "question_id",
-            "doc_id",
-            F.round(dot(F.col("q_v"), F.col("doc_v")), 6).alias("cos_sim"),
-        )
-        .withColumn("rk", F.row_number().over(vec_w))
-        .filter(F.col("rk") <= _RRF_POOL)
-        .select("question_id", "doc_id", F.col("rk").alias("vec_rk"))
-    )
+    vec = top_n(
+        exact_probe(spark, sf_dir).select("question_id", "doc_id", "score"),
+        _RRF_POOL,
+        "score",
+        rank="vec_rk",
+    ).select("question_id", "doc_id", "vec_rk")
     fused = kw.join(vec, ["question_id", "doc_id"], "full_outer").select(
         "question_id",
         "doc_id",
@@ -1434,14 +1416,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("kw_rk"), F.lit(0)).cast("long").alias("kw_rank"),
         F.coalesce(F.col("vec_rk"), F.lit(0)).cast("long").alias("vec_rank"),
     )
-    w_fin = Window.partitionBy("question_id").orderBy(
-        F.desc("rrf_score"), F.asc("doc_id")
-    )
-    return (
-        fused.withColumn("rn", F.row_number().over(w_fin))
-        .filter(F.col("rn") <= _RRF_TOPK)
-        .drop("rn")
-    )
+    return top_n(fused, _RRF_TOPK, "rrf_score")
 
 
 # ------------------------------------------------------------- nDCG eval
@@ -1519,51 +1494,24 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     are precomputed integer literals, so the whole metric is integer
     arithmetic until the final normalization).
 
-    Plan: the two proven legs again (BM25 posting aggregation;
-    broadcast question vectors probing the STORED vector index —
-    grading against the index the engine actually serves, never a
-    per-call corpus re-embed); the scorer joins two ≤|questions|·k-row
+    Plan: q_rrf_fusion's two legs again (BM25 posting aggregation; the
+    shared exact probe of the stored index, so the grades come from the
+    index the engine serves, never a per-call corpus re-embed); the
+    scorer joins two ≤|questions|·k-row
     tables and hash-aggregates per question — movement bounded by the
     question count forever."""
-    from ..api import ensure_vector_index
-    from ..functions.embed import dot, embed_df
-    from .questions import questions_df
-
-    kw_w = Window.partitionBy("question_id").orderBy(
-        F.desc("bm25"), F.asc("doc_id")
+    kw = top_n(_bm25_scored(spark, sf_dir), _NDCG_K, "bm25", rank="rk").select(
+        "question_id", "doc_id", "rk"
     )
-    kw = (
-        _bm25_scored(spark, sf_dir)
-        .withColumn("rk", F.row_number().over(kw_w))
-        .filter(F.col("rk") <= _NDCG_K)
-        .select("question_id", "doc_id", "rk")
-    )
-    dv = (
-        read_artifact(spark, ensure_vector_index(spark, sf_dir))
-        .select("doc_id", F.col("dv").alias("doc_v"))
-    )
-    qv = F.broadcast(
-        embed_df(questions_df(spark), "question_text", out_col="q_v").select(
-            "question_id", "q_v"
-        )
-    )
-    rel_w = Window.partitionBy("question_id").orderBy(
-        F.desc("cos_sim"), F.asc("doc_id")
-    )
-    rel = (
-        dv.crossJoin(qv)
-        .select(
-            "question_id",
-            "doc_id",
-            F.round(dot(F.col("q_v"), F.col("doc_v")), 6).alias("cos_sim"),
-        )
-        .withColumn("rk", F.row_number().over(rel_w))
-        .filter(F.col("rk") <= _NDCG_GRADES)
-        .select(
-            "question_id",
-            "doc_id",
-            (F.lit(_NDCG_GRADES + 1) - F.col("rk")).alias("grade"),
-        )
+    rel = top_n(
+        exact_probe(spark, sf_dir).select("question_id", "doc_id", "score"),
+        _NDCG_GRADES,
+        "score",
+        rank="rk",
+    ).select(
+        "question_id",
+        "doc_id",
+        (F.lit(_NDCG_GRADES + 1) - F.col("rk")).alias("grade"),
     )
     disc = F.array(*[F.lit(d).cast("long") for d in _NDCG_DISC])
     term = F.coalesce(F.col("grade"), F.lit(0)).cast("long") * F.element_at(
@@ -1935,44 +1883,20 @@ cand AS MATERIALIZED (
     return _mmr_round_ctes(prefix)
 
 
-def _stored_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast-question probe of the STORED vector index, scored
-    but unranked: (question_id, doc_id, rel, v). The shared first
-    stage of every exact-pool consumer (MMR's candidate pool, the
-    late-interaction first pass, the pool-recall ground truth) — one
-    place owns the probe contract (stored index, rounded-6 dot,
-    doc_id tiebreak downstream); r10 review found it triplicated."""
-    from ..api import ensure_vector_index
-    from ..functions.embed import dot, embed_df
-    from .questions import questions_df
-
-    dv = read_artifact(spark, ensure_vector_index(spark, sf_dir)).select(
-        "doc_id", F.col("dv").alias("v")
-    )
-    qv = F.broadcast(
-        embed_df(questions_df(spark), "question_text", out_col="q_v").select(
-            "question_id", "q_v"
-        )
-    )
-    return dv.crossJoin(qv).select(
-        "question_id",
-        "doc_id",
-        F.round(dot(F.col("q_v"), F.col("v")), 6).alias("rel"),
-        "v",
-    )
-
-
 def exact_pool_topn(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
-    """Per-question top-n of the stored-index probe:
-    (question_id, doc_id, rel, v), ranked by (rel desc, doc_id)."""
-    w = Window.partitionBy("question_id").orderBy(
-        F.desc("rel"), F.asc("doc_id")
-    )
-    return (
-        _stored_index_probe(spark, sf_dir)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= n)
-        .drop("rk")
+    """Per-question top-n of the exact stored-index probe:
+    (question_id, doc_id, rel, v), ranked by (rel desc, doc_id). The
+    candidate pool of exact MMR, the late-interaction first pass and
+    the ground truth of the pool-recall reports."""
+    return top_n(
+        exact_probe(spark, sf_dir).select(
+            "question_id",
+            "doc_id",
+            F.col("score").alias("rel"),
+            F.col("dv").alias("v"),
+        ),
+        n,
+        "rel",
     )
 
 
@@ -2161,61 +2085,36 @@ cand AS MATERIALIZED (
 @register("q_mmr_ann_pool", oracle=_mmr_ann_oracle())
 def q_mmr_ann_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_mmr_diversify with the candidate pool served by the
-    multi-probe sign-LSH ANN tier instead of the exact
-    broadcast-⨯-full-index probe (r9 verdict #5): the production
-    serving shape, where the corpus-scale scan is replaced by a
-    bucket-pruned read and the exact cosine + greedy MMR run only
-    inside the bounded candidate set. sign-LSH is the training-free
-    tier: no learned state, the index is rebuildable from planes
-    alone, at the cost of N_TABLES stored copies. Its trained
-    counterpart is q_mmr_ivf_pool (r11 — the documents corpus now
-    HAS a k-means coarse quantizer via api.ensure_ivf),
-    which stores one copy and adapts cells to corpus density; both
-    probes share the same literal-fold → static-partition-pruning →
-    bounded-pool plan shape, and q_mmr_pool_recall reports their
-    pool recall side by side.
+    multi-probe sign-LSH ANN tier instead of the exact full-index
+    probe: the corpus-scale scan becomes a bucket-pruned read, and the
+    exact cosine and greedy MMR run only inside the bounded candidate
+    set. sign-LSH is the training-free tier (rebuildable from the
+    planes alone, at the cost of N_TABLES stored copies); its trained
+    counterpart, q_mmr_ivf_pool, stores one copy and adapts cells to
+    corpus density. Both probes fold their keys to literals for static
+    partition pruning, and q_mmr_pool_recall reports their pool recall
+    side by side.
 
-    Plan: the STORED bucketed index (api.ensure_vector_index_lsh —
+    Plan: the stored bucketed index (api.ensure_vector_index_lsh,
     partitionBy(tbl, bucket), 48 directories at the 3×4-bit config)
     is probed by |questions|·N_TABLES·|flips| broadcast bucket keys
     (each question probes its own bucket plus the 4 one-bit-flip
-    buckets per table — the q_ann_multiprobe recall repair, which
-    fans out only the probe side, never the stored layout); a
-    (question, doc) collision in any probe is a candidate, deduped by
-    a bounded per-pair window, exact-re-ranked to the same top-20
-    pool contract as the exact variant, then the SAME greedy rounds
+    buckets per table, fanning out only the probe side, never the
+    stored layout); a (question, doc) collision in any probe is a
+    candidate, deduped by a max aggregate, ranked to the same top-20
+    pool contract as the exact variant, given its vectors
+    (``pool_vectors``), then the same greedy rounds
     (_mmr_greedy_rounds). Candidate volume per question ≈
-    N_TABLES·|flips|·N/2^planes — the scan-cost/recall knob — instead
-    of N.
+    N_TABLES·|flips|·N/2^planes instead of N.
 
     Measured vs the exact pool (final-selection overlap@5 per golden
     question, tools/mmr_recall.py): mean 0.88 at sf0.01 / 0.92 at
     sf0.1 (single-probe measured 0.38 — these near-isotropic
-    synthetic embeddings NEED the multiprobe repair; clustered real
-    embeddings sit higher at the same probe count). The same harness
-    reports the delta on any corpus, exactly like q_ann_recall for
-    the plain tiers."""
-    cand = mmr_ann_pool_candidates(spark, sf_dir).localCheckpoint(
-        eager=False  # all k rounds re-read the pool
-    )
+    synthetic embeddings need the multiprobe repair; clustered real
+    embeddings sit higher at the same probe count)."""
+    cand = pool_vectors(spark, sf_dir, mmr_ann_pool_pairs(spark, sf_dir))
+    cand = cand.localCheckpoint(eager=False)  # all k rounds re-read the pool
     return _mmr_greedy_rounds(cand)
-
-
-def mmr_ann_pool_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mmr_ann_pool_pairs with the pool VECTORS attached (the greedy
-    rounds need v): the ≤|questions|·pool picks broadcast against the
-    plain stored index. Kept separate from the pairs builder so
-    consumers that only need the (question, doc) pool — the recall
-    report — skip the vector fetch entirely (r10 review)."""
-    from ..api import ensure_vector_index
-
-    top = mmr_ann_pool_pairs(spark, sf_dir)
-    dv = read_artifact(spark, ensure_vector_index(spark, sf_dir)).select(
-        "doc_id", F.col("dv").alias("v")
-    )
-    return dv.join(F.broadcast(top), "doc_id").select(
-        "question_id", "doc_id", "rel", "v"
-    )
 
 
 def mmr_ann_pool_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2226,25 +2125,18 @@ def mmr_ann_pool_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus embed) that the per-round checkpoints truncate out of the
     final plan.
 
-    The question side is LITERAL data, so the embed + plane-sign
-    buckets + flip fan-out are folded in driver-side with the exact
-    engine arithmetic (_hash_embed_py is bit-identical to embed_df;
-    the plane dot replicates the zip_with left fold op-for-op) — the
-    PRF literal-pushdown class. That makes the probed (tbl, bucket)
-    keys PLAN-TIME literals, so the filter on the partitioned layout
-    becomes a static PartitionFilter: the scan LISTS only the probed
-    directories — ≤ |q|·tables·flips of the 48 — instead of relying
-    on runtime DPP (probed r10: Spark does not insert DPP for this
-    broadcast shape). At 100 TB this is the difference between
-    reading nprobe cells and reading the index. (At the demo config
-    the 10-question × 5-probe batch happens to cover all 2^4 buckets
-    per table, so nothing is skipped HERE — the pinned property is
-    that the keys reach PartitionFilters as literals; a single
-    query probes 5 of 2^planes directories at any real plane
-    count.)"""
+    The question side is literal data, so the plane-sign buckets and
+    the flip fan-out are folded in on the driver over the batch's
+    vectors (``question_vector_rows``, bit-identical to ``embed_df``),
+    with the plane dot replicating the zip_with left fold op for op.
+    That makes the probed (tbl, bucket) keys plan-time literals, so the
+    filter on the partitioned layout becomes a static PartitionFilter
+    and the scan lists only the probed directories (≤ |q|·tables·flips
+    of the 48); Spark inserts no dynamic pruning for this broadcast
+    shape. At the demo config the 10-question × 5-probe batch covers
+    all 2^4 buckets per table, so nothing is skipped here; the pinned
+    property is that the keys reach PartitionFilters as literals."""
     from ..api import ensure_vector_index_lsh
-    from ..functions.embed import _hash_embed_py, dot
-    from .questions import GOLDEN_QUESTIONS
     from .similarity import N_PLANES, N_TABLES, PLANES, _PROBE_FLIPS
 
     db = read_artifact(spark, ensure_vector_index_lsh(spark, sf_dir)).select(
@@ -2252,8 +2144,7 @@ def mmr_ann_pool_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qb_rows = []
     probe_keys: dict[int, set[int]] = {t: set() for t in range(N_TABLES)}
-    for qid, qtext in GOLDEN_QUESTIONS:
-        q_v = _hash_embed_py(qtext)
+    for qid, _, q_v in question_vector_rows():
         for t in range(N_TABLES):
             b0 = 0
             for i, plane in enumerate(PLANES[t]):
@@ -2299,82 +2190,13 @@ def mmr_ann_pool_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "question_id",
         "doc_id",
-        F.round(dot(F.col("q_v"), F.col("v")), 6).alias("rel"),
+        vector_score(F.col("q_v"), F.col("v")).alias("rel"),
     )
     pairs = hits.groupBy("question_id", "doc_id").agg(F.max("rel").alias("rel"))
-    pool_w = Window.partitionBy("question_id").orderBy(
-        F.desc("rel"), F.asc("doc_id")
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(pool_w))
-        .filter(F.col("rk") <= _MMR_POOL)
-        .drop("rk")
-    )
+    return top_n(pairs, _MMR_POOL, "rel")
 
 
 # --------------------------------- IVF-served MMR (trained quantizer)
-
-def _ivf_probe_literals(
-    spark: SparkSession,
-    sf_dir: str,
-    scaled: bool = False,
-    nprobe: int | None = None,
-    cents_path: str | None = None,
-) -> tuple[list, list]:
-    """(qb_rows, probe_cells) for the IVF probe: each golden question's
-    ``nprobe`` nearest trained cells (default IVF_NPROBE), folded to
-    plan-time literals so the layout scan gets static PartitionFilters
-    (the mmr_ann_pool_pairs pattern). The cell ranking depends on
-    trained centroid doubles, so the fold runs as a bounded Spark
-    mini-job over |q| x cells rows with the exact engine expressions
-    the oracle mirrors (embed_df question vectors, round(d2, 6)
-    ranking, cid tiebreak), rather than a third implementation of the
-    arithmetic. The collect is at most |q|·nprobe rows of DIM doubles,
-    recorded in the session memo per (sf_dir, geometry, depth,
-    centroids). ``scaled=True`` probes the ivf_cells_for(N) layout; an
-    explicit ``cents_path`` probes a manifest-resolved version
-    (published_ivf_topk) instead of the session's layout."""
-    from ..api import IVF_NPROBE, ensure_ivf
-    from ..functions.embed import dot, embed_df
-    from .questions import questions_df
-
-    np_eff = IVF_NPROBE if nprobe is None else int(nprobe)
-
-    def build() -> tuple[list, list]:
-        cents = read_artifact(
-            spark,
-            cents_path or ensure_ivf(spark, sf_dir, "documents", scaled)[1],
-        )
-        qx = embed_df(questions_df(spark), "question_text", out_col="q_v").select(
-            "question_id", "q_v", dot(F.col("q_v"), F.col("q_v")).alias("qq")
-        )
-        d2 = F.round(
-            F.col("qq") - 2 * dot(F.col("q_v"), F.col("cv")) + F.col("cc"), 6
-        )
-        w = Window.partitionBy("question_id").orderBy("d2", "cid")
-        rows = (
-            qx.crossJoin(F.broadcast(cents))
-            .select("question_id", "q_v", "cid", d2.alias("d2"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= np_eff)
-            .select("question_id", "q_v", "cid")
-            .collect()
-        )
-        qb_rows = [
-            (int(r.question_id), [float(x) for x in r.q_v], int(r.cid))
-            for r in rows
-        ]
-        return qb_rows, sorted({c for _, _, c in qb_rows})
-
-    return ensure_materialized(
-        spark,
-        "ivf_probe_scaled" if scaled else "ivf_probe",
-        sf_dir,
-        build,
-        str(np_eff),
-        cents_path or "",
-    )
-
 
 def mmr_ivf_pool_pairs(
     spark: SparkSession,
@@ -2384,85 +2206,46 @@ def mmr_ivf_pool_pairs(
     paths: tuple[str, str] | None = None,
 ) -> DataFrame:
     """The IVF-served MMR candidate pool — (question_id, doc_id, rel),
-    no vectors: literal probe cells prune the cell-partitioned stored
-    layout (static PartitionFilters — the scan lists ≤ the probed
-    union of nprobe·|q| of the layout's cell directories), broadcast
-    question rows score only collisions, and a per-question window
-    takes the top-{pool}. A document lives in exactly ONE cell, so —
-    unlike the LSH probe — a (question, doc) pair cannot collide twice
-    and needs no dedup aggregate. Candidate volume per question ≈
-    nprobe·N/cells vs the LSH probe's tables·flips·N/2^planes.
-    ``scaled=True`` serves from the corpus-adaptive ivf_cells_for(N)
-    layout (q_ivf_recall_scaled) — same plan shape, smaller probe
-    fraction. ``paths=(layout, centroids)`` overrides the session
-    builders entirely: the probe runs against exactly that stored
-    version — how published_ivf_topk serves whatever triple the
-    blue/green manifest currently points at."""
-    from ..api import ensure_ivf
-    from ..functions.embed import dot
+    no vectors: each golden question's ``nprobe`` nearest cells (default
+    IVF_NPROBE) folded to literals (``ivf_probe_fold``), the layout read
+    only in those cells (``ivf_cell_scan``, static PartitionFilters),
+    dot scored on the unit vectors, top-{pool} per question. A document
+    lives in exactly one cell, so a (question, doc) pair cannot collide
+    twice and needs no dedup aggregate, unlike the LSH probe. Candidate
+    volume per question ≈ nprobe·N/cells. ``scaled=True`` serves from
+    the corpus-adaptive ivf_cells_for(N) layout; ``paths=(layout,
+    centroids)`` probes exactly that stored version instead of the
+    session's layout, which is how published_ivf_topk serves whatever
+    the blue/green manifest points at."""
+    from ..api import IVF_NPROBE, ensure_ivf
 
     if paths is not None:
-        layout, probe_cents = paths
+        layout, cents = paths
     else:
-        layout, probe_cents, _ = ensure_ivf(spark, sf_dir, "documents", scaled)
-    qb_rows, probe_cells = _ivf_probe_literals(
+        layout, cents, _ = ensure_ivf(spark, sf_dir, "documents", scaled)
+    probe = ivf_probe_fold(
         spark,
         sf_dir,
-        scaled=scaled,
-        nprobe=nprobe,
-        cents_path=probe_cents if paths is not None else None,
+        "documents",
+        cents,
+        IVF_NPROBE if nprobe is None else int(nprobe),
+        lambda: golden_probe_queries(spark),
     )
-    if not probe_cells:
-        # Degenerate corpus slice (no questions → no probe keys):
-        # isin() with zero args raises a confusing analysis error, and
-        # an unfiltered scan would be a full-index read masquerading
-        # as a probe — return the empty pool directly (r11 ADVICE).
-        return local_rows(spark, [], "question_id LONG, doc_id LONG, rel DOUBLE")
-    db = read_artifact(spark, layout).select(
-        "doc_id", F.col("dv").alias("v"), "cell"
+    hits = ivf_cell_scan(
+        spark,
+        layout,
+        ["doc_id", "dv"],
+        probe,
+        "question_id LONG, qv ARRAY<DOUBLE>, qcell LONG",
     )
-    # Literal cell filter → static PartitionFilters; the join below
-    # re-checks the cells row-wise, so this is pure pruning.
-    db = db.filter(F.col("cell").isin(*probe_cells))
-    qb = F.broadcast(
-        local_rows(spark, qb_rows, "question_id LONG, q_v ARRAY<DOUBLE>, qcell LONG")
-    )
-    hits = db.join(qb, F.col("cell") == F.col("qcell")).select(
-        "question_id",
-        "doc_id",
-        F.round(dot(F.col("q_v"), F.col("v")), 6).alias("rel"),
-    )
-    pool_w = Window.partitionBy("question_id").orderBy(
-        F.desc("rel"), F.asc("doc_id")
-    )
-    return (
-        hits.withColumn("rk", F.row_number().over(pool_w))
-        .filter(F.col("rk") <= _MMR_POOL)
-        .drop("rk")
-    )
-
-
-def mmr_ivf_pool_candidates(
-    spark: SparkSession,
-    sf_dir: str,
-    scaled: bool = False,
-    nprobe: int | None = None,
-) -> DataFrame:
-    """mmr_ivf_pool_pairs with the pool VECTORS attached for the
-    greedy rounds — fetched by broadcasting the ≤|q|·pool picks
-    against the plain stored index, never dragged through the pool
-    window's sort exchange (the r10 LSH lesson: vector bytes ×
-    candidate volume through an exchange is the avoidable cost).
-    ``scaled``/``nprobe`` select the serving geometry exactly as in
-    mmr_ivf_pool_pairs."""
-    from ..api import ensure_vector_index
-
-    top = mmr_ivf_pool_pairs(spark, sf_dir, scaled=scaled, nprobe=nprobe)
-    dv = read_artifact(spark, ensure_vector_index(spark, sf_dir)).select(
-        "doc_id", F.col("dv").alias("v")
-    )
-    return dv.join(F.broadcast(top), "doc_id").select(
-        "question_id", "doc_id", "rel", "v"
+    return top_n(
+        hits.select(
+            "question_id",
+            "doc_id",
+            vector_score(F.col("qv"), F.col("dv")).alias("rel"),
+        ),
+        _MMR_POOL,
+        "rel",
     )
 
 
@@ -2539,36 +2322,30 @@ cand AS MATERIALIZED (
 @register("q_mmr_ivf_pool", oracle=_mmr_ivf_oracle())
 def q_mmr_ivf_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_mmr_ann_pool with the candidate pool served by a
-    k-means-TRAINED IVF layout instead of sign-LSH (r10 verdict #2 —
-    the LSH variant's docstring conceded the documents corpus had no
-    trained coarse quantizer; the engine's own deterministic Lloyd
-    trainer now provides one). Reference analog: the stored-index
-    probe lifecycle of pinecone_manager.py:61-103, with the quantizer
-    trained from the corpus itself.
+    k-means-trained IVF layout instead of sign-LSH. Reference analog:
+    the stored-index probe lifecycle of pinecone_manager.py:61-103,
+    with the quantizer trained from the corpus itself.
 
     Plan: ensure_ivf trains IVF_CELLS centroids with the
     q_cluster_kmeans arithmetic and rewrites the stored index
-    partitionBy(cell); the probe folds each question's IVF_NPROBE
-    nearest cells into plan-time literals via a bounded engine
-    mini-job (_ivf_probe_literals), so the scan carries static
-    PartitionFilters exactly like the LSH variant; exact cosine
-    re-rank runs only inside the ≤ nprobe·N/cells candidate set; the
-    SAME greedy rounds (_mmr_greedy_rounds) finish the composition.
-    vs LSH: one stored copy instead of N_TABLES, corpus-adaptive
-    cells, one fewer dedup aggregate (a doc has exactly one cell);
-    the trade is the training pass and recall that depends on how
-    clustered the corpus is — q_mmr_pool_recall reports both pools'
-    recall side by side, the driver-checkable comparison the r10
-    verdict asked for.
+    partitionBy(cell); mmr_ivf_pool_pairs folds each question's
+    IVF_NPROBE nearest cells into plan-time literals, so the scan
+    carries static PartitionFilters like the LSH variant, and the
+    exact re-rank runs only inside the ≤ nprobe·N/cells candidates;
+    ``pool_vectors`` attaches the vectors and the same greedy rounds
+    (_mmr_greedy_rounds) finish the composition. Against LSH: one
+    stored copy instead of N_TABLES, corpus-adaptive cells, no dedup
+    aggregate (a doc has exactly one cell); the trade is the training
+    pass and a recall that depends on how clustered the corpus is,
+    which q_mmr_pool_recall reports next to the LSH pool's.
 
     Measured (tools/mmr_recall.py): final-selection overlap@5 vs the
     exact pool 0.78 at sf0.01 / 0.92 at sf0.1 (LSH multiprobe: 0.88 /
     0.92), pool recall@20 0.825 / 0.87 (LSH 0.885 / 0.895) — parity
     with the 3×-storage LSH tier at bench scale from a single stored
     copy reading nprobe·N/cells ≈ 31% of the index per question."""
-    cand = mmr_ivf_pool_candidates(spark, sf_dir).localCheckpoint(
-        eager=False  # all k rounds re-read the pool
-    )
+    cand = pool_vectors(spark, sf_dir, mmr_ivf_pool_pairs(spark, sf_dir))
+    cand = cand.localCheckpoint(eager=False)  # all k rounds re-read the pool
     return _mmr_greedy_rounds(cand)
 
 
@@ -2896,7 +2673,7 @@ FROM (
 
 @register("q_mmr_ivf_serving", oracle=_mmr_ivf_serving_oracle())
 def q_mmr_ivf_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PROMOTED IVF serving point (r12 verdict #2): MMR served
+    """The promoted IVF serving point: MMR served
     from the corpus-adaptive layout (cells = ivf_cells_for(N)) at the
     curve-calibrated probe depth (nprobe = IVF_NPROBE_SCALED = 16) —
     the (cells, nprobe) pair the engine's own measurement says
@@ -2916,12 +2693,12 @@ def q_mmr_ivf_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     static PartitionFilters on the cells-tagged layout (plan-pinned
     in test_plan_quality.py), exact cosine only inside the probed
     cells, pool vectors fetched by broadcast against the plain stored
-    index, same unrolled greedy rounds. The r11-vintage
+    index (``pool_vectors``), same unrolled greedy rounds.
     q_mmr_ivf_pool / q_mmr_pool_recall keep the fixed-16 geometry so
-    their rows stay byte-identical (rotation hygiene); this row is
-    the production default a 100× deployment serves from.
+    their rows stay byte-identical; this row is the production default
+    a 100× deployment serves from.
 
-    Measured (tools/mmr_recall.py, r13): final-selection overlap@5 vs
+    Measured (tools/mmr_recall.py): final-selection overlap@5 vs
     the exact-pool MMR = 1.00 at sf0.01 (23 cells, 70% read at this
     tiny N) and 0.90 at sf0.1 (71 cells, 22.5% read) — vs the
     fixed-16 pool's 0.78/0.92 at a 31% read: comparable downstream
@@ -2931,9 +2708,9 @@ def q_mmr_ivf_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..api import IVF_NPROBE_SCALED, ensure_ivf
 
     _, _, cells = ensure_ivf(spark, sf_dir, "documents", True)
-    cand = mmr_ivf_pool_candidates(
-        spark, sf_dir, scaled=True, nprobe=IVF_NPROBE_SCALED
-    ).localCheckpoint(eager=False)  # all k rounds re-read the pool
+    pairs = mmr_ivf_pool_pairs(spark, sf_dir, scaled=True, nprobe=IVF_NPROBE_SCALED)
+    cand = pool_vectors(spark, sf_dir, pairs)
+    cand = cand.localCheckpoint(eager=False)  # all k rounds re-read the pool
     return _mmr_greedy_rounds(cand).select(
         "question_id",
         "doc_id",
@@ -3003,7 +2780,7 @@ def published_ivf_topk(
 ) -> DataFrame:
     """Vector top-k served THROUGH the blue/green pointer — the read
     side of the api.publish_index_version / maintain_ivf_index
-    lifecycle (r14; registration staged for r15). One maintenance
+    lifecycle. One maintenance
     tick first (first call in a process publishes v1 of the scaled
     layout; later calls resolve the same version — no drift, no
     republish), then the probe reads the layout and centroids FROM
@@ -3020,10 +2797,11 @@ def published_ivf_topk(
     resolves a named index version, queries run against it until the
     pointer moves).
 
-    Plan: identical to the q_mmr_ivf_serving probe — literal probe
-    cells → static PartitionFilters on the cell-partitioned layout,
-    exact dot only inside the probed ≤ nprobe·N/cells candidates,
-    one per-question window for the top-k. At 100 TB the manifest
+    Plan: the q_mmr_ivf_serving probe (mmr_ivf_pool_pairs with the
+    manifest's layout and centroids) — literal probe cells → static
+    PartitionFilters on the cell-partitioned layout, exact dot only
+    inside the probed ≤ nprobe·N/cells candidates, one per-question
+    window for the top-k. At 100 TB the manifest
     read is one tiny catalog GET per query batch; the data read
     stays the calibrated ~nprobe/√N fraction of the index.
 
@@ -3069,20 +2847,13 @@ def published_ivf_topk(
         nprobe=IVF_NPROBE_SCALED,
         paths=(cur["layout"], cur["centroids"]),
     )
-    w = Window.partitionBy("question_id").orderBy(
-        F.desc("rel"), F.asc("doc_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "question_id",
-            "doc_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.col("rel").alias("score"),
-            F.lit(int(cur["version"])).cast("long").alias("version"),
-            F.lit(int(cur["cells"])).cast("long").alias("cells"),
-        )
+    return top_n(pairs, k, "rel", rank="rank").select(
+        "question_id",
+        "doc_id",
+        F.col("rank").cast("long").alias("rank"),
+        F.col("rel").alias("score"),
+        F.lit(int(cur["version"])).cast("long").alias("version"),
+        F.lit(int(cur["cells"])).cast("long").alias("cells"),
     )
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.embed import _hash_embed_batch
 from ..sources.tables import local_rows
 
 GOLDEN_QUESTIONS: list[tuple[int, str]] = [
@@ -37,8 +38,39 @@ TOP_K = 3  # context chunks per answer (ref: src/main.py:103, 157)
 SNIPPET_LEN = 500  # fallback-answer content truncation (ref: src/main.py:147)
 
 
-def questions_df(spark: SparkSession) -> DataFrame:
-    return local_rows(spark, GOLDEN_QUESTIONS, "question_id INT, question_text STRING")
+def questions_df(
+    spark: SparkSession, questions: list[tuple[int, str]] = GOLDEN_QUESTIONS
+) -> DataFrame:
+    """A question batch as a LocalRelation (question_id, question_text)."""
+    return local_rows(spark, questions, "question_id INT, question_text STRING")
+
+
+def question_vector_rows(
+    questions: list[tuple[int, str]] = GOLDEN_QUESTIONS,
+) -> list[tuple[int, str, list[float]]]:
+    """(question_id, question_text, qv) per question, embedded on the
+    driver with ``_hash_embed_batch``: the kernel the stored indexes
+    were built with, bit-identical to ``embed_df``
+    (tests/test_fold_parity.py), so a question vector and a document
+    vector always come from the same arithmetic."""
+    vecs = _hash_embed_batch([t for _, t in questions])
+    return [(qid, text, v) for (qid, text), v in zip(questions, vecs)]
+
+
+def question_vectors(
+    spark: SparkSession, questions: list[tuple[int, str]] = GOLDEN_QUESTIONS
+) -> DataFrame:
+    """The embedded question batch as a LocalRelation
+    (question_id INT, question_text STRING, qv ARRAY<DOUBLE>). Every
+    query that probes with question vectors starts here: a batch of a
+    few rows embeds faster on the driver than Spark can plan an embed
+    stage for it, and as a LocalRelation it plans as a LocalTableScan
+    with no Python worker."""
+    return local_rows(
+        spark,
+        question_vector_rows(questions),
+        "question_id INT, question_text STRING, qv ARRAY<DOUBLE>",
+    )
 
 
 def question_values_sql() -> str:

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources.tables import load, spread
+from .retrieval import keyword_score, question_words, top_n
 
 # Golden question set + constants live in operators/questions.py (a
 # registration-free module) so other registering modules can import
@@ -38,24 +39,17 @@ from .questions import (  # noqa: F401  (re-exported: public surface)
 
 
 def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """questions ⨯ documents with the keyword-overlap score column.
+    """questions ⨯ documents with the keyword-overlap score column
+    (``retrieval.keyword_score``, the reference's
+    src/main.py:137-145 semantics), as higher-order array functions
+    inside whole-stage codegen, no Python UDF.
 
-    Score semantics exactly as ref src/main.py:137-145:
-    words = question.lower().split(); matches = Σ 1[word ⊂ text_lower];
-    score = matches / len(words). Expressed with higher-order array
-    functions — stays inside whole-stage codegen, no Python UDF.
-    """
-    # Spread the scan: a small parquet file reads as ONE partition and
-    # the contains()-scoring of every (question, doc) pair would run
-    # on one core (see sources.tables.spread).
-    #
-    # Staging discipline (see functions/embed.py:55-62): lower(text)
-    # is materialized BELOW the join — once per document, not once per
-    # question-word per (question, doc) pair, which is what inlining
-    # it into the filter lambda costs (|words|× redundant lowercasing
-    # of the full text; measured ~10× on q_answer_summary). Same for
-    # the question-word split on the broadcast side. The join operator
-    # between the projections keeps CollapseProject from re-inlining.
+    The documents scan is spread, or a small Parquet file would score
+    every (question, doc) pair on one core. lower(text) is staged below
+    the join, once per document, and the question words once on the
+    broadcast side: inlined into the filter lambda, the lower-casing
+    would run once per word per pair. The join between the projections
+    keeps CollapseProject from re-inlining them."""
     docs = spread(load(spark, sf_dir, "documents")).select(
         "doc_id",
         F.substring("text", 1, SNIPPET_LEN).alias("snippet"),
@@ -65,24 +59,16 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         questions_df(spark).select(
             "question_id",
             "question_text",
-            F.split(F.lower(F.col("question_text")), " ").alias("__qwords"),
+            question_words(F.col("question_text")).alias("__qwords"),
         )
     )
-    matches = F.size(
-        F.filter(F.col("__qwords"), lambda w: F.col("__text_lc").contains(w))
-    )
-    # score staged as a real column with passthrough refs so the
-    # window sort above ranks on the attribute, not a re-evaluation.
-    s1 = docs.crossJoin(q).select(
+    return docs.crossJoin(q).select(
         "question_id",
         "question_text",
         "doc_id",
+        keyword_score(F.col("__qwords"), F.col("__text_lc")).alias("score"),
         "snippet",
-        "__text_lc",
-        "__qwords",
-        (matches.cast("double") / F.size(F.col("__qwords"))).alias("score"),
     )
-    return s1.select("question_id", "question_text", "doc_id", "score", "snippet")
 
 
 def keyword_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
@@ -95,13 +81,7 @@ def keyword_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     benchmarks ~2× slower than the window at sf0.1. The window sorts
     within ≤|questions| partitions and stays in codegen.
     """
-    scored = _scored(spark, sf_dir)
-    w = Window.partitionBy("question_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return top_n(_scored(spark, sf_dir), k, "score")
 
 
 _question_values = question_values_sql  # historical name, kept for callers

@@ -1,5 +1,5 @@
 """Cross-implementation parity pins for the driver-side literal
-fold-ins (r10): q_late_interaction and mmr_ann_pool_candidates compute
+fold-ins: q_late_interaction and mmr_ann_pool_pairs compute
 the QUESTION side of their probes in Python (so the probe keys become
 plan-time literals / static partition filters), while the DOCUMENT
 side runs the same arithmetic as Spark column expressions. The oracle
@@ -49,7 +49,7 @@ def test_li_trigram_spark_fold_matches_python_twin(spark):
 
 
 def test_mmr_literal_buckets_match_spark_bucket_expr(spark):
-    """The Python plane-sign fold in mmr_ann_pool_candidates (literal
+    """The Python plane-sign fold in mmr_ann_pool_pairs (literal
     probe keys → static PartitionFilters) must reproduce the Spark
     _bucket_expr the stored LSH index was BUILT with, for every golden
     question — a one-sided divergence would silently drop the

@@ -89,19 +89,22 @@ def test_ivf_layouts_partition_each_vector_exactly_once(spark):
         ensure_ivf,
     )
     from document_query_system_spark.functions.vector import (
-        _triplet_probe_literals,
-    )
-    from document_query_system_spark.operators.pipeline import (
-        _ivf_probe_literals,
-    )
-
-    from document_query_system_spark.functions.vector import (
         _TRIPLET_NPROBE,
+        _triplet_anchors,
+    )
+    from document_query_system_spark.operators.retrieval import (
+        golden_probe_queries,
+        ivf_probe_fold,
     )
 
-    for probe, base_tbl, id_col, nprobe in (
-        (_ivf_probe_literals, "documents", "doc_id", IVF_NPROBE),
-        (_triplet_probe_literals, "embeddings", "vec_id", _TRIPLET_NPROBE),
+    for queries, base_tbl, id_col, nprobe in (
+        (golden_probe_queries, "documents", "doc_id", IVF_NPROBE),
+        (
+            lambda s: _triplet_anchors(s, SF_DIR),
+            "embeddings",
+            "vec_id",
+            _TRIPLET_NPROBE,
+        ),
     ):
         layout, cents_path, _ = ensure_ivf(spark, SF_DIR, base_tbl, False)
         cents = {r.cid for r in spark.read.parquet(cents_path).collect()}
@@ -118,7 +121,14 @@ def test_ivf_layouts_partition_each_vector_exactly_once(spark):
             d for d in os.listdir(layout) if d.startswith("cell=")
         }
         assert dirs == {f"cell={c}" for c in cells_on_disk}
-        probe_rows, probe_cells = probe(spark, SF_DIR)
+        probe_rows, probe_cells = ivf_probe_fold(
+            spark,
+            SF_DIR,
+            base_tbl,
+            cents_path,
+            nprobe,
+            lambda q=queries: q(spark),
+        )
         assert set(probe_cells) <= cents
         per_key: dict = {}
         for row in probe_rows:

@@ -520,7 +520,7 @@ def test_mmr_ann_pool_probes_bucketed_index_not_full_scan(spark):
     rep = plan_report(mmr_ann_pool_pairs(spark, SF_DIR))
     locs = [s.get("location", "") for s in rep.scans]
     # The pairs builder reads ONLY the bucketed layout (the vector
-    # fetch for the greedy rounds lives in mmr_ann_pool_candidates,
+    # fetch for the greedy rounds lives in retrieval.pool_vectors,
     # and the recall report skips it) — never the documents table.
     assert locs and all("vector_index_lsh" in loc for loc in locs), locs
     assert "BroadcastHashJoin" in rep.raw

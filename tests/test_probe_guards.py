@@ -1,5 +1,5 @@
-"""Degenerate-probe guards and the mining-pool path switch (r11
-ADVICE + verdict #4): an empty probe-key set must yield an EMPTY pool
+"""Degenerate-probe guards and the mining-pool path switch: an empty
+probe-key set must yield an EMPTY pool
 with the pool schema — not a zero-arg ``isin()`` analysis error, and
 not an unfiltered full-index scan masquerading as a probe — and the
 distributed cell-equi-join mining path must be byte-identical to the
@@ -31,12 +31,14 @@ def _patched(cache: dict, key, value):
 def test_ivf_pool_empty_probe_returns_empty_pool(spark):
     from document_query_system_spark.operators import pipeline as P
 
-    from document_query_system_spark.api import IVF_NPROBE
+    from document_query_system_spark.api import IVF_NPROBE, ensure_ivf
 
-    # The session-memo key _ivf_probe_literals records under: (kind,
-    # sf_dir, nprobe, cents_path override), "" meaning the session
-    # layout's centroids.
-    key = session_key(spark, "ivf_probe", SF_DIR, str(IVF_NPROBE), "")
+    # The session-memo key retrieval.ivf_probe_fold records under:
+    # (kind, sf_dir, table, centroids path, nprobe).
+    cents = ensure_ivf(spark, SF_DIR, "documents", False)[1]
+    key = session_key(
+        spark, "ivf_probe", SF_DIR, "documents", cents, str(IVF_NPROBE)
+    )
     restore = _patched(tmputil._MATERIALIZED, key, ([], []))
     try:
         df = P.mmr_ivf_pool_pairs(spark, SF_DIR)
@@ -51,9 +53,13 @@ def test_ivf_pool_empty_probe_returns_empty_pool(spark):
 
 
 def test_triplet_pool_empty_probe_returns_empty_pool(spark):
+    from document_query_system_spark.api import ensure_ivf
     from document_query_system_spark.functions import vector as V
 
-    key = session_key(spark, "emb_ivf_probe", SF_DIR)
+    cents = ensure_ivf(spark, SF_DIR, "embeddings", False)[1]
+    key = session_key(
+        spark, "ivf_probe", SF_DIR, "embeddings", cents, str(V._TRIPLET_NPROBE)
+    )
     restore = _patched(tmputil._MATERIALIZED, key, ([], []))
     try:
         df = V.triplet_ann_pool(spark, SF_DIR)
@@ -130,15 +136,20 @@ def test_serving_probe_fold_is_bounded_by_calibrated_depth(spark):
     the bounded-driver-collect contract every literal-fold probe
     carries — and each question must probe exactly min(nprobe, cells)
     distinct cells of the scaled geometry."""
-    from document_query_system_spark.api import (
-        IVF_NPROBE_SCALED,
-        ensure_vector_index_ivf_scaled,
+    from document_query_system_spark.api import IVF_NPROBE_SCALED, ensure_ivf
+    from document_query_system_spark.operators.retrieval import (
+        golden_probe_queries,
+        ivf_probe_fold,
     )
-    from document_query_system_spark.operators import pipeline as P
 
-    _, _, cells = ensure_vector_index_ivf_scaled(spark, SF_DIR)
-    qb_rows, probe_cells = P._ivf_probe_literals(
-        spark, SF_DIR, scaled=True, nprobe=IVF_NPROBE_SCALED
+    _, cents, cells = ensure_ivf(spark, SF_DIR, "documents", True)
+    qb_rows, probe_cells = ivf_probe_fold(
+        spark,
+        SF_DIR,
+        "documents",
+        cents,
+        IVF_NPROBE_SCALED,
+        lambda: golden_probe_queries(spark),
     )
     per_q: dict = {}
     for qid, _v, cell in qb_rows:

@@ -1,0 +1,31 @@
+"""Keyword scoring shared by every keyword leg
+(``operators/retrieval.keyword_score``): question words are the
+reference's ``question.lower().split()`` — whitespace runs, tabs and
+leading or trailing blanks never make a word — and a question with no
+words scores 0.0 instead of failing the batch on a division by zero."""
+
+from __future__ import annotations
+
+import pytest
+
+from conftest import SF_DIR
+
+
+def _answers(spark, questions):
+    from document_query_system_spark.api import run_query
+
+    rows = run_query(spark, SF_DIR, questions, method="keyword").collect()
+    return sorted((r.question_id, r.rank, r.doc_id, r.score) for r in rows)
+
+
+@pytest.mark.parametrize(
+    "ragged", [" spark  merge\tsort ", "spark\nmerge sort\t", "SPARK\tmerge  sort"]
+)
+def test_keyword_words_split_on_whitespace_runs(spark, ragged):
+    assert _answers(spark, [(1, ragged)]) == _answers(spark, [(1, "spark merge sort")])
+
+
+def test_keyword_question_without_words_scores_zero(spark):
+    got = _answers(spark, [(1, "   "), (2, "\t \n"), (3, "")])
+    assert {q for q, *_ in got} == {1, 2, 3}
+    assert all(score == 0.0 for *_, score in got)

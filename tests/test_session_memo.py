@@ -27,12 +27,27 @@ def _anchor_count(spark, sf_dir):
     return tmputil._MATERIALIZED[key]
 
 
+def _ivf_fold(spark, sf_dir, table, scaled):
+    """The IVF probe fold for a table's standard query set: the golden
+    questions for documents, the mining anchors for embeddings."""
+    from document_query_system_spark import api
+    from document_query_system_spark.functions import vector
+    from document_query_system_spark.operators import retrieval
+
+    _, cents, _ = api.ensure_ivf(spark, sf_dir, table, scaled)
+    if table == "documents":
+        nprobe = api.IVF_NPROBE
+        queries = lambda: retrieval.golden_probe_queries(spark)  # noqa: E731
+    else:
+        nprobe = vector._TRIPLET_NPROBE
+        queries = lambda: vector._triplet_anchors(spark, sf_dir)  # noqa: E731
+    return retrieval.ivf_probe_fold(spark, sf_dir, table, cents, nprobe, queries)
+
+
 def _memo_builders():
     """name -> fn(spark, sf_dir) for every builder routed through the
     memo."""
     from document_query_system_spark import api
-    from document_query_system_spark.functions import vector
-    from document_query_system_spark.operators import pipeline
     from document_query_system_spark.sources import (
         extraction,
         http_ingest,
@@ -58,11 +73,9 @@ def _memo_builders():
         "http_landing": http_ingest._ensure_http_landing,
         "bucketed": sinks._ensure_bucketed_tables,
         "partitioned": sinks._ensure_partitioned_docs,
-        "ivf_probe": pipeline._ivf_probe_literals,
-        "ivf_probe_scaled": lambda s, d: pipeline._ivf_probe_literals(
-            s, d, scaled=True
-        ),
-        "emb_ivf_probe": vector._triplet_probe_literals,
+        "ivf_probe": lambda s, d: _ivf_fold(s, d, "documents", False),
+        "ivf_probe_scaled": lambda s, d: _ivf_fold(s, d, "documents", True),
+        "emb_ivf_probe": lambda s, d: _ivf_fold(s, d, "embeddings", False),
         "triplet_anchor_count": _anchor_count,
     }
     for table in ("documents", "embeddings"):
