@@ -1,5 +1,5 @@
-"""User-facing facade: the reference's flagship endpoint as one
-engine call.
+"""User-facing facade: the reference's flagship endpoint as one engine
+call, plus the builders of the stored artifacts its queries probe.
 
 The reference's ``POST /api/v1/hackrx/run`` (ref: src/main.py:48-192)
 takes (documents, questions) and returns, per question: the top
@@ -23,6 +23,12 @@ Spark:
 - **answer assembly**: top chunk summary template + doc stats agg
   (ref :100-127, 176-186).
 
+The ``ensure_*`` builders write each derived artifact once per session
+(``tmputil.ensure_materialized``): the flat vector index, its LSH
+projection, the BM25 and TF-IDF postings, the co-order graph and the
+keyword table. The IVF layouts and their lifecycle live in
+``operators/ivf.py``.
+
 Everything is lazy DataFrames end-to-end: on a warm session a request
 starts no Spark job while its plan is built. The question embedding
 runs on the driver, and the stored tables are read through
@@ -37,23 +43,21 @@ returns — SURVEY §1.1 note)."""
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .registry import register
-from .sources.tables import cluster_by_dirs, load, local_rows, spread
+from .sources.tables import cluster_by_dirs, load, spread
 from .sources.tmputil import (
     dir_tag,
     ensure_materialized,
-    forget_artifact,
-    parquet_rows,
     read_artifact,
     tmp_path,
     write_artifact,
 )
 from .functions.embed import embed_pandas
+from .operators.ivf import ensure_ivf, maintain_ivf_index  # noqa: F401  (re-exported for perfbench)
 from .operators.questions import (
     GOLDEN_QUESTIONS,
     SNIPPET_LEN,
@@ -64,6 +68,7 @@ from .operators.questions import (
 from .operators.retrieval import (
     exact_probe,
     keyword_score,
+    keyword_score_sql,
     question_words,
     top_n,
     vector_score,
@@ -144,768 +149,11 @@ def ensure_vector_index_lsh(spark: SparkSession, sf_dir: str) -> str:
     return ensure_materialized(spark, "vector_index_lsh", sf_dir, build)
 
 
-#: IVF geometry for the documents corpus. 16 cells at the demo scale
-#: keeps cells big enough that a 20-candidate pool survives nprobe=5
-#: at sf0.001 while the probe still prunes ~11/16 of the index; at
-#: 100 TB both knobs grow with the corpus (cells ~ sqrt(N), nprobe by
-#: the recall bar) without changing any plan shape below.
-#: ``ivf_cells_for`` is the production sizing rule; the fixed
-#: IVF_CELLS stays the floor (and the geometry of the r11-vintage
-#: registered queries, which pin their results to it).
-IVF_CELLS = 16
-IVF_NPROBE = 5
-
-#: Curve-calibrated probe depth for the SCALED serving geometry (r12
-#: verdict #2): the measured nprobe curve (tools/ivf_nprobe_curve.py,
-#: SCALE.md) at the sf0.1 geometry (71 cells) gives pool recall@20 =
-#: 0.555/0.695/0.82/0.90 at nprobe 5/8/12/16 — so nprobe=16 is the
-#: first point meeting the 0.90 recall bar, at a 22.5% read that
-#: DOMINATES the fixed 16-cell layout's 0.87 recall at a 31% read.
-#: nprobe is the recall knob (tuned against the product's recall bar
-#: by re-running the curve per corpus); cells = ivf_cells_for(N) is
-#: the read-bound knob — at 5B vectors the same nprobe=16 probes
-#: 16/70711 ≈ 0.02% of the index while per-cell reads stay ~sqrt(N).
-IVF_NPROBE_SCALED = 16
-
-
-def ivf_cells_for(n_vectors: int) -> int:
-    """Corpus-adaptive IVF cell count: ``max(IVF_CELLS, ceil(sqrt(N)))``
-    (r11 verdict #3 — a fixed 16 cells means the nprobe=5 probe reads
-    ~31% of the index forever; production IVF sizes cells ~ sqrt(N) so
-    the probe FRACTION falls as the corpus grows: nprobe/sqrt(N) —
-    at N=500 that is 5/23 ≈ 22%, at N=5000 5/71 ≈ 7%, at 5B vectors
-    5/70711 ≈ 0.007%, while expected cell population sqrt(N) keeps
-    per-cell reads bounded). The same rule is written INTO the scaled
-    oracle as ``greatest(16, ceil(sqrt(count(*))))`` via DuckDB's
-    expression LIMIT, so both engines derive the cell count from the
-    corpus rather than trusting a shared constant. ceil(sqrt()) is
-    exact cross-engine: counts are exact ints, IEEE sqrt of a perfect
-    square is exact, and ceil of a non-square's sqrt is unambiguous."""
-    import math
-
-    return max(IVF_CELLS, math.ceil(math.sqrt(n_vectors)))
-
-
-#: Retrain-trigger factor for the corpus-adaptive IVF layouts (r13
-#: verdict #3): appends hold centroids fixed, so as the corpus grows
-#: the sizing rule ivf_cells_for(N_now) drifts away from the trained
-#: cell count — per-cell population grows ∝ N/cells and probe cost
-#: with it. 1.5× means a retrain roughly every 2.25× corpus growth
-#: (cells ~ √N), i.e. O(log N) rebuilds over any growth curve, each
-#: a full partitionBy rewrite the builder already implements.
-#: Shrink drift (mass deletes) triggers at the reciprocal.
-IVF_RETRAIN_FACTOR = 1.5
-
-
-def ivf_retrain_due(trained_cells: int, n_vectors_now: int) -> bool:
-    """The scheduled-rebuild half of the IVF lifecycle, as a CHEAP
-    count + constant compare (no vector reads): True when the sizing
-    rule's answer for the corpus as it stands now deviates from the
-    trained geometry by ≥ IVF_RETRAIN_FACTOR in either direction.
-    A maintenance job runs ``ivf_retrain_due(cells, parquet_rows(index))``
-    per batch — a driver-side footer read, no Spark job — and on True
-    rebuilds via ensure_ivf(scaled=True) under the new cells tag (the
-    two geometries coexist; serving flips when the rewrite commits,
-    the same blue/green swap the reference delegates to Pinecone's
-    index create/connect lifecycle, ref:
-    src/services/vector_engine/pinecone_manager.py:19-59). Appends
-    between triggers go through operators/pipeline.incremental_ivf.
-    Pinned in tests/test_layout.py (boundary cases + the freshly
-    trained layout reporting not-due)."""
-    ratio = ivf_cells_for(n_vectors_now) / float(trained_cells)
-    return ratio >= IVF_RETRAIN_FACTOR or ratio <= 1.0 / IVF_RETRAIN_FACTOR
-
-
-def _manifest_dir(sf_dir: str, profile: str = "default") -> str:
-    """Directory of one serving manifest. ``profile`` namespaces
-    independent pointers over the same corpus (the registered
-    published-serving row keeps its own profile so test publishes of
-    doctored layouts can never perturb the driver-checked row, and
-    vice versa) — the same role a catalog namespace plays for two
-    tables built from one source."""
-    if profile == "default":
-        return tmp_path("ivf_serving_manifest", dir_tag(sf_dir))
-    return tmp_path(f"ivf_serving_manifest__{profile}", dir_tag(sf_dir))
-
-
-#: Serializes in-process publishers across ALL manifest dirs (r14
-#: ADVICE: two concurrent publishers could read one filename
-#: high-water and collide). One module-wide lock, not per-dir: a
-#: publish holds it for two tiny JSON writes, so granularity cannot
-#: matter, and per-dir lock registries leak.
-_PUBLISH_LOCK = threading.Lock()
-
-
-def publish_index_version(
-    spark: SparkSession,
-    sf_dir: str,
-    layout_path: str,
-    cents_path: str,
-    cells: int,
-    profile: str = "default",
-) -> int:
-    """The blue/green swap itself (r14 — ivf_retrain_due's docstring
-    promised it; this is the mechanism): point the serving manifest at
-    a new (layout, centroids, cells) triple ATOMICALLY. The manifest
-    is one tiny JSON file named CURRENT; the flip is write-temp +
-    os.replace — atomic on POSIX, so a reader resolves either the old
-    version or the new one, never a torn state, and the old layout's
-    files are untouched. Returns the new version number.
-
-    Every publish ALSO appends an immutable ``v{N}.json`` snapshot of
-    the triple next to CURRENT — the metadata log (Iceberg's
-    metadata.json sequence is this exact file-per-version shape). The
-    log is what makes rollback a mechanism instead of a memory
-    (rollback_index_version republishes the predecessor's triple
-    without the caller holding it) and gives retention something to
-    prune against (gc_index_versions deletes layouts referenced ONLY
-    by pruned log entries — CURRENT's files are unreachable to it by
-    construction).
-
-    Cluster form: on an object store the rename becomes the catalog's
-    conditional put / metastore CAS — same one-pointer protocol every
-    table format (Iceberg/Delta) ships. Concurrent publishers are
-    serialized two ways (r14 ADVICE — two in-process publishers could
-    both read one high-water and overwrite each other's v{N}.json,
-    breaking the log's immutability): a module lock serializes
-    in-process publishers, and the log slot itself is CLAIMED with
-    O_CREAT|O_EXCL — a cross-process collision re-derives the version
-    instead of silently replacing an existing entry. CURRENT remains
-    last-writer-wins across processes, which the maintenance
-    singleton owns.
-
-    Pinned in tests/test_layout.py: publish→resolve round-trips,
-    versions increment, a second publish flips the pointer without
-    touching the first layout, re-publishing the old triple rolls
-    back, concurrent same-process publishers mint distinct immutable
-    log entries, and the log/rollback/GC trio has its own pins."""
-    import json
-    import re
-
-    mdir = _manifest_dir(sf_dir, profile)
-    os.makedirs(mdir, exist_ok=True)
-    cur = os.path.join(mdir, "CURRENT")
-    with _PUBLISH_LOCK:
-        prev = current_index_version(spark, sf_dir, profile=profile)
-        # Next version = 1 + max(pointer, log): robust to a pointer
-        # that was rolled back below the log's high-water mark —
-        # version numbers must never be reused or the log entries stop
-        # being immutable. The log's high-water comes from the
-        # FILENAMES alone (r14 review: parsing every v{N}.json made N
-        # publishes O(N²) JSON loads; the number is already in the
-        # name).
-        high = prev["version"] if prev else 0
-        for name in os.listdir(mdir):
-            m = re.fullmatch(r"v(\d+)\.json", name)
-            if m:
-                high = max(high, int(m.group(1)))
-        # Claim the log slot with O_EXCL (zero-byte placeholder): a
-        # concurrent PROCESS that claimed this number first surfaces
-        # as FileExistsError and we take the next slot — never an
-        # os.replace over someone else's immutable entry. readers
-        # (list_index_versions) skip zero-byte in-flight claims.
-        while True:
-            version = high + 1
-            vfile = os.path.join(mdir, f"v{version}.json")
-            try:
-                os.close(os.open(vfile, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-                break
-            except FileExistsError:
-                high = version
-        payload = {
-            "version": version,
-            "layout": layout_path,
-            "centroids": cents_path,
-            "cells": int(cells),
-        }
-        # Log entry first, pointer second: a crash between the two
-        # leaves an orphan log entry (harmless; the next publish
-        # numbers past it), never a CURRENT pointing at an unlogged
-        # triple. The content lands via temp + os.replace onto our own
-        # claimed slot, so a reader sees empty-claim or full entry,
-        # never a torn write.
-        tmp = os.path.join(mdir, f".v.tmp.{os.getpid()}.{version}")
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        os.replace(tmp, vfile)
-        tmp = os.path.join(mdir, f".CURRENT.tmp.{os.getpid()}.{version}")
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        os.replace(tmp, cur)
-    return version
-
-
-def current_index_version(
-    spark: SparkSession, sf_dir: str, profile: str = "default"
-) -> dict | None:
-    """Resolve the serving manifest: the (version, layout, centroids,
-    cells) a prober should use, or None before the first publish. One
-    tiny driver-side read — the same cost class as the K-row centroid
-    collect every probe already pays."""
-    import json
-
-    cur = os.path.join(_manifest_dir(sf_dir, profile), "CURRENT")
-    if not os.path.exists(cur):
-        return None
-    with open(cur) as f:
-        return json.load(f)
-
-
-def list_index_versions(
-    spark: SparkSession, sf_dir: str, profile: str = "default"
-) -> list[dict]:
-    """The manifest's version log, sorted ascending: one dict per
-    ``v{N}.json`` snapshot publish_index_version wrote. Bounded by
-    retention (gc_index_versions prunes old entries), so this is a
-    metadata listing, never a data scan."""
-    import json
-    import re
-
-    mdir = _manifest_dir(sf_dir, profile)
-    if not os.path.isdir(mdir):
-        return []
-    out = []
-    for name in os.listdir(mdir):
-        m = re.fullmatch(r"v(\d+)\.json", name)
-        if not m:
-            continue
-        p = os.path.join(mdir, name)
-        # A zero-byte entry is a concurrent publisher's O_EXCL slot
-        # claim whose content hasn't landed yet (publish_index_version)
-        # — not-yet-published, so not listed. Anything else unreadable
-        # is real corruption and propagates.
-        if os.path.getsize(p) == 0:
-            continue
-        with open(p) as f:
-            out.append(json.load(f))
-    return sorted(out, key=lambda e: e["version"])
-
-
-def rollback_index_version(
-    spark: SparkSession, sf_dir: str, profile: str = "default"
-) -> dict | None:
-    """Roll serving back one step: republish the log entry preceding
-    CURRENT's version as a NEW forward version (versions never move
-    backwards — the pointer flips, the log only grows, exactly
-    Iceberg's rollback-as-new-snapshot). Returns the new CURRENT, or
-    None when there is nothing to roll back to (no pointer, or no
-    earlier log entry). The caller no longer needs to remember the
-    old triple — the log does."""
-    cur = current_index_version(spark, sf_dir, profile=profile)
-    if cur is None:
-        return None
-    older = [
-        e
-        for e in list_index_versions(spark, sf_dir, profile=profile)
-        if e["version"] < cur["version"]
-    ]
-    if not older:
-        return None
-    target = older[-1]
-    publish_index_version(
-        spark,
-        sf_dir,
-        target["layout"],
-        target["centroids"],
-        target["cells"],
-        profile=profile,
-    )
-    return current_index_version(spark, sf_dir, profile=profile)
-
-
-def gc_index_versions(
-    spark: SparkSession,
-    sf_dir: str,
-    keep_last: int = 2,
-    profile: str = "default",
-) -> dict:
-    """Retention for superseded index layouts — the 'prune later' the
-    publish docstring deferred, now a mechanism (Iceberg's
-    expire_snapshots analog). Keeps the newest ``keep_last`` log
-    entries plus whatever CURRENT references; prunes older log
-    entries and deletes layout/centroid directories that only pruned
-    entries reference. Three hard safety rails, each pinned in
-    tests/test_layout.py:
-
-    - every pointer's paths are unconditionally protected — this
-      profile's CURRENT (whatever its version number: a rolled-back
-      pointer may be OLDER than the kept window) AND every other
-      manifest's CURRENT and log entries under the artifact root
-      (r14 review: two profiles can publish the same layout path;
-      one profile's retention must never break another's reader);
-    - only paths under this process's artifact root are ever deleted
-      (the production analog: retention owns its table prefix and
-      nothing else) — out-of-root paths are reported, not removed,
-      and their log entries RETAINED so a later run can still see
-      them;
-    - paths the session memo recorded (``tmputil.live_paths``) are
-      skipped, because a later builder call hands them out again
-      without rebuilding; they are reported as skipped_live and their
-      log entries retained.
-
-    Returns {kept_versions, pruned_versions, removed_paths,
-    skipped_paths, skipped_live} for the maintenance log;
-    pruned_versions lists only entries whose log file was actually
-    removed. When any FOREIGN manifest file fails to read, the pass
-    degrades to protect-all — nothing deleted or pruned, the failure
-    reported as unreadable_foreign (r14 ADVICE: a transiently
-    unreadable foreign CURRENT must not lose its reference).
-    Idempotent: a second run with the same arguments removes
-    nothing."""
-    import shutil
-
-    from .sources.tmputil import ROOT, live_paths
-
-    log = list_index_versions(spark, sf_dir, profile=profile)
-    cur = current_index_version(spark, sf_dir, profile=profile)
-    keep_last = max(1, int(keep_last))
-    kept = log[-keep_last:]
-    candidates = log[:-keep_last] if len(log) > keep_last else []
-    protected: set[str] = set()
-    for e in kept:
-        protected.update((e["layout"], e["centroids"]))
-    if cur is not None:
-        protected.update((cur["layout"], cur["centroids"]))
-    foreign, unreadable = _foreign_manifest_paths(sf_dir, profile)
-    if unreadable:
-        # A REAL foreign CURRENT/v{N}.json failed to read (not a torn
-        # temp — those never match the name filter): that manifest's
-        # references are unknown, so this pass must be protect-all —
-        # deleting nothing beats deleting a layout another profile's
-        # reader still resolves (r14 ADVICE). Log entries retained;
-        # the next pass retries.
-        return {
-            "kept_versions": [e["version"] for e in log],
-            "pruned_versions": [],
-            "removed_paths": [],
-            "skipped_paths": [],
-            "skipped_live": [],
-            "unreadable_foreign": sorted(unreadable),
-        }
-    protected |= foreign
-    # Every path the session memo recorded is handed out again by a
-    # later builder call without a rebuild, so deleting one would turn
-    # that call into a dangling read. Tracked separately so the skip is
-    # reported.
-    live = live_paths()
-    root = ROOT.rstrip(os.sep) + os.sep
-    removed: list[str] = []
-    skipped: list[str] = []
-    skipped_live: list[str] = []
-    pruned: list[int] = []
-    mdir = _manifest_dir(sf_dir, profile)
-    # Pass 1 — decide per ENTRY: an entry holding any path retention
-    # does not own (foreign root) or must not break (live builder
-    # memo) keeps its log file, so the path stays tracked for a later
-    # run. Its OTHER paths then also become protected — a retained
-    # log entry must never reference a deleted directory.
-    deletable: list[dict] = []
-    for e in candidates:
-        reasons = []
-        for p in (e["layout"], e["centroids"]):
-            # Foreign-root and live-memo checks run BEFORE the
-            # protected-set shortcut: a live path may ALSO be
-            # referenced by another manifest, and which rail held it
-            # must not depend on what else this session published.
-            if not p.startswith(root):
-                skipped.append(p)
-                reasons.append(p)
-            elif p in live:
-                skipped_live.append(p)
-                reasons.append(p)
-        if reasons:
-            protected.update((e["layout"], e["centroids"]))
-        else:
-            deletable.append(e)
-    # Pass 2 — delete what only deletable entries reference.
-    for e in deletable:
-        for p in (e["layout"], e["centroids"]):
-            if p in protected or p in removed:
-                continue
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-                forget_artifact(p)
-                removed.append(p)
-        vfile = os.path.join(mdir, f"v{e['version']}.json")
-        if os.path.exists(vfile):
-            os.remove(vfile)
-        pruned.append(e["version"])
-    # Janitor pass for crashed publishers (r15 review): a zero-byte
-    # v{N}.json is an O_EXCL slot claim whose publisher died before
-    # the content os.replace. Readers skip it and it never enters the
-    # log, so nothing else would ever remove it — sweep claims old
-    # enough (10 min) that no live publisher can still be inside the
-    # claim→replace window (that window is two tiny JSON writes).
-    stale_claims: list[str] = []
-    if os.path.isdir(mdir):
-        import re as _re
-        import time as _time
-
-        for name in os.listdir(mdir):
-            if not _re.fullmatch(r"v(\d+)\.json", name):
-                continue
-            p = os.path.join(mdir, name)
-            try:
-                if (
-                    os.path.getsize(p) == 0
-                    and _time.time() - os.path.getmtime(p) > 600
-                ):
-                    os.remove(p)
-                    stale_claims.append(name)
-            except OSError:
-                continue
-    return {
-        "kept_versions": [e["version"] for e in kept],
-        "pruned_versions": pruned,
-        "removed_paths": sorted(removed),
-        "skipped_paths": sorted(set(skipped)),
-        "skipped_live": sorted(set(skipped_live)),
-        **(
-            {"removed_stale_claims": sorted(stale_claims)}
-            if stale_claims
-            else {}
-        ),
-    }
-
-
-def _foreign_manifest_paths(
-    sf_dir: str, profile: str
-) -> tuple[set[str], list[str]]:
-    """Every (layout, centroids) path any OTHER manifest — different
-    profile, or a different corpus tag — still references via its
-    CURRENT pointer or log entries, plus the list of manifest files
-    that FAILED to read. One metadata walk of the manifest directories
-    under the artifact root (each holds a handful of tiny JSON files);
-    the cluster form is the catalog listing every retention job
-    consults before deleting data files another table might share.
-
-    In-flight publish artifacts are benign and not failures: temp
-    files never match the CURRENT/v{N}.json name filter (they start
-    with '.'), and a zero-byte v{N}.json is an O_EXCL slot claim whose
-    content hasn't landed. Anything ELSE unreadable goes into the
-    failure list — the caller (gc_index_versions) treats a non-empty
-    list as protect-all, because a manifest whose references cannot be
-    read might reference anything (r14 ADVICE: the old per-entry
-    swallow silently dropped that manifest's protection)."""
-    import json
-
-    from .sources.tmputil import ROOT
-
-    own = _manifest_dir(sf_dir, profile)
-    out: set[str] = set()
-    bad: list[str] = []
-    if not os.path.isdir(ROOT):
-        return out, bad
-    for d in os.listdir(ROOT):
-        if not d.startswith("ivf_serving_manifest"):
-            continue
-        base = os.path.join(ROOT, d)
-        for tag in os.listdir(base):
-            mdir = os.path.join(base, tag)
-            if mdir == own or not os.path.isdir(mdir):
-                continue
-            for name in os.listdir(mdir):
-                if name != "CURRENT" and not (
-                    name.startswith("v") and name.endswith(".json")
-                ):
-                    continue
-                p = os.path.join(mdir, name)
-                try:
-                    if name != "CURRENT" and os.path.getsize(p) == 0:
-                        continue  # publisher's in-flight slot claim
-                    with open(p) as f:
-                        e = json.load(f)
-                    out.update((e["layout"], e["centroids"]))
-                except (OSError, ValueError, KeyError):
-                    bad.append(p)
-    return out, bad
-
-
-#: PSI alarm for the tick's drift branch — the standard 0.25
-#: "significant shift" bar the monitoring ops already use
-#: (q_psi_drift, ivf_cell_psi), applied to the index's own cell
-#: occupancy.
-IVF_PSI_ALARM = 0.25
-#: Small-batch gate: PSI's 0.1/0.25 stability rules assume each
-#: cell's expected batch count is ≳10 (ivf_cell_psi's measured
-#: inflation: 0.69 at ~1.7 docs/cell on a SAME-distribution slice) —
-#: batches below 10·cells record their PSI but cannot fire the alarm.
-IVF_PSI_MIN_PER_CELL = 10
-
-
-def maintain_ivf_index(
-    spark: SparkSession,
-    sf_dir: str,
-    profile: str = "default",
-    batch: DataFrame | None = None,
-    gc_keep: int | None = None,
-) -> dict:
-    """One maintenance tick, end to end (the lifecycle glue), now
-    carrying BOTH halves of the retrain policy plus retention:
-
-    - SIZE: read the stored index's row count from its Parquet
-      footers (parquet_rows), ask ivf_retrain_due against the
-      published geometry;
-    - DATA (when ``batch`` — a (id, dv) DataFrame of the incoming
-      vectors — is supplied): broadcast-assign the batch to the
-      PUBLISHED centroids and PSI its cell histogram against the
-      published layout's occupancy (operators/pipeline.psi_report —
-      the same arithmetic as the ivf_cell_psi row, so the tick and
-      the monitor cannot drift apart). The alarm is gated on
-      n_batch ≥ IVF_PSI_MIN_PER_CELL·cells — small batches record
-      psi but cannot fire it (the measured small-batch inflation in
-      ivf_cell_psi's docstring);
-    - on either trigger (or no version yet): publish the freshly
-      ensured scaled layout — the ensure_* builder trains at
-      ivf_cells_for(N_now) by construction, so 'rebuild' and 'first
-      publish' are the same call. NOTE the psi_due retrain trains
-      from the STORED index, never from the probed batch itself:
-      drifted vectors only enter the stored index via the append/delta
-      path (or a corpus refresh, which re-keys the builder memo), so a
-      psi_due tick fired BEFORE the drifted batch has landed resolves
-      to byte-identical content and reports 'retrain_noop' — by
-      design, repeatedly, until the batch lands and the rebuild has
-      something new to train on. Otherwise report 'append' (the delta
-      path,
-      incremental_ivf / append_ivf_delta, owns data movement between
-      retrains);
-    - RETENTION (when ``gc_keep`` is set): after the decision, run
-      gc_index_versions(keep_last=gc_keep) so superseded layouts are
-      pruned by the same singleton that publishes them.
-
-    Returns {action, version, cells, n_vectors} plus {psi, psi_gated,
-    psi_due} when a batch was checked and {gc: report} when retention
-    ran. Cost: one driver-side read of the stored index's Parquet
-    footers for n_vectors (parquet_rows — no Spark job), one ≤cells-row
-    PSI aggregate over the batch assignment, one metadata GC listing —
-    the corpus-scale work stays in the builders. A tick without a
-    batch starts no Spark job."""
-    n_now = parquet_rows(ensure_vector_index(spark, sf_dir))
-    cur = current_index_version(spark, sf_dir, profile=profile)
-    extra: dict = {}
-    psi_due = False
-    if cur is not None and batch is not None:
-        from .functions.embed import dot as vdot
-        from .operators.clustering import _assign, _cents_df
-        from .operators.pipeline import psi_report
-
-        cents_rows = [
-            (int(r.cid), [float(v) for v in r.cv], float(r.cc))
-            for r in read_artifact(spark, cur["centroids"]).collect()
-        ]
-        # Resolve the vector column BY TYPE — specifically a FLOAT
-        # array (the layouts' array<double> shape; array<float>
-        # accepted for a caller that kept the parquet source type),
-        # not by position and not any array (r14 ADVICE: an
-        # array<string> metadata column used to pass the ambiguity
-        # guard and mis-assign downstream). Ambiguity is an error,
-        # not a guess.
-        vec_cols = [
-            f.name
-            for f in batch.schema.fields
-            if f.dataType.simpleString() in ("array<double>", "array<float>")
-        ]
-        if len(vec_cols) != 1:
-            raise ValueError(
-                "maintain_ivf_index batch needs exactly one "
-                "array<double>/array<float> vector column, got "
-                f"{vec_cols or batch.columns}"
-            )
-        vecc = vec_cols[0]
-        others = [c for c in batch.columns if c != vecc]
-        if not others:
-            raise ValueError(
-                "maintain_ivf_index batch needs an id column besides "
-                f"the vector column {vecc!r}"
-            )
-        # Prefer an explicitly id-NAMED column; a batch with extra
-        # metadata columns must not get an arbitrary id (r14 ADVICE).
-        # TWO id-named columns are as ambiguous as none (r15 review:
-        # picking named[0] would choose by column position, the exact
-        # guess the guard exists to refuse).
-        named = [c for c in others if c in ("id", "vec_id", "doc_id")]
-        if len(named) == 1:
-            idc = named[0]
-        elif not named and len(others) == 1:
-            idc = others[0]
-        else:
-            raise ValueError(
-                "maintain_ivf_index batch id column is ambiguous: "
-                f"{others} (name exactly one of id/vec_id/doc_id, or "
-                "pass exactly two columns)"
-            )
-        vx = batch.select(
-            F.col(idc).alias("vec_id"), F.col(vecc).alias("x")
-        ).withColumn("xx", vdot(F.col("x"), F.col("x")))
-        delta = _assign(vx, _cents_df(spark, cents_rows)).select(
-            F.col("cid").cast("long").alias("cell")
-        )
-        base = read_artifact(spark, cur["layout"]).select(
-            F.col("cell").cast("long").alias("cell")
-        )
-        r = psi_report(spark, cur["centroids"], base, delta).collect()[0]
-        gated = r.n_batch < IVF_PSI_MIN_PER_CELL * r.cells
-        psi_due = (not gated) and float(r.psi) > IVF_PSI_ALARM
-        extra = {
-            "psi": float(r.psi),
-            "psi_gated": bool(gated),
-            "psi_due": bool(psi_due),
-        }
-    # A fired psi_due deliberately does NOT drop the scaled layout's
-    # memo entry: popping it makes the rebuild
-    # overwrite the layout path IN PLACE mid-session, and every reader
-    # holding Spark's cached file listing for that path then fails
-    # FILE_NOT_EXIST — the exact mutating-a-served-path hazard
-    # append_ivf_delta's docstring forbids. The alarm's semantics are
-    # documented instead (docstring above): drifted vectors only enter
-    # the stored index via the append/delta path or a corpus refresh
-    # (which changes sf_dir and thus the memo key), so until the batch
-    # lands, a psi_due tick correctly re-reports retrain_noop.
-    if (
-        cur is not None
-        and not psi_due
-        and not ivf_retrain_due(cur["cells"], n_now)
-    ):
-        out = {
-            "action": "append",
-            "version": cur["version"],
-            "cells": cur["cells"],
-            "n_vectors": n_now,
-            **extra,
-        }
-    else:
-        layout, cents, cells = ensure_ivf(spark, sf_dir, "documents", True)
-        if cur is not None and (
-            cur["layout"],
-            cur["centroids"],
-            cur["cells"],
-        ) == (layout, cents, cells):
-            # The rebuild resolved to the EXACT published triple (the
-            # builder re-trains in place, or this session's memo
-            # already holds the retrained layout) — minting a new
-            # version would be pure churn: every flip invalidates
-            # every reader's version-keyed cache for byte-identical
-            # content (r14 review). Surface the decision, keep the
-            # pointer.
-            out = {
-                "action": "retrain_noop",
-                "version": cur["version"],
-                "cells": cells,
-                "n_vectors": n_now,
-                **extra,
-            }
-        else:
-            version = publish_index_version(
-                spark, sf_dir, layout, cents, cells, profile=profile
-            )
-            out = {
-                "action": "publish",
-                "version": version,
-                "cells": cells,
-                "n_vectors": n_now,
-                **extra,
-            }
-    if gc_keep is not None:
-        out["gc"] = gc_index_versions(
-            spark, sf_dir, keep_last=gc_keep, profile=profile
-        )
-    return out
-
-
-def ensure_ivf(
-    spark: SparkSession, sf_dir: str, table: str, scaled: bool
-) -> tuple[str, str, int]:
-    """The k-means-trained IVF layout of one vector table, built once per
-    (session, sf_dir, table, geometry). Returns (layout_path,
-    centroids_path, cells).
-
-    The build trains ``cells`` coarse centroids with the engine's
-    deterministic Lloyd pass (operators/clustering.kmeans_fit_assign),
-    stores them as a K-row Parquet next to the layout (every probe ranks
-    them to pick its cells), and rewrites the vectors
-    ``partitionBy(cell)``, one directory per Voronoi cell, so a probe's
-    literal cell filter becomes a static partition prune.
-
-    - ``table="documents"`` trains on the stored document index
-      (``ensure_vector_index``): layout (doc_id, dv, cell) at
-      ``vector_index_ivf``.
-    - ``table="embeddings"`` trains on the embeddings table: layout
-      (vec_id, v, label, cell) at ``emb_index_ivf``. The label rides
-      through the assignment map because the mining queries split
-      candidates by label inside the pool.
-    - ``scaled=False`` is the fixed IVF_CELLS geometry that the
-      registered fixed-geometry queries pin their results to.
-      ``scaled=True`` is ``ivf_cells_for(N)``, N read from the source's
-      Parquet footers (no Spark job), under a ``_c{cells}`` path so the
-      two geometries coexist in one session.
-
-    The centroids path is the layout path with a ``_cents`` suffix."""
-
-    def build() -> tuple[str, str, int]:
-        from .functions.embed import dot as vdot
-        from .operators.clustering import kmeans_fit_assign
-
-        if table == "documents":
-            source = ensure_vector_index(spark, sf_dir)
-            vx = read_artifact(spark, source).select(
-                F.col("doc_id").alias("vec_id"), F.col("dv").alias("x")
-            )
-            keep: tuple[str, ...] = ()
-            out_cols = [F.col("vec_id").alias("doc_id"), F.col("x").alias("dv")]
-            leaf = "vector_index_ivf"
-        elif table == "embeddings":
-            source = os.path.join(sf_dir, "embeddings.parquet")
-            vx = load(spark, sf_dir, "embeddings").select(
-                "vec_id",
-                "label",
-                F.col("embedding").cast("array<double>").alias("x"),
-            )
-            keep = ("label",)
-            out_cols = ["vec_id", F.col("x").alias("v"), "label"]
-            leaf = "emb_index_ivf"
-        else:
-            raise ValueError(f"no IVF layout for table {table!r}")
-        cells = ivf_cells_for(parquet_rows(source)) if scaled else IVF_CELLS
-        leaf = f"{leaf}_c{cells}" if scaled else leaf
-        tag = dir_tag(sf_dir)
-        path, cents_path = tmp_path(leaf, tag), tmp_path(f"{leaf}_cents", tag)
-        assigned, cents = kmeans_fit_assign(
-            spark,
-            vx.withColumn("xx", vdot(F.col("x"), F.col("x"))),
-            cells,
-            keep=keep,
-        )
-        write_artifact(
-            local_rows(
-                spark,
-                [(int(c), [float(v) for v in cv], float(cc)) for c, cv, cc in cents],
-                "cid LONG, cv ARRAY<DOUBLE>, cc DOUBLE",
-            ).write.mode("overwrite"),
-            cents_path,
-        )
-        write_artifact(
-            # Cluster rows by their target cell directory before the
-            # partitioned write, with the explicit cells count so the
-            # write parallelizes (cluster_by_dirs); otherwise every task
-            # writes a sliver into every cell directory.
-            cluster_by_dirs(
-                assigned.select(*out_cols, F.col("cid").alias("cell")),
-                cells,
-                "cell",
-            )
-            .write.mode("overwrite")
-            .partitionBy("cell"),
-            path,
-        )
-        return path, cents_path, cells
-
-    return ensure_materialized(spark, "ivf", sf_dir, build, table, scaled)
-
-
 def ensure_vector_index_ivf_scaled(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, str, int]:
-    """``ensure_ivf(spark, sf_dir, "documents", scaled=True)``."""
+    """``ensure_ivf(spark, sf_dir, "documents", True)`` under the name
+    the perfbench harness calls."""
     return ensure_ivf(spark, sf_dir, "documents", True)
 
 
@@ -1204,9 +452,7 @@ scored AS (
         scored = f"""
 scored AS (
   SELECT q.question_id, q.question_text, d.doc_id,
-         round(CAST(len(list_filter(string_split(lower(q.question_text), ' '),
-                              w -> contains(lower(d.text), w))) AS DOUBLE)
-           / len(string_split(lower(q.question_text), ' ')), 6) AS score,
+         round({keyword_score_sql("q.question_text", "lower(d.text)")}, 6) AS score,
          substr(d.text, 1, {SNIPPET_LEN}) AS snippet
   FROM questions q CROSS JOIN documents d
 )"""
@@ -1257,10 +503,7 @@ vec AS (
 kw AS (
   SELECT q.question_id, d.doc_id,
          row_number() OVER (PARTITION BY q.question_id
-            ORDER BY round(CAST(len(list_filter(
-                       string_split(lower(q.question_text), ' '),
-                       w -> contains(lower(d.text), w))) AS DOUBLE)
-                     / len(string_split(lower(q.question_text), ' ')), 6) DESC,
+            ORDER BY round({keyword_score_sql("q.question_text", "lower(d.text)")}, 6) DESC,
                      d.doc_id) AS r
   FROM questions q CROSS JOIN documents d
 ),

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..operators.ivf import IVF_CELLS, ensure_ivf, ivf_cells_sql
 from ..operators.questions import question_vectors
 from ..operators.retrieval import (
     ivf_cell_choice,
@@ -736,8 +737,6 @@ def triplet_ann_pool(
     anchor_label, qv, qq) DataFrame folds per call and is the caller's
     to bound — use triplet_pool_auto, which routes oversized sets to
     the join path."""
-    from ..api import ensure_ivf
-
     layout, cents, _ = ensure_ivf(spark, sf_dir, "embeddings", False)
     probe = ivf_probe_fold(
         spark,
@@ -785,8 +784,6 @@ def triplet_join_pool(
     (ensure_ivf("embeddings", scaled=True), cells = ivf_cells_for(N))
     at the deeper _TRIPLET_NPROBE_SCALED; the plan shape is the
     same."""
-    from ..api import ensure_ivf
-
     layout, cents, _ = ensure_ivf(spark, sf_dir, "embeddings", scaled)
     anch = anchors if anchors is not None else _triplet_anchors(spark, sf_dir)
     aprobe = ivf_cell_choice(
@@ -827,20 +824,10 @@ def triplet_pool_auto(
     return triplet_join_pool(spark, sf_dir, anchors=anchors)
 
 
-#: SQL twin of api.ivf_cells_for over the embeddings-table vx CTE —
-#: the scaled mining oracle's cell count, derived from the corpus by
-#: DuckDB's expression LIMIT exactly like the documents-layout scaled
-#: oracle (operators/pipeline._IVF_CELLS_SQL_SCALED).
-_EMB_IVF_CELLS_SQL_SCALED = (
-    "(SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) FROM vx)"
-)
-
-
 def _triplet_ann_oracle(scaled: bool = False) -> str:
-    from ..api import IVF_CELLS
     from ..operators.clustering import _EMB_VX_BODY, kmeans_sql_rounds_ctes
 
-    k = _EMB_IVF_CELLS_SQL_SCALED if scaled else IVF_CELLS
+    k = ivf_cells_sql() if scaled else IVF_CELLS
     nprobe = _TRIPLET_NPROBE_SCALED if scaled else _TRIPLET_NPROBE
     d2 = "round(a.qq - 2*list_dot_product(a.qv, c.cv) + c.cc, 6)"
     cos = "round(list_dot_product(a.qv, d.x) / (sqrt(a.qq)*sqrt(d.xx)), 6)"

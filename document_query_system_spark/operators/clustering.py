@@ -119,7 +119,7 @@ def kmeans_fit_assign(
     final assignment DataFrame (vec_id, x, xx, d2, cid) AND the
     trained centroid rows [(cid, cv, cc), ...] — the coarse-quantizer
     training shared by q_cluster_kmeans (embeddings table, k=8) and
-    the IVF layouts (api.ensure_ivf). Both collects are
+    the IVF layouts (ivf.ensure_ivf). Both collects are
     bounded (k rows of DIM doubles); every float that influences
     downstream comparisons is rounded to 6 inside the plan (seeded
     values are raw inputs; updated centroids are round(avg, 6)), the
@@ -176,7 +176,7 @@ def kmeans_sql_rounds_ctes(vx_body: str, k: "int | str") -> str:
     accepts expressions/subqueries in LIMIT) — the scaled IVF oracle
     passes ``(SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS
     BIGINT)) FROM vx)`` so the oracle derives the cell count from the
-    corpus exactly like the engine's ivf_cells_for (api.py)."""
+    corpus exactly like the engine's ivf_cells_for (operators/ivf.py)."""
     # MATERIALIZED (r13): DuckDB 1.0 INLINES every CTE reference, so
     # a consumer that references a2/c1 more than once — the unrolled
     # MMR rounds reference their candidate CTE ~3× per round — would

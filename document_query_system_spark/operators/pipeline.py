@@ -25,13 +25,36 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import tokens, tokens_sql
 from ..registry import register
-from ..sources.tables import cluster_by_dirs, load, local_rows, spread
-from ..sources.tmputil import read_artifact, write_artifact
+from ..sources.tables import load, local_rows, spread
+from ..sources.tmputil import read_artifact
 from ..functions.hashing import (
     shingle_hashes as _shingle_hashes,
     shingle_hashes_sql as _shingle_hashes_sql,
     token_hashes,
     token_hashes_sql,
+)
+from .ivf import (  # noqa: F401  (the verbs are re-exported for perfbench)
+    DELTA_MOD,
+    IVF_CELLS,
+    IVF_NPROBE,
+    IVF_NPROBE_SCALED,
+    append_ivf_delta,
+    compact_ivf_cells,
+    current_index_version,
+    delete_from_ivf,
+    ensure_ivf,
+    incremental_ivf,
+    incremental_ivf_oracle,
+    ivf_cell_psi,
+    ivf_cell_psi_oracle,
+    ivf_cells_sql,
+    ivf_layout_stats,
+    ivf_layout_stats_oracle,
+    ivf_lifecycle_oracle,
+    ivf_lifecycle_roundtrip,
+    list_index_versions,
+    maintain_ivf_index,
+    stream_ivf_maintenance,
 )
 from .questions import question_vector_rows
 from .retrieval import (
@@ -601,9 +624,6 @@ def q_incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------ incremental LSH maintenance
 
-_INC_LSH_MOD = 13  # doc_id % 13 == 0 plays the incoming batch
-
-
 def _inc_lsh_oracle() -> str:
     from ..functions.embed import embed_subquery_sql
     from .similarity import N_TABLES, _bucket_list_sql
@@ -647,12 +667,12 @@ def q_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = (
         read_artifact(spark, ensure_vector_index_lsh(spark, sf_dir))
-        .filter(F.col("doc_id") % _INC_LSH_MOD != 0)
+        .filter(F.col("doc_id") % DELTA_MOD != 0)
         .select("doc_id", "dv", "tbl", "bucket")
     )
     batch = spread(
         load(spark, sf_dir, "documents").select("doc_id", "text")
-    ).filter(F.col("doc_id") % _INC_LSH_MOD == 0)
+    ).filter(F.col("doc_id") % DELTA_MOD == 0)
     emb = embed_pandas(batch, "text", out_col="dv", keep=["doc_id"])
     buckets = F.array(
         *[_bucket_expr(F.col("dv"), t) for t in range(N_TABLES)]
@@ -673,646 +693,6 @@ def q_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         "id_sum",
         "v1_micros",
-    )
-
-
-def _inc_ivf_oracle(scaled: bool = False) -> str:
-    """Full-rebuild oracle for incremental_ivf: train on the whole
-    corpus (the stored layout's own training set), assign every doc,
-    aggregate per cell — what the engine's base∪delta must equal.
-    ``scaled=True`` trains greatest(16, ceil(sqrt(N))) cells — the
-    corpus-adaptive geometry of ensure_ivf(scaled=True) — so
-    the PROMOTED serving layout's delta path is rebuild-checked at
-    its own cell count (r13 verdict #3), not just the fixed floor."""
-    from ..api import IVF_CELLS
-    from ..functions.embed import embed_subquery_sql
-    from .clustering import kmeans_sql_rounds_ctes
-
-    k = _IVF_CELLS_SQL_SCALED if scaled else IVF_CELLS
-    dv = embed_subquery_sql("documents", "doc_id", "text")
-    vx_body = f"""
-  SELECT id AS vec_id, embedding AS x,
-         list_dot_product(embedding, embedding) AS xx
-  FROM (SELECT id, embedding FROM {dv})
-"""
-    return f"""
-WITH {kmeans_sql_rounds_ctes(vx_body, k)}
-SELECT CAST(cid AS BIGINT) AS cell,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(vec_id) AS BIGINT) AS id_sum,
-       CAST(sum(CAST(round(x[1] * 1000000) AS BIGINT)) AS BIGINT) AS v1_micros
-FROM a2 GROUP BY cid
-"""
-
-
-def _ivf_base_and_delta(
-    spark: SparkSession, sf_dir: str, scaled: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """Shared delta-path core for incremental_ivf (content proof) and
-    append_ivf_delta (physical write): the stored layout minus the
-    incoming batch as ``base``, and the batch embedded and assigned to
-    the layout's STORED centroids as ``delta`` — the K-row centroid
-    metadata rides the same broadcast one-row frame the trainer uses,
-    so delta assignment is bit-identical to build assignment."""
-    from ..api import ensure_ivf
-    from ..functions.embed import dot, embed_pandas
-    from .clustering import _assign, _cents_df
-
-    layout, cents_path, _cells = ensure_ivf(spark, sf_dir, "documents", scaled)
-    base = (
-        read_artifact(spark, layout)
-        .filter(F.col("doc_id") % _INC_LSH_MOD != 0)
-        .select("doc_id", "dv", F.col("cell").cast("long").alias("cell"))
-    )
-    cents = [
-        (int(r.cid), [float(v) for v in r.cv], float(r.cc))
-        for r in read_artifact(spark, cents_path).collect()
-    ]
-    batch = spread(
-        load(spark, sf_dir, "documents").select("doc_id", "text")
-    ).filter(F.col("doc_id") % _INC_LSH_MOD == 0)
-    emb = embed_pandas(batch, "text", out_col="dv", keep=["doc_id"])
-    vx = emb.select(
-        F.col("doc_id").alias("vec_id"), F.col("dv").alias("x")
-    ).withColumn("xx", dot(F.col("x"), F.col("x")))
-    delta = _assign(vx, _cents_df(spark, cents)).select(
-        F.col("vec_id").alias("doc_id"),
-        F.col("x").alias("dv"),
-        F.col("cid").cast("long").alias("cell"),
-    )
-    return base, delta
-
-
-def _ivf_layout_stats_oracle() -> str:
-    """Full-retrain oracle for ivf_layout_stats: train the scaled
-    geometry from the corpus (the layout's own training set), count
-    per cell, and summarize — what the engine's stored-layout scan
-    must report. cells is re-derived via the corpus expression
-    (greatest(16, ceil(sqrt(N)))), so the geometry columns are
-    cross-engine-checked exactly like the serving oracle's."""
-    from ..api import IVF_NPROBE_SCALED
-    from ..functions.embed import embed_subquery_sql
-    from .clustering import kmeans_sql_rounds_ctes
-
-    dv = embed_subquery_sql("documents", "doc_id", "text")
-    vx_body = f"""
-  SELECT id AS vec_id, embedding AS x,
-         list_dot_product(embedding, embedding) AS xx
-  FROM (SELECT id, embedding FROM {dv})
-"""
-    return f"""
-WITH {kmeans_sql_rounds_ctes(vx_body, _IVF_CELLS_SQL_SCALED)},
-pc AS (SELECT cid, count(*) AS n FROM a2 GROUP BY cid)
-SELECT CAST((SELECT count(*) FROM pc) AS BIGINT) AS cells_used,
-       {_IVF_CELLS_SQL_SCALED} AS cells,
-       CAST({IVF_NPROBE_SCALED} AS BIGINT) AS nprobe,
-       round(CAST({IVF_NPROBE_SCALED} AS DOUBLE)
-             / {_IVF_CELLS_SQL_SCALED}, 6) AS probe_fraction,
-       CAST(sum(n) AS BIGINT) AS n_vecs,
-       CAST(min(n) AS BIGINT) AS min_cell,
-       CAST(max(n) AS BIGINT) AS max_cell,
-       round(CAST(sum(n) AS DOUBLE)
-             / (SELECT count(*) FROM pc), 2) AS avg_cell,
-       round(CAST(max(n) AS DOUBLE) * (SELECT count(*) FROM pc)
-             / sum(n), 4) AS imbalance
-FROM pc
-"""
-
-
-def ivf_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-stats report for the PROMOTED scaled IVF serving layout
-    (the vector analog of q_agg_index_stats, r14 library work): one
-    summary row with the trained geometry (cells, serving nprobe, the
-    probe read fraction the calibration bought) and the measured cell
-    population spread (min/max/avg, imbalance = max/avg) — the number
-    an operator watches between retrains, since append-only
-    maintenance grows max_cell while the trained cell count stands
-    still (api.ivf_retrain_due is the action rule; this is its
-    dashboard). Everything derives from a groupBy(cell) count over
-    the stored layout — one bounded aggregate, no vector bytes read
-    (column pruning: only the cell partition column is touched).
-
-    Scale: the per-cell count is a metadata-sized shuffle (≤cells
-    rows after partial aggregation); at 5B vectors / 70k cells the
-    report is still 70k longs → 1 row. Registration planned for r15
-    (the r14 budget is zero); parity vs the full-retrain DuckDB
-    oracle is pinned in tests/test_layout.py.
-
-    Reference analog: describe_index_stats — the per-namespace vector
-    counts the reference reads off Pinecone (ref:
-    src/services/vector_engine/pinecone_manager.py:19-59), here
-    computed from the engine's own stored layout."""
-    from ..api import IVF_NPROBE_SCALED, ensure_ivf
-
-    layout, _cents, cells = ensure_ivf(spark, sf_dir, "documents", True)
-    pc = (
-        read_artifact(spark, layout)
-        .groupBy("cell")
-        .agg(F.count("*").alias("n"))
-    )
-    return pc.agg(
-        F.count("*").cast("long").alias("cells_used"),
-        F.lit(cells).cast("long").alias("cells"),
-        F.lit(IVF_NPROBE_SCALED).cast("long").alias("nprobe"),
-        F.round(F.lit(float(IVF_NPROBE_SCALED)) / F.lit(cells), 6).alias(
-            "probe_fraction"
-        ),
-        F.sum("n").cast("long").alias("n_vecs"),
-        F.min("n").cast("long").alias("min_cell"),
-        F.max("n").cast("long").alias("max_cell"),
-        F.round(
-            F.sum("n").cast("double") / F.count("*"), 2
-        ).alias("avg_cell"),
-        F.round(
-            F.max("n").cast("double") * F.count("*") / F.sum("n"), 4
-        ).alias("imbalance"),
-    )
-
-
-def append_ivf_delta(
-    spark: SparkSession, sf_dir: str, scaled: bool = False
-) -> str:
-    """The PHYSICAL half of IVF incremental maintenance (r13 verdict
-    #3 follow-through): incremental_ivf proves the merged CONTENT
-    (base ∪ delta ≡ full rebuild, per-cell checksums); this one
-    performs the actual LAYOUT WRITE a serving deployment runs per
-    batch — the 'yesterday' snapshot written partitionBy(cell), then
-    the centroid-assigned batch appended with mode('append') into the
-    SAME cell-directory tree. Returns the layout path for
-    verification (tests/test_layout.py reads it back and matches the
-    per-cell checksums against incremental_ivf's).
-
-    Scale: the append's cost is ∝ batch — after the repartition each
-    task writes only the cell directories its rows land in; the base
-    snapshot is untouched (parquet append adds files, never rewrites).
-    Written to a TAGGED COPY, never the memoized serving layout:
-    mutating that mid-session would silently change every downstream
-    probe's stored input (the same isolation rule dir_tag enforces
-    across corpora)."""
-    from ..api import ensure_ivf
-    from ..sources.tmputil import dir_tag, tmp_path
-
-    base, delta = _ivf_base_and_delta(spark, sf_dir, scaled)
-    # Directory count for the write clustering (a memo hit: the layout
-    # is already built by _ivf_base_and_delta above).
-    cells = ensure_ivf(spark, sf_dir, "documents", scaled)[2]
-    suffix = "_scaled" if scaled else ""
-    path = tmp_path(f"vector_index_ivf_applied{suffix}", dir_tag(sf_dir))
-    # Cluster rows by target directory before each partitioned write
-    # (the LSH-layout lesson: without this every task writes a sliver
-    # into every cell dir — file-count explosion at scale), with the
-    # explicit cells count so the write parallelizes (cluster_by_dirs:
-    # the keyless form AQE-coalesced to ONE write task).
-    write_artifact(
-        cluster_by_dirs(base, cells, "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell"),
-        path,
-    )
-    write_artifact(
-        cluster_by_dirs(delta, cells, "cell").write.mode("append").partitionBy("cell"),
-        path,
-    )
-    return path
-
-
-def _ivf_cell_psi_oracle() -> str:
-    """Full-retrain oracle for ivf_cell_psi: assign every doc with the
-    trained centroids (a2), split base/batch on the same vec_id % 13
-    rule the engine's delta path uses, and compute the smoothed PSI
-    over the centroid domain — the engine's stored-layout histograms
-    must reproduce it exactly (its base cells are build assignments,
-    its delta cells broadcast-assigned to the same stored centroids)."""
-    from ..functions.embed import embed_subquery_sql
-    from .clustering import kmeans_sql_rounds_ctes
-
-    dv = embed_subquery_sql("documents", "doc_id", "text")
-    vx_body = f"""
-  SELECT id AS vec_id, embedding AS x,
-         list_dot_product(embedding, embedding) AS xx
-  FROM (SELECT id, embedding FROM {dv})
-"""
-    return f"""
-WITH {kmeans_sql_rounds_ctes(vx_body, _IVF_CELLS_SQL_SCALED)},
-base AS (SELECT cid FROM a2 WHERE vec_id % {_INC_LSH_MOD} <> 0),
-bat AS (SELECT cid FROM a2 WHERE vec_id % {_INC_LSH_MOD} = 0),
-cent AS (SELECT cid FROM c1),
-bh AS (SELECT cid, count(*) AS bn FROM base GROUP BY cid),
-dh AS (SELECT cid, count(*) AS dn FROM bat GROUP BY cid),
-pq AS (
-  SELECT (coalesce(bn, 0) + 0.5)
-           / ((SELECT count(*) FROM base)
-              + 0.5 * (SELECT count(*) FROM cent)) AS p,
-         (coalesce(dn, 0) + 0.5)
-           / ((SELECT count(*) FROM bat)
-              + 0.5 * (SELECT count(*) FROM cent)) AS q
-  FROM cent LEFT JOIN bh USING (cid) LEFT JOIN dh USING (cid))
-SELECT CAST((SELECT count(*) FROM cent) AS BIGINT) AS cells,
-       CAST((SELECT count(*) FROM base) AS BIGINT) AS n_base,
-       CAST((SELECT count(*) FROM bat) AS BIGINT) AS n_batch,
-       round(sum((q - p) * ln(q / p)), 6) AS psi
-FROM pq
-"""
-
-
-def ivf_cell_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cell-distribution drift between the trained IVF layout and an
-    incoming batch — the DATA-drift half of the retrain policy
-    (api.ivf_retrain_due is the SIZE half): PSI over the per-cell
-    occupancy histograms, base = the stored scaled layout's build
-    assignments, batch = the delta broadcast-assigned to the SAME
-    stored centroids. A batch whose vectors no longer look like the
-    training corpus piles into few cells — PSI crosses the standard
-    0.25 alarm and the quantizer retrains even though
-    ivf_cells_for(N) hasn't moved (the feature-store drift discipline
-    of q_psi_drift, applied to the vector index itself; same +0.5
-    smoothing over the centroid domain, so empty cells cannot blow up
-    the log).
-
-    Shape: two metadata-sized histograms (≤cells rows each, partial
-    aggregation) joined over the K-row centroid table, one ≤cells-row
-    PSI sum — the only corpus-scale work is the batch embed+assign
-    the delta path pays anyway. Registration candidate for r15;
-    parity vs the full-retrain oracle pinned in tests/test_layout.py.
-
-    Reading the number: the 0.1/0.25 stability rules assume each
-    cell's EXPECTED batch count is ≳10 — small batches inflate PSI
-    through smoothing + sampling noise (measured on the same-corpus
-    uniform slice: 0.69 at sf0.01's ~1.7 docs/cell, 0.17 at sf0.1's
-    ~5.4). A production monitor gates the alarm on batch size (or
-    accumulates batches until n_batch ≥ 10·cells) — at 5B vectors /
-    70k cells that is a 700k-vector window, minutes of ingest."""
-    from ..api import ensure_ivf
-
-    _layout, cents_path, _cells = ensure_ivf(spark, sf_dir, "documents", True)
-    base, delta = _ivf_base_and_delta(spark, sf_dir, scaled=True)
-    return psi_report(spark, cents_path, base, delta)
-
-
-def psi_report(
-    spark: SparkSession, cents_path: str, base: DataFrame, delta: DataFrame
-) -> DataFrame:
-    """The PSI arithmetic of ivf_cell_psi as a reusable core (r14 —
-    api.maintain_ivf_index's drift branch computes the same number
-    against the PUBLISHED layout, so the tick and the registered-row
-    candidate cannot drift apart): +0.5-smoothed occupancy histograms
-    over the centroid domain for any two cell-assigned frames, one
-    (cells, n_base, n_batch, psi) row out."""
-    cent = (
-        read_artifact(spark, cents_path)
-        .select(F.col("cid").alias("cell"))
-        .localCheckpoint(eager=False)
-    )
-    bh = (
-        base.groupBy("cell")
-        .agg(F.count("*").alias("bn"))
-        .localCheckpoint(eager=False)
-    )
-    dh = (
-        delta.groupBy("cell")
-        .agg(F.count("*").alias("dn"))
-        .localCheckpoint(eager=False)
-    )
-    # Totals off the checkpointed histograms: two bounded one-row
-    # collects (≤cells longs summed), not a corpus recompute.
-    k = cent.count()
-    nb = bh.agg(F.sum("bn")).collect()[0][0] or 0
-    nd = dh.agg(F.sum("dn")).collect()[0][0] or 0
-    pq = (
-        cent.join(F.broadcast(bh), "cell", "left")
-        .join(F.broadcast(dh), "cell", "left")
-        .select(
-            (
-                (F.coalesce(F.col("bn"), F.lit(0)) + 0.5)
-                / F.lit(nb + 0.5 * k)
-            ).alias("p"),
-            (
-                (F.coalesce(F.col("dn"), F.lit(0)) + 0.5)
-                / F.lit(nd + 0.5 * k)
-            ).alias("q"),
-        )
-    )
-    return pq.coalesce(1).agg(
-        F.lit(k).cast("long").alias("cells"),
-        F.lit(nb).cast("long").alias("n_base"),
-        F.lit(nd).cast("long").alias("n_batch"),
-        F.round(
-            F.sum((F.col("q") - F.col("p")) * F.log(F.col("q") / F.col("p"))),
-            6,
-        ).alias("psi"),
-    )
-
-
-def delete_from_ivf(
-    spark: SparkSession, layout_path: str, ids: DataFrame
-) -> list[int]:
-    """Targeted delete from a cell-partitioned IVF layout — the last
-    CRUD verb of the index lifecycle (the reference delegates it to
-    Pinecone's delete endpoint; here the engine owns it): one per-cell
-    aggregate over the layout (the partition column + id only, victims
-    broadcast-marked) counts each cell's victim hits and survivors, so
-    a single collect returns both the cells to rewrite (hits > 0) and
-    the cells the delete empties (hits > 0, no survivors). ONLY the hit
-    cells are then rewritten with the victims anti-joined out (dynamic
-    partition overwrite — the compact_ivf_cells machinery). Returns
-    the rewritten cell ids, ascending.
-
-    Scale: the locate pass reads (doc_id, cell) — two pruned columns —
-    and the per-cell rows collected to the driver are bounded by
-    min(|ids|, cells): each victim lives in exactly one cell
-    (layout integrity pin), so a 1k-id delete touches ≤1k of the 70k
-    cells at 5B vectors and the rewrite reads/writes only those cells'
-    ~√N-row directories. A cell that becomes EMPTY cannot be rewritten
-    by a dynamic overwrite (no rows → no partition in the output, so
-    its stale files would survive and the delete would be SILENTLY
-    INCOMPLETE) — its directory is dropped explicitly, the local form
-    of the segment-drop manifest update an object-store table runs.
-    Pinned in tests/test_layout.py: deleting the appended batch
-    restores the base snapshot's checksums exactly, untouched cells'
-    files unrewritten, and a whole-cell delete leaves no stale
-    directory."""
-    victims = ids.select(F.col(ids.columns[0]).alias("doc_id"))
-    layout = read_artifact(spark, layout_path)
-    # rows - hits is the cell's survivor count, also when an id is listed
-    # twice (its layout row then joins twice and counts as two hits).
-    per_cell = (
-        layout.select("doc_id", "cell")
-        .join(
-            F.broadcast(victims.withColumn("__hit", F.lit(True))), "doc_id", "left"
-        )
-        .groupBy("cell")
-        .agg(F.count("__hit").alias("hits"), F.count("*").alias("rows"))
-        .filter(F.col("hits") > 0)
-        .collect()
-    )
-    affected = sorted(r.cell for r in per_cell)
-    if not affected:
-        return affected
-    emptied = {r.cell for r in per_cell if r.rows == r.hits}
-    survivors = (
-        layout.filter(F.col("cell").isin(affected))
-        .join(F.broadcast(victims), "doc_id", "anti")
-        .localCheckpoint(eager=True)
-    )
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        write_artifact(
-            # One write task per rewritten cell (cluster_by_dirs; the
-            # keyless count let AQE coalesce this tiny shuffle to ONE
-            # task writing every affected dir sequentially).
-            cluster_by_dirs(survivors, len(affected), "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell"),
-            layout_path,
-        )
-    finally:
-        spark.conf.set(mode_key, old)
-    # Emptied cells never appear in the written data, so the dynamic
-    # overwrite cannot touch their directories — drop them explicitly
-    # or their stale files keep serving the deleted vectors.
-    import shutil
-
-    for cell in emptied:
-        d = os.path.join(layout_path, f"cell={cell}")
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-    return affected
-
-
-def compact_ivf_cells(
-    spark: SparkSession, layout_path: str, max_files_per_cell: int = 4
-) -> list[int]:
-    """Small-file compaction for an appended IVF layout (the
-    maintenance op every segment-based vector store runs): each
-    append_ivf_delta batch ADDS files to the cell directories it
-    touches — after many batches a probe of one cell opens dozens of
-    tiny parquet files and scan setup dominates read time. Flag cells
-    whose file count exceeds ``max_files_per_cell``, rewrite ONLY
-    those cells (dynamic partition overwrite — untouched cell
-    directories are never rewritten), one file per compacted cell.
-    Returns the flagged cell ids (empty = nothing to do).
-
-    Scale: the flag pass is one listing of ≤cells directories
-    (metadata-sized — cells ~ √N); the rewrite reads and writes only
-    the flagged cells' rows (partition pruning pushes the isin(cell)
-    into directory selection), each ~√N rows by the sizing rule. The
-    flagged rows are eagerly localCheckpoint'd before the write —
-    Spark refuses to overwrite a path it is concurrently reading, and
-    the checkpoint bounds the staged bytes to exactly the flagged
-    cells (on a cluster this is checkpoint-to-object-store, see
-    SCALE.md known-deltas). Pinned in tests/test_layout.py: file
-    count collapses to 1 per flagged cell, per-cell checksums
-    byte-unchanged, untouched cells' files not rewritten."""
-    flagged = []
-    for d in os.listdir(layout_path):
-        if not d.startswith("cell="):
-            continue
-        n_files = sum(
-            1
-            for f in os.listdir(os.path.join(layout_path, d))
-            if f.endswith(".parquet")
-        )
-        if n_files > max_files_per_cell:
-            flagged.append(int(d.split("=", 1)[1]))
-    if not flagged:
-        return flagged
-    rows = (
-        read_artifact(spark, layout_path)
-        .filter(F.col("cell").isin(flagged))
-        .localCheckpoint(eager=True)
-    )
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        write_artifact(
-            # One write task per flagged cell (cluster_by_dirs; see
-            # delete_from_ivf — same single-task AQE-coalesce trap).
-            cluster_by_dirs(rows, len(flagged), "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell"),
-            layout_path,
-        )
-    finally:
-        spark.conf.set(mode_key, old)
-    return flagged
-
-
-def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF delta maintenance AS A STREAM — the composition a
-    production vector store actually runs (the reference's polling
-    ingestion loop feeding its batched Pinecone upsert, ref:
-    ingestion_service.py:376-416 + pinecone_manager.py:61-103): new
-    documents arrive on a landing directory, each micro-batch is
-    embedded (Arrow), broadcast-assigned to the SCALED layout's
-    STORED centroids, and physically appended into the
-    cell-partitioned tree via foreachBatch — append_ivf_delta's write
-    path, driven by Structured Streaming with availableNow + a
-    restartable checkpoint. Returns the final applied layout's
-    per-cell checksums, which must equal the FULL-REBUILD oracle
-    (_inc_ivf_oracle(scaled=True)) whatever the micro-batch split:
-    per-cell content is union-associative, so batch boundaries cannot
-    show in the result (the q_stream_upsert_foreachbatch discipline,
-    here for the vector index).
-
-    Scale: per micro-batch cost ∝ batch (embed + K-row broadcast map
-    + an append that touches only the cells the batch hits); the
-    centroid list is collected ONCE (K rows — the bounded-collect
-    class every IVF probe already documents) and reused across
-    batches. maxFilesPerTrigger bounds per-batch work on a real
-    landing dir. Registration candidate for r15; parity pinned in
-    tests/test_layout.py."""
-    import uuid as _uuid
-
-    from ..api import ensure_ivf
-    from ..functions.embed import dot, embed_pandas
-    from ..sources.tmputil import tmp_path
-    from ..streaming.event_windows import _drain, _scoped_shuffle_partitions
-    from .clustering import _assign, _cents_df
-
-    layout, cents_path, _cells = ensure_ivf(spark, sf_dir, "documents", True)
-    cents = [
-        (int(r.cid), [float(v) for v in r.cv], float(r.cc))
-        for r in read_artifact(spark, cents_path).collect()
-    ]
-    run = _uuid.uuid4().hex[:8]
-    # One-time landing-dir build: the incoming batch slice as FOUR
-    # parquet files, drained two-per-trigger so availableNow takes TWO
-    # micro-batches (the split-independence claim is exercised, not
-    # vacuous — per-cell content is union-associative, so ANY split
-    # yields the same checksums; two batches proves it at half the
-    # per-batch engine overhead of four, the dominant cost of this
-    # row at bench scale).
-    landing = tmp_path(f"stream_ivf_landing_{run}")
-    # No spread() here (r15 opt pass): the landing build writes the
-    # RAW batch — the heavy per-row work (embed + assign) happens per
-    # micro-batch inside apply_batch, which gets its parallelism from
-    # the scan of the landing files — so a spread exchange feeding a
-    # repartition(4) was two back-to-back shuffles doing one job.
-    batch = load(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") % _INC_LSH_MOD == 0
-    )
-    write_artifact(batch.repartition(4).write.mode("overwrite"), landing)
-    # Yesterday's snapshot: the stored layout minus the batch, written
-    # once (same leg as append_ivf_delta's).
-    applied = tmp_path(f"stream_ivf_applied_{run}")
-    write_artifact(
-        cluster_by_dirs(  # one write task per cell, not one for all
-            read_artifact(spark, layout)
-            .filter(F.col("doc_id") % _INC_LSH_MOD != 0)
-            .select("doc_id", "dv", F.col("cell").cast("long").alias("cell")),
-            _cells,
-            "cell",
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell"),
-        applied,
-    )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        emb = embed_pandas(batch_df, "text", out_col="dv", keep=["doc_id"])
-        vx = emb.select(
-            F.col("doc_id").alias("vec_id"), F.col("dv").alias("x")
-        ).withColumn("xx", dot(F.col("x"), F.col("x")))
-        delta = _assign(vx, _cents_df(spark, cents)).select(
-            F.col("vec_id").alias("doc_id"),
-            F.col("x").alias("dv"),
-            F.col("cid").cast("long").alias("cell"),
-        )
-        write_artifact(
-            cluster_by_dirs(delta, _cells, "cell")
-            .write.mode("append")
-            .partitionBy("cell"),
-            applied,
-        )
-
-    src = (
-        spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "2")
-        .parquet(landing)
-    )
-    with _scoped_shuffle_partitions(spark, "4"):
-        q = (
-            src.writeStream.foreachBatch(apply_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{applied}_ckpt")
-            .start()
-        )
-        _drain(q)
-    return (
-        read_artifact(spark, applied)
-        .groupBy("cell")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("doc_id").cast("long").alias("id_sum"),
-            F.sum(
-                F.round(F.element_at(F.col("dv"), 1) * 1_000_000).cast("long")
-            )
-            .cast("long")
-            .alias("v1_micros"),
-        )
-        .select(
-            F.col("cell").cast("long").alias("cell"),
-            "n_docs",
-            "id_sum",
-            "v1_micros",
-        )
-    )
-
-
-def incremental_ivf(
-    spark: SparkSession, sf_dir: str, scaled: bool = False
-) -> DataFrame:
-    """Incremental maintenance of the TRAINED IVF layout — the vector
-    serving layout's delta path, completing the index-lifecycle
-    family next to q_incremental_lsh (buckets), q_incremental_bm25
-    (postings), and q_dedup_incremental (MinHash state): the stored
-    cell-partitioned index minus the incoming batch plays the 'index
-    as of yesterday'; the batch (doc_id % 13 == 0) pays embed→assign
-    on ITS rows only, assigned to the STORED centroids (the K-row
-    metadata every IVF serving node keeps — collected bounded, ridden
-    as the same broadcast one-row centroid frame the trainer uses, so
-    delta assignment is bit-identical to build assignment); merged =
-    base ∪ delta. Output: per-cell doc count, id checksum, and a
-    first-component vector checksum — which the oracle computes from
-    a FULL rebuild, proving append ≡ rebuild for the trained layout.
-
-    ``scaled=True`` (r13 verdict #3) runs the same delta path against
-    the PROMOTED serving layout — the corpus-adaptive geometry of
-    ensure_ivf(scaled=True) that q_mmr_ivf_serving probes — so
-    the production default's append path is exercised, not only the
-    fixed-16 floor. Same broadcast-assign, same checksums; only the
-    stored centroids (and so the cell space) differ.
-
-    Scale: delta cost ∝ batch (Arrow embed + one broadcast map);
-    appending the delta's rows into the cell directories is the same
-    partitionBy write the builder uses, cost ∝ batch. The caveat a
-    real deployment owns: appends hold CENTROIDS fixed — on drift the
-    quantizer retrains and the layout rewrites. WHEN to retrain is
-    now a stated rule, not a docstring wave: api.ivf_retrain_due
-    (cheap count + constant compare) fires when ivf_cells_for(N_now)
-    drifts ≥ IVF_RETRAIN_FACTOR from the trained cell count, and the
-    rebuild is the same ensure_* builder under a fresh cells tag.
-
-    Library-only this round (the r14 rotation budget is zero new
-    registrations); oracle-parity pinned for BOTH geometries in
-    tests/test_layout.py, driver row planned for r15."""
-    base, delta = _ivf_base_and_delta(spark, sf_dir, scaled)
-    merged = base.unionByName(delta)
-    return (
-        merged.groupBy("cell")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("doc_id").cast("long").alias("id_sum"),
-            F.sum(
-                F.round(F.element_at(F.col("dv"), 1) * 1_000_000).cast("long")
-            )
-            .cast("long")
-            .alias("v1_micros"),
-        )
-        .select(F.col("cell").cast("long").alias("cell"), "n_docs", "id_sum", "v1_micros")
     )
 
 
@@ -2198,6 +1578,13 @@ def mmr_ann_pool_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------- IVF-served MMR (trained quantizer)
 
+# Registration order is the driver-coverage rotation (registry.py).
+# api's queries (q_hybrid_rrf, q_api_run_vector, q_api_run_keyword)
+# register here, between q_token_budget_cap and the clustering queries
+# that _mmr_ivf_oracle's import of clustering registers below.
+from .. import api as _api  # noqa: E402,F401
+
+
 def mmr_ivf_pool_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -2217,7 +1604,6 @@ def mmr_ivf_pool_pairs(
     centroids)`` probes exactly that stored version instead of the
     session's layout, which is how published_ivf_topk serves whatever
     the blue/green manifest points at."""
-    from ..api import IVF_NPROBE, ensure_ivf
 
     if paths is not None:
         layout, cents = paths
@@ -2249,16 +1635,6 @@ def mmr_ivf_pool_pairs(
     )
 
 
-#: The scaled oracle's cell-count expression — byte-for-byte the SQL
-#: twin of api.ivf_cells_for (max(16, ceil(sqrt(N)))), evaluated by
-#: DuckDB inside the seeds LIMIT so the oracle's geometry tracks the
-#: corpus at every scale factor (the three-scale oracle audit runs
-#: this at sf0.001/0.01/0.1 where N differs).
-_IVF_CELLS_SQL_SCALED = (
-    "(SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) FROM vx)"
-)
-
-
 def _ivf_leg_ctes(scaled: bool = False, nprobe: int | None = None) -> str:
     """Oracle CTEs for the IVF leg, given qv(question_id, v) and
     dv(doc_id, v) CTEs in scope: k-means training (vx, seeds, a1, c1,
@@ -2269,12 +1645,11 @@ def _ivf_leg_ctes(scaled: bool = False, nprobe: int | None = None) -> str:
     geometry of ensure_ivf(scaled=True) — instead of the fixed
     IVF_CELLS floor; ``nprobe`` overrides the IVF_NPROBE serving
     default (the calibrated-serving oracle passes IVF_NPROBE_SCALED)."""
-    from ..api import IVF_CELLS, IVF_NPROBE
     from .clustering import kmeans_sql_rounds_ctes
 
     if nprobe is None:
         nprobe = IVF_NPROBE
-    k = _IVF_CELLS_SQL_SCALED if scaled else IVF_CELLS
+    k = ivf_cells_sql() if scaled else IVF_CELLS
     vx_body = """
   SELECT doc_id AS vec_id, v AS x, list_dot_product(v, v) AS xx FROM dv
 """
@@ -2516,7 +1891,6 @@ def q_mmr_pool_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_recall_scaled_oracle() -> str:
-    from ..api import IVF_NPROBE
     from ..functions.embed import embed_subquery_sql
     from .questions import question_values_sql
 
@@ -2553,7 +1927,7 @@ nc AS (
   GROUP BY e.question_id
 )
 SELECT ne.question_id,
-       {_IVF_CELLS_SQL_SCALED} AS cells,
+       {ivf_cells_sql()} AS cells,
        CAST({IVF_NPROBE} AS BIGINT) AS nprobe,
        CAST(ne.n_exact AS BIGINT) AS n_exact,
        CAST(coalesce(ni.n_ivf, 0) AS BIGINT) AS n_ivf,
@@ -2566,7 +1940,7 @@ FROM ne LEFT JOIN ni USING (question_id) LEFT JOIN nc USING (question_id)
 @register("q_ivf_recall_scaled", oracle=_ivf_recall_scaled_oracle())
 def q_ivf_recall_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pool recall@{pool} of the CORPUS-ADAPTIVE IVF layout (cells =
-    ivf_cells_for(N) = max(16, ceil(sqrt(N))) — api.py) vs the exact
+    ivf_cells_for(N) = max(16, ceil(sqrt(N))) — operators/ivf.py) vs the exact
     top-{pool} per golden question, with the trained geometry (cells,
     nprobe) reported per row: the r11 verdict #3 demonstration that
     the cell count is a FUNCTION of corpus size, not a constant. At
@@ -2603,7 +1977,6 @@ def q_ivf_recall_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs serving's 5, functions/vector.py) — which grows reads linearly
     while the cells rule keeps the per-probe read
     ~sqrt(N)-bounded."""
-    from ..api import IVF_NPROBE, ensure_ivf
 
     _, _, cells = ensure_ivf(spark, sf_dir, "documents", True)
     # Materialize each pool once (lazy checkpoint): both pools feed
@@ -2654,13 +2027,9 @@ def _mmr_ivf_serving_oracle() -> str:
     greatest(16, ceil(sqrt(N))) from the documents table directly
     (the dv CTE is one embedding per document, so count(documents) is
     the same N the engine's ivf_cells_for sees)."""
-    from ..api import IVF_NPROBE_SCALED
 
     inner = _mmr_ivf_oracle(scaled=True, nprobe=IVF_NPROBE_SCALED)
-    cells = (
-        "(SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) "
-        "FROM documents)"
-    )
+    cells = ivf_cells_sql("documents")
     return f"""
 SELECT question_id, doc_id, mmr_rank, mmr_score,
        {cells} AS cells,
@@ -2705,7 +2074,6 @@ def q_mmr_ivf_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     selections from ~2/3 the bytes, with the gap widening in the
     scaled layout's favor as N grows (the fixed geometry's fraction
     is pinned at 31% forever; this one's falls as nprobe/√N)."""
-    from ..api import IVF_NPROBE_SCALED, ensure_ivf
 
     _, _, cells = ensure_ivf(spark, sf_dir, "documents", True)
     pairs = mmr_ivf_pool_pairs(spark, sf_dir, scaled=True, nprobe=IVF_NPROBE_SCALED)
@@ -2743,16 +2111,12 @@ def _published_topk_oracle() -> str:
     classic blue/green bug: every flip invalidates every reader's
     cache), the second run's version column would be 2 and the row
     would hash-mismatch."""
-    from ..api import IVF_NPROBE_SCALED
     from ..functions.embed import embed_subquery_sql
     from .questions import question_values_sql
 
     qv = embed_subquery_sql("questions", "question_id", "question_text")
     dv = embed_subquery_sql("documents", "doc_id", "text")
-    cells = (
-        "(SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) "
-        "FROM dv)"
-    )
+    cells = ivf_cells_sql("dv")
     return f"""
 WITH {question_values_sql()},
 qv AS (SELECT id AS question_id, embedding AS v FROM {qv}),
@@ -2779,7 +2143,7 @@ def published_ivf_topk(
     tick: bool = True,
 ) -> DataFrame:
     """Vector top-k served THROUGH the blue/green pointer — the read
-    side of the api.publish_index_version / maintain_ivf_index
+    side of the ivf.publish_index_version / maintain_ivf_index
     lifecycle. One maintenance
     tick first (first call in a process publishes v1 of the scaled
     layout; later calls resolve the same version — no drift, no
@@ -2817,12 +2181,6 @@ def published_ivf_topk(
     just ran it and resolved the version itself (published_topk_cached
     keys its cache on that resolution; re-resolving here could race a
     concurrent flip and serve rows under the wrong key)."""
-    from ..api import (
-        IVF_NPROBE_SCALED,
-        current_index_version,
-        list_index_versions,
-        maintain_ivf_index,
-    )
 
     if tick:
         maintain_ivf_index(spark, sf_dir, profile=profile)
@@ -2887,8 +2245,6 @@ def published_topk_cached(
     job) is the cost of knowing the version is still current. FIFO eviction at
     _PUBLISHED_RESULT_CACHE_MAX entries — insertion order, not
     recency (a hit does not refresh a key's position)."""
-    from ..api import current_index_version, maintain_ivf_index
-
     from ..sources.tmputil import session_key
 
     maintain_ivf_index(spark, sf_dir, profile=profile)
@@ -2919,30 +2275,26 @@ def published_topk_cached(
     return list(rows), False
 
 
-# --------------------- r15 registrations of the r14 lifecycle library
+# ------------------------------- registered rows of the IVF lifecycle
 #
-# The five index-lifecycle operators landed in r14 as library + pytest
-# parity pins (tests/test_layout.py) under that round's zero-new-
-# registrations mandate, pre-flighted engine-vs-oracle MATCH at
-# sf0.001/0.01/0.1 (tools/preflight_staged.py). These wrappers give
-# each one its driver-contract row; the engine and oracle pairings are
-# byte-identical to the preflight tool's.
+# Each row wraps one function of operators/ivf.py and checks it against
+# that module's full-retrain DuckDB oracle.
 
 
-@register("q_incremental_ivf_scaled", oracle=_inc_ivf_oracle(scaled=True))
+@register("q_incremental_ivf_scaled", oracle=incremental_ivf_oracle(scaled=True))
 def q_incremental_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta maintenance of the PROMOTED scaled IVF serving layout:
-    base (stored layout minus the batch) ∪ delta (batch embedded and
-    broadcast-assigned to the STORED centroids) must equal a FULL
-    corpus rebuild at the corpus-adaptive geometry — per-cell count,
-    id checksum, and first-component vector checksum, all cross-engine
-    (see incremental_ivf). Reference analog: the upsert half of the
-    index lifecycle the reference delegates to Pinecone (ref:
+    """Delta maintenance of the scaled IVF serving layout: base (stored
+    layout minus the batch) ∪ delta (batch embedded and assigned to the
+    stored centroids) must equal a full corpus rebuild at the
+    corpus-adaptive geometry, per-cell count, id checksum and
+    first-component vector checksum (see ivf.incremental_ivf).
+    Reference analog: the upsert half of the index lifecycle the
+    reference delegates to Pinecone (ref:
     src/services/vector_engine/pinecone_manager.py:61-103)."""
     return incremental_ivf(spark, sf_dir, scaled=True)
 
 
-@register("q_ivf_layout_stats", oracle=_ivf_layout_stats_oracle())
+@register("q_ivf_layout_stats", oracle=ivf_layout_stats_oracle())
 def q_ivf_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-stats dashboard row for the scaled serving layout: trained
     geometry (cells, nprobe, probe fraction) + measured cell population
@@ -2954,120 +2306,39 @@ def q_ivf_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_layout_stats(spark, sf_dir)
 
 
-@register("q_ivf_cell_psi", oracle=_ivf_cell_psi_oracle())
+@register("q_ivf_cell_psi", oracle=ivf_cell_psi_oracle())
 def q_ivf_cell_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-drift half of the IVF retrain policy: +0.5-smoothed PSI
     between the stored layout's build-assignment cell histogram and an
-    incoming batch broadcast-assigned to the SAME stored centroids —
-    one (cells, n_base, n_batch, psi) row, metadata-class cost (see
-    ivf_cell_psi for the small-batch gating discipline)."""
+    incoming batch assigned to the same stored centroids, one (cells,
+    n_base, n_batch, psi) row (see ivf.ivf_cell_psi for the small-batch
+    gating discipline)."""
     return ivf_cell_psi(spark, sf_dir)
 
 
-@register("q_stream_ivf_maintenance", oracle=_inc_ivf_oracle(scaled=True))
+@register("q_stream_ivf_maintenance", oracle=incremental_ivf_oracle(scaled=True))
 def q_stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF delta maintenance as a Structured Stream: landing dir →
     availableNow micro-batches → foreachBatch embed + assign +
-    partitioned append. The final applied layout's per-cell checksums
-    equal the FULL-REBUILD oracle whatever the micro-batch split —
-    batch boundaries provably invisible to readers (see
-    stream_ivf_maintenance)."""
+    partitioned append. The applied layout's per-cell checksums equal
+    the full-rebuild oracle whatever the micro-batch split (see
+    ivf.stream_ivf_maintenance)."""
     return stream_ivf_maintenance(spark, sf_dir)
 
 
-#: Victim rule for the lifecycle roundtrip row: multiples of 29 (base
-#: snapshot members at test scales) PLUS doc 26 = 2·13 — a guaranteed
-#: member of the appended batch (doc_id % 13 == 0) at every scale, so
-#: the delete provably reaches rows the append just wrote.
-_LIFECYCLE_DEL_MOD = 29
-_LIFECYCLE_DEL_BATCH_DOC = 26
-
-
-def _ivf_lifecycle_oracle() -> str:
-    """Full-rebuild oracle for the CRUD roundtrip: train the scaled
-    geometry on the whole corpus, assign every doc, REMOVE the victim
-    set, aggregate per cell — the end state the engine must reach by
-    physically appending, deleting, and compacting the stored layout.
-    Compaction is content-neutral by contract, so it has no term here
-    (its file-count effect is pinned separately in tests)."""
-    from ..functions.embed import embed_subquery_sql
-    from .clustering import kmeans_sql_rounds_ctes
-
-    dv = embed_subquery_sql("documents", "doc_id", "text")
-    vx_body = f"""
-  SELECT id AS vec_id, embedding AS x,
-         list_dot_product(embedding, embedding) AS xx
-  FROM (SELECT id, embedding FROM {dv})
-"""
-    return f"""
-WITH {kmeans_sql_rounds_ctes(vx_body, _IVF_CELLS_SQL_SCALED)}
-SELECT CAST(cid AS BIGINT) AS cell,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(vec_id) AS BIGINT) AS id_sum,
-       CAST(sum(CAST(round(x[1] * 1000000) AS BIGINT)) AS BIGINT) AS v1_micros
-FROM a2
-WHERE vec_id % {_LIFECYCLE_DEL_MOD} <> 0
-  AND vec_id <> {_LIFECYCLE_DEL_BATCH_DOC}
-GROUP BY cid
-"""
-
-
-@register("q_ivf_lifecycle_roundtrip", oracle=_ivf_lifecycle_oracle())
+@register("q_ivf_lifecycle_roundtrip", oracle=ivf_lifecycle_oracle())
 def q_ivf_lifecycle_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PHYSICAL index CRUD chain in one oracled row (r14 verdict
-    #2: append_ivf_delta / delete_from_ivf / compact_ivf_cells were
-    content-pinned in tests but had no cross-engine row): write the
-    base snapshot + append the batch (append_ivf_delta, scaled
-    geometry), DELETE a victim set that includes one appended doc
-    (semi-join locate → dynamic-overwrite rewrite of only the affected
-    cells → explicit emptied-cell drop), COMPACT the cells the append
-    fragmented (file-count flag → rewrite of only flagged cells), then
-    emit the layout's per-cell (count, id checksum, first-component
-    vector checksum) table. The oracle reaches the same end state from
-    the opposite direction — a full corpus retrain minus the victims —
-    so one hash-green row proves the whole verb chain cross-engine.
-
-    Scale: each verb's cost is bounded by what it touches — append ∝
-    batch, delete ∝ affected cells (≤|victims| dirs of ~√N rows each),
-    compaction ∝ flagged cells — never a full-layout rewrite; the
-    final report is the ≤cells-row aggregate every stats query pays.
-    Runs against a TAGGED COPY of the serving layout (append_ivf_delta
-    isolation), so the registered row can never mutate what other
-    queries probe. Reference analog: the upsert/delete index verbs the
-    reference delegates to Pinecone (ref:
+    """The physical index CRUD chain in one oracled row: append, delete
+    a victim set that includes one appended doc, compact, then the
+    per-cell checksums (see ivf.ivf_lifecycle_roundtrip). The oracle
+    reaches the same end state from the opposite direction, a full
+    corpus retrain minus the victims, so one matching row proves the
+    whole verb chain cross-engine. It runs on a tagged copy of the
+    serving layout, so it never mutates what other queries probe.
+    Reference analog: the upsert/delete index verbs the reference
+    delegates to Pinecone (ref:
     src/services/vector_engine/pinecone_manager.py:61-166)."""
-    victims = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(
-            (F.col("doc_id") % _LIFECYCLE_DEL_MOD == 0)
-            | (F.col("doc_id") == _LIFECYCLE_DEL_BATCH_DOC)
-        )
-    )
-    path = append_ivf_delta(spark, sf_dir, scaled=True)
-    delete_from_ivf(spark, path, victims)
-    # Threshold 1: flags exactly the cells the append fragmented (2
-    # files) that the delete didn't already rewrite back to 1.
-    compact_ivf_cells(spark, path, max_files_per_cell=1)
-    return (
-        read_artifact(spark, path)
-        .groupBy("cell")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("doc_id").cast("long").alias("id_sum"),
-            F.sum(
-                F.round(F.element_at(F.col("dv"), 1) * 1_000_000).cast("long")
-            )
-            .cast("long")
-            .alias("v1_micros"),
-        )
-        .select(
-            F.col("cell").cast("long").alias("cell"),
-            "n_docs",
-            "id_sum",
-            "v1_micros",
-        )
-    )
+    return ivf_lifecycle_roundtrip(spark, sf_dir)
 
 
 @register("q_vector_topk_published", oracle=_published_topk_oracle())

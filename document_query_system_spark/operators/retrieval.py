@@ -15,7 +15,7 @@ way:
 - the ranking: ``top_n``, per query by (score desc, id asc);
 - the exact probe: ``exact_probe``, the stored document index crossed
   with the broadcast question batch;
-- the IVF probe over any ``api.ensure_ivf`` layout: ``ivf_cell_choice``
+- the IVF probe over any ``ivf.ensure_ivf`` layout: ``ivf_cell_choice``
   ranks each query's cells, ``ivf_probe_fold`` collects that ranking
   into plan-time literals, and ``ivf_cell_scan`` reads only those
   cells.
@@ -60,6 +60,24 @@ def keyword_score(words: Column, text_lc: Column) -> Column:
     n = F.size(words)
     matches = F.size(F.filter(words, lambda w: text_lc.contains(w)))
     return F.when(n > 0, matches.cast("double") / n).otherwise(F.lit(0.0))
+
+
+def question_words_sql(q: str) -> str:
+    """``question_words`` as a DuckDB expression over the SQL
+    expression ``q``: the oracles split words as the engine does."""
+    return rf"list_filter(regexp_split_to_array(lower({q}), '\s+'), w -> w <> '')"
+
+
+def keyword_score_sql(q: str, text_lc: str) -> str:
+    """``keyword_score`` as a DuckDB expression, unrounded: the share of
+    ``q``'s words contained in ``text_lc``, 0.0 for a question without
+    words."""
+    words = question_words_sql(q)
+    return (
+        f"CASE WHEN len({words}) = 0 THEN 0.0 "
+        f"ELSE CAST(len(list_filter({words}, w -> contains({text_lc}, w))) AS DOUBLE)"
+        f" / len({words}) END"
+    )
 
 
 def top_n(

@@ -23,8 +23,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.tables import load, spread
-from .retrieval import keyword_score, question_words, top_n
+from ..sources.tables import load
+from ..sources.tmputil import read_artifact
+from .retrieval import keyword_score, keyword_score_sql, question_words, top_n
 
 # Golden question set + constants live in operators/questions.py (a
 # registration-free module) so other registering modules can import
@@ -44,17 +45,14 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/main.py:137-145 semantics), as higher-order array functions
     inside whole-stage codegen, no Python UDF.
 
-    The documents scan is spread, or a small Parquet file would score
-    every (question, doc) pair on one core. lower(text) is staged below
-    the join, once per document, and the question words once on the
-    broadcast side: inlined into the filter lambda, the lower-casing
-    would run once per word per pair. The join between the projections
-    keeps CollapseProject from re-inlining them."""
-    docs = spread(load(spark, sf_dir, "documents")).select(
-        "doc_id",
-        F.substring("text", 1, SNIPPET_LEN).alias("snippet"),
-        F.lower(F.col("text")).alias("__text_lc"),
-    )
+    The documents side is the stored keyword table
+    (``api.ensure_keyword_table``: doc_id, snippet and the lower-cased
+    text, written once per session as several files), so a call neither
+    lower-cases nor re-spreads the corpus; the question words are split
+    once, on the broadcast side."""
+    from ..api import ensure_keyword_table
+
+    docs = read_artifact(spark, ensure_keyword_table(spark, sf_dir))
     q = F.broadcast(
         questions_df(spark).select(
             "question_id",
@@ -66,7 +64,7 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         "question_id",
         "question_text",
         "doc_id",
-        keyword_score(F.col("__qwords"), F.col("__text_lc")).alias("score"),
+        keyword_score(F.col("__qwords"), F.col("text_lc")).alias("score"),
         "snippet",
     )
 
@@ -84,16 +82,11 @@ def keyword_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     return top_n(_scored(spark, sf_dir), k, "score")
 
 
-_question_values = question_values_sql  # historical name, kept for callers
-
-
 _SCORED_CTE = f"""
-WITH {_question_values()},
+WITH {question_values_sql()},
 scored AS (
   SELECT q.question_id, q.question_text, d.doc_id,
-         CAST(len(list_filter(string_split(lower(q.question_text), ' '),
-                              w -> contains(lower(d.text), w))) AS DOUBLE)
-           / len(string_split(lower(q.question_text), ' ')) AS score,
+         {keyword_score_sql("q.question_text", "lower(d.text)")} AS score,
          substr(d.text, 1, {SNIPPET_LEN}) AS snippet
   FROM questions q CROSS JOIN documents d
 )

@@ -48,12 +48,13 @@ def _assert_recorded_read_matches_inference(spark, path):
 
 def _artifact(spark, name):
     from document_query_system_spark import api
+    from document_query_system_spark.operators.ivf import ensure_ivf
 
     if name == "flat_index":
         return api.ensure_vector_index(spark, SF_DIR)
     if name == "keyword_table":
         return api.ensure_keyword_table(spark, SF_DIR)
-    layout, cents, _cells = api.ensure_vector_index_ivf_scaled(spark, SF_DIR)
+    layout, cents, _cells = ensure_ivf(spark, SF_DIR, "documents", True)
     return layout if name == "scaled_layout" else cents
 
 
@@ -68,8 +69,8 @@ def test_recorded_schema_matches_inference_through_ivf_maintenance(spark):
     """The applied layout after each write verb: append (base overwrite
     + batch append), delete (dynamic overwrite + emptied-cell drop) and
     compaction (dynamic overwrite)."""
-    from document_query_system_spark.operators.pipeline import (
-        _INC_LSH_MOD,
+    from document_query_system_spark.operators.ivf import (
+        DELTA_MOD,
         append_ivf_delta,
         compact_ivf_cells,
         delete_from_ivf,
@@ -79,7 +80,7 @@ def test_recorded_schema_matches_inference_through_ivf_maintenance(spark):
     _assert_recorded_read_matches_inference(spark, path)
     victims = (
         spark.read.parquet(path)
-        .filter(F.col("doc_id") % (2 * _INC_LSH_MOD) == 0)
+        .filter(F.col("doc_id") % (2 * DELTA_MOD) == 0)
         .select("doc_id")
     )
     assert delete_from_ivf(spark, path, victims)
@@ -138,7 +139,7 @@ def test_parquet_rows_equals_count(spark, name):
     if name == "embeddings_file":
         path = f"{SF_DIR}/embeddings.parquet"
     elif name == "applied_layout":
-        from document_query_system_spark.operators.pipeline import append_ivf_delta
+        from document_query_system_spark.operators.ivf import append_ivf_delta
 
         path = append_ivf_delta(spark, SF_DIR, scaled=True)
     else:

@@ -1,5 +1,5 @@
 """Pins for the IVF geometry rules (no Spark session needed): the
-corpus-adaptive cell count (api.ivf_cells_for — the rule BOTH engines
+corpus-adaptive cell count (ivf.ivf_cells_for — the rule BOTH engines
 derive independently, so its Python form must stay exactly
 max(16, ceil(sqrt(N)))) and the serving/mining probe-depth ratio the
 scaled constants encode."""
@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import math
 
-from document_query_system_spark.api import (
+from document_query_system_spark.operators.ivf import (
     IVF_CELLS,
     IVF_NPROBE,
     IVF_NPROBE_SCALED,

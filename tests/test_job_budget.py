@@ -40,7 +40,7 @@ def _builders(spark):
 def warm(spark):
     """One served round first, so every artifact is built, its schema
     recorded and the IVF probe literals folded."""
-    from document_query_system_spark.api import maintain_ivf_index
+    from document_query_system_spark.operators.ivf import maintain_ivf_index
 
     maintain_ivf_index(spark, SF_DIR, profile=_PROFILE)
     for build in _builders(spark).values():
@@ -55,7 +55,7 @@ def test_building_a_served_plan_starts_no_job(warm, kind):
 
 
 def test_maintenance_tick_without_batch_starts_no_job(warm):
-    from document_query_system_spark.api import maintain_ivf_index
+    from document_query_system_spark.operators.ivf import maintain_ivf_index
 
     out, n = count_jobs(
         warm, lambda: maintain_ivf_index(warm, SF_DIR, profile=_PROFILE)

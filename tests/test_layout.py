@@ -83,7 +83,7 @@ def test_ivf_layouts_partition_each_vector_exactly_once(spark):
     question/anchor."""
     import os
 
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         IVF_CELLS,
         IVF_NPROBE,
         ensure_ivf,
@@ -137,20 +137,20 @@ def test_ivf_layouts_partition_each_vector_exactly_once(spark):
 
 
 def test_incremental_ivf_append_equals_rebuild(spark, duck):
-    """The trained-IVF layout's delta path (pipeline.incremental_ivf —
+    """The trained-IVF layout's delta path (ivf.incremental_ivf —
     r12 registration pending, see its docstring): base-minus-batch ∪
     batch-assigned-to-STORED-centroids must equal the full-rebuild
     per-cell checksums the DuckDB oracle computes by retraining on
     the whole corpus — append ≡ rebuild while centroids are fixed."""
-    from document_query_system_spark.operators.pipeline import (
-        _inc_ivf_oracle,
+    from document_query_system_spark.operators.ivf import (
         incremental_ivf,
+        incremental_ivf_oracle,
     )
 
     got = sorted(
         tuple(r) for r in incremental_ivf(spark, SF_DIR).collect()
     )
-    want = sorted(tuple(r) for r in duck.execute(_inc_ivf_oracle()).fetchall())
+    want = sorted(tuple(r) for r in duck.execute(incremental_ivf_oracle()).fetchall())
     assert got == want
 
 
@@ -163,25 +163,25 @@ def test_incremental_ivf_scaled_append_equals_rebuild(spark, duck):
     greatest(16, ceil(sqrt(N))) cells. Until this round the
     production default's delta path was unexercised (only the
     fixed-16 geometry had the parity pin)."""
-    from document_query_system_spark.operators.pipeline import (
-        _inc_ivf_oracle,
+    from document_query_system_spark.operators.ivf import (
         incremental_ivf,
+        incremental_ivf_oracle,
     )
 
     got = sorted(
         tuple(r) for r in incremental_ivf(spark, SF_DIR, scaled=True).collect()
     )
     want = sorted(
-        tuple(r) for r in duck.execute(_inc_ivf_oracle(scaled=True)).fetchall()
+        tuple(r) for r in duck.execute(incremental_ivf_oracle(scaled=True)).fetchall()
     )
     assert got == want
 
 
 def test_ivf_retrain_trigger_boundaries():
-    """api.ivf_retrain_due — the stated retrain rule (r13 verdict #3):
+    """ivf.ivf_retrain_due — the stated retrain rule (r13 verdict #3):
     fires when ivf_cells_for(N_now) drifts ≥1.5× from the trained
     cell count, in either direction, and not before."""
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         IVF_RETRAIN_FACTOR,
         ivf_cells_for,
         ivf_retrain_due,
@@ -216,14 +216,14 @@ def test_ivf_scaled_layout_fresh_not_due(spark):
     count(documents) — equal only while the index is 1:1 with the
     corpus, so a future divergence must fail HERE, loudly, not as a
     confusing driver hash mismatch)."""
-    from document_query_system_spark.api import (
-        ensure_vector_index,
-        ensure_vector_index_ivf_scaled,
+    from document_query_system_spark.api import ensure_vector_index
+    from document_query_system_spark.operators.ivf import (
+        ensure_ivf,
         ivf_cells_for,
         ivf_retrain_due,
     )
 
-    _, _, cells = ensure_vector_index_ivf_scaled(spark, SF_DIR)
+    _, _, cells = ensure_ivf(spark, SF_DIR, "documents", True)
     n_index = spark.read.parquet(ensure_vector_index(spark, SF_DIR)).count()
     n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
     assert n_index == n_docs, "vector index no longer 1:1 with documents"
@@ -232,7 +232,7 @@ def test_ivf_scaled_layout_fresh_not_due(spark):
 
 
 def test_append_ivf_delta_physical_layout(spark, duck):
-    """The physical append (pipeline.append_ivf_delta): snapshot +
+    """The physical append (ivf.append_ivf_delta): snapshot +
     mode('append') into the same cell-partitioned tree must read back
     to exactly the full-rebuild per-cell checksums (same oracle as
     incremental_ivf — the applied layout IS the merged content), with
@@ -243,9 +243,9 @@ def test_append_ivf_delta_physical_layout(spark, duck):
 
     from pyspark.sql import functions as F
 
-    from document_query_system_spark.operators.pipeline import (
-        _inc_ivf_oracle,
+    from document_query_system_spark.operators.ivf import (
         append_ivf_delta,
+        incremental_ivf_oracle,
     )
 
     for scaled in (False, True):
@@ -275,7 +275,7 @@ def test_append_ivf_delta_physical_layout(spark, duck):
         )
         want = sorted(
             tuple(r)
-            for r in duck.execute(_inc_ivf_oracle(scaled=scaled)).fetchall()
+            for r in duck.execute(incremental_ivf_oracle(scaled=scaled)).fetchall()
         )
         assert got == want, f"scaled={scaled}: applied layout != rebuild"
         subdirs = {
@@ -287,18 +287,18 @@ def test_append_ivf_delta_physical_layout(spark, duck):
 
 
 def test_ivf_layout_stats_parity(spark, duck):
-    """The scaled-layout index-stats report (pipeline.ivf_layout_stats,
+    """The scaled-layout index-stats report (ivf.ivf_layout_stats,
     r15 registration candidate): the engine's one-row summary off the
     STORED layout must equal the DuckDB full-retrain oracle's — the
     geometry columns, the population spread, and the imbalance factor
     all cross-engine exact."""
-    from document_query_system_spark.operators.pipeline import (
-        _ivf_layout_stats_oracle,
+    from document_query_system_spark.operators.ivf import (
         ivf_layout_stats,
+        ivf_layout_stats_oracle,
     )
 
     got = [tuple(r) for r in ivf_layout_stats(spark, SF_DIR).collect()]
-    want = duck.execute(_ivf_layout_stats_oracle()).fetchall()
+    want = duck.execute(ivf_layout_stats_oracle()).fetchall()
     assert got == want
     (row,) = got
     cells_used, cells, nprobe, frac, n_vecs, mn, mx, avg, imb = row
@@ -307,7 +307,7 @@ def test_ivf_layout_stats_parity(spark, duck):
 
 
 def test_compact_ivf_cells_rewrites_only_flagged(spark):
-    """Small-file compaction (pipeline.compact_ivf_cells): after an
+    """Small-file compaction (ivf.compact_ivf_cells): after an
     append, the touched cells carry the snapshot's file plus the
     delta's — flag at max_files_per_cell=1, compact, and require (a)
     content byte-unchanged per cell, (b) exactly one parquet file in
@@ -317,7 +317,7 @@ def test_compact_ivf_cells_rewrites_only_flagged(spark):
 
     from pyspark.sql import functions as F
 
-    from document_query_system_spark.operators.pipeline import (
+    from document_query_system_spark.operators.ivf import (
         append_ivf_delta,
         compact_ivf_cells,
     )
@@ -364,20 +364,20 @@ def test_compact_ivf_cells_rewrites_only_flagged(spark):
 
 
 def test_ivf_cell_psi_parity(spark, duck):
-    """The cell-distribution drift metric (pipeline.ivf_cell_psi, r15
+    """The cell-distribution drift metric (ivf.ivf_cell_psi, r15
     registration candidate): the engine's stored-layout histograms
     must reproduce the DuckDB full-retrain PSI exactly — geometry,
     split sizes, and the smoothed statistic. The fixture batch is a
     uniform doc_id slice of the SAME corpus, so the measured PSI must
     also sit far below the 0.25 drift alarm (a sanity pin on the
     metric's meaning, not just its arithmetic)."""
-    from document_query_system_spark.operators.pipeline import (
-        _ivf_cell_psi_oracle,
+    from document_query_system_spark.operators.ivf import (
         ivf_cell_psi,
+        ivf_cell_psi_oracle,
     )
 
     got = [tuple(r) for r in ivf_cell_psi(spark, SF_DIR).collect()]
-    want = duck.execute(_ivf_cell_psi_oracle()).fetchall()
+    want = duck.execute(ivf_cell_psi_oracle()).fetchall()
     assert got == want
     (row,) = got
     cells, n_base, n_batch, psi = row
@@ -397,15 +397,15 @@ def test_ivf_cell_psi_parity(spark, duck):
 
 
 def test_stream_ivf_maintenance_equals_rebuild(spark, duck):
-    """The streaming form of the delta path (pipeline.
+    """The streaming form of the delta path (ivf.
     stream_ivf_maintenance, r15 registration candidate): four landing
     files drive multiple availableNow micro-batches, each
     foreachBatch-appended into the cell tree — the final layout's
     per-cell checksums must equal the DuckDB FULL-REBUILD oracle at
     the scaled geometry, proving batch boundaries cannot show in the
     applied index."""
-    from document_query_system_spark.operators.pipeline import (
-        _inc_ivf_oracle,
+    from document_query_system_spark.operators.ivf import (
+        incremental_ivf_oracle,
         stream_ivf_maintenance,
     )
 
@@ -413,13 +413,13 @@ def test_stream_ivf_maintenance_equals_rebuild(spark, duck):
         tuple(r) for r in stream_ivf_maintenance(spark, SF_DIR).collect()
     )
     want = sorted(
-        tuple(r) for r in duck.execute(_inc_ivf_oracle(scaled=True)).fetchall()
+        tuple(r) for r in duck.execute(incremental_ivf_oracle(scaled=True)).fetchall()
     )
     assert got == want
 
 
 def test_delete_from_ivf_restores_base_and_drops_empty_cells(spark):
-    """The delete verb (pipeline.delete_from_ivf): removing the
+    """The delete verb (ivf.delete_from_ivf): removing the
     appended batch from the applied layout must restore exactly the
     base snapshot's per-cell checksums (over- or under-deletion both
     fail), rewriting only the cells the victims lived in; a
@@ -430,11 +430,9 @@ def test_delete_from_ivf_restores_base_and_drops_empty_cells(spark):
 
     from pyspark.sql import functions as F
 
-    from document_query_system_spark.api import (
-        ensure_vector_index_ivf_scaled,
-    )
-    from document_query_system_spark.operators.pipeline import (
-        _INC_LSH_MOD,
+    from document_query_system_spark.operators.ivf import ensure_ivf
+    from document_query_system_spark.operators.ivf import (
+        DELTA_MOD,
         append_ivf_delta,
         delete_from_ivf,
     )
@@ -451,7 +449,7 @@ def test_delete_from_ivf_restores_base_and_drops_empty_cells(spark):
     before_files = files_by_cell()
     batch_ids = (
         spark.read.parquet(path)
-        .filter(F.col("doc_id") % _INC_LSH_MOD == 0)
+        .filter(F.col("doc_id") % DELTA_MOD == 0)
         .select("doc_id")
     )
     affected = delete_from_ivf(spark, path, batch_ids)
@@ -466,11 +464,11 @@ def test_delete_from_ivf_restores_base_and_drops_empty_cells(spark):
         )
         .collect()
     )
-    layout, _, _ = ensure_vector_index_ivf_scaled(spark, SF_DIR)
+    layout, _, _ = ensure_ivf(spark, SF_DIR, "documents", True)
     want = sorted(
         tuple(r)
         for r in spark.read.parquet(layout)
-        .filter(F.col("doc_id") % _INC_LSH_MOD != 0)
+        .filter(F.col("doc_id") % DELTA_MOD != 0)
         .groupBy("cell")
         .agg(
             F.count("*").cast("long").alias("n"),
@@ -503,7 +501,7 @@ def test_delete_from_ivf_restores_base_and_drops_empty_cells(spark):
 
 
 def test_index_version_publish_resolve_rollback(spark):
-    """The blue/green pointer (api.publish_index_version /
+    """The blue/green pointer (ivf.publish_index_version /
     current_index_version / maintain_ivf_index): the first maintenance
     tick publishes v1 at the scaled geometry; the next tick, with no
     drift, reports 'append' against the same version; a manual publish
@@ -512,7 +510,7 @@ def test_index_version_publish_resolve_rollback(spark):
     versions only move forward)."""
     import os
 
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         current_index_version,
         ensure_ivf,
         ivf_cells_for,
@@ -559,20 +557,20 @@ def test_index_version_publish_resolve_rollback(spark):
 
 
 def test_maintain_ivf_index_republishes_on_drift(spark):
-    """The drift → rebuild branch of api.maintain_ivf_index: publish a
+    """The drift → rebuild branch of ivf.maintain_ivf_index: publish a
     deliberately stale geometry (5 trained cells — what a corpus ~25×
     smaller would have trained), then tick — ivf_retrain_due(5, N)
     fires and the tick republishes the freshly trained scaled layout
     at ivf_cells_for(N), version moving forward."""
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         current_index_version,
-        ensure_vector_index_ivf_scaled,
+        ensure_ivf,
         ivf_cells_for,
         maintain_ivf_index,
         publish_index_version,
     )
 
-    layout, cents, _cells = ensure_vector_index_ivf_scaled(spark, SF_DIR)
+    layout, cents, _cells = ensure_ivf(spark, SF_DIR, "documents", True)
     v_stale = publish_index_version(spark, SF_DIR, layout, cents, 5)
     out = maintain_ivf_index(spark, SF_DIR)
     assert out["action"] == "publish", out
@@ -591,10 +589,10 @@ def test_index_version_log_and_rollback_mechanism(spark):
     above stay order-independent."""
     import os
 
-    from document_query_system_spark.api import (
-        _manifest_dir,
+    from document_query_system_spark.operators.ivf import (
         current_index_version,
         list_index_versions,
+        _manifest_dir,
         publish_index_version,
         rollback_index_version,
     )
@@ -627,7 +625,7 @@ def test_index_version_log_and_rollback_mechanism(spark):
 
 
 def test_gc_index_versions_retention_rails(spark):
-    """Retention (api.gc_index_versions): prunes log entries beyond
+    """Retention (ivf.gc_index_versions): prunes log entries beyond
     keep_last and deletes layout dirs referenced ONLY by pruned
     entries — with the three rails live: a path a KEPT version still
     references survives its pruned twin; an out-of-root path is
@@ -636,9 +634,9 @@ def test_gc_index_versions_retention_rails(spark):
     import os
     import tempfile
 
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         current_index_version,
-        ensure_vector_index_ivf_scaled,
+        ensure_ivf,
         gc_index_versions,
         list_index_versions,
         publish_index_version,
@@ -660,8 +658,8 @@ def test_gc_index_versions_retention_rails(spark):
     l1, c1, l3, c3, l4, c4 = mkdirs("l1", "c1", "l3", "c3", "l4", "c4")
     outside = tempfile.mkdtemp(prefix="dqs_outside_")
     # The REAL scaled layout: its builder memo is live this session.
-    live_layout, live_cents, live_cells = ensure_vector_index_ivf_scaled(
-        spark, SF_DIR
+    live_layout, live_cents, live_cells = ensure_ivf(
+        spark, SF_DIR, "documents", True
     )
     publish_index_version(spark, SF_DIR, l1, c1, 16, profile=prof)
     publish_index_version(spark, SF_DIR, outside, c1, 16, profile=prof)
@@ -739,7 +737,7 @@ def test_published_topk_follows_pointer_swap(spark):
     profile ('t_swap') so the parity row above stays pristine."""
     from pyspark.sql import functions as F
 
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         current_index_version,
         publish_index_version,
         rollback_index_version,
@@ -790,7 +788,7 @@ def test_published_topk_follows_pointer_swap(spark):
 
 def test_maintain_tick_psi_branch_and_retention(spark):
     """Both halves of the retrain policy plus retention in ONE tick
-    (api.maintain_ivf_index with batch/gc_keep): a same-distribution
+    (ivf.maintain_ivf_index with batch/gc_keep): a same-distribution
     batch records a tiny PSI and appends; a collapsed batch (every
     vector identical → one cell) fires the 0.25 alarm and republishes
     — but ONLY when the batch clears the 10·cells gate (the measured
@@ -798,7 +796,7 @@ def test_maintain_tick_psi_branch_and_retention(spark):
     superseded log entries from the same call. Own profile."""
     from pyspark.sql import functions as F
 
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         IVF_PSI_MIN_PER_CELL,
         current_index_version,
         maintain_ivf_index,
@@ -845,10 +843,10 @@ def test_maintain_tick_psi_branch_and_retention(spark):
     assert out4b["version"] == out1["version"]
     # A publish that actually MOVES the triple (the fixed-floor
     # layout) gives retention something to prune from the tick.
-    from document_query_system_spark.api import ensure_ivf
+    from document_query_system_spark.operators.ivf import ensure_ivf
 
     alt_layout, alt_cents, _ = ensure_ivf(spark, SF_DIR, "documents", False)
-    from document_query_system_spark.api import publish_index_version
+    from document_query_system_spark.operators.ivf import publish_index_version
 
     v2 = publish_index_version(
         spark, SF_DIR, alt_layout, alt_cents, 16, profile=prof
@@ -875,7 +873,7 @@ def test_manifest_pointer_flip_is_atomic_under_read_load(spark):
     catalog's CAS). Own profile."""
     import threading
 
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         current_index_version,
         publish_index_version,
     )
@@ -930,7 +928,7 @@ def test_published_cache_invalidates_on_version_flip(spark):
     stale key. Own profile."""
     from pyspark.sql import functions as F
 
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         current_index_version,
         publish_index_version,
         rollback_index_version,
@@ -988,7 +986,7 @@ def test_published_topk_time_travel_reads_pinned_version(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         current_index_version,
         publish_index_version,
     )
@@ -1053,7 +1051,7 @@ def test_gc_protects_flag_memo_paths(spark):
     hands out again."""
     import os
 
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         ensure_ivf,
         gc_index_versions,
         publish_index_version,
@@ -1084,6 +1082,7 @@ def _path_builders():
     """Every builder whose memo result is a path or carries paths, as
     name -> fn(spark, sf_dir) returning the paths it hands out."""
     from document_query_system_spark import api
+    from document_query_system_spark.operators.ivf import ensure_ivf
     from document_query_system_spark.sources import (
         extraction,
         http_ingest,
@@ -1096,7 +1095,7 @@ def _path_builders():
         return lambda spark, d: [fn(spark, d)]
 
     def ivf(table, scaled):
-        return lambda spark, d: list(api.ensure_ivf(spark, d, table, scaled)[:2])
+        return lambda spark, d: list(ensure_ivf(spark, d, table, scaled)[:2])
 
     out = {
         "vector_index": one(api.ensure_vector_index),
@@ -1132,7 +1131,7 @@ def test_gc_protects_builder_memo_paths(spark, name):
     disk, because the memo hands the same path out again."""
     import os
 
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         gc_index_versions,
         publish_index_version,
     )
@@ -1159,7 +1158,7 @@ def test_publish_concurrent_writers_mint_distinct_versions(spark):
     import os
     import threading
 
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         current_index_version,
         list_index_versions,
         publish_index_version,
@@ -1205,10 +1204,10 @@ def test_gc_protect_all_on_unreadable_foreign(spark):
     import json
     import os
 
-    from document_query_system_spark.api import (
-        _manifest_dir,
+    from document_query_system_spark.operators.ivf import (
         gc_index_versions,
         list_index_versions,
+        _manifest_dir,
         publish_index_version,
     )
     from document_query_system_spark.sources.tmputil import tmp_path
@@ -1276,7 +1275,7 @@ def test_maintain_batch_column_resolution(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         current_index_version,
         maintain_ivf_index,
     )
@@ -1321,10 +1320,10 @@ def test_gc_sweeps_stale_zero_byte_claims(spark):
     import os
     import time
 
-    from document_query_system_spark.api import (
-        _manifest_dir,
+    from document_query_system_spark.operators.ivf import (
         gc_index_versions,
         list_index_versions,
+        _manifest_dir,
         publish_index_version,
     )
     from document_query_system_spark.sources.tmputil import tmp_path
@@ -1356,7 +1355,7 @@ def test_maintain_batch_two_named_ids_is_ambiguous(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from document_query_system_spark.api import (
+    from document_query_system_spark.operators.ivf import (
         current_index_version,
         maintain_ivf_index,
     )

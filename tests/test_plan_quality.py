@@ -397,25 +397,21 @@ def test_audit_is_clean(spark):
 
 
 def test_keyword_score_staging_survives_optimizer(spark):
-    """The r4 verdict's What's-wrong #3: lower(text) must be computed
-    ONCE per document BELOW the broadcast cross join — inlined into
-    the per-question-word filter lambda it re-lowercases the full text
-    |words|× per (question, doc) pair (measured ~10× on
-    q_answer_summary). Pin the staged shape: in the optimized plan the
-    lower() call appears exactly once on the document side, in a
-    Project under the join, not inside the lambda above it."""
+    """lower(text) must never run inside the per-question-word filter
+    lambda, where it re-lowercases the full text |words|× per
+    (question, doc) pair (measured ~10× on q_answer_summary). The
+    documents side reads the stored keyword table's lower-cased
+    ``text_lc`` (api.ensure_keyword_table), so the optimized plan lowers
+    no document text at all and the lambda above the join tests
+    containment in the stored column."""
     df = all_specs()["q_cross_score"].fn(spark, SF_DIR)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "lower(text" not in plan, plan
     join_pos = plan.index("Join")
-    # Exactly one lower() over the document text column in the whole
-    # plan (the question-side lower is a different, tiny expression
-    # also staged below the join — count document-text lowers only).
-    doc_lowers = [
-        i for i in range(len(plan)) if plan.startswith("lower(text", i)
-    ]
-    assert len(doc_lowers) == 1, plan
-    # ...and it sits BELOW the join (later in the printed tree = child).
-    assert doc_lowers[0] > join_pos, plan
+    # The stored column is scanned BELOW the join (later in the printed
+    # tree = child) and read by the score above it.
+    assert plan.rindex("text_lc") > join_pos, plan
+    assert plan.index("text_lc") < join_pos, plan
 
 
 def test_scd2_single_shuffle(spark):
@@ -691,7 +687,7 @@ def test_mmr_ivf_serving_probes_scaled_layout_statically(spark):
     cells as PartitionFilters on the cells-tagged layout, no corpus
     embed, no cross join — the calibration changes only WHICH cell
     directories are listed, never the plan shape."""
-    from document_query_system_spark.api import IVF_NPROBE_SCALED
+    from document_query_system_spark.operators.ivf import IVF_NPROBE_SCALED
     from document_query_system_spark.operators.pipeline import (
         mmr_ivf_pool_pairs,
     )
@@ -754,16 +750,14 @@ def test_retrieval_never_embeds_corpus(name, spark):
 
 
 def test_ivf_layout_stats_reads_no_vector_bytes(spark):
-    """The scaled-layout index-stats report (pipeline.ivf_layout_stats,
+    """The scaled-layout index-stats report (ivf.ivf_layout_stats,
     r15 registration candidate) must compute its per-cell counts from
     the PARTITION COLUMN ALONE: the layout scan's ReadSchema is empty
     (cell is a directory key, dv/doc_id never leave the reader), and
     the whole report is two exchanges (per-cell partial counts, then
     the single summary row) — at 5B vectors the shuffle carries ≤cells
     longs, never a vector byte."""
-    from document_query_system_spark.operators.pipeline import (
-        ivf_layout_stats,
-    )
+    from document_query_system_spark.operators.ivf import ivf_layout_stats
 
     rep = plan_report(ivf_layout_stats(spark, SF_DIR))
     locs = [s.get("location", "") for s in rep.scans]

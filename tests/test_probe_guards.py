@@ -31,7 +31,7 @@ def _patched(cache: dict, key, value):
 def test_ivf_pool_empty_probe_returns_empty_pool(spark):
     from document_query_system_spark.operators import pipeline as P
 
-    from document_query_system_spark.api import IVF_NPROBE, ensure_ivf
+    from document_query_system_spark.operators.ivf import IVF_NPROBE, ensure_ivf
 
     # The session-memo key retrieval.ivf_probe_fold records under:
     # (kind, sf_dir, table, centroids path, nprobe).
@@ -53,7 +53,7 @@ def test_ivf_pool_empty_probe_returns_empty_pool(spark):
 
 
 def test_triplet_pool_empty_probe_returns_empty_pool(spark):
-    from document_query_system_spark.api import ensure_ivf
+    from document_query_system_spark.operators.ivf import ensure_ivf
     from document_query_system_spark.functions import vector as V
 
     cents = ensure_ivf(spark, SF_DIR, "embeddings", False)[1]
@@ -136,7 +136,10 @@ def test_serving_probe_fold_is_bounded_by_calibrated_depth(spark):
     the bounded-driver-collect contract every literal-fold probe
     carries — and each question must probe exactly min(nprobe, cells)
     distinct cells of the scaled geometry."""
-    from document_query_system_spark.api import IVF_NPROBE_SCALED, ensure_ivf
+    from document_query_system_spark.operators.ivf import (
+        IVF_NPROBE_SCALED,
+        ensure_ivf,
+    )
     from document_query_system_spark.operators.retrieval import (
         golden_probe_queries,
         ivf_probe_fold,

@@ -2,7 +2,8 @@
 (``operators/retrieval.keyword_score``): question words are the
 reference's ``question.lower().split()`` — whitespace runs, tabs and
 leading or trailing blanks never make a word — and a question with no
-words scores 0.0 instead of failing the batch on a division by zero."""
+words scores 0.0 instead of failing the batch on a division by zero.
+The DuckDB oracles split with the same rule (``question_words_sql``)."""
 
 from __future__ import annotations
 
@@ -23,6 +24,18 @@ def _answers(spark, questions):
 )
 def test_keyword_words_split_on_whitespace_runs(spark, ragged):
     assert _answers(spark, [(1, ragged)]) == _answers(spark, [(1, "spark merge sort")])
+    # The DuckDB oracles split with the same rule.
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from document_query_system_spark.operators.retrieval import (
+        question_words,
+        question_words_sql,
+    )
+
+    got = duckdb.connect().execute(f"SELECT {question_words_sql('$1')}", [ragged])
+    want = spark.range(1).select(question_words(F.lit(ragged))).first()[0]
+    assert got.fetchone()[0] == want == ["spark", "merge", "sort"]
 
 
 def test_keyword_question_without_words_scores_zero(spark):

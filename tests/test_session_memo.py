@@ -30,13 +30,12 @@ def _anchor_count(spark, sf_dir):
 def _ivf_fold(spark, sf_dir, table, scaled):
     """The IVF probe fold for a table's standard query set: the golden
     questions for documents, the mining anchors for embeddings."""
-    from document_query_system_spark import api
     from document_query_system_spark.functions import vector
-    from document_query_system_spark.operators import retrieval
+    from document_query_system_spark.operators import ivf, retrieval
 
-    _, cents, _ = api.ensure_ivf(spark, sf_dir, table, scaled)
+    _, cents, _ = ivf.ensure_ivf(spark, sf_dir, table, scaled)
     if table == "documents":
-        nprobe = api.IVF_NPROBE
+        nprobe = ivf.IVF_NPROBE
         queries = lambda: retrieval.golden_probe_queries(spark)  # noqa: E731
     else:
         nprobe = vector._TRIPLET_NPROBE
@@ -48,6 +47,7 @@ def _memo_builders():
     """name -> fn(spark, sf_dir) for every builder routed through the
     memo."""
     from document_query_system_spark import api
+    from document_query_system_spark.operators import ivf
     from document_query_system_spark.sources import (
         extraction,
         http_ingest,
@@ -81,7 +81,7 @@ def _memo_builders():
     for table in ("documents", "embeddings"):
         for scaled in (False, True):
             out[f"ivf_{table}{'_scaled' if scaled else ''}"] = (
-                lambda s, d, t=table, sc=scaled: api.ensure_ivf(s, d, t, sc)
+                lambda s, d, t=table, sc=scaled: ivf.ensure_ivf(s, d, t, sc)
             )
     for fmt in ("csv", "json", "orc", "xml"):
         out[f"format_{fmt}"] = (

@@ -22,16 +22,14 @@ from document_query_system_spark.session import get_spark  # noqa: E402
 
 
 def report(spark, sf_dir: str, depths: list[int]) -> dict:
-    from document_query_system_spark.api import (
-        ensure_vector_index_ivf_scaled,
-    )
+    from document_query_system_spark.operators.ivf import ensure_ivf
     from document_query_system_spark.operators.pipeline import (
         _MMR_POOL,
         exact_pool_topn,
         mmr_ivf_pool_pairs,
     )
 
-    _, _, cells = ensure_vector_index_ivf_scaled(spark, sf_dir)
+    _, _, cells = ensure_ivf(spark, sf_dir, "documents", True)
     exact = {}
     for r in exact_pool_topn(spark, sf_dir, _MMR_POOL).collect():
         exact.setdefault(r.question_id, set()).add(r.doc_id)

@@ -27,14 +27,16 @@ def pairs():
     """(name, engine_fn, oracle_sql) for each staged candidate —
     the same pairings as their tests in tests/test_layout.py."""
     from document_query_system_spark.operators.pipeline import (
-        _inc_ivf_oracle,
-        _ivf_cell_psi_oracle,
-        _ivf_layout_stats_oracle,
-        _published_topk_oracle,
-        incremental_ivf,
-        ivf_cell_psi,
-        ivf_layout_stats,
         published_ivf_topk,
+        _published_topk_oracle,
+    )
+    from document_query_system_spark.operators.ivf import (
+        incremental_ivf,
+        incremental_ivf_oracle,
+        ivf_cell_psi,
+        ivf_cell_psi_oracle,
+        ivf_layout_stats,
+        ivf_layout_stats_oracle,
         stream_ivf_maintenance,
     )
 
@@ -42,14 +44,14 @@ def pairs():
         (
             "q_incremental_ivf_scaled",
             lambda spark, sf: incremental_ivf(spark, sf, scaled=True),
-            _inc_ivf_oracle(scaled=True),
+            incremental_ivf_oracle(scaled=True),
         ),
-        ("q_ivf_layout_stats", ivf_layout_stats, _ivf_layout_stats_oracle()),
-        ("q_ivf_cell_psi", ivf_cell_psi, _ivf_cell_psi_oracle()),
+        ("q_ivf_layout_stats", ivf_layout_stats, ivf_layout_stats_oracle()),
+        ("q_ivf_cell_psi", ivf_cell_psi, ivf_cell_psi_oracle()),
         (
             "q_stream_ivf_maintenance",
             stream_ivf_maintenance,
-            _inc_ivf_oracle(scaled=True),
+            incremental_ivf_oracle(scaled=True),
         ),
         (
             "q_vector_topk_published",
