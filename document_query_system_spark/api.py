@@ -62,13 +62,19 @@ from .operators.questions import (
     GOLDEN_QUESTIONS,
     SNIPPET_LEN,
     TOP_K,
+    question_values_sql,
     question_vectors,
     questions_df,
 )
 from .operators.retrieval import (
+    N_PLANES,
+    N_TABLES,
+    exact_pool_sql,
     exact_probe,
+    golden_vectors_sql,
     keyword_score,
     keyword_score_sql,
+    lsh_tables,
     question_words,
     top_n,
     vector_score,
@@ -111,19 +117,15 @@ def ensure_vector_index_lsh(spark: SparkSession, sf_dir: str) -> str:
     once per (session, sf_dir): one row per (doc, hash table) with that
     table's 4-bit bucket id, written ``partitionBy(tbl, bucket)`` (48
     directories at the default 3-table x 4-plane config,
-    operators/similarity.PLANES). A probe's bucket equi-join then reads
+    ``retrieval.lsh_tables``). A probe's bucket equi-join then reads
     only the probed directories, N_TABLES bucket partitions of about
     N/2^planes vectors per question, instead of the full index. It is a
     projection of the stored index, never a re-embed; the price is an
     index N_TABLES times the plain one."""
-    from .operators.similarity import N_PLANES, N_TABLES, _bucket_expr
 
     def build() -> str:
         path = tmp_path("vector_index_lsh", dir_tag(sf_dir))
         idx = read_artifact(spark, ensure_vector_index(spark, sf_dir))
-        buckets = F.array(
-            *[_bucket_expr(F.col("dv"), t) for t in range(N_TABLES)]
-        )
         write_artifact(
             # Cluster rows by their target directory before the
             # partitioned write: without this every task writes a
@@ -131,11 +133,7 @@ def ensure_vector_index_lsh(spark: SparkSession, sf_dir: str) -> str:
             # tables x 2^planes count lets the write parallelize
             # (cluster_by_dirs).
             cluster_by_dirs(
-                idx.select(
-                    "doc_id",
-                    "dv",
-                    F.posexplode(buckets).alias("tbl", "bucket"),
-                ),
+                idx.select("doc_id", "dv", lsh_tables(F.col("dv"))),
                 N_TABLES * 2**N_PLANES,
                 "tbl",
                 "bucket",
@@ -431,24 +429,19 @@ def doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _api_oracle(method: str) -> str:
-    from .functions.embed import embed_subquery_sql
-
-    rows = ",\n      ".join(f"({i}, '{t}')" for i, t in GOLDEN_QUESTIONS)
     if method == "vector":
-        qv = embed_subquery_sql("questions", "question_id", "question_text")
-        dv = embed_subquery_sql("documents", "doc_id", "text")
+        head = golden_vectors_sql()
         scored = f"""
-qv AS (SELECT q.question_id, q.question_text, e.embedding AS qv
-       FROM {qv} e JOIN questions q ON e.id = q.question_id),
-dv AS (SELECT d.doc_id, e.embedding AS dv, substr(d.text, 1, {SNIPPET_LEN}) AS snippet
-       FROM {dv} e JOIN documents d ON e.id = d.doc_id),
 scored AS (
-  SELECT question_id, question_text, doc_id,
-         round(list_dot_product(qv.qv, dv.dv), 6) AS score, snippet
-  FROM qv CROSS JOIN dv
+  SELECT p.question_id, q.question_text, p.doc_id, p.rel AS score,
+         substr(d.text, 1, {SNIPPET_LEN}) AS snippet
+  FROM ({exact_pool_sql(TOP_K, "question_id, doc_id, rel")}) p
+  JOIN questions q USING (question_id)
+  JOIN documents d USING (doc_id)
 )"""
         tag = "vector_search"
     else:
+        head = f"WITH {question_values_sql()}"
         scored = f"""
 scored AS (
   SELECT q.question_id, q.question_text, d.doc_id,
@@ -457,9 +450,7 @@ scored AS (
   FROM questions q CROSS JOIN documents d
 )"""
         tag = "text_search_fallback"
-    return f"""
-WITH questions(question_id, question_text) AS (VALUES
-      {rows}),
+    return f"""{head},
 {scored},
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY question_id
@@ -482,24 +473,8 @@ _RRF_DEPTH = 50  # per-retriever candidate depth before fusion
 
 
 def _rrf_oracle() -> str:
-    from .functions.embed import embed_subquery_sql
-
-    rows = ",\n      ".join(f"({i}, '{t}')" for i, t in GOLDEN_QUESTIONS)
-    qv = embed_subquery_sql("questions", "question_id", "question_text")
-    dv = embed_subquery_sql("documents", "doc_id", "text")
-    return f"""
-WITH questions(question_id, question_text) AS (VALUES
-      {rows}),
-qv AS (SELECT q.question_id, e.embedding AS v FROM {qv} e
-       JOIN questions q ON e.id = q.question_id),
-dv AS (SELECT id AS doc_id, embedding AS v FROM {dv}),
-vec AS (
-  SELECT question_id, doc_id,
-         row_number() OVER (PARTITION BY question_id
-                            ORDER BY round(list_dot_product(qv.v, dv.v), 6) DESC,
-                                     doc_id) AS r
-  FROM qv CROSS JOIN dv
-),
+    return f"""{golden_vectors_sql()},
+vec AS (SELECT question_id, doc_id, rk AS r FROM ({exact_pool_sql(_RRF_DEPTH)})),
 kw AS (
   SELECT q.question_id, d.doc_id,
          row_number() OVER (PARTITION BY q.question_id
@@ -512,7 +487,7 @@ fused AS (
          coalesce(v.doc_id, k.doc_id) AS doc_id,
          round(coalesce(1.0 / ({_RRF_K} + v.r), 0)
                + coalesce(1.0 / ({_RRF_K} + k.r), 0), 6) AS rrf
-  FROM (SELECT * FROM vec WHERE r <= {_RRF_DEPTH}) v
+  FROM vec v
   FULL JOIN (SELECT * FROM kw WHERE r <= {_RRF_DEPTH}) k
     ON v.question_id = k.question_id AND v.doc_id = k.doc_id
 )

@@ -2,10 +2,9 @@
 query registrations (the registered vector queries live in
 functions/vector.py, which re-exports everything here).
 
-Split out so early-rotation modules (the api facade, corpus-hygiene
-operators) can use ``embed_df``/``dot`` without dragging vector.py's
-seven already-driver-verified registrations into their registry
-position — registration order is the driver's verification order.
+Split out so modules that do not register vector queries (the api
+facade, corpus-hygiene operators, the probes) can use
+``embed_df``/``dot`` without importing vector.py's registrations.
 
 Cosine similarity is a pure SQL expression over array<double> — dot
 product via zip_with + left-fold — so search plans stay in
@@ -380,10 +379,8 @@ def embed_sentence_transformers(
     return df.mapInPandas(gen, schema=schema + ", embedding array<double>")
 
 
-# Exact-top-k oracle SQL lives here (registration-free) so prefix
-# modules can cite it without importing functions/vector.py — whose
-# REGISTRATIONS would otherwise ride into the driver-coverage prefix
-# (registry._load_all order note).
+# Exact-top-k oracle SQL lives here (registration-free) so other
+# modules can cite it without importing functions/vector.py.
 _TOPK_K = 5  # ref: src/main.py:97 — top_k=5 vector search
 
 _VECTOR_TOPK_SQL = f"""

@@ -5,7 +5,7 @@ quantization, and the golden vector QA pipeline.
 
 The vector math + embedder implementations live in
 functions/embed.py (a registration-free module shared with the api
-facade and early-rotation operators); everything is re-exported here
+facade and other operators); everything is re-exported here
 so existing callers keep one import path.
 """
 
@@ -18,6 +18,8 @@ from ..registry import register
 from ..operators.ivf import IVF_CELLS, ensure_ivf, ivf_cells_sql
 from ..operators.questions import question_vectors
 from ..operators.retrieval import (
+    exact_pool_sql,
+    golden_vectors_sql,
     ivf_cell_choice,
     ivf_cell_scan,
     ivf_probe_fold,
@@ -330,26 +332,9 @@ _GOLDEN_SEARCH_TOP_K = 3
 
 
 def _golden_vector_search_sql() -> str:
-    from ..operators.questions import GOLDEN_QUESTIONS
-
-    rows = ",\n      ".join(f"({i}, '{t}')" for i, t in GOLDEN_QUESTIONS)
-    qv = embed_subquery_sql("questions", "question_id", "question_text")
-    dv = embed_subquery_sql("documents", "doc_id", "text")
-    return f"""
-WITH questions(question_id, question_text) AS (VALUES
-      {rows}),
-qv AS (SELECT id AS question_id, embedding AS v FROM {qv}),
-dv AS (SELECT id AS doc_id, embedding AS v FROM {dv}),
-scored AS (
-  SELECT qv.question_id, dv.doc_id,
-         round(list_dot_product(qv.v, dv.v), 6) AS cos_sim
-  FROM qv CROSS JOIN dv
-)
-SELECT question_id, doc_id, cos_sim
-FROM (SELECT *, row_number() OVER (PARTITION BY question_id
-                                   ORDER BY cos_sim DESC, doc_id) AS rn
-      FROM scored)
-WHERE rn <= {_GOLDEN_SEARCH_TOP_K}
+    return f"""{golden_vectors_sql()}
+SELECT question_id, doc_id, rel AS cos_sim
+FROM ({exact_pool_sql(_GOLDEN_SEARCH_TOP_K, "question_id, doc_id, rel")})
 """
 
 

@@ -1002,19 +1002,17 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _emb_lsh_sql() -> str:
-    from .similarity import N_TABLES, _bucket_list_sql
+    from .retrieval import lsh_tables_sql
 
     return f"""
 WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-bl AS (SELECT vec_id, label, v, {_bucket_list_sql('v')} AS bl FROM e),
-bk AS MATERIALIZED (SELECT vec_id, label, v, t.i AS tbl, bl[CAST(t.i AS INT) + 1] AS bkt
-       FROM bl CROSS JOIN generate_series(0, {N_TABLES - 1}) t(i))
+bk AS MATERIALIZED ({lsh_tables_sql('e', 'vec_id, label')})
 SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b,
        round(list_dot_product(a.v, b.v)
              / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))),
              6) AS cos_sim
 FROM bk a JOIN bk b
-  ON a.label = b.label AND a.tbl = b.tbl AND a.bkt = b.bkt
+  ON a.label = b.label AND a.tbl = b.tbl AND a.bucket = b.bucket
  AND a.vec_id < b.vec_id
 WHERE list_dot_product(a.v, b.v)
       / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) > 0.4
@@ -1030,17 +1028,14 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket width, not the block size — the shape that survives blocks
     growing with the corpus. Shuffle = one (label, table, bucket)
     equi-join; the pairwise work never exceeds bucket occupancy."""
-    from .similarity import _bucket_expr, N_TABLES
+    from .retrieval import lsh_tables
 
     emb = spread(
         load(spark, sf_dir, "embeddings").select(
             "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
         )
     )
-    buckets = F.array(*[_bucket_expr(F.col("v"), t) for t in range(N_TABLES)])
-    bk = emb.select(
-        "vec_id", "label", "v", F.posexplode(buckets).alias("tbl", "bkt")
-    )
+    bk = emb.select("vec_id", "label", "v", lsh_tables(F.col("v")))
     a = bk.alias("a")
     b = bk.alias("b")
     from ..functions.embed import dot, l2_norm
@@ -1053,7 +1048,7 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             b,
             (F.col("a.label") == F.col("b.label"))
             & (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
             & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .filter(cos > 0.4)

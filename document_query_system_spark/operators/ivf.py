@@ -31,8 +31,8 @@ The registered queries over these functions live in
 operators/pipeline.py, the probes in operators/retrieval.py. The
 modules that register queries (api, pipeline, clustering,
 functions/vector, streaming/event_windows) are imported only inside
-the functions that need them, so importing this module never moves a
-query in the registry order."""
+the functions that need them: api, pipeline and vector import this
+module at their top."""
 
 from __future__ import annotations
 

@@ -58,12 +58,21 @@ from .ivf import (  # noqa: F401  (the verbs are re-exported for perfbench)
 )
 from .questions import question_vector_rows
 from .retrieval import (
+    PROBE_FLIPS,
+    exact_pool_sql,
     exact_probe,
     golden_probe_queries,
+    golden_vectors_sql,
     ivf_cell_scan,
     ivf_probe_fold,
+    lsh_probe_keys,
+    lsh_tables,
+    lsh_tables_sql,
+    pool_recall,
+    pool_recall_sql,
     pool_vectors,
     top_n,
+    top_n_sql,
     vector_score,
 )
 
@@ -406,14 +415,17 @@ _BM25_B = 0.75
 _BM25_TOPK = 10
 
 
-def _bm25_ctes() -> str:
+def _bm25_ctes(head: str | None = None) -> str:
     """CTE chain ``questions → ... → scored`` (question_id, doc_id,
     bm25) — shared by the q_bm25_topk oracle and the q_rrf_fusion
-    oracle's keyword leg."""
+    oracle's keyword leg. ``head`` replaces the opening
+    ``WITH questions`` CTE (it must define ``questions``)."""
     from .questions import question_values_sql
 
-    return f"""
-WITH {question_values_sql()},
+    if head is None:
+        head = f"""
+WITH {question_values_sql()}"""
+    return f"""{head},
 tok AS (SELECT doc_id, {tokens_sql('lower(text)')} AS tk FROM documents),
 stats AS (SELECT count(*) AS n_docs, avg(len(tk)) AS avgdl FROM tok),
 tf AS (
@@ -626,16 +638,11 @@ def q_incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _inc_lsh_oracle() -> str:
     from ..functions.embed import embed_subquery_sql
-    from .similarity import N_TABLES, _bucket_list_sql
 
     dv = embed_subquery_sql("documents", "doc_id", "text")
     return f"""
 WITH dv AS (SELECT id AS doc_id, embedding AS v FROM {dv}),
-db AS (
-  SELECT doc_id, v, t.i AS tbl, bl[CAST(t.i AS INT) + 1] AS bucket
-  FROM (SELECT doc_id, v, {_bucket_list_sql('v')} AS bl FROM dv)
-  CROSS JOIN generate_series(0, {N_TABLES - 1}) t(i)
-)
+db AS ({lsh_tables_sql('dv', 'doc_id')})
 SELECT CAST(tbl AS BIGINT) AS tbl, CAST(bucket AS BIGINT) AS bucket,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(doc_id) AS BIGINT) AS id_sum,
@@ -663,7 +670,6 @@ def q_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes see the merged index with no rebuild)."""
     from ..api import ensure_vector_index_lsh
     from ..functions.embed import embed_pandas
-    from .similarity import N_TABLES, _bucket_expr
 
     base = (
         read_artifact(spark, ensure_vector_index_lsh(spark, sf_dir))
@@ -674,12 +680,7 @@ def q_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents").select("doc_id", "text")
     ).filter(F.col("doc_id") % DELTA_MOD == 0)
     emb = embed_pandas(batch, "text", out_col="dv", keep=["doc_id"])
-    buckets = F.array(
-        *[_bucket_expr(F.col("dv"), t) for t in range(N_TABLES)]
-    )
-    delta = emb.select(
-        "doc_id", "dv", F.posexplode(buckets).alias("tbl", "bucket")
-    )
+    delta = emb.select("doc_id", "dv", lsh_tables(F.col("dv")))
     merged = base.unionByName(delta)
     return merged.groupBy("tbl", "bucket").agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -712,12 +713,8 @@ _RRF_TOPK = 10
 
 
 def _rrf_oracle() -> str:
-    from ..functions.embed import embed_subquery_sql
-
-    qv = embed_subquery_sql("questions", "question_id", "question_text")
-    dv = embed_subquery_sql("documents", "doc_id", "text")
     return (
-        _bm25_ctes()
+        _bm25_ctes(golden_vectors_sql())
         + f""",
 kw AS (
   SELECT question_id, doc_id, rk FROM (
@@ -727,18 +724,7 @@ kw AS (
     FROM scored)
   WHERE rk <= {_RRF_POOL}
 ),
-qv AS (SELECT id AS question_id, embedding AS v FROM {qv}),
-dv AS (SELECT id AS doc_id, embedding AS v FROM {dv}),
-vec AS (
-  SELECT question_id, doc_id, rk FROM (
-    SELECT question_id, doc_id,
-           row_number() OVER (PARTITION BY question_id
-                              ORDER BY cos_sim DESC, doc_id) AS rk
-    FROM (SELECT qv.question_id, dv.doc_id,
-                 round(list_dot_product(qv.v, dv.v), 6) AS cos_sim
-          FROM qv CROSS JOIN dv))
-  WHERE rk <= {_RRF_POOL}
-),
+vec AS ({exact_pool_sql(_RRF_POOL)}),
 fused AS (
   SELECT coalesce(k.question_id, v.question_id) AS question_id,
          coalesce(k.doc_id, v.doc_id) AS doc_id,
@@ -825,13 +811,9 @@ _NDCG_IDCG = sum(
 
 
 def _ndcg_oracle() -> str:
-    from ..functions.embed import embed_subquery_sql
-
-    qv = embed_subquery_sql("questions", "question_id", "question_text")
-    dv = embed_subquery_sql("documents", "doc_id", "text")
     disc = ", ".join(str(d) for d in _NDCG_DISC)
     return (
-        _bm25_ctes()
+        _bm25_ctes(golden_vectors_sql())
         + f""",
 kw AS (
   SELECT question_id, doc_id, rk FROM (
@@ -841,17 +823,9 @@ kw AS (
     FROM scored)
   WHERE rk <= {_NDCG_K}
 ),
-qv AS (SELECT id AS question_id, embedding AS v FROM {qv}),
-dv AS (SELECT id AS doc_id, embedding AS v FROM {dv}),
 rel AS (
-  SELECT question_id, doc_id, {_NDCG_GRADES + 1} - rk AS grade FROM (
-    SELECT question_id, doc_id,
-           row_number() OVER (PARTITION BY question_id
-                              ORDER BY cos_sim DESC, doc_id) AS rk
-    FROM (SELECT qv.question_id, dv.doc_id,
-                 round(list_dot_product(qv.v, dv.v), 6) AS cos_sim
-          FROM qv CROSS JOIN dv))
-  WHERE rk <= {_NDCG_GRADES}
+  SELECT question_id, doc_id, {_NDCG_GRADES + 1} - rk AS grade
+  FROM ({exact_pool_sql(_NDCG_GRADES)})
 )
 SELECT k.question_id,
        CAST(sum(coalesce(r.grade, 0) * ([{disc}])[k.rk]) AS BIGINT) AS dcg_nano,
@@ -1182,13 +1156,15 @@ _MMR_LAMBDA_REST = "0.3"  # engines parse the SAME double (1-0.7 in
 #                           compute the complement, spell it)
 _MMR_POOL = 20
 _MMR_K = 5
+_MMR_CAND = "question_id, doc_id, rel, v"  # the pool columns the rounds read
 
 
-def _mmr_round_ctes(prefix: str) -> str:
-    """Append the unrolled greedy-selection CTEs + final select to a
-    SQL prefix that ends with a ``cand(question_id, doc_id, rel, v)``
-    CTE — shared by the exact-pool and ANN-pool MMR oracles (the
-    rounds are pool-agnostic; only candidate generation differs).
+def _mmr_round_ctes(head: str, pool: str) -> str:
+    """The MMR oracle over a candidate pool: ``head`` (a CTE list) and
+    ``pool`` (a SELECT of ``_MMR_CAND``) become ``cand``, followed by
+    the unrolled greedy-selection CTEs and the final select — shared by
+    the exact-pool and ANN-pool MMR oracles (the rounds are
+    pool-agnostic; only candidate generation differs).
 
     The rounds' CTEs are MATERIALIZED: DuckDB 1.0 inlines every CTE
     reference, and each round references cand twice and its
@@ -1201,7 +1177,8 @@ def _mmr_round_ctes(prefix: str) -> str:
     localCheckpoint for exactly the same reason)."""
     lam, rest = _MMR_LAMBDA_NUM, _MMR_LAMBDA_REST
     ctes = (
-        prefix
+        f"""{head},
+cand AS MATERIALIZED ({pool})"""
         + """,
 sel_upto1 AS MATERIALIZED (
   SELECT question_id, doc_id, v, 1 AS mmr_rank, rel AS mmr_score FROM (
@@ -1241,26 +1218,7 @@ FROM sel_upto{_MMR_K}
 
 
 def _mmr_oracle() -> str:
-    from ..functions.embed import embed_subquery_sql
-    from .questions import question_values_sql
-
-    qv = embed_subquery_sql("questions", "question_id", "question_text")
-    dv = embed_subquery_sql("documents", "doc_id", "text")
-    prefix = f"""
-WITH {question_values_sql()},
-qv AS (SELECT id AS question_id, embedding AS v FROM {qv}),
-dv AS (SELECT id AS doc_id, embedding AS v FROM {dv}),
-cand AS MATERIALIZED (
-  SELECT question_id, doc_id, rel, v FROM (
-    SELECT qv.question_id, dv.doc_id,
-           round(list_dot_product(qv.v, dv.v), 6) AS rel, dv.v,
-           row_number() OVER (PARTITION BY qv.question_id
-                              ORDER BY round(list_dot_product(qv.v, dv.v), 6)
-                                       DESC, dv.doc_id) AS rk
-    FROM qv CROSS JOIN dv)
-  WHERE rk <= {_MMR_POOL}
-)"""
-    return _mmr_round_ctes(prefix)
+    return _mmr_round_ctes(golden_vectors_sql(), exact_pool_sql(_MMR_POOL, _MMR_CAND))
 
 
 def exact_pool_topn(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
@@ -1307,21 +1265,21 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts) under subset-key co-partition reuse + AQE; the broadcast
     shape has no two-key join at all. The vectors ride the bounded
     pool rows, never a second corpus scan."""
-    cand = exact_pool_topn(spark, sf_dir, _MMR_POOL).localCheckpoint(
-        eager=False  # all k rounds re-read the pool
-    )
-    return _mmr_greedy_rounds(cand)
+    return _mmr_greedy_rounds(exact_pool_topn(spark, sf_dir, _MMR_POOL))
 
 
 def _mmr_greedy_rounds(cand: DataFrame) -> DataFrame:
     """Unrolled greedy MMR selection over a bounded candidate pool
     ``cand(question_id, doc_id, rel, v)`` — shared by the exact-pool
     (q_mmr_diversify) and ANN-pool (q_mmr_ann_pool) variants; the
-    rounds are pool-agnostic, only candidate generation differs. See
-    q_mmr_diversify's docstring for the round-shape rationale
+    rounds are pool-agnostic, only candidate generation differs. The
+    pool is lazily checkpointed first, because all k rounds re-read it.
+    See q_mmr_diversify's docstring for the round-shape rationale
     (broadcast selected set, primitive agg buffers, per-round lazy
     checkpoints)."""
     from ..functions.embed import dot
+
+    cand = cand.localCheckpoint(eager=False)
 
     lam = float(_MMR_LAMBDA_NUM)
     rest = float(_MMR_LAMBDA_REST)
@@ -1418,48 +1376,28 @@ def _mmr_greedy_rounds(cand: DataFrame) -> DataFrame:
     )
 
 
-def _mmr_ann_oracle() -> str:
-    from ..functions.embed import embed_subquery_sql
-    from .questions import question_values_sql
-    from .similarity import N_TABLES, _PROBE_FLIPS, _bucket_list_sql
-
-    qv = embed_subquery_sql("questions", "question_id", "question_text")
-    dv = embed_subquery_sql("documents", "doc_id", "text")
-    prefix = f"""
-WITH {question_values_sql()},
-qv AS (SELECT id AS question_id, embedding AS v FROM {qv}),
-dv AS (SELECT id AS doc_id, embedding AS v FROM {dv}),
-qb AS (
-  SELECT question_id, v, tbl, xor(bucket, f.flip) AS bucket
-  FROM (
-    SELECT question_id, v, t.i AS tbl, bl[CAST(t.i AS INT) + 1] AS bucket
-    FROM (SELECT question_id, v, {_bucket_list_sql('v')} AS bl FROM qv)
-    CROSS JOIN generate_series(0, {N_TABLES - 1}) t(i))
-  CROSS JOIN (SELECT unnest({_PROBE_FLIPS}) AS flip) f
-),
-db AS (
-  SELECT doc_id, v, t.i AS tbl, bl[CAST(t.i AS INT) + 1] AS bucket
-  FROM (SELECT doc_id, v, {_bucket_list_sql('v')} AS bl FROM dv)
-  CROSS JOIN generate_series(0, {N_TABLES - 1}) t(i)
-),
-hits AS (
-  SELECT q.question_id, d.doc_id,
-         round(list_dot_product(q.v, d.v), 6) AS rel
-  FROM qb q JOIN db d ON q.tbl = d.tbl AND q.bucket = d.bucket
-),
+def _lsh_pairs_sql() -> str:
+    """Oracle CTEs for the multi-probe LSH leg, given the
+    ``golden_vectors_sql`` vectors: the probed question keys (qb), the
+    bucketed corpus (db) and each colliding (question, doc) pair once
+    with its score (pairs)."""
+    return f"""qb AS ({lsh_tables_sql('qv', 'question_id', PROBE_FLIPS)}),
+db AS ({lsh_tables_sql('dv', 'doc_id')}),
 pairs AS (
-  SELECT question_id, doc_id, max(rel) AS rel
-  FROM hits GROUP BY question_id, doc_id
-),
-cand AS MATERIALIZED (
-  SELECT question_id, doc_id, rel, v FROM (
-    SELECT p.question_id, p.doc_id, p.rel, dv.v,
-           row_number() OVER (PARTITION BY p.question_id
-                              ORDER BY p.rel DESC, p.doc_id) AS rk
-    FROM pairs p JOIN dv ON dv.doc_id = p.doc_id)
-  WHERE rk <= {_MMR_POOL}
+  SELECT q.question_id, d.doc_id,
+         max(round(list_dot_product(q.v, d.v), 6)) AS rel
+  FROM qb q JOIN db d ON q.tbl = d.tbl AND q.bucket = d.bucket
+  GROUP BY q.question_id, d.doc_id
 )"""
-    return _mmr_round_ctes(prefix)
+
+
+def _mmr_ann_oracle() -> str:
+    hits = """(SELECT p.question_id, p.doc_id, p.rel, dv.v
+    FROM pairs p JOIN dv USING (doc_id))"""
+    return _mmr_round_ctes(
+        f"{golden_vectors_sql()},\n{_lsh_pairs_sql()}",
+        top_n_sql(hits, _MMR_POOL, _MMR_CAND),
+    )
 
 
 @register("q_mmr_ann_pool", oracle=_mmr_ann_oracle())
@@ -1492,9 +1430,8 @@ def q_mmr_ann_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1 (single-probe measured 0.38 — these near-isotropic
     synthetic embeddings need the multiprobe repair; clustered real
     embeddings sit higher at the same probe count)."""
-    cand = pool_vectors(spark, sf_dir, mmr_ann_pool_pairs(spark, sf_dir))
-    cand = cand.localCheckpoint(eager=False)  # all k rounds re-read the pool
-    return _mmr_greedy_rounds(cand)
+    pairs = mmr_ann_pool_pairs(spark, sf_dir)
+    return _mmr_greedy_rounds(pool_vectors(spark, sf_dir, pairs))
 
 
 def mmr_ann_pool_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1517,25 +1454,18 @@ def mmr_ann_pool_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     all 2^4 buckets per table, so nothing is skipped here; the pinned
     property is that the keys reach PartitionFilters as literals."""
     from ..api import ensure_vector_index_lsh
-    from .similarity import N_PLANES, N_TABLES, PLANES, _PROBE_FLIPS
 
     db = read_artifact(spark, ensure_vector_index_lsh(spark, sf_dir)).select(
         "doc_id", F.col("dv").alias("v"), "tbl", "bucket"
     )
-    qb_rows = []
-    probe_keys: dict[int, set[int]] = {t: set() for t in range(N_TABLES)}
-    for qid, _, q_v in question_vector_rows():
-        for t in range(N_TABLES):
-            b0 = 0
-            for i, plane in enumerate(PLANES[t]):
-                acc = 0.0  # replicate the zip_with left fold exactly
-                for x, y in zip(q_v, plane):
-                    acc += x * y
-                if acc > 0:
-                    b0 += 2 ** (N_PLANES - 1 - i)
-            for flip in _PROBE_FLIPS:
-                qb_rows.append((qid, q_v, t, b0 ^ flip))
-                probe_keys[t].add(b0 ^ flip)
+    qb_rows = [
+        (qid, q_v, t, b)
+        for qid, _, q_v in question_vector_rows()
+        for t, b in lsh_probe_keys(q_v)
+    ]
+    probe_keys: dict[int, set[int]] = {}
+    for *_, t, b in qb_rows:
+        probe_keys.setdefault(t, set()).add(b)
     qb = F.broadcast(
         local_rows(
             spark,
@@ -1547,14 +1477,14 @@ def mmr_ann_pool_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (tbl, bucket)-partitioned layout; the join below re-checks the
     # same keys row-wise, so the filter is pure pruning, not logic.
     prune = None
-    for t in range(N_TABLES):
+    for t in sorted(probe_keys):
         leg = (F.col("tbl") == t) & F.col("bucket").isin(
             *sorted(probe_keys[t])
         )
         prune = leg if prune is None else (prune | leg)
     db = db.filter(prune)
     # Score every bucket collision, then dedup (a pair can collide in
-    # up to N_TABLES tables) with max(rel) — rel is identical across a
+    # several tables) with max(rel) — rel is identical across a
     # pair's collisions, and a PRIMITIVE-buffer hash aggregate gets
     # map-side partial aggregation, so only deduped (question, doc,
     # rel) triples cross the shuffle. The first cut deduped with a
@@ -1577,12 +1507,6 @@ def mmr_ann_pool_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------- IVF-served MMR (trained quantizer)
-
-# Registration order is the driver-coverage rotation (registry.py).
-# api's queries (q_hybrid_rrf, q_api_run_vector, q_api_run_keyword)
-# register here, between q_token_budget_cap and the clustering queries
-# that _mmr_ivf_oracle's import of clustering registers below.
-from .. import api as _api  # noqa: E402,F401
 
 
 def mmr_ivf_pool_pairs(
@@ -1674,24 +1598,10 @@ ivf_hits AS (
 
 
 def _mmr_ivf_oracle(scaled: bool = False, nprobe: int | None = None) -> str:
-    from ..functions.embed import embed_subquery_sql
-    from .questions import question_values_sql
-
-    qv = embed_subquery_sql("questions", "question_id", "question_text")
-    dv = embed_subquery_sql("documents", "doc_id", "text")
-    prefix = f"""
-WITH {question_values_sql()},
-qv AS (SELECT id AS question_id, embedding AS v FROM {qv}),
-dv AS (SELECT id AS doc_id, embedding AS v FROM {dv}),
-{_ivf_leg_ctes(scaled=scaled, nprobe=nprobe)},
-cand AS MATERIALIZED (
-  SELECT question_id, doc_id, rel, v FROM (
-    SELECT *, row_number() OVER (PARTITION BY question_id
-                                 ORDER BY rel DESC, doc_id) AS rk
-    FROM ivf_hits)
-  WHERE rk <= {_MMR_POOL}
-)"""
-    return _mmr_round_ctes(prefix)
+    return _mmr_round_ctes(
+        f"{golden_vectors_sql()},\n{_ivf_leg_ctes(scaled=scaled, nprobe=nprobe)}",
+        top_n_sql("ivf_hits", _MMR_POOL, _MMR_CAND),
+    )
 
 
 @register("q_mmr_ivf_pool", oracle=_mmr_ivf_oracle())
@@ -1719,99 +1629,28 @@ def q_mmr_ivf_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.92), pool recall@20 0.825 / 0.87 (LSH 0.885 / 0.895) — parity
     with the 3×-storage LSH tier at bench scale from a single stored
     copy reading nprobe·N/cells ≈ 31% of the index per question."""
-    cand = pool_vectors(spark, sf_dir, mmr_ivf_pool_pairs(spark, sf_dir))
-    cand = cand.localCheckpoint(eager=False)  # all k rounds re-read the pool
-    return _mmr_greedy_rounds(cand)
+    pairs = mmr_ivf_pool_pairs(spark, sf_dir)
+    return _mmr_greedy_rounds(pool_vectors(spark, sf_dir, pairs))
 
 
 def _mmr_pool_recall_oracle() -> str:
-    from ..functions.embed import embed_subquery_sql
-    from .questions import question_values_sql
-    from .similarity import N_TABLES, _PROBE_FLIPS, _bucket_list_sql
-
-    qv = embed_subquery_sql("questions", "question_id", "question_text")
-    dv = embed_subquery_sql("documents", "doc_id", "text")
-    return f"""
-WITH {question_values_sql()},
-qv AS (SELECT id AS question_id, embedding AS v FROM {qv}),
-dv AS (SELECT id AS doc_id, embedding AS v FROM {dv}),
-exact_pool AS (
-  SELECT question_id, doc_id FROM (
-    SELECT qv.question_id, dv.doc_id,
-           row_number() OVER (PARTITION BY qv.question_id
-                              ORDER BY round(list_dot_product(qv.v, dv.v), 6)
-                                       DESC, dv.doc_id) AS rk
-    FROM qv CROSS JOIN dv)
-  WHERE rk <= {_MMR_POOL}
-),
-qb AS (
-  SELECT question_id, v, tbl, xor(bucket, f.flip) AS bucket
-  FROM (
-    SELECT question_id, v, t.i AS tbl, bl[CAST(t.i AS INT) + 1] AS bucket
-    FROM (SELECT question_id, v, {_bucket_list_sql('v')} AS bl FROM qv)
-    CROSS JOIN generate_series(0, {N_TABLES - 1}) t(i))
-  CROSS JOIN (SELECT unnest({_PROBE_FLIPS}) AS flip) f
-),
-db AS (
-  SELECT doc_id, v, t.i AS tbl, bl[CAST(t.i AS INT) + 1] AS bucket
-  FROM (SELECT doc_id, v, {_bucket_list_sql('v')} AS bl FROM dv)
-  CROSS JOIN generate_series(0, {N_TABLES - 1}) t(i)
-),
-pairs AS (
-  SELECT q.question_id, d.doc_id,
-         max(round(list_dot_product(q.v, d.v), 6)) AS rel
-  FROM qb q JOIN db d ON q.tbl = d.tbl AND q.bucket = d.bucket
-  GROUP BY q.question_id, d.doc_id
-),
-ann_pool AS (
-  SELECT question_id, doc_id FROM (
-    SELECT question_id, doc_id,
-           row_number() OVER (PARTITION BY question_id
-                              ORDER BY rel DESC, doc_id) AS rk
-    FROM pairs)
-  WHERE rk <= {_MMR_POOL}
-),
+    pools = [
+        ("ann_pool", "n_ann", "n_common", "pool_recall"),
+        ("ivf_pool", "n_ivf", "n_common_ivf", "pool_recall_ivf"),
+    ]
+    return f"""{golden_vectors_sql()},
+exact_pool AS ({exact_pool_sql(_MMR_POOL)}),
+{_lsh_pairs_sql()},
+ann_pool AS ({top_n_sql("pairs", _MMR_POOL)}),
 {_ivf_leg_ctes()},
-ivf_pool AS (
-  SELECT question_id, doc_id FROM (
-    SELECT question_id, doc_id,
-           row_number() OVER (PARTITION BY question_id
-                              ORDER BY rel DESC, doc_id) AS rk
-    FROM ivf_hits)
-  WHERE rk <= {_MMR_POOL}
-),
-ne AS (SELECT question_id, count(*) AS n_exact FROM exact_pool GROUP BY question_id),
-na AS (SELECT question_id, count(*) AS n_ann FROM ann_pool GROUP BY question_id),
-nc AS (
-  SELECT e.question_id, count(*) AS n_common
-  FROM exact_pool e JOIN ann_pool a
-    ON a.question_id = e.question_id AND a.doc_id = e.doc_id
-  GROUP BY e.question_id
-),
-ni AS (SELECT question_id, count(*) AS n_ivf FROM ivf_pool GROUP BY question_id),
-nci AS (
-  SELECT e.question_id, count(*) AS n_common_ivf
-  FROM exact_pool e JOIN ivf_pool i
-    ON i.question_id = e.question_id AND i.doc_id = e.doc_id
-  GROUP BY e.question_id
-)
-SELECT ne.question_id,
-       CAST(ne.n_exact AS BIGINT) AS n_exact,
-       CAST(coalesce(na.n_ann, 0) AS BIGINT) AS n_ann,
-       CAST(coalesce(nc.n_common, 0) AS BIGINT) AS n_common,
-       round(coalesce(nc.n_common, 0) / ne.n_exact, 6) AS pool_recall,
-       CAST(coalesce(ni.n_ivf, 0) AS BIGINT) AS n_ivf,
-       CAST(coalesce(nci.n_common_ivf, 0) AS BIGINT) AS n_common_ivf,
-       round(coalesce(nci.n_common_ivf, 0) / ne.n_exact, 6) AS pool_recall_ivf
-FROM ne LEFT JOIN na USING (question_id) LEFT JOIN nc USING (question_id)
-        LEFT JOIN ni USING (question_id) LEFT JOIN nci USING (question_id)
-"""
+ivf_pool AS ({top_n_sql("ivf_hits", _MMR_POOL)}),
+{pool_recall_sql("exact_pool", pools)}"""
 
 
 @register("q_mmr_pool_recall", oracle=_mmr_pool_recall_oracle())
 def q_mmr_pool_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pool recall@{pool} of BOTH ANN candidate pools — multiprobe-LSH
-    and the k-means-trained IVF layout (r11) — vs the exact top-{pool}
+    and the k-means-trained IVF layout — vs the exact top-{pool}
     per golden question, side by side: the driver-checkable recall
     report for the ANN-served MMR compositions (the q_ann_recall
     analog for q_mmr_ann_pool / q_mmr_ivf_pool; tools/mmr_recall.py
@@ -1824,117 +1663,27 @@ def q_mmr_pool_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_pool_topn probe; bucket-pruned LSH probe + primitive
     hash-agg dedup; cell-pruned IVF probe — each WITHOUT the
     pool-vector fetch the MMR rounds need); the comparison joins
-    ≤|questions|·pool row sets."""
-    # Materialize each pool once (lazy checkpoint): exact_pool feeds
-    # THREE consumers (n_exact + both overlap joins) and each ANN pool
-    # two — un-checkpointed, Spark recomputes the full probe pipeline
-    # per consumer (the r15 opt pass measured 48 Exchanges / 28 scans
-    # in one plan: the exact probe tripled, each ANN probe doubled).
-    # The report then joins ≤|questions|·pool-row tables only.
-    # Cluster-scale caveat: localCheckpoint blocks are executor-local
-    # and lineage-free — an executor loss mid-query fails the job; at
-    # cluster scale this becomes a reliable checkpoint (SCALE.md).
-    exact_pool = (
-        exact_pool_topn(spark, sf_dir, _MMR_POOL)
-        .select("question_id", "doc_id")
-        .localCheckpoint(eager=False)
-    )
-    ann_pool = (
-        mmr_ann_pool_pairs(spark, sf_dir)
-        .select("question_id", "doc_id")
-        .localCheckpoint(eager=False)
-    )
-    ivf_pool = (
-        mmr_ivf_pool_pairs(spark, sf_dir)
-        .select("question_id", "doc_id")
-        .localCheckpoint(eager=False)
-    )
-    ne = exact_pool.groupBy("question_id").agg(F.count("*").alias("n_exact"))
-    na = ann_pool.groupBy("question_id").agg(F.count("*").alias("n_ann"))
-    nc = (
-        exact_pool.join(ann_pool, ["question_id", "doc_id"])
-        .groupBy("question_id")
-        .agg(F.count("*").alias("n_common"))
-    )
-    ni = ivf_pool.groupBy("question_id").agg(F.count("*").alias("n_ivf"))
-    nci = (
-        exact_pool.join(ivf_pool, ["question_id", "doc_id"])
-        .groupBy("question_id")
-        .agg(F.count("*").alias("n_common_ivf"))
-    )
-    return (
-        ne.join(na, "question_id", "left")
-        .join(nc, "question_id", "left")
-        .join(ni, "question_id", "left")
-        .join(nci, "question_id", "left")
-        .select(
-            "question_id",
-            F.col("n_exact").cast("long").alias("n_exact"),
-            F.coalesce(F.col("n_ann"), F.lit(0)).cast("long").alias("n_ann"),
-            F.coalesce(F.col("n_common"), F.lit(0))
-            .cast("long")
-            .alias("n_common"),
-            F.round(
-                F.coalesce(F.col("n_common"), F.lit(0)) / F.col("n_exact"), 6
-            ).alias("pool_recall"),
-            F.coalesce(F.col("n_ivf"), F.lit(0)).cast("long").alias("n_ivf"),
-            F.coalesce(F.col("n_common_ivf"), F.lit(0))
-            .cast("long")
-            .alias("n_common_ivf"),
-            F.round(
-                F.coalesce(F.col("n_common_ivf"), F.lit(0))
-                / F.col("n_exact"),
-                6,
-            ).alias("pool_recall_ivf"),
-        )
+    ≤|questions|·pool row sets (``pool_recall``)."""
+    exact = exact_pool_topn(spark, sf_dir, _MMR_POOL)
+    ann = mmr_ann_pool_pairs(spark, sf_dir)
+    ivf = mmr_ivf_pool_pairs(spark, sf_dir)
+    return pool_recall(
+        exact,
+        [
+            (ann, "n_ann", "n_common", "pool_recall"),
+            (ivf, "n_ivf", "n_common_ivf", "pool_recall_ivf"),
+        ],
     )
 
 
 def _ivf_recall_scaled_oracle() -> str:
-    from ..functions.embed import embed_subquery_sql
-    from .questions import question_values_sql
-
-    qv = embed_subquery_sql("questions", "question_id", "question_text")
-    dv = embed_subquery_sql("documents", "doc_id", "text")
-    return f"""
-WITH {question_values_sql()},
-qv AS (SELECT id AS question_id, embedding AS v FROM {qv}),
-dv AS (SELECT id AS doc_id, embedding AS v FROM {dv}),
-exact_pool AS (
-  SELECT question_id, doc_id FROM (
-    SELECT qv.question_id, dv.doc_id,
-           row_number() OVER (PARTITION BY qv.question_id
-                              ORDER BY round(list_dot_product(qv.v, dv.v), 6)
-                                       DESC, dv.doc_id) AS rk
-    FROM qv CROSS JOIN dv)
-  WHERE rk <= {_MMR_POOL}
-),
+    geometry = f"{ivf_cells_sql()} AS cells, CAST({IVF_NPROBE} AS BIGINT) AS nprobe,"
+    pools = [("ivf_pool", "n_ivf", "n_common", "pool_recall")]
+    return f"""{golden_vectors_sql()},
+exact_pool AS ({exact_pool_sql(_MMR_POOL)}),
 {_ivf_leg_ctes(scaled=True)},
-ivf_pool AS (
-  SELECT question_id, doc_id FROM (
-    SELECT question_id, doc_id,
-           row_number() OVER (PARTITION BY question_id
-                              ORDER BY rel DESC, doc_id) AS rk
-    FROM ivf_hits)
-  WHERE rk <= {_MMR_POOL}
-),
-ne AS (SELECT question_id, count(*) AS n_exact FROM exact_pool GROUP BY question_id),
-ni AS (SELECT question_id, count(*) AS n_ivf FROM ivf_pool GROUP BY question_id),
-nc AS (
-  SELECT e.question_id, count(*) AS n_common
-  FROM exact_pool e JOIN ivf_pool i
-    ON i.question_id = e.question_id AND i.doc_id = e.doc_id
-  GROUP BY e.question_id
-)
-SELECT ne.question_id,
-       {ivf_cells_sql()} AS cells,
-       CAST({IVF_NPROBE} AS BIGINT) AS nprobe,
-       CAST(ne.n_exact AS BIGINT) AS n_exact,
-       CAST(coalesce(ni.n_ivf, 0) AS BIGINT) AS n_ivf,
-       CAST(coalesce(nc.n_common, 0) AS BIGINT) AS n_common,
-       round(coalesce(nc.n_common, 0) / ne.n_exact, 6) AS pool_recall
-FROM ne LEFT JOIN ni USING (question_id) LEFT JOIN nc USING (question_id)
-"""
+ivf_pool AS ({top_n_sql("ivf_hits", _MMR_POOL)}),
+{pool_recall_sql("exact_pool", pools, geometry)}"""
 
 
 @register("q_ivf_recall_scaled", oracle=_ivf_recall_scaled_oracle())
@@ -1942,8 +1691,8 @@ def q_ivf_recall_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pool recall@{pool} of the CORPUS-ADAPTIVE IVF layout (cells =
     ivf_cells_for(N) = max(16, ceil(sqrt(N))) — operators/ivf.py) vs the exact
     top-{pool} per golden question, with the trained geometry (cells,
-    nprobe) reported per row: the r11 verdict #3 demonstration that
-    the cell count is a FUNCTION of corpus size, not a constant. At
+    nprobe) reported per row, which shows that the cell count is a
+    FUNCTION of corpus size, not a constant. At
     sf0.01 (N=500) the rule gives 23 cells → probe fraction 5/23 ≈
     22%; at sf0.1 (N=5000) 71 cells → 5/71 ≈ 7%; at 5B vectors
     5/70711 ≈ 0.007% — the probe fraction FALLS as the corpus grows
@@ -1964,7 +1713,7 @@ def q_ivf_recall_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the recall-vs-probe-fraction trade at two points of the
     sizing curve.
 
-    Measured (tools/mmr_recall.py, r12): pool recall@20 0.73 at
+    Measured (tools/mmr_recall.py): pool recall@20 0.73 at
     sf0.01 (23 cells, 21.7% probe fraction; 16-cell/31% comparison
     0.825) and 0.555 at sf0.1 (71 cells, 7.0%; 16-cell 0.87) —
     reported, not hidden: the synthetic embeddings are near-isotropic
@@ -1979,44 +1728,15 @@ def q_ivf_recall_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~sqrt(N)-bounded."""
 
     _, _, cells = ensure_ivf(spark, sf_dir, "documents", True)
-    # Materialize each pool once (lazy checkpoint): both pools feed
-    # two consumers (their count + the overlap join) — the
-    # q_mmr_pool_recall fix (r15 opt pass), same rationale and the
-    # same cluster-scale caveat (executor-local, lineage-free blocks
-    # → reliable checkpoint at cluster scale, SCALE.md).
-    exact_pool = (
-        exact_pool_topn(spark, sf_dir, _MMR_POOL)
-        .select("question_id", "doc_id")
-        .localCheckpoint(eager=False)
-    )
-    ivf_pool = (
-        mmr_ivf_pool_pairs(spark, sf_dir, scaled=True)
-        .select("question_id", "doc_id")
-        .localCheckpoint(eager=False)
-    )
-    ne = exact_pool.groupBy("question_id").agg(F.count("*").alias("n_exact"))
-    ni = ivf_pool.groupBy("question_id").agg(F.count("*").alias("n_ivf"))
-    nc = (
-        exact_pool.join(ivf_pool, ["question_id", "doc_id"])
-        .groupBy("question_id")
-        .agg(F.count("*").alias("n_common"))
-    )
-    return (
-        ne.join(ni, "question_id", "left")
-        .join(nc, "question_id", "left")
-        .select(
-            "question_id",
+    exact = exact_pool_topn(spark, sf_dir, _MMR_POOL)
+    ivf = mmr_ivf_pool_pairs(spark, sf_dir, scaled=True)
+    return pool_recall(
+        exact,
+        [(ivf, "n_ivf", "n_common", "pool_recall")],
+        extra=[
             F.lit(cells).cast("long").alias("cells"),
             F.lit(IVF_NPROBE).cast("long").alias("nprobe"),
-            F.col("n_exact").cast("long").alias("n_exact"),
-            F.coalesce(F.col("n_ivf"), F.lit(0)).cast("long").alias("n_ivf"),
-            F.coalesce(F.col("n_common"), F.lit(0))
-            .cast("long")
-            .alias("n_common"),
-            F.round(
-                F.coalesce(F.col("n_common"), F.lit(0)) / F.col("n_exact"), 6
-            ).alias("pool_recall"),
-        )
+        ],
     )
 
 
@@ -2077,9 +1797,7 @@ def q_mmr_ivf_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _, _, cells = ensure_ivf(spark, sf_dir, "documents", True)
     pairs = mmr_ivf_pool_pairs(spark, sf_dir, scaled=True, nprobe=IVF_NPROBE_SCALED)
-    cand = pool_vectors(spark, sf_dir, pairs)
-    cand = cand.localCheckpoint(eager=False)  # all k rounds re-read the pool
-    return _mmr_greedy_rounds(cand).select(
+    return _mmr_greedy_rounds(pool_vectors(spark, sf_dir, pairs)).select(
         "question_id",
         "doc_id",
         "mmr_rank",
@@ -2111,26 +1829,12 @@ def _published_topk_oracle() -> str:
     classic blue/green bug: every flip invalidates every reader's
     cache), the second run's version column would be 2 and the row
     would hash-mismatch."""
-    from ..functions.embed import embed_subquery_sql
-    from .questions import question_values_sql
-
-    qv = embed_subquery_sql("questions", "question_id", "question_text")
-    dv = embed_subquery_sql("documents", "doc_id", "text")
-    cells = ivf_cells_sql("dv")
-    return f"""
-WITH {question_values_sql()},
-qv AS (SELECT id AS question_id, embedding AS v FROM {qv}),
-dv AS (SELECT id AS doc_id, embedding AS v FROM {dv}),
+    return f"""{golden_vectors_sql()},
 {_ivf_leg_ctes(scaled=True, nprobe=IVF_NPROBE_SCALED)}
 SELECT question_id, doc_id, CAST(rk AS BIGINT) AS rank, rel AS score,
        CAST(1 AS BIGINT) AS version,
-       {cells} AS cells
-FROM (
-  SELECT question_id, doc_id, rel,
-         row_number() OVER (PARTITION BY question_id
-                            ORDER BY rel DESC, doc_id) AS rk
-  FROM ivf_hits)
-WHERE rk <= {_PUBLISHED_TOPK}
+       {ivf_cells_sql("dv")} AS cells
+FROM ({top_n_sql("ivf_hits", _PUBLISHED_TOPK, "question_id, doc_id, rel")})
 """
 
 
@@ -2414,27 +2118,12 @@ def _li_tri_sql(tok: str) -> str:
 
 
 def _li_oracle() -> str:
-    from ..functions.embed import embed_subquery_sql
     from ..functions.hashing import tokens_sql
-    from .questions import question_values_sql
 
-    qv = embed_subquery_sql("questions", "question_id", "question_text")
-    dv = embed_subquery_sql("documents", "doc_id", "text")
     qtoks = f"list_distinct({tokens_sql('lower(question_text)')})"
     dtoks = f"list_distinct({tokens_sql('lower(text)')})"
-    return f"""
-WITH {question_values_sql()},
-qv AS (SELECT id AS question_id, embedding AS v FROM {qv}),
-dv AS (SELECT id AS doc_id, embedding AS v FROM {dv}),
-pool AS (
-  SELECT question_id, doc_id FROM (
-    SELECT qv.question_id, dv.doc_id,
-           row_number() OVER (PARTITION BY qv.question_id
-                              ORDER BY round(list_dot_product(qv.v, dv.v), 6)
-                                       DESC, dv.doc_id) AS rk
-    FROM qv CROSS JOIN dv)
-  WHERE rk <= {_LI_POOL}
-),
+    return f"""{golden_vectors_sql()},
+pool AS ({exact_pool_sql(_LI_POOL)}),
 qtok AS (SELECT question_id, unnest({qtoks}) AS qt FROM questions),
 nqt AS (SELECT question_id, count(*) AS n_qtok FROM qtok GROUP BY question_id),
 qtri AS (

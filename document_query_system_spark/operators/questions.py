@@ -1,12 +1,10 @@
 """Golden question set + QA constants, in a module with NO query
 registrations.
 
-Lives apart from operators/search.py so that modules registering
-early in the driver-coverage rotation (operators/pipeline.py's BM25,
-the api facade) can share the question set without triggering
-search's own ``@register`` side effects — registration order is the
-driver's verification order, so a helper import must never drag a
-whole already-verified module into the prefix.
+Lives apart from operators/search.py so any module (operators/
+pipeline.py's BM25, the api facade, the probes in operators/
+retrieval.py) can share the question set without importing search's
+registrations.
 
 The reference's golden set is 10 fixed insurance questions
 (ref: src/scripts/main.py:54-65); these 10 use the synthetic

@@ -18,23 +18,42 @@ way:
 - the IVF probe over any ``ivf.ensure_ivf`` layout: ``ivf_cell_choice``
   ranks each query's cells, ``ivf_probe_fold`` collects that ranking
   into plan-time literals, and ``ivf_cell_scan`` reads only those
-  cells.
+  cells;
+- the sign-LSH probe: the hash (``PLANES``, ``lsh_tables``) and the
+  multi-probe fan-out (``lsh_probes``), each written once per engine:
+  Spark columns, the driver fold (``lsh_probe_keys``) and DuckDB SQL
+  (``lsh_tables_sql``);
+- the pool-recall report: ``pool_recall``.
+
+The DuckDB oracles share one vocabulary for the same decisions: the
+golden question and corpus vectors (``golden_vectors_sql``), the
+ranking (``top_n_sql``), the exact pool (``exact_pool_sql``) and the
+pool-recall report (``pool_recall_sql``).
 
 The registered queries stay in their own modules; this one registers
-nothing, so importing it never moves a query in the registry order."""
+nothing."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import random
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..functions.embed import dot
+from ..functions.embed import DIM, dot, embed_subquery_sql
 from ..sources.tables import local_rows
 from ..sources.tmputil import ensure_materialized, read_artifact
-from .questions import GOLDEN_QUESTIONS, question_vectors
+from .questions import GOLDEN_QUESTIONS, question_values_sql, question_vectors
+
+#: A run of the characters Python's ``str.isspace()`` accepts (29 code
+#: points), spelled as one class that Java regexes (Spark) and RE2
+#: (DuckDB) read alike; their ``\s`` is only the ASCII subset.
+_SPACE = (
+    r"[\x{9}-\x{d}\x{1c}-\x{20}\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
+    r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]+"
+)
 
 
 def vector_score(q: Column, d: Column) -> Column:
@@ -48,7 +67,7 @@ def question_words(text: Column) -> Column:
     """The reference's ``question.lower().split()``: lower-case, split on
     runs of whitespace, no empty tokens. An empty token would be
     contained in every document."""
-    return F.array_remove(F.split(F.lower(text), r"\s+"), "")
+    return F.array_remove(F.split(F.lower(text), _SPACE), "")
 
 
 def keyword_score(words: Column, text_lc: Column) -> Column:
@@ -65,7 +84,7 @@ def keyword_score(words: Column, text_lc: Column) -> Column:
 def question_words_sql(q: str) -> str:
     """``question_words`` as a DuckDB expression over the SQL
     expression ``q``: the oracles split words as the engine does."""
-    return rf"list_filter(regexp_split_to_array(lower({q}), '\s+'), w -> w <> '')"
+    return f"list_filter(regexp_split_to_array(lower({q}), '{_SPACE}'), w -> w <> '')"
 
 
 def keyword_score_sql(q: str, text_lc: str) -> str:
@@ -229,3 +248,220 @@ def ivf_cell_scan(
         return local_rows(spark, [], StructType(db.schema.fields + qb.schema.fields))
     db = db.filter(F.col("cell").isin(*cells))
     return db.join(F.broadcast(qb), F.col("cell") == F.col("qcell"))
+
+
+def pool_recall(
+    exact: DataFrame,
+    pools: Sequence[tuple[DataFrame, str, str, str]],
+    extra: Sequence[Column] = (),
+) -> DataFrame:
+    """Per question: the size ``n_exact`` of the ``exact`` pool and, for
+    each candidate pool ``(frame, n_x, n_common, recall)``, its size, its
+    overlap with the exact pool and overlap / n_exact, under those
+    names; ``extra`` columns follow question_id. Pools are
+    (question_id, doc_id) frames. Each is read twice (its count and the
+    overlap join), the exact pool once more per candidate pool, so each
+    is materialized once (a lazy local checkpoint) instead of running
+    its probe per consumer; the report then joins ≤|questions|·pool-row
+    tables only. Local checkpoint blocks are executor-local and
+    lineage-free: losing an executor mid-query fails the job, so at
+    cluster scale these become reliable checkpoints (SCALE.md)."""
+    exact = exact.select("question_id", "doc_id").localCheckpoint(eager=False)
+    out = exact.groupBy("question_id").agg(F.count("*").alias("n_exact"))
+    cols = []
+    for pool, n_x, n_common, recall in pools:
+        pool = pool.select("question_id", "doc_id").localCheckpoint(eager=False)
+        nx = pool.groupBy("question_id").agg(F.count("*").alias(n_x))
+        nc = (
+            exact.join(pool, ["question_id", "doc_id"])
+            .groupBy("question_id")
+            .agg(F.count("*").alias(n_common))
+        )
+        out = out.join(nx, "question_id", "left").join(nc, "question_id", "left")
+        common = F.coalesce(F.col(n_common), F.lit(0))
+        cols += [
+            F.coalesce(F.col(n_x), F.lit(0)).cast("long").alias(n_x),
+            common.cast("long").alias(n_common),
+            F.round(common / F.col("n_exact"), 6).alias(recall),
+        ]
+    return out.select(
+        "question_id", *extra, F.col("n_exact").cast("long").alias("n_exact"), *cols
+    )
+
+
+# ---------------------------------------------------------------- sign-LSH
+#
+# Random-hyperplane LSH: a vector's bucket in one hash table is the
+# sign bits of its dot with N_PLANES fixed planes; a pair is a
+# candidate when it shares a bucket in ANY of N_TABLES tables. The
+# planes are seeded literals (stdlib Mersenne, platform-stable) in the
+# Spark plan, the driver fold and the DuckDB oracles alike, so the
+# approximate tiers stay value-checkable.
+
+N_PLANES = 4  # sign bits per hash table
+N_TABLES = 3  # OR-amplification: candidate if buckets match in ANY table
+
+
+def _planes() -> list[list[list[float]]]:
+    rng = random.Random(42)
+    return [
+        [[round(rng.gauss(0.0, 1.0), 6) for _ in range(DIM)] for _ in range(N_PLANES)]
+        for _ in range(N_TABLES)
+    ]
+
+
+PLANES = _planes()  # [table][plane][dim]
+
+#: Multi-probe flip masks: the query's own bucket plus every bucket at
+#: Hamming distance 1 (one sign bit flipped). Lv et al., "Multi-Probe
+#: LSH" (VLDB 2007): near neighbors that barely miss the query's bucket
+#: land overwhelmingly in 1-flip buckets, so probing them repairs
+#: recall without adding hash tables (more tables = more index storage;
+#: more probes = more reads of the same stored layout).
+PROBE_FLIPS = (0,) + tuple(2**i for i in range(N_PLANES))
+
+
+def _bucket_expr(v: Column, table: int) -> Column:
+    """LSH bucket id for one hash table: sign bit of <v, plane_i>."""
+    b = F.lit(0)
+    for i, plane in enumerate(PLANES[table]):
+        p = F.array(*[F.lit(x) for x in plane])
+        b = b + F.when(dot(v, p) > 0, F.lit(2 ** (N_PLANES - 1 - i))).otherwise(
+            F.lit(0)
+        )
+    return b
+
+
+def lsh_tables(v: Column) -> Column:
+    """``v``'s bucket in every hash table, exploded to one
+    (tbl, bucket) row per table."""
+    buckets = F.array(*[_bucket_expr(v, t) for t in range(N_TABLES)])
+    return F.posexplode(buckets).alias("tbl", "bucket")
+
+
+def lsh_probes(bucket: Column, flips: Sequence[int]) -> Column:
+    """The buckets a query probes: ``bucket`` xor each flip mask,
+    exploded. Only the query side fans out; ``(0,)`` probes the bucket
+    itself."""
+    masks = F.array(*[F.lit(x) for x in flips])
+    return F.explode(F.transform(masks, lambda fl: bucket.bitwiseXOR(fl)))
+
+
+def lsh_probe_keys(
+    v: Sequence[float], flips: Sequence[int] = PROBE_FLIPS
+) -> list[tuple[int, int]]:
+    """The (tbl, bucket) keys ``v`` probes, ``lsh_tables`` then
+    ``lsh_probes`` on the driver, for literal probe keys. The plane dot
+    is the left fold ``dot`` runs, op for op, so a driver-side key
+    equals the bucket the stored index was built with."""
+    keys = []
+    for t, planes in enumerate(PLANES):
+        b = 0
+        for i, plane in enumerate(planes):
+            acc = 0.0
+            for x, y in zip(v, plane):
+                acc += x * y
+            if acc > 0:
+                b += 2 ** (N_PLANES - 1 - i)
+        keys += [(t, b ^ f) for f in flips]
+    return keys
+
+
+def _bucket_sql(v_expr: str, table: int) -> str:
+    terms = []
+    for i, plane in enumerate(PLANES[table]):
+        p = "[" + ", ".join(repr(x) for x in plane) + "]"
+        terms.append(
+            f"(CASE WHEN list_dot_product({v_expr}, {p}) > 0 "
+            f"THEN {2 ** (N_PLANES - 1 - i)} ELSE 0 END)"
+        )
+    return " + ".join(terms)
+
+
+def lsh_tables_sql(rel: str, cols: str, flips: Sequence[int] = (0,)) -> str:
+    """``lsh_tables`` then ``lsh_probes`` as a DuckDB SELECT: each row
+    of ``rel`` (columns ``cols`` and a vector ``v``) once per hash table
+    and probed bucket, as (``cols``, v, tbl, bucket)."""
+    bl = "[" + ", ".join(_bucket_sql("v", t) for t in range(N_TABLES)) + "]"
+    return f"""SELECT {cols}, v, tbl, xor(bucket, f.flip) AS bucket
+  FROM (
+    SELECT {cols}, v, t.i AS tbl, bl[CAST(t.i AS INT) + 1] AS bucket
+    FROM (SELECT {cols}, v, {bl} AS bl FROM {rel})
+    CROSS JOIN generate_series(0, {N_TABLES - 1}) t(i))
+  CROSS JOIN (SELECT unnest({list(flips)}) AS flip) f"""
+
+
+# ------------------------------------------------------ oracle vocabulary
+
+
+def golden_vectors_sql() -> str:
+    """The head of every golden-question oracle: ``WITH`` the question
+    batch ``questions``, its vectors qv(question_id, v) and the corpus
+    vectors dv(doc_id, v), embedded by the SQL twin of the index's
+    kernel. Callers append their own CTEs after a comma."""
+    qv = embed_subquery_sql("questions", "question_id", "question_text")
+    dv = embed_subquery_sql("documents", "doc_id", "text")
+    return f"""
+WITH {question_values_sql()},
+qv AS (SELECT id AS question_id, embedding AS v FROM {qv}),
+dv AS (SELECT id AS doc_id, embedding AS v FROM {dv})"""
+
+
+def top_n_sql(hits: str, n: int, cols: str = "question_id, doc_id") -> str:
+    """``top_n`` as a DuckDB SELECT: the ``n`` best rows of ``hits``
+    (question_id, doc_id, rel, ...) per question by (rel desc, doc_id
+    asc), as ``cols`` and the rank ``rk``."""
+    return f"""SELECT {cols}, rk FROM (
+    SELECT *, row_number() OVER (PARTITION BY question_id
+                                 ORDER BY rel DESC, doc_id) AS rk
+    FROM {hits})
+  WHERE rk <= {n}"""
+
+
+def exact_pool_sql(n: int, cols: str = "question_id, doc_id") -> str:
+    """The exact probe's per-question top ``n`` over the
+    ``golden_vectors_sql`` vectors: every (question, document) pair
+    scored as ``vector_score`` (rel) and ranked by ``top_n_sql``; the
+    document vector is available as ``v``."""
+    scored = """(SELECT qv.question_id, dv.doc_id,
+           round(list_dot_product(qv.v, dv.v), 6) AS rel, dv.v
+    FROM qv CROSS JOIN dv)"""
+    return top_n_sql(scored, n, cols)
+
+
+def pool_recall_sql(
+    exact: str, pools: Sequence[tuple[str, str, str, str]], extra: str = ""
+) -> str:
+    """``pool_recall`` as DuckDB text to append to a CTE list after a
+    comma: the count CTEs and the final SELECT. ``exact`` and each
+    pool's relation are (question_id, doc_id) CTE names; ``extra`` is
+    a select-list fragment placed after question_id (ending in a
+    comma)."""
+    count = "SELECT question_id, count(*) AS {} FROM {} GROUP BY question_id"
+    ctes = [f"ne AS ({count.format('n_exact', exact)})"]
+    cols = ["CAST(ne.n_exact AS BIGINT) AS n_exact"]
+    joins = []
+    for i, (pool, n_x, n_common, recall) in enumerate(pools):
+        ctes += [
+            f"nx{i} AS ({count.format(n_x, pool)})",
+            f"""nc{i} AS (
+  SELECT e.question_id, count(*) AS {n_common}
+  FROM {exact} e JOIN {pool} p
+    ON p.question_id = e.question_id AND p.doc_id = e.doc_id
+  GROUP BY e.question_id
+)""",
+        ]
+        cols += [
+            f"CAST(coalesce({n_x}, 0) AS BIGINT) AS {n_x}",
+            f"CAST(coalesce({n_common}, 0) AS BIGINT) AS {n_common}",
+            f"round(coalesce({n_common}, 0) / ne.n_exact, 6) AS {recall}",
+        ]
+        joins += [f"LEFT JOIN {cte}{i} USING (question_id)" for cte in ("nx", "nc")]
+    return (
+        ",\n".join(ctes)
+        + f"\nSELECT ne.question_id, {extra}\n       "
+        + ",\n       ".join(cols)
+        + "\nFROM ne "
+        + " ".join(joins)
+        + "\n"
+    )

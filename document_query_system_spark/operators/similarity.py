@@ -18,79 +18,31 @@ The tier ladder, trading recall for scan cost (SURVEY.md §4.1, the
 - q_ann_ivfpq: the composed billion-scale index (FAISS IVFPQ) —
   coarse cells prune the scan, PQ codes rank within probed cells.
 
-Hyperplanes are fixed pseudorandom literals (seeded stdlib Mersenne,
-platform-stable) embedded in both the Spark plan and the DuckDB
-oracle, so even the approximate paths are value-checkable.
+The two LSH tiers are one body over retrieval.py's sign-LSH probe,
+whose hyperplanes are seeded literals in both the Spark plan and the
+DuckDB oracle, so even the approximate paths are value-checkable.
 """
 
 from __future__ import annotations
 
-import random
-
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources.tables import load, local_rows
 from ..functions.embed import DIM, dot, l2_norm
+from .retrieval import PROBE_FLIPS, lsh_probes, lsh_tables, lsh_tables_sql
 
-N_PLANES = 4  # sign bits per hash table
-N_TABLES = 3  # OR-amplification: candidate if buckets match in ANY table
 _TOP_K = 5
 
 
-def _planes() -> list[list[list[float]]]:
-    rng = random.Random(42)
-    return [
-        [
-            [round(rng.gauss(0.0, 1.0), 6) for _ in range(DIM)]
-            for _ in range(N_PLANES)
-        ]
-        for _ in range(N_TABLES)
-    ]
-
-
-PLANES = _planes()  # [table][plane][dim]
-
-
-def _bucket_expr(v: Column, table: int) -> Column:
-    """LSH bucket id for one hash table: sign bit of <v, plane_i>."""
-    b = F.lit(0)
-    for i, plane in enumerate(PLANES[table]):
-        p = F.array(*[F.lit(x) for x in plane])
-        b = b + F.when(dot(v, p) > 0, F.lit(2 ** (N_PLANES - 1 - i))).otherwise(
-            F.lit(0)
-        )
-    return b
-
-
-def _bucket_sql(v_expr: str, table: int) -> str:
-    terms = []
-    for i, plane in enumerate(PLANES[table]):
-        p = "[" + ", ".join(repr(x) for x in plane) + "]"
-        terms.append(
-            f"(CASE WHEN list_dot_product({v_expr}, {p}) > 0 "
-            f"THEN {2 ** (N_PLANES - 1 - i)} ELSE 0 END)"
-        )
-    return " + ".join(terms)
-
-
-def _bucket_list_sql(v_expr: str) -> str:
-    return (
-        "[" + ", ".join(_bucket_sql(v_expr, t) for t in range(N_TABLES)) + "]"
-    )
-
-
-_ANN_LSH_SQL = f"""
+def _ann_lsh_sql(flips: tuple[int, ...]) -> str:
+    return f"""
 WITH e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
-bl AS (SELECT vec_id, v, {_bucket_list_sql('v')} AS bl FROM e),
-bucketed AS (
-  SELECT vec_id, v, t.i AS tbl, bl[CAST(t.i AS INT) + 1] AS bucket
-  FROM bl CROSS JOIN generate_series(0, {N_TABLES - 1}) t(i)
-),
-q AS (SELECT vec_id, v, tbl, bucket FROM bucketed WHERE vec_id < 5),
+bucketed AS ({lsh_tables_sql('e', 'vec_id')}),
+q AS ({lsh_tables_sql('(SELECT * FROM e WHERE vec_id < 5)', 'vec_id', flips)}),
 cand AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS match_id,
          round(list_dot_product(q.v, c.v)
@@ -107,32 +59,22 @@ WHERE rn <= {_TOP_K}
 """
 
 
-@register("q_ann_lsh", oracle=_ANN_LSH_SQL)
-def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-hyperplane LSH top-k with OR-amplification: 3 hash
-    tables of 4 sign bits each; a vector is a candidate if it shares
-    the query's bucket in ANY table (union of 3 bucket-key equi-joins,
-    expressed as one join on the exploded (table, bucket) key). The
-    multi-table union is the standard recall repair for sign-LSH —
-    one 4-bit table alone prunes ~16× but misses neighbors that flip
-    a single sign bit; three independent tables recover most of them
-    while keeping candidate generation an equi-join (never an
-    all-pairs scan). Candidate volume scales with N_TABLES, the knob
-    traded against recall at 100 TB."""
+def _lsh_topk(spark: SparkSession, sf_dir: str, flips: tuple[int, ...]) -> DataFrame:
+    """Sign-LSH top-k for the first 5 vectors: the stored vectors are
+    hashed into every table (``lsh_tables``), each query probes the
+    buckets ``flips`` reaches from its own (``lsh_probes``), and a
+    vector sharing a probed (table, bucket) key with the query is a
+    candidate, scored by exact cosine. Candidate generation is one
+    equi-join on the exploded key, never an all-pairs scan."""
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    buckets = F.array(
-        *[_bucket_expr(F.col("v"), t) for t in range(N_TABLES)]
-    )
-    bucketed = e.select(
-        "vec_id", "v", F.posexplode(buckets).alias("tbl", "bucket")
-    )
+    bucketed = e.select("vec_id", "v", lsh_tables(F.col("v")))
     q = bucketed.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("tbl").alias("qtbl"),
-        F.col("bucket").alias("qbucket"),
+        lsh_probes(F.col("bucket"), flips).alias("qbucket"),
     )
     c = bucketed.select(
         F.col("vec_id").alias("match_id"),
@@ -165,48 +107,22 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Multi-probe flip masks: the query's own bucket plus every bucket at
-#: Hamming distance 1 (one sign bit flipped). Lv et al., "Multi-Probe
-#: LSH" (VLDB 2007): near neighbors that barely miss the query's
-#: bucket land overwhelmingly in 1-flip buckets, so probing them
-#: repairs recall WITHOUT adding hash tables (more tables = more
-#: index storage; more probes = more read amplification on the same
-#: index — at 100 TB probes are the cheaper knob because they reuse
-#: the stored bucket layout and partition pruning).
-_PROBE_FLIPS = [0] + [2**i for i in range(N_PLANES)]
+@register("q_ann_lsh", oracle=_ann_lsh_sql((0,)))
+def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Random-hyperplane LSH top-k with OR-amplification: 3 hash
+    tables of 4 sign bits each; a vector is a candidate if it shares
+    the query's bucket in ANY table (union of 3 bucket-key equi-joins,
+    expressed as one join on the exploded (table, bucket) key). The
+    multi-table union is the standard recall repair for sign-LSH —
+    one 4-bit table alone prunes ~16× but misses neighbors that flip
+    a single sign bit; three independent tables recover most of them
+    while keeping candidate generation an equi-join (never an
+    all-pairs scan). Candidate volume scales with N_TABLES, the knob
+    traded against recall at 100 TB."""
+    return _lsh_topk(spark, sf_dir, (0,))
 
 
-_ANN_MULTIPROBE_SQL = f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
-bl AS (SELECT vec_id, v, {_bucket_list_sql('v')} AS bl FROM e),
-bucketed AS (
-  SELECT vec_id, v, t.i AS tbl, bl[CAST(t.i AS INT) + 1] AS bucket
-  FROM bl CROSS JOIN generate_series(0, {N_TABLES - 1}) t(i)
-),
-probes AS (
-  SELECT vec_id, v, tbl, xor(bucket, f.flip) AS bucket
-  FROM (SELECT * FROM bucketed WHERE vec_id < 5)
-  CROSS JOIN (SELECT unnest({_PROBE_FLIPS}) AS flip) f
-),
-cand AS (
-  SELECT DISTINCT p.vec_id AS query_id, c.vec_id AS match_id,
-         round(list_dot_product(p.v, c.v)
-               / (sqrt(list_dot_product(p.v, p.v)) * sqrt(list_dot_product(c.v, c.v))),
-               6) AS cos_sim
-  FROM probes p JOIN bucketed c
-    ON p.tbl = c.tbl AND p.bucket = c.bucket AND p.vec_id <> c.vec_id
-)
-SELECT query_id, match_id, cos_sim
-FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, match_id) AS rn
-      FROM cand)
-WHERE rn <= {_TOP_K}
-"""
-
-
-@register("q_ann_multiprobe", oracle=_ANN_MULTIPROBE_SQL)
+@register("q_ann_multiprobe", oracle=_ann_lsh_sql(PROBE_FLIPS))
 def q_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH top-k: same 3×4-bit index as q_ann_lsh, but
     each query probes its own bucket AND the 4 buckets at Hamming
@@ -217,56 +133,7 @@ def q_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall repair when adding tables is too expensive (each table
     duplicates index storage at 100 TB; probes only re-read existing
     buckets). Recall vs cost is reported by q_ann_recall."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    buckets = F.array(
-        *[_bucket_expr(F.col("v"), t) for t in range(N_TABLES)]
-    )
-    bucketed = e.select(
-        "vec_id", "v", F.posexplode(buckets).alias("tbl", "bucket")
-    )
-    flips = F.array(*[F.lit(x) for x in _PROBE_FLIPS])
-    q = (
-        bucketed.filter(F.col("vec_id") < 5)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("tbl").alias("qtbl"),
-            F.explode(
-                F.transform(flips, lambda fl: F.col("bucket").bitwiseXOR(fl))
-            ).alias("qbucket"),
-        )
-    )
-    c = bucketed.select(
-        F.col("vec_id").alias("match_id"),
-        F.col("v").alias("cv"),
-        F.col("tbl").alias("ctbl"),
-        F.col("bucket").alias("cbucket"),
-    )
-    cos = dot(F.col("qv"), F.col("cv")) / (
-        l2_norm(F.col("qv")) * l2_norm(F.col("cv"))
-    )
-    cand = (
-        c.join(
-            F.broadcast(q),
-            (F.col("qtbl") == F.col("ctbl"))
-            & (F.col("qbucket") == F.col("cbucket"))
-            & (F.col("query_id") != F.col("match_id")),
-        )
-        .select(
-            "query_id",
-            "match_id",
-            F.round(cos, 6).alias("cos_sim"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("match_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .drop("rn")
-    )
+    return _lsh_topk(spark, sf_dir, PROBE_FLIPS)
 
 
 _Q8_SQL = f"""
@@ -938,15 +805,12 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_recall_sql() -> str:
-    # embed.py, NOT vector.py: this runs at registration time, and
-    # importing vector here would drag its 7 already-verified
-    # registrations into the driver-coverage prefix.
     from ..functions.embed import _VECTOR_TOPK_SQL
 
     return f"""
 WITH exact AS (SELECT query_id, match_id FROM ({_VECTOR_TOPK_SQL})),
-lsh AS (SELECT query_id, match_id FROM ({_ANN_LSH_SQL})),
-mp AS (SELECT query_id, match_id FROM ({_ANN_MULTIPROBE_SQL})),
+lsh AS (SELECT query_id, match_id FROM ({_ann_lsh_sql((0,))})),
+mp AS (SELECT query_id, match_id FROM ({_ann_lsh_sql(PROBE_FLIPS)})),
 ivf AS (SELECT query_id, match_id FROM ({_IVF_SQL})),
 pq AS (SELECT query_id, match_id FROM ({_PQ_SQL})),
 ivfpq AS (SELECT query_id, match_id FROM ({_IVFPQ_SQL})),

@@ -17,6 +17,7 @@ Conventions (FIXTURES.md):
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -83,41 +84,31 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 
 # REGISTRATION ORDER IS THE DRIVER-COVERAGE ROTATION. The external
 # harness verifies a ~50-query prefix of ``queries()`` dict order per
-# round, so queries needing a FRESH driver row must come first. Until
-# round 6 the rotation was driven by module IMPORT order, which cannot
-# select queries registered at a late module's tail — exactly how 50
-# round-6 registrations (scattered across 15 module tails) ended the
-# round with no driver row (r6 verdict item 2). The rotation is now an
-# explicit NAME list: ``all_specs()`` emits ``_ROTATION_PREFIX`` names
-# first (in listed order), then everything else in registration order.
-# Unknown names fail loudly (a typo would silently burn a prefix slot).
+# round, so queries needing a FRESH driver row must come first. The
+# rotation is an explicit NAME list: ``all_specs()`` emits
+# ``_ROTATION_PREFIX`` names first (in listed order), then everything
+# else by the position of its module in ``_MODULES`` and, within a
+# module, in registration (source) order. No part of the order depends
+# on which module a process happens to import first. Unknown prefix
+# names and registering modules missing from ``_MODULES`` fail loudly.
 #
-# Round-15 prefix (r14 verdict "Next round" #1 and #2, followed
-# exactly): (1) the FIVE r14 lifecycle registrations — built +
-# oracle-pinned in r14 (tests/test_layout.py), pre-flighted
-# engine-vs-oracle MATCH at sf0.001/0.01/0.1
-# (tools/preflight_staged.py, re-run on this round's opening tree),
-# registered this round in operators/pipeline.py; (2) the NEW
-# composed CRUD row q_ivf_lifecycle_roundtrip (verdict #2: one
-# oracled row proving append_ivf_delta → delete_from_ivf →
-# compact_ivf_cells cross-engine); (3) 44 of the 49 staged
-# r10-VINTAGE oracled rows (name order) — the oldest rows left in
-# the ledger — so the oldest oracled vintage moves r10 → mostly-r11.
-# 6 + 44 = exactly the 50 driver slots, all ORACLED (no rows-only
-# rows this rotation). Positions 51+ stage the remaining 5
-# r10-vintage rows as the ready-made r16 prefix tail (the
-# r14-refreshed cohort follows in registration order after them;
-# nothing else is older than r11).
+# The prefix: (1) the five IVF lifecycle rows and (2) the composed
+# CRUD row q_ivf_lifecycle_roundtrip (append_ivf_delta →
+# delete_from_ivf → compact_ivf_cells cross-engine), all pre-flighted
+# engine-vs-oracle at sf0.001/0.01/0.1 (tools/preflight_staged.py);
+# (3) 44 of the 49 oldest oracled rows (name order). 6 + 44 = exactly
+# the 50 driver slots, all oracled. Positions 51+ stage the remaining
+# five oldest rows as the next prefix's tail.
 _ROTATION_PREFIX: tuple[str, ...] = (
-    # --- the five r14 lifecycle pairs, first driver rows (r15) ---
+    # --- the five IVF lifecycle rows ---
     "q_incremental_ivf_scaled",
     "q_ivf_layout_stats",
     "q_ivf_cell_psi",
     "q_stream_ivf_maintenance",
     "q_vector_topk_published",
-    # --- the composed physical-CRUD row, first driver row (r15) ---
+    # --- the composed physical-CRUD row ---
     "q_ivf_lifecycle_roundtrip",
-    # --- r10-vintage refresh (44 of the 49 oldest oracled rows) ---
+    # --- 44 of the 49 oldest oracled rows ---
     "q_agg_distinct",
     "q_agg_doc_stats",
     "q_agg_index_stats",
@@ -162,8 +153,7 @@ _ROTATION_PREFIX: tuple[str, ...] = (
     "q_stream_stateful_counts",
     "q_stream_stream_join",
     "q_stream_tumbling",
-    # --- positions 51+: the 5 remaining r10-vintage rows (name ---
-    # --- order; the ready-made r16 prefix tail)                ---
+    # --- positions 51+: the 5 remaining oldest rows (name order) ---
     "q_stream_upsert_foreachbatch",
     "q_to_json",
     "q_training_triplets",
@@ -172,50 +162,54 @@ _ROTATION_PREFIX: tuple[str, ...] = (
 )
 
 
+#: Every module that registers queries, in tail order (see above).
+_MODULES: tuple[str, ...] = (
+    ".operators.similarity",
+    ".operators.dedup",
+    ".operators.pipeline",
+    ".operators.sampling",
+    ".operators.corpus",
+    ".operators.scoring",
+    ".operators.graph",
+    ".sources.layout",
+    ".operators.analytics",
+    ".operators.setops",
+    ".operators.clustering",
+    ".operators.sketches",
+    ".operators.graph_metrics",
+    ".operators.recipes",
+    ".operators.behavior",
+    ".operators.governance",
+    ".operators.sql_surface",
+    ".sources.pydatasource",
+    ".functions.vector",
+    ".operators.textpipe",
+    ".sources.scans",
+    ".operators.multimodal",
+    ".streaming.event_windows",
+    ".operators.joins",
+    ".api",
+    ".operators.search",
+    ".sources.extraction",
+    ".sources.sinks",
+    ".operators.filters",
+    ".operators.aggregates",
+    ".sources.http_ingest",
+    ".operators.windows",
+    ".functions.text",
+    ".functions.scalar",
+)
+
+
 def _load_all() -> None:
-    """Import every module that registers queries (side-effect imports)."""
+    """Import every module that registers queries (side-effect imports;
+    imported here, not at the top, because they import ``register``
+    from this module)."""
     global _LOADED
     if _LOADED:
         return
-    # Imports are inside the function to avoid import cycles: these
-    # modules import ``register`` from here. Import order no longer
-    # matters for driver coverage (see _ROTATION_PREFIX above); kept
-    # roughly grouped by package for readability.
-    from .operators import similarity  # noqa: F401
-    from .operators import dedup  # noqa: F401
-    from .operators import pipeline  # noqa: F401
-    from .operators import sampling  # noqa: F401
-    from .operators import corpus  # noqa: F401
-    from .operators import scoring  # noqa: F401
-    from .operators import graph  # noqa: F401
-    from .sources import layout  # noqa: F401
-    from .operators import analytics  # noqa: F401
-    from .operators import setops  # noqa: F401
-    from .operators import clustering  # noqa: F401
-    from .operators import sketches  # noqa: F401
-    from .operators import graph_metrics  # noqa: F401
-    from .operators import recipes  # noqa: F401
-    from .operators import behavior  # noqa: F401
-    from .operators import governance  # noqa: F401
-    from .operators import sql_surface  # noqa: F401
-    from .sources import pydatasource  # noqa: F401
-    from .functions import vector  # noqa: F401
-    from .operators import textpipe  # noqa: F401
-    from .sources import scans  # noqa: F401
-    from .operators import multimodal  # noqa: F401
-    from .streaming import event_windows  # noqa: F401
-    from .operators import joins  # noqa: F401
-    from . import api  # noqa: F401
-    from .operators import search  # noqa: F401
-    from .sources import extraction  # noqa: F401
-    from .sources import sinks  # noqa: F401
-    from .operators import filters  # noqa: F401
-    from .operators import aggregates  # noqa: F401
-    from .sources import http_ingest  # noqa: F401
-    from .operators import windows  # noqa: F401
-    from .functions import text  # noqa: F401
-    from .functions import scalar  # noqa: F401
-
+    for mod in _MODULES:
+        importlib.import_module(mod, __package__)
     _LOADED = True
 
 
@@ -224,9 +218,17 @@ def all_specs() -> dict[str, QuerySpec]:
     missing = [n for n in _ROTATION_PREFIX if n not in _REGISTRY]
     if missing:
         raise KeyError(f"_ROTATION_PREFIX names not registered: {missing}")
+    pos = {__package__ + m: i for i, m in enumerate(_MODULES)}
+    unlisted = sorted({s.fn.__module__ for s in _REGISTRY.values()} - pos.keys())
+    if unlisted:
+        raise KeyError(f"registering modules missing from _MODULES: {unlisted}")
     prefix = {n: _REGISTRY[n] for n in _ROTATION_PREFIX}
-    rest = {n: s for n, s in _REGISTRY.items() if n not in prefix}
-    return {**prefix, **rest}
+    # sorted() is stable: registration order within a module survives.
+    rest = sorted(
+        (s for n, s in _REGISTRY.items() if n not in prefix),
+        key=lambda s: pos[s.fn.__module__],
+    )
+    return {**prefix, **{s.name: s for s in rest}}
 
 
 def queries() -> dict[str, QueryFn]:

@@ -48,50 +48,63 @@ def test_li_trigram_spark_fold_matches_python_twin(spark):
         assert got[t] == _py_tri_hashes(t), repr(t)
 
 
-def test_mmr_literal_buckets_match_spark_bucket_expr(spark):
-    """The Python plane-sign fold in mmr_ann_pool_pairs (literal
-    probe keys → static PartitionFilters) must reproduce the Spark
-    _bucket_expr the stored LSH index was BUILT with, for every golden
-    question — a one-sided divergence would silently drop the
-    question's own bucket from the probe set."""
-    from document_query_system_spark.functions.embed import (
-        _hash_embed_py,
-        embed_df,
-    )
+def test_mmr_literal_buckets_match_spark_bucket_expr(spark, duck):
+    """The driver fold of the sign-LSH probe (``lsh_probe_keys``, the
+    literal probe keys of mmr_ann_pool_pairs → static PartitionFilters)
+    must equal, bit for bit, the Spark ``lsh_tables``/``lsh_probes`` the
+    stored LSH index and q_ann_multiprobe use and the DuckDB
+    ``lsh_tables_sql`` the oracles use — on every golden question and
+    on the zero vector, whose plane dots are exactly 0 (a sign test
+    that put 0 on the other side would move its bucket). A one-sided
+    divergence would silently drop the question's own bucket from the
+    probe set."""
+    from document_query_system_spark.functions.embed import DIM, embed_df
     from document_query_system_spark.operators.questions import (
-        GOLDEN_QUESTIONS,
+        question_vector_rows,
         questions_df,
     )
-    from document_query_system_spark.operators.similarity import (
-        N_PLANES,
-        N_TABLES,
-        PLANES,
-        _bucket_expr,
+    from document_query_system_spark.operators.retrieval import (
+        PROBE_FLIPS,
+        golden_vectors_sql,
+        lsh_probe_keys,
+        lsh_probes,
+        lsh_tables,
+        lsh_tables_sql,
     )
+    from document_query_system_spark.sources.tables import local_rows
 
-    q = embed_df(questions_df(spark), "question_text", out_col="q_v")
-    spark_buckets = {
-        r.question_id: r.bl
-        for r in q.select(
-            "question_id",
-            F.array(
-                *[_bucket_expr(F.col("q_v"), t) for t in range(N_TABLES)]
-            ).alias("bl"),
-        ).collect()
-    }
-    for qid, qtext in GOLDEN_QUESTIONS:
-        q_v = _hash_embed_py(qtext)
-        py_buckets = []
-        for t in range(N_TABLES):
-            b0 = 0
-            for i, plane in enumerate(PLANES[t]):
-                acc = 0.0
-                for x, y in zip(q_v, plane):
-                    acc += x * y
-                if acc > 0:
-                    b0 += 2 ** (N_PLANES - 1 - i)
-            py_buckets.append(b0)
-        assert py_buckets == list(spark_buckets[qid]), qid
+    rows = [(qid, v) for qid, _, v in question_vector_rows()] + [(0, [0.0] * DIM)]
+    spark_vecs = local_rows(spark, rows, "id INT, v ARRAY<DOUBLE>")
+    # Each engine also hashes its own embedding of the golden questions.
+    spark_golden = embed_df(questions_df(spark), "question_text", out_col="v")
+    spark_golden = spark_golden.withColumnRenamed("question_id", "id")
+    duck.execute("CREATE OR REPLACE TEMP TABLE lsh_vecs (id INT, v DOUBLE[])")
+    duck.executemany("INSERT INTO lsh_vecs VALUES (?, ?)", rows)
+    for flips in ((0,), PROBE_FLIPS):
+        driver = sorted(
+            (i, t, b) for i, v in rows for t, b in lsh_probe_keys(v, flips)
+        )
+        golden = [r for r in driver if r[0]]
+
+        def spark_keys(df):
+            keys = df.select("id", lsh_tables(F.col("v"))).select(
+                "id", "tbl", lsh_probes(F.col("bucket"), flips)
+            )
+            return sorted(tuple(r) for r in keys.collect())
+
+        def duck_keys(sql):
+            return sorted(duck.execute(sql).fetchall())
+
+        assert spark_keys(spark_vecs) == driver, flips
+        assert spark_keys(spark_golden) == golden, flips
+        assert duck_keys(
+            f"SELECT id, tbl, bucket FROM ({lsh_tables_sql('lsh_vecs', 'id', flips)})"
+        ) == driver, flips
+        assert duck_keys(
+            f"""{golden_vectors_sql()}
+SELECT question_id, tbl, bucket FROM ({lsh_tables_sql('qv', 'question_id', flips)})"""
+        ) == golden, flips
+    assert {b for i, _, b in driver if i == 0} == set(PROBE_FLIPS)
 
 
 def test_hash_embed_batch_matches_per_row_twin_corpus_wide():

@@ -7,8 +7,12 @@ run this on two trees and diff the output, without starting Spark
 Prints, one per line:
 
     order <n> <sha256 of the registered names joined by newlines>
+    prefix <n> <the same digest over the _ROTATION_PREFIX names only>
     oracles <n> <sha256 of json.dumps({name: sql}, sort_keys=True)>
     <name> <sha256 of its oracle text>        (one line per oracle)
+
+A change that reorders only the tail after ``_ROTATION_PREFIX`` (the
+driver's verification prefix) changes ``order`` but not ``prefix``.
 
 ``--exclude a,b`` leaves the named oracles out of the combined oracle
 digest (their own lines are still printed), so two trees that differ
@@ -27,7 +31,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from document_query_system_spark.registry import all_specs, oracles  # noqa: E402
+from document_query_system_spark.registry import (  # noqa: E402
+    _ROTATION_PREFIX,
+    all_specs,
+    oracles,
+)
 
 
 def _sha(text: str) -> str:
@@ -43,6 +51,8 @@ def main() -> None:
     sqls = oracles()
     kept = {n: s for n, s in sqls.items() if n not in excluded}
     print("order", len(names), _sha("\n".join(names)))
+    prefix = names[: len(_ROTATION_PREFIX)]
+    print("prefix", len(prefix), _sha("\n".join(prefix)))
     print("oracles", len(kept), _sha(json.dumps(kept, sort_keys=True)))
     for name in sorted(sqls):
         print(name, _sha(sqls[name]))
